@@ -4,7 +4,7 @@ import scala.collection.mutable
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
-import org.apache.spark.sql.functions.{broadcast, col, input_file_name, lit}
+import org.apache.spark.sql.functions.{broadcast, col, lit}
 import org.apache.spark.sql.types.{DataType, LongType, StringType, StructField, StructType, TimestampType}
 import org.apache.spark.util.SerializableConfiguration
 
@@ -290,7 +290,7 @@ object DeltaLogReader {
         def numOpt(f: String): Option[Long] =
           if (!a.schema.fieldNames.contains(f)) None
           else Option(a.getAs[Number](f)).map(_.longValue)
-        val add = AddFile(a.getAs[String]("path"),
+        val add = AddFile(TableFiles.fromLogPath(a.getAs[String]("path")),
           Option(a.getAs[scala.collection.Map[String, String]]("partitionValues"))
             .map(_.toMap.map { case (k, v) => k -> Option(v) })
             .getOrElse(Map.empty),
@@ -301,7 +301,7 @@ object DeltaLogReader {
         state.active(add.path) = add
       }
       struct("remove").foreach(rm =>
-        state.active.remove(rm.getAs[String]("path")))
+        state.active.remove(TableFiles.fromLogPath(rm.getAs[String]("path"))))
       struct("domainMetadata").foreach { d =>
         val domain = d.getAs[String]("domain")
         val removed = d.schema.fieldNames.contains("removed") &&
@@ -351,7 +351,7 @@ object DeltaLogReader {
         }
         b.result()
       }.getOrElse(Map.empty[String, Option[String]])
-      val add = AddFile(decodePath(a.get("path").asText), pv, dvFromJson(a),
+      val add = AddFile(TableFiles.fromLogPath(a.get("path").asText), pv, dvFromJson(a),
         Option(a.get("size")).map(_.asLong).getOrElse(0L),
         Option(a.get("modificationTime")).map(_.asLong).getOrElse(0L),
         Option(a.get("stats")).filterNot(_.isNull).map(_.asText),
@@ -361,7 +361,7 @@ object DeltaLogReader {
       state.active(add.path) = add
     }
     Option(node.get("remove")).foreach(rm =>
-      state.active.remove(decodePath(rm.get("path").asText)))
+      state.active.remove(TableFiles.fromLogPath(rm.get("path").asText)))
     // domainMetadata (PROTOCOL.md "Domain Metadata"): keyed by domain,
     // last writer wins, removed=true retracts
     Option(node.get("domainMetadata")).foreach { d =>
@@ -384,7 +384,7 @@ object DeltaLogReader {
     * never a union of per-partition scans (10k partition tuples would
     * mean a 10k-node plan). The log's `partitionValues` (authoritative
     * over directory names) are re-attached by a broadcast join of the
-    * tiny (file → values) manifest against `input_file_name()`: the
+    * tiny (file → values) manifest against each row's file path: the
     * manifest is metadata-scale (one row per active file, the same list
     * the snapshot already materialized), so the join is a map-side
     * lookup, and the scan itself stays a single distributed node that
@@ -412,9 +412,6 @@ object DeltaLogReader {
     val residual = ScanFilters.residual(filters)
     def filtered(df: DataFrame): DataFrame =
       residual.map(df.filter).getOrElse(df)
-    if (files.isEmpty)
-      return filtered(spark.createDataFrame(
-        spark.sparkContext.emptyRDD[Row], snap.schema))
     filtered(scanFiles(spark, tablePath, snap, files))
   }
 
@@ -436,10 +433,7 @@ object DeltaLogReader {
     val files =
       if (filters.isEmpty) snap.files
       else snap.files.filter(f => fileMayMatch(snap, physOf, f, filters))
-    if (files.isEmpty)
-      spark.createDataFrame(spark.sparkContext.emptyRDD[Row], snap.schema)
-        .filter(predicate)
-    else scanFiles(spark, tablePath, snap, files).filter(predicate)
+    scanFiles(spark, tablePath, snap, files).filter(predicate)
   }
 
   /** ROW TRACKING read (PROTOCOL.md "Row Tracking"): the snapshot with
@@ -487,11 +481,9 @@ object DeltaLogReader {
     val scanSchema = StructType(dataSchema.fields ++
       matId.map(StructField(_, LongType)) ++
       matVer.map(StructField(_, LongType)))
-    val qualified = files.map { f =>
-      fs.makeQualified(new Path(root, f.path)).toUri.toString -> f
-    }
+    val qualified = TableFiles.locateAll(fs, root, files)(_.path)
     var df = spark.read.schema(scanSchema).parquet(qualified.map(_._1): _*)
-      .withColumn("__file", input_file_name())
+      .withColumn("__file", TableFiles.fileName)
       .withColumn("__pos", col("_metadata.row_index"))
     if (files.exists(_.deletionVector.isDefined)) {
       val qualifiedRoot = fs.makeQualified(root).toString
@@ -534,21 +526,20 @@ object DeltaLogReader {
     * uses it to rewrite a candidate subset delete-aware. */
   private[io] def scanFiles(spark: SparkSession, tablePath: String,
       snap: Snapshot, files: Seq[AddFile]): DataFrame = {
+    if (files.isEmpty)
+      return spark.createDataFrame(spark.sparkContext.emptyRDD[Row], snap.schema)
     val physOf = physicalNames(snap)
     val dataFields = snap.schema.fields
       .filterNot(f => snap.partitionColumns.contains(f.name))
     val dataSchema = StructType(dataFields.map(f => f.copy(name = physOf(f.name))))
     val root = new Path(tablePath)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // qualified URIs so they compare equal to input_file_name()'s output
-    val qualified = files.map { f =>
-      fs.makeQualified(new Path(root, f.path)).toUri.toString -> f
-    }
+    val qualified = TableFiles.locateAll(fs, root, files)(_.path)
     val hasParts = snap.partitionColumns.nonEmpty
     val hasDvs = files.exists(_.deletionVector.isDefined)
     var df = spark.read.schema(dataSchema).parquet(qualified.map(_._1): _*)
     if (hasParts || hasDvs)
-      df = df.withColumn("__file", input_file_name())
+      df = df.withColumn("__file", TableFiles.fileName)
     if (hasDvs) {
       val qualifiedRoot = fs.makeQualified(root).toString
       val deleted = deletedRows(spark, qualifiedRoot, qualified)
@@ -621,16 +612,16 @@ object DeltaLogReader {
         Option(n.get("commitInfo")).flatMap(ci => Option(ci.get("timestamp")))
           .foreach(t => ts = t.asLong)
         Option(n.get("cdc")).foreach { a =>
-          cdc += AddFile(decodePath(a.get("path").asText), partitionValuesOf(a))
+          cdc += AddFile(TableFiles.fromLogPath(a.get("path").asText), partitionValuesOf(a))
         }
         Option(n.get("add")).foreach { a =>
           if (Option(a.get("dataChange")).forall(_.asBoolean))
-            addsDC += AddFile(decodePath(a.get("path").asText),
+            addsDC += AddFile(TableFiles.fromLogPath(a.get("path").asText),
               partitionValuesOf(a), dvFromJson(a))
         }
         Option(n.get("remove")).foreach { r =>
           if (Option(r.get("dataChange")).forall(_.asBoolean))
-            removesDC += decodePath(r.get("path").asText)
+            removesDC += TableFiles.fromLogPath(r.get("path").asText)
         }
       }
       val (cdcF, addF, rmF) = (cdc.result(), addsDC.result(), removesDC.result())
@@ -692,12 +683,10 @@ object DeltaLogReader {
       StructField("_change_type", StringType, nullable = true))
     val root = new Path(tablePath)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val qualified = files.map { f =>
-      fs.makeQualified(new Path(root, f.path)).toUri.toString -> f
-    }
+    val qualified = TableFiles.locateAll(fs, root, files)(_.path)
     var df = spark.read.schema(dataSchema).parquet(qualified.map(_._1): _*)
     if (snap.partitionColumns.nonEmpty) {
-      df = df.withColumn("__file", input_file_name())
+      df = df.withColumn("__file", TableFiles.fileName)
       val manifestSchema = StructType(
         StructField("__file", StringType, nullable = false) +:
           snap.partitionColumns.map(c =>
@@ -883,10 +872,6 @@ object DeltaLogReader {
   private def jsonArray(n: JsonNode): Seq[JsonNode] =
     if (n == null) Nil
     else (0 until n.size()).map(n.get)
-
-  /** Delta add/remove paths are URI-encoded relative paths. */
-  private def decodePath(p: String): String =
-    if (p.contains('%')) new java.net.URI(p).getPath else p
 
   /** (version → commit json path, version → checkpoint ref). Multi-part
     * checkpoints (`N.checkpoint.i.of.n.parquet` in the `%010d` forms the

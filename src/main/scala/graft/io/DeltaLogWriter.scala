@@ -7,6 +7,7 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
+import graft.session.Jobs
 
 /** Writes REAL Delta Lake tables — the format counterpart of
   * [[DeltaLogReader]], covering the reference's `s3.to_deltalake`
@@ -140,12 +141,12 @@ object DeltaLogWriter {
         .foreach(enforceAppendOnly(_, "overwrite"))
     prior.foreach(s => enforceConstraints(Some(s), aligned, "write"))
     // the change-file write and the data write are independent jobs —
-    // overlap them when CDF demands both (r17, guide §2.6)
+    // overlap them when CDF demands both
     val (adds, cdc) =
       if (mode != "overwrite" || !prior.exists(cdfEnabled))
         (writeDataFiles(aligned, tablePath, partCols, physOf, fieldIds),
           Nil)
-      else concurrently(
+      else Jobs.concurrently(
         writeDataFiles(aligned, tablePath, partCols, physOf, fieldIds), {
           val old = DeltaLogReader.read(spark, tablePath)
             .withColumn("_change_type", lit("delete"))
@@ -332,7 +333,8 @@ object DeltaLogWriter {
     * set: feature-range tables (minWriterVersion 7) append to
     * `writerFeatures`; legacy tables upgrade to `legacyVersion`, whose
     * implicit feature set includes it. The existing sets are MERGED,
-    * never replaced (the round-6 downgrade hazard). */
+    * never replaced: dropping a feature the table already declares
+    * would downgrade its protocol. */
   private def writerFeatureUpgrade(p: DeltaLogReader.Protocol,
       feature: String, legacyVersion: Int): Seq[String] =
     writerFeaturesUpgrade(p, Set(feature), Some(legacyVersion))
@@ -418,7 +420,7 @@ object DeltaLogWriter {
       // SCHEME-LESS absolute paths (same contract as the migration's
       // registerExternalFiles): a scheme'd string re-parses with a null
       // URI authority, short-circuits makeQualified, and then never
-      // compares equal to input_file_name()'s qualified form — the scan
+      // compares equal to the qualified path a scan reports — the scan
       // would silently skip DVs and manifest joins. Scheme-less paths
       // re-qualify consistently against the reader's filesystem (clone
       // and source must share one filesystem, as with any shallow clone).
@@ -576,7 +578,7 @@ object DeltaLogWriter {
       val pv = a.partitionValues.map { case (k, v) =>
         s"${jstr(k)}:${v.map(jstr).getOrElse("null")}"
       }.mkString("{", ",", "}")
-      s"""{"cdc":{"path":${jstr(a.path)},"partitionValues":$pv,"size":${a.size},"dataChange":false}}"""
+      s"""{"cdc":{"path":${jstr(TableFiles.toLogPath(a.path))},"partitionValues":$pv,"size":${a.size},"dataChange":false}}"""
     }
 
   /** The MERGE change set when CDF is on: matched current rows as
@@ -589,133 +591,60 @@ object DeltaLogWriter {
       partCols: Seq[String], physOf: Map[String, String],
       fieldIds: Map[String, Long]): Seq[String] = {
     val pre = cur.join(srcAligned,
-        keyCond(cur, srcAligned, keys, matchNulls), "left_semi")
+        TableFiles.keyCond(cur, srcAligned, keys, matchNulls), "left_semi")
       .withColumn("_change_type", lit("update_preimage"))
     val post = srcAligned.join(cur,
-        keyCond(srcAligned, cur, keys, matchNulls), "left_semi")
+        TableFiles.keyCond(srcAligned, cur, keys, matchNulls), "left_semi")
       .withColumn("_change_type", lit("update_postimage"))
     val ins = srcAligned.join(cur,
-        keyCond(srcAligned, cur, keys, matchNulls), "left_anti")
+        TableFiles.keyCond(srcAligned, cur, keys, matchNulls), "left_anti")
       .withColumn("_change_type", lit("insert"))
     cdcLines(writeDataFiles(pre.unionByName(post).unionByName(ins),
       tablePath, partCols, physOf, fieldIds, destPrefix = "_change_data"))
   }
 
-  /** Run two independent data-file writes as concurrent driver jobs
-    * (guide §2.6 — the CDC change-file write and the merged-data write
-    * share no state: each stages under its own UUID dir): the small
-    * write back-fills the big write's task tail instead of paying the
-    * two jobs end-to-end. If either side fails the OTHER is awaited
-    * to completion first, so no write outlives the call (the
-    * trainPplModel-race lesson). */
-  private def concurrently[A, B](a: => A, b: => B): (A, B) = {
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(1)
-    val fb = pool.submit(new java.util.concurrent.Callable[B] {
-      override def call(): B = b
-    })
-    def awaitB(): B =
-      try fb.get()
-      catch {
-        case e: java.util.concurrent.ExecutionException =>
-          throw e.getCause
-      }
-    try {
-      val ra =
-        try a
-        catch {
-          case t: Throwable =>
-            try awaitB() catch { case _: Throwable => () }
-            throw t
-        }
-      (ra, awaitB())
-    } finally pool.shutdown()
-  }
-
-  /** Key-match condition: plain `=` by default, `<=>` with `matchNulls`
-    * — the reference's `merge_match_nulls` (IS NOT DISTINCT FROM joins,
-    * `athena/_write_iceberg.py:297-393`). Without it a null-keyed row
-    * never matches and duplicates on every upsert. */
-  private def keyCond(l: DataFrame, r: DataFrame, keys: Seq[String],
-      matchNulls: Boolean) =
-    keys.map(k => if (matchNulls) l(k) <=> r(k) else l(k) === r(k))
-      .reduce(_ && _)
-
-  /** Upsert by key — partition-granular on partitioned tables. */
+  /** Upsert by key — partition-granular on partitioned tables: only
+    * files in partitions where `src` rows land or matched keys live are
+    * rewritten ([[TableFiles.planMerge]]); every other file is kept. */
   def merge(spark: SparkSession, tablePath: String, src: DataFrame,
       keys: Seq[String], matchNulls: Boolean = false): Committed = {
     val latest = DeltaLogReader.latestVersion(spark, tablePath)
     if (latest < 0) return write(src, tablePath, mode = "error")
     val snap = DeltaLogReader.snapshot(spark, tablePath)
-    val current = DeltaLogReader.read(spark, tablePath)
     val physOf = DeltaLogReader.physicalNames(snap)
     val fieldIds = DeltaLogReader.mappingFieldIds(snap)
     val srcAligned = src.select(snap.schema.fieldNames.map(col).toSeq: _*)
     enforceAppendOnly(snap, "MERGE")
     enforceConstraints(Some(snap), srcAligned, "MERGE")
-    if (snap.partitionColumns.isEmpty) {
-      // full rewrite: kept = current minus matched keys, plus all of src
-      val merged = current.join(srcAligned,
-          keyCond(current, srcAligned, keys, matchNulls), "left_anti")
-        .unionByName(srcAligned)
-      // the change-file write and the merged-data write are independent
-      // jobs — overlap them (r17, guide §2.6) instead of paying both
-      // end-to-end; CDF-off tables skip the pool entirely
-      val (adds, cdc) =
-        if (!cdfEnabled(snap))
-          (writeDataFiles(merged, tablePath, Nil, physOf, fieldIds),
-            Nil)
-        else concurrently(
-          writeDataFiles(merged, tablePath, Nil, physOf, fieldIds),
-          mergeCdc(current, srcAligned, keys, matchNulls, tablePath,
-            Nil, physOf, fieldIds))
-      commitLoop(spark, tablePath, snap.schema, Nil, adds,
-        snap.files.map(_.path), "MERGE", emitMeta = false,
-        extraActions = cdc, priorConfig = Some(snap.configuration))
-    } else {
-      val pcols = snap.partitionColumns
-      // touched partitions: where src rows land + where matched keys live
-      val srcKeys = srcAligned.select(keys.map(col): _*).distinct()
-      val touched = srcAligned.select(pcols.map(col): _*).distinct()
-        .unionByName(current.join(
-            org.apache.spark.sql.functions.broadcast(srcKeys),
-            keyCond(current, srcKeys, keys, matchNulls), "left_semi")
-          .select(pcols.map(col): _*).distinct())
-        .distinct().collect()
-        .map(r => pcols.map(c => Option(r.getAs[Any](c)).map(_.toString)))
-        .toSet
-      // add-action partitionValues are keyed by PHYSICAL name on a
-      // column-mapped table
-      def touchedFile(f: DeltaLogReader.AddFile): Boolean =
-        touched.contains(pcols.map(c =>
-          f.partitionValues.get(physOf.getOrElse(c, c))
-            .orElse(f.partitionValues.get(c)).flatten))
-      val touchedFilter = touched.map { tup =>
-        pcols.zip(tup).map { case (c, v) =>
-          v.map(col(c).cast("string") === lit(_)).getOrElse(col(c).isNull)
-        }.reduce(_ && _)
-      }.reduceOption(_ || _).getOrElse(lit(false))
-      val touchedScan = current.filter(touchedFilter)
-      val merged = touchedScan
-        .join(srcAligned, keyCond(touchedScan, srcAligned, keys, matchNulls),
-          "left_anti")
-        .unionByName(srcAligned)
-      // match state lives only in touched partitions (a key match
-      // anywhere makes its partition touched), so touchedScan is the
-      // complete "current" side for classifying changes
-      // same independent-writes overlap as the unpartitioned branch
-      val (adds, cdc) =
-        if (!cdfEnabled(snap))
-          (writeDataFiles(merged, tablePath, pcols, physOf, fieldIds),
-            Nil)
-        else concurrently(
-          writeDataFiles(merged, tablePath, pcols, physOf, fieldIds),
-          mergeCdc(touchedScan, srcAligned, keys, matchNulls, tablePath,
-            pcols, physOf, fieldIds))
-      commitLoop(spark, tablePath, snap.schema, pcols, adds,
-        snap.files.filter(touchedFile).map(_.path), "MERGE",
-        emitMeta = false, extraActions = cdc,
-        priorConfig = Some(snap.configuration))
-    }
+    val pcols = snap.partitionColumns
+    val (plan, merged) = TableFiles.planMerge(target(spark, tablePath, snap),
+      srcAligned, keys, matchNulls)
+    // the change-file write and the merged-data write are independent
+    // jobs — overlap them; CDF-off tables write the data alone
+    val (adds, cdc) =
+      if (!cdfEnabled(snap))
+        (writeDataFiles(merged, tablePath, pcols, physOf, fieldIds), Nil)
+      else Jobs.concurrently(
+        writeDataFiles(merged, tablePath, pcols, physOf, fieldIds),
+        mergeCdc(plan.touchedScan, srcAligned, keys, matchNulls, tablePath,
+          pcols, physOf, fieldIds))
+    commitLoop(spark, tablePath, snap.schema, pcols, adds,
+      plan.touched.map(_.path), "MERGE", emitMeta = false,
+      extraActions = cdc, priorConfig = Some(snap.configuration))
+  }
+
+  /** The snapshot as a rewrite target: a file's tuple is its logged
+    * partition values (keyed by physical name on a column-mapped
+    * table), already in Spark's cast-to-string rendering. */
+  private def target(spark: SparkSession, tablePath: String,
+      snap: DeltaLogReader.Snapshot): TableFiles.Target[DeltaLogReader.AddFile] = {
+    val physOf = DeltaLogReader.physicalNames(snap)
+    val pcols = snap.partitionColumns
+    TableFiles.Target(snap.files,
+      DeltaLogReader.scanFiles(spark, tablePath, snap, _),
+      pcols.map(col),
+      f => Some(pcols.map(c => f.partitionValues.get(physOf.getOrElse(c, c))
+        .orElse(f.partitionValues.get(c)).flatten)))
   }
 
   /** `to_deltalake_streaming`'s SINGLE-transaction semantics on the REAL
@@ -743,7 +672,7 @@ object DeltaLogWriter {
     val latest = DeltaLogReader.latestVersion(spark, tablePath)
     val prior =
       if (latest >= 0) Some(DeltaLogReader.snapshot(spark, tablePath)) else None
-    prior.foreach(s => checkAppendSchema(s.schema, agg.schema))
+    prior.foreach(s => SchemaMerge.checkAppendSchema(s.schema, agg.schema))
     val partCols = prior.map(_.partitionColumns).getOrElse(Nil)
     val physOf = prior.map(DeltaLogReader.physicalNames).getOrElse(Map.empty)
     val fieldIds = prior.map(DeltaLogReader.mappingFieldIds)
@@ -1192,40 +1121,18 @@ object DeltaLogWriter {
       }.collect().toSeq
   }
 
-  /** STRICT schema check for the streaming single-txn path (a stream's
-    * schema is fixed at plan time, so drift mid-run is a bug, not
-    * evolution); batch appends evolve via [[SchemaMerge.mergeAppend]]. */
-  private def checkAppendSchema(table: StructType, incoming: StructType): Unit = {
-    val t = table.fields.map(f => f.name -> f.dataType).toMap
-    incoming.fields.foreach { f =>
-      t.get(f.name) match {
-        case None => throw new IllegalArgumentException(
-          s"append column ${f.name} not in table schema (use overwrite to evolve)")
-        case Some(dt) if dt != f.dataType => throw new IllegalArgumentException(
-          s"append column ${f.name}: ${f.dataType.simpleString} != table's ${dt.simpleString}")
-        case _ => ()
-      }
-    }
-  }
-
-  /** Stage the dataframe as parquet, move the part files into the table
-    * tree, and return one add-action per file. The staging dir is inside
-    * the table (same filesystem ⇒ rename is a metadata op). */
-  /** Write `df` as table data files. `physOf` (logical → physical column
-    * name) is non-identity on column-mapped tables: the parquet files,
-    * the hive partition directories, the add-action `partitionValues`
-    * keys and the `stats` keys must all carry PHYSICAL names — the
-    * protocol's contract, and what lets a later logical rename touch no
-    * data file. */
+  /** Write `df` as table data files, one add entry per file.
+    * `physOf` (logical → physical column name) is non-identity on
+    * column-mapped tables: the parquet files, the hive partition
+    * directories, the add-action `partitionValues` keys and the `stats`
+    * keys must all carry PHYSICAL names — the protocol's contract, and
+    * what lets a later logical rename touch no data file. */
   private def writeDataFiles(df: DataFrame, tablePath: String,
       partCols: Seq[String],
       physOf: Map[String, String] = Map.empty,
       fieldIds: Map[String, Long] = Map.empty,
       destPrefix: String = ""): Seq[AddEntry] = {
-    val spark = df.sparkSession
     val root = new Path(tablePath)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val staging = new Path(root, s".delta-staging-${UUID.randomUUID()}")
     val renamed = df.columns.foldLeft(df) { (d, c) =>
       physOf.get(c).filter(_ != c)
         .map(p => d.withColumnRenamed(c, p)).getOrElse(d)
@@ -1240,69 +1147,18 @@ object DeltaLogWriter {
               .putLong("parquet.field.id", id).build()))
           .getOrElse(col(c))
       }.toSeq: _*)
-    val physPartCols = partCols.map(c => physOf.getOrElse(c, c))
-    try {
-      val w = out.write.mode("overwrite")
-      (if (physPartCols.nonEmpty) w.partitionBy(physPartCols: _*) else w)
-        .parquet(staging.toString)
-      val files = collectParquet(fs, staging)
-      val stagingStr = fs.makeQualified(staging).toString
-      val moved = files.map { st =>
-        val rel0 = st.getPath.toString.stripPrefix(stagingStr)
-          .stripPrefix("/")
-        val rel = if (destPrefix.isEmpty) rel0 else s"$destPrefix/$rel0"
-        val dst = new Path(root, rel)
-        fs.mkdirs(dst.getParent)
-        if (!fs.rename(st.getPath, dst))
-          throw new java.io.IOException(s"rename ${st.getPath} -> $dst failed")
-        (rel, fs.makeQualified(dst).toString, st.getLen)
-      }
-      // cdc actions carry no stats field in the protocol — skip the
-      // footer sweep for `_change_data` writes
-      val stats =
-        if (destPrefix.isEmpty) fileStatsJson(spark, moved.map(_._2))
-        else Map.empty[String, String]
-      moved.map { case (rel, uri, len) =>
-        AddEntry(rel, partitionValuesOf(rel), len,
-          System.currentTimeMillis(), stats = stats.get(uri))
-      }
-    } finally fs.delete(staging, true)
-  }
-
-  private def collectParquet(fs: org.apache.hadoop.fs.FileSystem,
-      dir: Path): Seq[org.apache.hadoop.fs.FileStatus] = {
-    val out = Seq.newBuilder[org.apache.hadoop.fs.FileStatus]
-    val it = fs.listFiles(dir, true)
-    while (it.hasNext) {
-      val st = it.next()
-      if (st.getPath.getName.endsWith(".parquet")) out += st
+    def relOf(rel: String) = if (destPrefix.isEmpty) rel else s"$destPrefix/$rel"
+    val moved = TableFiles.writeStaged(out, root,
+      partCols.map(c => physOf.getOrElse(c, c)))(rel => new Path(root, relOf(rel)))
+    // cdc actions carry no stats field in the protocol — skip the
+    // footer sweep for `_change_data` writes
+    val stats =
+      if (destPrefix.isEmpty) fileStatsJson(df.sparkSession, moved.map(_.path))
+      else Map.empty[String, String]
+    moved.map { m =>
+      AddEntry(relOf(m.rel), TableFiles.partitionValuesOf(m.rel), m.size,
+        System.currentTimeMillis(), stats = stats.get(m.path))
     }
-    out.result()
-  }
-
-  /** Partition values parsed back from the hive-style relative path —
-    * `p=a/q=__HIVE_DEFAULT_PARTITION__/part-….parquet` ⇒ {p→a, q→null}. */
-  private def partitionValuesOf(rel: String): Map[String, Option[String]] =
-    rel.split('/').dropRight(1).filter(_.contains('=')).map { seg =>
-      val Array(k, v) = seg.split("=", 2)
-      k -> (if (v == "__HIVE_DEFAULT_PARTITION__") None
-            else Some(unescapePathName(v)))
-    }.toMap
-
-  /** Hive percent-escaping used in partition directory names. */
-  private def unescapePathName(s: String): String = {
-    val sb = new StringBuilder
-    var i = 0
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (c == '%' && i + 2 < s.length) {
-        try {
-          sb.append(Integer.parseInt(s.substring(i + 1, i + 3), 16).toChar)
-          i += 3
-        } catch { case _: Exception => sb.append(c); i += 1 }
-      } else { sb.append(c); i += 1 }
-    }
-    sb.toString
   }
 
   final case class AddEntry(path: String,
@@ -1478,7 +1334,7 @@ object DeltaLogWriter {
     require(keyCols.nonEmpty, "deleteMatched needs key columns")
     val keySet = keys.select(keyCols.map(col): _*).distinct()
     deleteWhereImpl(spark, tablePath,
-      df => df.join(keySet, keyCond(df, keySet, keyCols, matchNulls),
+      df => df.join(keySet, TableFiles.keyCond(df, keySet, keyCols, matchNulls),
         "left_semi"), None)
   }
 
@@ -1507,16 +1363,15 @@ object DeltaLogWriter {
       updateAssignments: Option[Seq[(String, org.apache.spark.sql.Column)]])
       : Committed = {
     import org.apache.spark.sql.Row
-    import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
+    import org.apache.spark.sql.types.{StringType, StructField, StructType}
     val snap = DeltaLogReader.snapshot(spark, tablePath)
     enforceAppendOnly(snap,
       if (updateAssignments.isDefined) "UPDATE" else "DELETE")
     val root = new Path(tablePath)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val qualifiedRoot = fs.makeQualified(root).toString
-    val byUri: Map[String, DeltaLogReader.AddFile] = snap.files.map { f =>
-      fs.makeQualified(new Path(root, f.path)).toUri.toString -> f
-    }.toMap
+    val located = TableFiles.locateAll(fs, root, snap.files)(_.path)
+    val byUri: Map[String, DeltaLogReader.AddFile] = located.toMap
     if (byUri.isEmpty)
       return Committed(DeltaLogReader.latestVersion(spark, tablePath), 0)
 
@@ -1531,8 +1386,8 @@ object DeltaLogWriter {
     val dataFields = snap.schema.fields
       .filterNot(f => snap.partitionColumns.contains(f.name))
     val dataSchema = StructType(dataFields.map(f => f.copy(name = physOf(f.name))))
-    var df = spark.read.schema(dataSchema).parquet(byUri.keys.toSeq: _*)
-      .withColumn("__file", input_file_name())
+    var df = spark.read.schema(dataSchema).parquet(located.map(_._1): _*)
+      .withColumn("__file", TableFiles.fileName)
       .withColumn("__pos", col("_metadata.row_index"))
     dataFields.foreach { f =>
       if (physOf(f.name) != f.name)
@@ -1556,7 +1411,7 @@ object DeltaLogWriter {
     }
     // per-file RAW row counts come from parquet FOOTERS, read on
     // executors — metadata-only, never a count() over the data pages
-    val totals = footerRecordCounts(spark, byUri.keys.toSeq)
+    val totals = TableFiles.recordCounts(spark, located.map(_._1))
     val conf = new org.apache.spark.util.SerializableConfiguration(
       spark.sparkContext.hadoopConfiguration)
     val oldDvs = spark.sparkContext.broadcast(
@@ -1569,36 +1424,26 @@ object DeltaLogWriter {
     // which streams them into the compressed bitmap and writes the
     // sidecar there: a delete matching 100M rows of one file holds the
     // ~12 MB bitmap in memory, never a 100M-long aggregation buffer.
-    // A file whose rows are ALL deleted (old DV ∪ new) gets NO sidecar —
-    // it is removed from the snapshot outright. Driver receives one
-    // (path, descriptor) pair per touched file: manifest-scale.
+    // Existing DVs merge in (old ∪ new row indexes), so re-flagging an
+    // already-deleted row is idempotent. A file whose rows are ALL
+    // deleted gets NO sidecar — it is removed from the snapshot
+    // outright. Driver receives one (path, descriptor) pair per touched
+    // file: manifest-scale.
     val touched: Seq[(String, Option[DeltaDeletionVectors.Descriptor])] =
       matcher(df)
       .select(col("__file"), col("__pos"))
       .repartition(col("__file"))
       .sortWithinPartitions(col("__file"), col("__pos"))
-      .rdd.mapPartitions { it =>
-        val rows = it.buffered
-        val out = mutable.ArrayBuffer
-          .empty[(String, Option[DeltaDeletionVectors.Descriptor])]
-        while (rows.hasNext) {
-          val uri = rows.head.getString(0)
-          val fresh = new Iterator[Long] {
-            def hasNext: Boolean =
-              rows.hasNext && rows.head.getString(0) == uri
-            def next(): Long = rows.next().getLong(1)
+      .rdd.mapPartitions { rows =>
+        TableFiles.positionBitmaps(rows, uri => oldDvs.value.get(uri)
+          .map(d => DeltaDeletionVectors
+            .rowIndexes(conf.value, qualifiedRoot, d).iterator)
+          .getOrElse(Iterator.empty))
+          .map { case (uri, bytes, card) =>
+            if (card >= totalsBc.value(uri)) (uri, None)
+            else (uri, Some(DeltaDeletionVectors.writeSidecarBytes(
+              conf.value, new Path(qualifiedRoot), bytes, card)))
           }
-          val old = oldDvs.value.get(uri)
-            .map(d => DeltaDeletionVectors
-              .rowIndexes(conf.value, qualifiedRoot, d))
-            .getOrElse(Array.empty[Long])
-          val (bytes, card) =
-            DeltaDeletionVectors.encodeStreaming(fresh ++ old.iterator)
-          if (card >= totalsBc.value(uri)) out += ((uri, None))
-          else out += ((uri, Some(DeltaDeletionVectors.writeSidecarBytes(
-            conf.value, new Path(qualifiedRoot), bytes, card))))
-        }
-        out.iterator
       }.collect().toSeq
     if (touched.isEmpty)
       return Committed(DeltaLogReader.latestVersion(spark, tablePath), 0)
@@ -1691,27 +1536,6 @@ object DeltaLogWriter {
           .getOrElse(col(f.name))
       }.toSeq: _*)
 
-  /** Per-file raw row counts from parquet footers, read ON EXECUTORS
-    * (metadata-only; the driver receives one (uri, count) pair per file —
-    * manifest-scale). The full-file-delete denominator. */
-  private def footerRecordCounts(spark: SparkSession,
-      uris: Seq[String]): Map[String, Long] = {
-    if (uris.isEmpty) return Map.empty
-    import spark.implicits._
-    val confBc = spark.sparkContext.broadcast(
-      new org.apache.spark.util.SerializableConfiguration(
-        spark.sparkContext.hadoopConfiguration))
-    spark.createDataset(uris).mapPartitions { it =>
-      val conf = confBc.value.value
-      it.map { u =>
-        val in = org.apache.parquet.hadoop.util.HadoopInputFile
-          .fromPath(new Path(u), conf)
-        val rdr = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-        try (u, rdr.getRecordCount) finally rdr.close()
-      }
-    }.collect().toMap
-  }
-
   /** Per-add record counts for row-id assignment: stats numRecords
     * where present, else one executor-side footer sweep of the rest. */
   private def recordCountsForAdds(spark: SparkSession, tablePath: String,
@@ -1726,13 +1550,11 @@ object DeltaLogWriter {
     if (missing.isEmpty) fromStats
     else {
       val root = new Path(tablePath)
-      def uriOf(rel: String): String =
-        if (rel.startsWith("/") || rel.contains("://")) rel
-        else new Path(root, rel).toString
-      val counted = footerRecordCounts(spark,
-        missing.map(a => uriOf(a.path)))
+      def pathOf(rel: String): String = new Path(root, rel).toString
+      val counted = TableFiles.recordCounts(spark,
+        missing.map(a => pathOf(a.path)))
       fromStats ++ missing.map(a =>
-        a.path -> counted.getOrElse(uriOf(a.path), 0L))
+        a.path -> counted.getOrElse(pathOf(a.path), 0L))
     }
   }
 
@@ -1775,7 +1597,7 @@ object DeltaLogWriter {
       try {
         val node = mapper.readTree(line)
         Option(node.get("cdc")).flatMap(c => Option(c.get("path")))
-          .foreach(p => del(resolve(p.asText)))
+          .foreach(p => del(resolve(TableFiles.fromLogPath(p.asText))))
       } catch { case _: Exception => () }
     }
   }
@@ -1969,7 +1791,7 @@ object DeltaLogWriter {
         s"""{"metaData":{"id":${jstr(UUID.randomUUID().toString)},"format":{"provider":"parquet","options":{}},"schemaString":${jstr(schema.json)},"partitionColumns":[${partCols.map(jstr).mkString(",")}],"configuration":$cfg,"createdTime":$now}}"""
     else Nil
     val removeLines = removes.map(p =>
-      s"""{"remove":{"path":${jstr(p)},"deletionTimestamp":$now,"dataChange":$dataChange}}""")
+      s"""{"remove":{"path":${jstr(TableFiles.toLogPath(p))},"deletionTimestamp":$now,"dataChange":$dataChange}}""")
     val addLines = adds.map { a =>
       val pv = a.partitionValues.map { case (k, v) =>
         s"${jstr(k)}:${v.map(jstr).getOrElse("null")}"
@@ -1984,7 +1806,7 @@ object DeltaLogWriter {
         case (Some(b), None) => s""","baseRowId":$b"""
         case _ => ""
       }
-      s"""{"add":{"path":${jstr(a.path)},"partitionValues":$pv,"size":${a.size},"modificationTime":${a.modificationTime},"dataChange":$dataChange$dv$st$rt}}"""
+      s"""{"add":{"path":${jstr(TableFiles.toLogPath(a.path))},"partitionValues":$pv,"size":${a.size},"modificationTime":${a.modificationTime},"dataChange":$dataChange$dv$st$rt}}"""
     }
     (info +: metaLines) ++ extraActions ++ removeLines ++ addLines
   }
@@ -2042,7 +1864,7 @@ object DeltaLogWriter {
       snap.files.map { f =>
         val (sz, mt) = realSizeMtime(spark, tablePath, f)
         CkptLine(
-          Some(CkptAddFile(f.path,
+          Some(CkptAddFile(TableFiles.toLogPath(f.path),
             f.partitionValues.map { case (k, v) => k -> v.orNull },
             sz, mt,
             dataChange = false,
@@ -2053,18 +1875,12 @@ object DeltaLogWriter {
       })
     val logDir = new Path(new Path(tablePath), "_delta_log")
     val fs = logDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val staging = new Path(logDir, s".ckpt-staging-${UUID.randomUUID()}")
-    try {
-      rows.toDS().coalesce(1).write.parquet(staging.toString)
-      val part = collectParquet(fs, staging).head
-      val dst = new Path(logDir, f"$version%020d.checkpoint.parquet")
-      if (!fs.rename(part.getPath, dst))
-        throw new java.io.IOException(s"checkpoint rename failed: $dst")
-      val lc = fs.create(new Path(logDir, "_last_checkpoint"), true)
-      try lc.write(
-        s"""{"version":$version,"size":${rows.length}}""".getBytes("UTF-8"))
-      finally lc.close()
-    } finally fs.delete(staging, true)
+    TableFiles.writeStaged(rows.toDS().coalesce(1).toDF(), logDir, Nil)(_ =>
+      new Path(logDir, f"$version%020d.checkpoint.parquet"))
+    val lc = fs.create(new Path(logDir, "_last_checkpoint"), true)
+    try lc.write(
+      s"""{"version":$version,"size":${rows.length}}""".getBytes("UTF-8"))
+    finally lc.close()
   }
 
   /** Write a V2 CHECKPOINT (PROTOCOL.md "V2 Spec Checkpoints") for the
@@ -2139,7 +1955,7 @@ object DeltaLogWriter {
     val addRows: Seq[SidecarLine] = snap.files.map { f =>
       val (sz, mt) = realSizeMtime(spark, tablePath, f)
       SidecarLine(Some(
-        CkptAddFile(f.path,
+        CkptAddFile(TableFiles.toLogPath(f.path),
           f.partitionValues.map { case (k, v) => k -> v.orNull },
           sz, mt,
           dataChange = false,
@@ -2149,17 +1965,10 @@ object DeltaLogWriter {
     }
     val nShards = math.max(1,
       (addRows.length + sidecarMaxActions - 1) / sidecarMaxActions)
-    val staging = new Path(logDir, s".v2ckpt-staging-${UUID.randomUUID()}")
-    val sidecarNames =
-      try {
-        addRows.toDS().repartition(nShards).write.parquet(staging.toString)
-        collectParquet(fs, staging).map { st =>
-          val name = s"${UUID.randomUUID()}.parquet"
-          if (!fs.rename(st.getPath, new Path(sidecarDir, name)))
-            throw new java.io.IOException(s"sidecar rename failed: $name")
-          (name, st.getLen)
-        }
-      } finally fs.delete(staging, true)
+    val sidecarNames = TableFiles.writeStaged(
+        addRows.toDS().repartition(nShards).toDF(), logDir, Nil)(_ =>
+        new Path(sidecarDir, s"${UUID.randomUUID()}.parquet"))
+      .map(st => (new Path(st.path).getName, st.size))
     // the manifest: checkpointMetadata + protocol + metaData + sidecar
     // references (relative names resolve under _delta_log/_sidecars)
     val writerFeats = Some(snap.protocol.writerFeatures.toSeq.sorted)
@@ -2183,20 +1992,14 @@ object DeltaLogWriter {
       sidecarNames.map { case (name, len) =>
         V2ManifestLine(None, None, None, Some(CkptSidecar(name, len)))
       })
-    val mStaging = new Path(logDir, s".v2ckpt-m-${UUID.randomUUID()}")
-    try {
-      manifestRows.toDS().coalesce(1).write.parquet(mStaging.toString)
-      val part = collectParquet(fs, mStaging).head
-      val dst = new Path(logDir,
-        f"$version%020d.checkpoint.${UUID.randomUUID()}.parquet")
-      if (!fs.rename(part.getPath, dst))
-        throw new java.io.IOException(s"v2 checkpoint rename failed: $dst")
-      val lc = fs.create(new Path(logDir, "_last_checkpoint"), true)
-      try lc.write(
-        s"""{"version":$version,"size":${manifestRows.length + addRows.length}}"""
-          .getBytes("UTF-8"))
-      finally lc.close()
-    } finally fs.delete(mStaging, true)
+    TableFiles.writeStaged(manifestRows.toDS().coalesce(1).toDF(), logDir,
+        Nil)(_ =>
+      new Path(logDir, f"$version%020d.checkpoint.${UUID.randomUUID()}.parquet"))
+    val lc = fs.create(new Path(logDir, "_last_checkpoint"), true)
+    try lc.write(
+      s"""{"version":$version,"size":${manifestRows.length + addRows.length}}"""
+        .getBytes("UTF-8"))
+    finally lc.close()
   }
 
   final case class CkptV2Meta(version: Long)

@@ -7,7 +7,7 @@ import org.apache.avro.file.DataFileStream
 import org.apache.avro.generic.{GenericDatumReader, GenericRecord}
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
-import org.apache.spark.sql.functions.{broadcast, col, input_file_name, lit, regexp_replace}
+import org.apache.spark.sql.functions.{broadcast, col, lit}
 import org.apache.spark.sql.types._
 
 /** The requested Iceberg table uses a format version or feature this
@@ -162,7 +162,7 @@ object IcebergReader {
           .filter(_ >= 0)
         val list = cur.flatMap(id => jsonArray(meta.get("snapshots"))
             .find(_.get("snapshot-id").asLong == id))
-          .map(s => readAvro(spark, resolve(root, s.get("manifest-list").asText)))
+          .map(s => readAvro(spark, TableFiles.location(root, s.get("manifest-list").asText)))
           .getOrElse(Nil)
         list.map { m =>
           def intOpt(f: String): Int = Option(m.getSchema.getField(f))
@@ -211,7 +211,7 @@ object IcebergReader {
         val manifests = cur.flatMap(id => jsonArray(meta.get("snapshots"))
             .find(_.get("snapshot-id").asLong == id))
           .map(s => readAvro(spark,
-            resolve(root, s.get("manifest-list").asText)))
+            TableFiles.location(root, s.get("manifest-list").asText)))
           .getOrElse(Nil)
         manifests.flatMap { m =>
           def longIn(v: Any): Option[Long] = Option(v).collect {
@@ -221,7 +221,7 @@ object IcebergReader {
           val addedId = fieldOpt(m, "added_snapshot_id").flatMap(longIn)
           val mSeq = fieldOpt(m, "sequence_number").flatMap(longIn)
             .getOrElse(0L)
-          readAvro(spark, resolve(root, m.get("manifest_path").toString))
+          readAvro(spark, TableFiles.location(root, m.get("manifest_path").toString))
             .map { e =>
               val df = e.get("data_file").asInstanceOf[GenericRecord]
               (e.get("status").asInstanceOf[Int],
@@ -229,7 +229,7 @@ object IcebergReader {
                   .orElse(addedId).getOrElse(-1L),
                 fieldOpt(e, "sequence_number").flatMap(longIn)
                   .getOrElse(mSeq),
-                resolve(root, df.get("file_path").toString).toString,
+                TableFiles.location(root, df.get("file_path").toString).toString,
                 longIn(df.get("record_count")).getOrElse(0L))
             }
         }.toDF("status", "snapshot_id", "sequence_number", "file_path",
@@ -319,7 +319,7 @@ object IcebergReader {
     val partCols = metaPartCols(meta)
 
     val root = new Path(tablePath)
-    val manifestList = resolve(root, snap.get("manifest-list").asText)
+    val manifestList = TableFiles.location(root, snap.get("manifest-list").asText)
     val active = mutable.LinkedHashMap.empty[String, DataFileEntry]
     val posDeletes = mutable.LinkedHashMap.empty[String, DataFileEntry]
     val eqDeletes = mutable.LinkedHashMap.empty[String, DataFileEntry]
@@ -347,7 +347,7 @@ object IcebergReader {
       // entry order, advancing by record_count
       val mFirstRowId = fieldOpt(m, "first_row_id").flatMap(longIn)
       var rowIdCursor = mFirstRowId
-      readAvro(spark, resolve(root, m.get("manifest_path").toString))
+      readAvro(spark, TableFiles.location(root, m.get("manifest_path").toString))
         .foreach { entry =>
           val status = entry.get("status").asInstanceOf[Int]
           val entrySeq = fieldOpt(entry, "sequence_number")
@@ -356,7 +356,7 @@ object IcebergReader {
               case i: java.lang.Integer => i.longValue
             }.getOrElse(mSeq)
           val df = entry.get("data_file").asInstanceOf[GenericRecord]
-          val path = resolve(root, df.get("file_path").toString).toString
+          val path = TableFiles.location(root, df.get("file_path").toString).toString
           def longOf(field: String): Long = df.get(field) match {
             case l: java.lang.Long => l
             case i: java.lang.Integer => i.toLong
@@ -373,7 +373,7 @@ object IcebergReader {
           val fmt = fieldOpt(df, "file_format").map(_.toString)
             .getOrElse("PARQUET").toUpperCase
           val refFile = fieldOpt(df, "referenced_data_file")
-            .flatMap(Option(_)).map(v => resolve(root, v.toString).toString)
+            .flatMap(Option(_)).map(v => TableFiles.location(root, v.toString).toString)
           // explicit first_row_id wins; otherwise inherit from the
           // manifest's cursor (data files only), advancing it either way
           val explicitFri = fieldOpt(df, "first_row_id").flatMap(longIn)
@@ -667,7 +667,7 @@ object IcebergReader {
           val delSeq = manifestDf(spark, "__delfile",
             group.map(f => f.path -> f.sequenceNumber))
           val dels = spark.read.parquet(group.map(_.path): _*)
-            .withColumn("__delfile", normalizePath(input_file_name()))
+            .withColumn("__delfile", TableFiles.schemeless(TableFiles.fileName))
             .join(broadcast(delSeq), Seq("__delfile"), "left")
           val renamed = eqNames.foldLeft(
             dels.select((eqNames.map(col) :+ col("__seq").as("__delseq")): _*))(
@@ -704,7 +704,7 @@ object IcebergReader {
           .iterator.map(pos => (refFile, pos))
       }
       .toDF("__file", "__pos")
-      .withColumn("__file", normalizePath(col("__file")))
+      .withColumn("__file", TableFiles.schemeless(col("__file")))
   }
 
   /** The snapshot with the v3 ROW-LINEAGE metadata columns attached:
@@ -721,7 +721,7 @@ object IcebergReader {
     val snap = snapshot(spark, tablePath, asOfSnapshotId)
     val lineage = {
       import spark.implicits._
-      snap.files.map(f => (normPathStr(f.path),
+      snap.files.map(f => (TableFiles.schemeless(f.path),
           f.firstRowId.map(java.lang.Long.valueOf).orNull,
           f.sequenceNumber))
         .toDF("__file", "__fri", "__seq2")
@@ -747,12 +747,12 @@ object IcebergReader {
   private def applyDeletes0(spark: SparkSession,
       snap: Snapshot): DataFrame = {
     var data = dataScan(spark, snap, withMeta = true)
-      .withColumn("__file", normalizePath(col("__file")))
+      .withColumn("__file", TableFiles.schemeless(col("__file")))
     if (snap.deleteFiles.nonEmpty || snap.dvFiles.nonEmpty) {
       val posDels =
         if (snap.deleteFiles.isEmpty) None
         else Some(spark.read.parquet(snap.deleteFiles.map(_.path): _*)
-          .select(normalizePath(col("file_path")).as("__file"),
+          .select(TableFiles.schemeless(col("file_path")).as("__file"),
             col("pos").cast(LongType).as("__pos")))
       val dvDels =
         if (snap.dvFiles.isEmpty) None
@@ -762,9 +762,6 @@ object IcebergReader {
     }
     data
   }
-
-  private[io] def normPathStr(p: String): String =
-    p.replaceFirst("^[a-zA-Z][a-zA-Z0-9+.-]*:/+", "/")
 
   /** Scan the snapshot's data files. When the files carry parquet
     * field-ids (the Iceberg spec requires native writers to embed them),
@@ -791,7 +788,7 @@ object IcebergReader {
     * footer); the full sweep runs only for tables that declare a
     * mapping, i.e. tables known to carry imports.
     *
-    * `withMeta = true` attaches `__file` (input_file_name) and `__pos`
+    * `withMeta = true` attaches `__file` ([[TableFiles.fileName]]) and `__pos`
     * (row_index) INSIDE each branch — metadata columns do not resolve
     * through the union the mapped scan builds, so callers must not
     * reach for `_metadata` themselves. */
@@ -848,7 +845,7 @@ object IcebergReader {
     val idOf: Map[String, Int] = snap.fieldIdToName.map(_.swap)
     def metaCols(df: DataFrame): DataFrame =
       if (!withMeta) df
-      else df.withColumn("__file", input_file_name())
+      else df.withColumn("__file", TableFiles.fileName)
         .withColumn("__pos", col("_metadata.row_index"))
     def nameScan(ps: Seq[String]): DataFrame =
       metaCols(spark.read.schema(snap.schema).parquet(ps: _*))
@@ -919,21 +916,20 @@ object IcebergReader {
     if (partFallback.nonEmpty) {
       val fs = new Path(ps.head)
         .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val byUri: Map[String, DataFileEntry] = snap.files.map(f =>
-        fs.makeQualified(new Path(f.path)).toUri.toString -> f).toMap
+      val byPath: Map[String, DataFileEntry] =
+        snap.files.map(f => f.path -> f).toMap
       val manifestSchema = StructType(
         StructField("__pfile", StringType, nullable = false) +:
           partFallback.map(c =>
             StructField(s"__part_$c", StringType, nullable = true)))
       val manifestRows = ps.map { p =>
-        val uri = fs.makeQualified(new Path(p)).toUri.toString
-        Row.fromSeq(uri +: partFallback.map(c =>
-          byUri.get(uri).flatMap(f => Option(f.partition.getOrElse(c, null)))
+        Row.fromSeq(TableFiles.fileKey(fs, new Path(p)) +: partFallback.map(c =>
+          byPath.get(p).flatMap(f => Option(f.partition.getOrElse(c, null)))
             .map(_.toString).orNull))
       }
       val manifest = spark.createDataFrame(
         spark.sparkContext.parallelize(manifestRows, 1), manifestSchema)
-      base = base.withColumn("__pfile", input_file_name())
+      base = base.withColumn("__pfile", TableFiles.fileName)
         .join(broadcast(manifest), Seq("__pfile"), "left")
     }
     base.select(resolved.map {
@@ -1014,17 +1010,11 @@ object IcebergReader {
       StructField(fileCol, StringType, nullable = false),
       StructField("__seq", LongType, nullable = false)))
     val normalized = entries.map { case (p, s) =>
-      Row(p.replaceFirst("^[a-zA-Z][a-zA-Z0-9+.-]*:/+", "/"), s)
+      Row(TableFiles.schemeless(p), s)
     }
     spark.createDataFrame(
       spark.sparkContext.parallelize(normalized, 1), schema)
   }
-
-  /** Strip the URI scheme and collapse leading slashes — `file:///x`,
-    * `file:/x`, and `/x` all become `/x` (position-delete `file_path`
-    * values are written by the committing engine in its own URI style). */
-  private def normalizePath(c: Column): Column =
-    regexp_replace(c, "^[a-zA-Z][a-zA-Z0-9+.-]*:/+", "/")
 
   private def intOf(v: Any): Option[Int] = v match {
     case i: java.lang.Integer => Some(i.intValue)
@@ -1139,19 +1129,19 @@ object IcebergReader {
       case l: java.lang.Long => l.longValue
       case i: java.lang.Integer => i.longValue
     }
-    readAvro(spark, resolve(root, snapNode.get("manifest-list").asText))
+    readAvro(spark, TableFiles.location(root, snapNode.get("manifest-list").asText))
       .flatMap { m =>
         val mContent = intOf(fieldOpt(m, "content").orNull).getOrElse(0)
         val addedId = fieldOpt(m, "added_snapshot_id")
           .flatMap(longIn)
         if (mContent != 0 || addedId.exists(_ != snapId)) Nil
         else readAvro(spark,
-            resolve(root, m.get("manifest_path").toString)).flatMap { e =>
+            TableFiles.location(root, m.get("manifest_path").toString)).flatMap { e =>
           val status = e.get("status").asInstanceOf[Int]
           val entrySnap = fieldOpt(e, "snapshot_id").flatMap(longIn)
             .getOrElse(addedId.getOrElse(snapId))
           if (status == 1 && entrySnap == snapId)
-            Some(resolve(root,
+            Some(TableFiles.location(root,
               e.get("data_file").asInstanceOf[GenericRecord]
                 .get("file_path").toString).toString)
           else None
@@ -1232,15 +1222,6 @@ object IcebergReader {
     node
   }
 
-  /** Iceberg manifest paths are absolute URIs from the committing engine;
-    * re-root file-scheme/relative ones under the local table dir so a
-    * copied fixture still resolves. */
-  private[io] def resolve(root: Path, p: String): Path = {
-    val raw = new Path(p)
-    if (raw.isAbsolute && !p.startsWith("file:")) raw
-    else if (p.startsWith("file:")) new Path(new java.net.URI(p).getPath)
-    else new Path(root, p)
-  }
 
   /** `null_value_counts` (spec field 110): field-id → null total, same
     * array-encoded int-keyed map shape as the bounds. */

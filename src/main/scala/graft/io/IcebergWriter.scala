@@ -169,7 +169,17 @@ object IcebergWriter {
     * caller's file arithmetic is stale and must re-resolve. */
   final class ConcurrentCommit(msg: String) extends RuntimeException(msg)
 
-  private val MaxResolveRetries = 3
+  /** Run one snapshot-isolated resolution, re-running it from scratch
+    * (up to three more times) while its commit finds that another
+    * writer advanced the table first. */
+  private def resolving[A](resolveOnce: => A): A = {
+    var attempt = 0
+    while (true) {
+      try return resolveOnce
+      catch { case _: ConcurrentCommit if attempt < 3 => attempt += 1 }
+    }
+    throw new IllegalStateException("unreachable")
+  }
 
   /** Upsert by key — partition-granular: untouched files are carried as
     * EXISTING manifest entries, only touched partitions are rewritten.
@@ -177,26 +187,8 @@ object IcebergWriter {
     * resolved against is still current; if another writer advanced the
     * table, the whole resolution re-runs against the new snapshot. */
   def merge(spark: SparkSession, tablePath: String, src: DataFrame,
-      keys: Seq[String], matchNulls: Boolean = false): Committed = {
-    var attempt = 0
-    while (true) {
-      try return mergeOnce(spark, tablePath, src, keys, matchNulls)
-      catch {
-        case _: ConcurrentCommit if attempt < MaxResolveRetries =>
-          attempt += 1
-      }
-    }
-    throw new IllegalStateException("unreachable")
-  }
-
-  /** Key-match condition: plain `=` by default, `<=>` with `matchNulls`
-    * — the reference's `merge_match_nulls` (IS NOT DISTINCT FROM joins,
-    * `athena/_write_iceberg.py:297-393`). Without it a null-keyed row
-    * never matches and duplicates on every upsert. */
-  private def keyCond(l: DataFrame, r: DataFrame, keys: Seq[String],
-      matchNulls: Boolean) =
-    keys.map(k => if (matchNulls) l(k) <=> r(k) else l(k) === r(k))
-      .reduce(_ && _)
+      keys: Seq[String], matchNulls: Boolean = false): Committed =
+    resolving(mergeOnce(spark, tablePath, src, keys, matchNulls))
 
   private def mergeOnce(spark: SparkSession, tablePath: String,
       src: DataFrame, keys: Seq[String], matchNulls: Boolean): Committed = {
@@ -207,41 +199,11 @@ object IcebergWriter {
       return write(src, tablePath, mode = "append")
     val snap = snapOpt.get
     checkNoEqualityDeletes(snap, tablePath, "merge")
-    val current = IcebergReader.read(spark, tablePath)
-    val srcAligned = src.select(snap.schema.fieldNames.map(col).toSeq: _*)
     val pfields = IcebergReader.partitionFields(spark, tablePath)
-    val (touchedByKeys, keptRaw) =
-      if (pfields.isEmpty) (snap.files, Nil)
-      else {
-        val srcKeys = srcAligned.select(keys.map(col): _*).distinct()
-        val touched = touchedPartitions(spark, snap.schema, pfields,
-          srcAligned.unionByName(
-            current.join(broadcast(srcKeys),
-              keyCond(current, srcKeys, keys, matchNulls), "left_semi")))
-        // a file written under an OLDER partition spec has no tuple in
-        // the current spec's terms: it always rewrites (carrying it as
-        // EXISTING into this commit's current-spec manifest would
-        // mislabel its partition values)
-        snap.files.partition(f => f.specId != snap.defaultSpecId ||
-          touched.contains(partitionTuple(pfields, f)))
-      }
-    // a kept file TARGETED by a live position delete cannot be carried as
-    // a bare EXISTING entry (the delete manifests are not carried by this
-    // rewrite commit — carrying the file alone would resurrect its
-    // deleted rows); it is rewritten with the deletes applied instead
-    val targeted = deleteTargetPaths(spark, snap)
-    val (keptTargeted, keptFiles) =
-      keptRaw.partition(f => targeted.contains(normPath(f.path)))
-    val touchedFiles = touchedByKeys ++ keptTargeted
-    val touchedScan =
-      if (pfields.isEmpty) current
-      else if (touchedFiles.isEmpty) current.limit(0)
-      else deleteAwareScan(spark, snap, touchedFiles)
-    val merged = touchedScan.join(srcAligned,
-        keyCond(touchedScan, srcAligned, keys, matchNulls), "left_anti")
-      .unionByName(srcAligned)
+    val (plan, merged) = TableFiles.planMerge(target(spark, tablePath, snap, pfields),
+      src.select(snap.schema.fieldNames.map(col).toSeq: _*), keys, matchNulls)
     val adds = writeDataFiles(merged, tablePath, pfields)
-    commit(spark, tablePath, snap.schema, pfields, adds, keptFiles.map(asInfo),
+    commit(spark, tablePath, snap.schema, pfields, adds, plan.kept.map(asInfo),
       operation = "overwrite", carryCurrentManifests = false,
       expectedParent = Some(snap.snapshotId))
   }
@@ -251,7 +213,7 @@ object IcebergWriter {
     * rewritten files and refuse semantics they cannot materialize.
     * Equality deletes need the sequence-number join the READER implements
     * but a partition-granular rewrite cannot preserve — raise loudly
-    * rather than resurrect rows (the round-5 advice's failure mode). */
+    * rather than resurrect rows. */
   private def checkNoEqualityDeletes(snap: IcebergReader.Snapshot,
       tablePath: String, op: String): Unit =
     if (snap.equalityDeleteFiles.nonEmpty)
@@ -259,9 +221,6 @@ object IcebergWriter {
         s"$op on $tablePath: table carries equality delete files " +
           s"(${snap.equalityDeleteFiles.map(_.path).mkString(", ")}); " +
           "rewriting it here would resurrect deleted rows")
-
-  private def normPath(p: String): String =
-    p.replaceFirst("^[a-zA-Z][a-zA-Z0-9+.-]*:/+", "/")
 
   /** Normalized data-file paths any live position-delete file targets —
     * a distributed scan of the (small) delete files, one distinct path
@@ -273,11 +232,10 @@ object IcebergWriter {
     val fromParquet =
       if (snap.deleteFiles.isEmpty) Set.empty[String]
       else spark.read.parquet(snap.deleteFiles.map(_.path): _*)
-        .select(regexp_replace(col("file_path"),
-          "^[a-zA-Z][a-zA-Z0-9+.-]*:/+", "/").as("f"))
+        .select(TableFiles.schemeless(col("file_path")).as("f"))
         .distinct().collect().map(_.getString(0)).toSet
     fromParquet ++
-      snap.dvFiles.flatMap(_.referencedDataFile).map(normPath)
+      snap.dvFiles.flatMap(_.referencedDataFile).map(p => TableFiles.schemeless(p))
   }
 
   /** Scan of `files` with the snapshot's position deletes applied (the
@@ -287,32 +245,39 @@ object IcebergWriter {
       files: Seq[IcebergReader.DataFileEntry]): DataFrame = {
     val sub = snap.copy(files = files, equalityDeleteFiles = Nil)
     val scan =
-      if (snap.deleteFiles.isEmpty && snap.dvFiles.isEmpty)
+      if (files.isEmpty)
+        spark.createDataFrame(
+          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], snap.schema)
+      else if (snap.deleteFiles.isEmpty && snap.dvFiles.isEmpty)
         IcebergReader.dataScan(spark, sub)
       else IcebergReader.applyDeletes(spark, sub)
     scan.select(snap.schema.fieldNames.map(col).toSeq: _*)
   }
 
-  /** Distinct partition tuples of `rows`, rendered through Spark's own
-    * cast-to-string so they compare equal to the hive-path-derived
-    * manifest strings. JVM `toString` is NOT that rendering (e.g.
-    * `java.sql.Timestamp` appends `.0`), which misclassified
-    * timestamp/date partitions as untouched — transform columns are
-    * evaluated and stringified IN Spark on both sides instead. */
-  private def touchedPartitions(spark: SparkSession, schema: StructType,
-      pfields: Seq[PartitionField],
-      rows: DataFrame): Set[Seq[Option[String]]] = {
-    val valCols = pfields.map(f =>
-      IcebergTransforms.column(spark, f, schema(f.source).dataType)
-        .cast(StringType).as(f.name))
-    rows.select(valCols: _*).distinct().collect()
-      .map(r => pfields.indices.map(i => Option(r.getString(i))).toSeq)
-      .toSet
+  /** The snapshot as a rewrite target. A file's tuple is its manifest
+    * partition tuple, whose values this writer records in Spark's
+    * cast-to-string rendering; the table-row side computes the same
+    * tuple through the partition transforms. Two kinds of file always
+    * rewrite: one written under an OLDER partition spec, whose tuple
+    * the current spec cannot express (carrying it as EXISTING into
+    * this commit's current-spec manifest would mislabel its partition
+    * values), and one a live position delete targets (the rewrite
+    * commit drops the delete manifests, so carrying the file alone
+    * would resurrect its deleted rows — it rewrites with the deletes
+    * applied instead). */
+  private def target(spark: SparkSession, tablePath: String,
+      snap: IcebergReader.Snapshot, pfields: Seq[PartitionField])
+      : TableFiles.Target[IcebergReader.DataFileEntry] = {
+    lazy val targeted = deleteTargetPaths(spark, snap)
+    TableFiles.Target(snap.files, deleteAwareScan(spark, snap, _),
+      pfields.map(f =>
+        IcebergTransforms.column(spark, f, snap.schema(f.source).dataType)),
+      f =>
+        if (f.specId != snap.defaultSpecId ||
+            targeted.contains(TableFiles.schemeless(f.path))) None
+        else Some(pfields.map(ff =>
+          f.partition.get(ff.name).flatMap(Option(_)).map(_.toString))))
   }
-
-  private def partitionTuple(pfields: Seq[PartitionField],
-      f: IcebergReader.DataFileEntry): Seq[Option[String]] =
-    pfields.map(ff => f.partition.get(ff.name).flatMap(Option(_)).map(_.toString))
 
   /** `athena.delete_from_iceberg_table`
     * (`athena/_write_iceberg.py:715-868`): remove rows whose key appears
@@ -320,17 +285,8 @@ object IcebergWriter {
     * [[merge]]: untouched files become EXISTING manifest entries, only
     * partitions holding matched keys are rewritten. */
   def deleteMatched(spark: SparkSession, tablePath: String, keys: DataFrame,
-      keyCols: Seq[String], matchNulls: Boolean = false): Committed = {
-    var attempt = 0
-    while (true) {
-      try return deleteMatchedOnce(spark, tablePath, keys, keyCols, matchNulls)
-      catch {
-        case _: ConcurrentCommit if attempt < MaxResolveRetries =>
-          attempt += 1
-      }
-    }
-    throw new IllegalStateException("unreachable")
-  }
+      keyCols: Seq[String], matchNulls: Boolean = false): Committed =
+    resolving(deleteMatchedOnce(spark, tablePath, keys, keyCols, matchNulls))
 
   private def deleteMatchedOnce(spark: SparkSession, tablePath: String,
       keys: DataFrame, keyCols: Seq[String],
@@ -342,33 +298,12 @@ object IcebergWriter {
       return Committed(-1L, 0L, 0)
     val snap = snapOpt.get
     checkNoEqualityDeletes(snap, tablePath, "delete_from_iceberg_table")
-    val current = IcebergReader.read(spark, tablePath)
-    val keySet = keys.select(keyCols.map(col): _*).distinct()
     val pfields = IcebergReader.partitionFields(spark, tablePath)
-    val (touchedByKeys, keptRaw) =
-      if (pfields.isEmpty) (snap.files, Nil)
-      else {
-        val touched = touchedPartitions(spark, snap.schema, pfields,
-          current.join(broadcast(keySet),
-            keyCond(current, keySet, keyCols, matchNulls), "left_semi"))
-        // old-spec files always rewrite (see merge) — their tuples are
-        // not expressible in the current spec's manifest
-        snap.files.partition(f => f.specId != snap.defaultSpecId ||
-          touched.contains(partitionTuple(pfields, f)))
-      }
-    val targeted = deleteTargetPaths(spark, snap)
-    val (keptTargeted, keptFiles) =
-      keptRaw.partition(f => targeted.contains(normPath(f.path)))
-    val touchedFiles = touchedByKeys ++ keptTargeted
-    val remaining =
-      if (touchedFiles.isEmpty) current.limit(0)
-      else {
-        val scan = deleteAwareScan(spark, snap, touchedFiles)
-        scan.join(broadcast(keySet),
-          keyCond(scan, keySet, keyCols, matchNulls), "left_anti")
-      }
+    val (plan, remaining) = TableFiles.planDeleteMatched(
+      target(spark, tablePath, snap, pfields),
+      keys.select(keyCols.map(col): _*).distinct(), keyCols, matchNulls)
     val adds = writeDataFiles(remaining, tablePath, pfields)
-    commit(spark, tablePath, snap.schema, pfields, adds, keptFiles.map(asInfo),
+    commit(spark, tablePath, snap.schema, pfields, adds, plan.kept.map(asInfo),
       operation = "delete", carryCurrentManifests = false,
       expectedParent = Some(snap.snapshotId))
   }
@@ -386,17 +321,8 @@ object IcebergWriter {
     * anti-join dedups. Snapshot-isolated like [[merge]]: a concurrent
     * rewrite invalidates matched positions, so the resolution re-runs. */
   def deleteWhere(spark: SparkSession, tablePath: String,
-      predicate: org.apache.spark.sql.Column): Committed = {
-    var attempt = 0
-    while (true) {
-      try return deleteWhereOnce(spark, tablePath, predicate)
-      catch {
-        case _: ConcurrentCommit if attempt < MaxResolveRetries =>
-          attempt += 1
-      }
-    }
-    throw new IllegalStateException("unreachable")
-  }
+      predicate: org.apache.spark.sql.Column): Committed =
+    resolving(deleteWhereOnce(spark, tablePath, predicate))
 
   /** `UPDATE … SET … WHERE` as ONE zero-rewrite commit (Athena's
     * Iceberg UPDATE shape): the matched LIVE rows are re-written with
@@ -414,16 +340,7 @@ object IcebergWriter {
       predicate: org.apache.spark.sql.Column,
       assignments: Seq[(String, org.apache.spark.sql.Column)]): Committed = {
     require(assignments.nonEmpty, "UPDATE needs at least one assignment")
-    var attempt = 0
-    while (true) {
-      try return deleteWhereOnce(spark, tablePath, predicate,
-        Some(assignments))
-      catch {
-        case _: ConcurrentCommit if attempt < MaxResolveRetries =>
-          attempt += 1
-      }
-    }
-    throw new IllegalStateException("unreachable")
+    resolving(deleteWhereOnce(spark, tablePath, predicate, Some(assignments)))
   }
 
   /** The updated replacement rows of an UPDATE: the delete-applied
@@ -459,8 +376,6 @@ object IcebergWriter {
     if (IcebergReader.formatVersion(spark, tablePath) >= 3)
       return deleteWhereDvOnce(spark, tablePath, predicate, snap,
         requireMatches = true, updateAssignments = updateAssignments)
-    val root = new Path(tablePath)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val pfields = IcebergReader.partitionFields(spark, tablePath)
     // __file/__pos are attached inside the scan's branches (`_metadata`
     // does not resolve through a name-mapped union)
@@ -475,46 +390,40 @@ object IcebergWriter {
         col("__pos").cast("long").as("pos",
           new org.apache.spark.sql.types.MetadataBuilder()
             .putLong("parquet.field.id", 2147483545L).build()))
-    val staging = new Path(root, s".iceberg-del-staging-${UUID.randomUUID()}")
-    try {
+    val delFiles = writeDeleteFiles(
       matched.repartitionByRange(col("file_path"), col("pos"))
-        .sortWithinPartitions("file_path", "pos")
-        .write.mode("overwrite").parquet(staging.toString)
-      val parts = {
-        val out = mutable.ArrayBuffer.empty[(String, Long)]
-        val it = fs.listFiles(staging, true)
-        while (it.hasNext) {
-          val st = it.next()
-          if (st.getPath.getName.endsWith(".parquet"))
-            out += ((st.getPath.toString, st.getLen))
-        }
-        out.toSeq
-      }
-      val counts = recordCounts(spark, parts.map(_._1))
-      val delFiles = parts.filter(p => counts.getOrElse(p._1, 0L) > 0L)
-        .map { case (src, len) =>
-          val dst = new Path(new Path(root, "data"),
-            s"delete-${UUID.randomUUID()}.parquet")
-          fs.mkdirs(dst.getParent)
-          if (!fs.rename(new Path(src), dst))
-            throw new java.io.IOException(s"rename $src -> $dst failed")
-          FileInfo(fs.makeQualified(dst).toString, Map.empty, len,
-            counts(src))
-        }
-      if (delFiles.isEmpty) return Committed(snap.snapshotId, -1L, 0)
-      // UPDATE: the replacement rows land as new data files in the SAME
-      // commit that flags the old positions — one atomic snapshot
-      val adds = updateAssignments match {
-        case None => Nil
-        case Some(asg) => writeDataFiles(
-          updatedRows(spark, snap, predicate, asg), tablePath, pfields)
-      }
-      commit(spark, tablePath, snap.schema, pfields, adds = adds,
-        kept = Nil,
-        operation = if (updateAssignments.isDefined) "overwrite" else "delete",
-        carryCurrentManifests = true,
-        expectedParent = Some(snap.snapshotId), deleteAdds = delFiles)
-    } finally fs.delete(staging, true)
+        .sortWithinPartitions("file_path", "pos"),
+      tablePath, "delete")
+    if (delFiles.isEmpty) return Committed(snap.snapshotId, -1L, 0)
+    // UPDATE: the replacement rows land as new data files in the SAME
+    // commit that flags the old positions — one atomic snapshot
+    val adds = updateAssignments match {
+      case None => Nil
+      case Some(asg) => writeDataFiles(
+        updatedRows(spark, snap, predicate, asg), tablePath, pfields)
+    }
+    commit(spark, tablePath, snap.schema, pfields, adds = adds,
+      kept = Nil,
+      operation = if (updateAssignments.isDefined) "overwrite" else "delete",
+      carryCurrentManifests = true,
+      expectedParent = Some(snap.snapshotId), deleteAdds = delFiles)
+  }
+
+  /** Stage delete rows as Parquet and move each non-empty part file to
+    * `data/<kind>-<uuid>.parquet` (an empty result writes one empty
+    * part file, which is dropped). */
+  private def writeDeleteFiles(rows: DataFrame, tablePath: String,
+      kind: String, equalityIds: Seq[Int] = Nil): Seq[FileInfo] = {
+    val spark = rows.sparkSession
+    val root = new Path(tablePath)
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val moved = TableFiles.writeStaged(rows, root, Nil)(_ =>
+      new Path(new Path(root, "data"), s"$kind-${UUID.randomUUID()}.parquet"))
+    val counts = TableFiles.recordCounts(spark, moved.map(_.path))
+    val (nonEmpty, empty) = moved.partition(m => counts(m.path) > 0L)
+    empty.foreach(m => fs.delete(new Path(m.path), false))
+    nonEmpty.map(m => FileInfo(m.path, Map.empty, m.size, counts(m.path),
+      equalityIds = equalityIds))
   }
 
   /** v3 `DELETE FROM … WHERE` via DELETION VECTORS (iceberg spec
@@ -542,16 +451,14 @@ object IcebergWriter {
     val root = new Path(tablePath)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val pfields = IcebergReader.partitionFields(spark, tablePath)
-    val strip = (c: org.apache.spark.sql.Column) =>
-      regexp_replace(c, "^[a-zA-Z][a-zA-Z0-9+.-]*:/+", "/")
     val matched = IcebergReader.dataScan(spark, snap, withMeta = true)
       .filter(predicate)
-      .select(strip(col("__file")).as("f"),
+      .select(TableFiles.schemeless(col("__file")).as("f"),
         col("__pos").cast("long").as("p"))
     val priorParquet =
       if (snap.deleteFiles.isEmpty) None
       else Some(spark.read.parquet(snap.deleteFiles.map(_.path): _*)
-        .select(strip(col("file_path")).as("f"),
+        .select(TableFiles.schemeless(col("file_path")).as("f"),
           col("pos").cast("long").as("p")))
     val priorDvs =
       if (snap.dvFiles.isEmpty) None
@@ -578,41 +485,18 @@ object IcebergWriter {
     val blobs = all
       .repartition(col("f")).sortWithinPartitions(col("f"), col("p"))
       .mapPartitions { it =>
-        if (it.isEmpty) Iterator.empty
+        val dvs = TableFiles.positionBitmaps(it)
+          .map { case (f, bytes, card) => Puffin.DvBlob(f, bytes, card) }.toSeq
+        if (dvs.isEmpty) Iterator.empty
         else {
-          val dvs = mutable.ArrayBuffer.empty[Puffin.DvBlob]
-          var curFile: String = null
-          var buckets = mutable.SortedMap.empty[Long, org.roaringbitmap.RoaringBitmap]
-          def finish(): Unit = if (curFile != null) {
-            val (bytes, card) =
-              DeltaDeletionVectors.encodeBuckets(buckets.toSeq)
-            dvs += Puffin.DvBlob(curFile, bytes, card)
-          }
-          it.foreach { row =>
-            val f = row.getString(0)
-            if (f != curFile) {
-              finish()
-              curFile = f
-              buckets = mutable.SortedMap.empty
-            }
-            val pos = row.getLong(1)
-            buckets.getOrElseUpdate(pos >>> 32,
-              new org.roaringbitmap.RoaringBitmap())
-              .add((pos & 0xffffffffL).toInt)
-          }
-          finish()
-          if (dvs.isEmpty) Iterator.empty
-          else {
-            val p = new Path(dataDir,
-              s"dv-${UUID.randomUUID()}.puffin")
-            val located = Puffin.writeDvFile(confBc.value.value, p,
-              dvs.toSeq, snapshotId, predictedSeq)
-            val size = p.getFileSystem(confBc.value.value)
-              .getFileStatus(p).getLen
-            val cardOf = dvs.map(d => d.referencedDataFile -> d.cardinality).toMap
-            located.iterator.map { case (ref, off, len) =>
-              (ref, p.toString, off, len, cardOf(ref), size)
-            }
+          val p = new Path(dataDir, s"dv-${UUID.randomUUID()}.puffin")
+          val located = Puffin.writeDvFile(confBc.value.value, p,
+            dvs, snapshotId, predictedSeq)
+          val size = p.getFileSystem(confBc.value.value)
+            .getFileStatus(p).getLen
+          val cardOf = dvs.map(d => d.referencedDataFile -> d.cardinality).toMap
+          located.iterator.map { case (ref, off, len) =>
+            (ref, p.toString, off, len, cardOf(ref), size)
           }
         }
       }.collect()
@@ -630,7 +514,7 @@ object IcebergWriter {
       }
     }
     val partOf: Map[String, Map[String, Option[String]]] =
-      snap.files.map(f => normPath(f.path) ->
+      snap.files.map(f => TableFiles.schemeless(f.path) ->
         f.partition.map { case (k, v) => k -> Option(v).map(_.toString) })
         .toMap
     val dvInfos = blobs.toSeq.map { case (ref, puffin, off, len, card, size) =>
@@ -819,16 +703,8 @@ object IcebergWriter {
       zorderBy: Seq[String] = Nil): Committed = {
     require(sortBy.isEmpty || zorderBy.isEmpty,
       "sortBy (range clustering) and zorderBy are mutually exclusive")
-    var attempt = 0
-    while (true) {
-      try return rewriteDataFilesOnce(spark, tablePath,
-        targetFileSizeBytes, sortBy, zorderBy)
-      catch {
-        case _: ConcurrentCommit if attempt < MaxResolveRetries =>
-          attempt += 1
-      }
-    }
-    throw new IllegalStateException("unreachable")
+    resolving(rewriteDataFilesOnce(spark, tablePath,
+      targetFileSizeBytes, sortBy, zorderBy))
   }
 
   private def rewriteDataFilesOnce(spark: SparkSession, tablePath: String,
@@ -848,15 +724,15 @@ object IcebergWriter {
       // rewriting them migrates the table to one spec (the maintenance
       // pass Iceberg prescribes after partition evolution)
       else snap.files.filter(f => f.sizeBytes < targetFileSizeBytes ||
-        posTargets.contains(normPath(f.path)) ||
+        posTargets.contains(TableFiles.schemeless(f.path)) ||
         f.specId != snap.defaultSpecId)
     val worthIt = hasEq || posTargets.nonEmpty || candidates.size >= 2 ||
       candidates.exists(_.specId != snap.defaultSpecId)
     if (candidates.isEmpty || !worthIt)
       return Committed(snap.snapshotId, -1L, 0)
     val kept = {
-      val c = candidates.map(f => normPath(f.path)).toSet
-      snap.files.filterNot(f => c.contains(normPath(f.path)))
+      val c = candidates.map(f => TableFiles.schemeless(f.path)).toSet
+      snap.files.filterNot(f => c.contains(TableFiles.schemeless(f.path)))
     }
     val pfields = IcebergReader.partitionFields(spark, tablePath)
     val sub = snap.copy(files = candidates)
@@ -934,15 +810,7 @@ object IcebergWriter {
             .exists(_.expressions.exists(e => !e.deterministic)))
         src.localCheckpoint()
       else src
-    var attempt = 0
-    while (true) {
-      try return upsertByKeyOnce(spark, tablePath, pinned, keys)
-      catch {
-        case _: ConcurrentCommit if attempt < MaxResolveRetries =>
-          attempt += 1
-      }
-    }
-    throw new IllegalStateException("unreachable")
+    resolving(upsertByKeyOnce(spark, tablePath, pinned, keys))
   }
 
   private def upsertByKeyOnce(spark: SparkSession, tablePath: String,
@@ -956,9 +824,7 @@ object IcebergWriter {
     if (snapOpt.isEmpty || snapOpt.exists(_.files.isEmpty))
       return write(src, tablePath, mode = "append")
     val snap = snapOpt.get
-    checkAppendSchema(snap.schema, src.schema)
-    val root = new Path(tablePath)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    SchemaMerge.checkAppendSchema(snap.schema, src.schema)
     val pfields = IcebergReader.partitionFields(spark, tablePath)
     val ids = topLevelFieldIds(snap.schema)
     val eqIds = keys.map(k => ids.getOrElse(k,
@@ -971,34 +837,10 @@ object IcebergWriter {
       col(k).as(k, new org.apache.spark.sql.types.MetadataBuilder()
         .putLong("parquet.field.id", ids(k).toLong).build())
     }.toSeq: _*).distinct()
-    val staging = new Path(root, s".iceberg-eqdel-staging-${UUID.randomUUID()}")
-    try {
-      keyDf.write.mode("overwrite").parquet(staging.toString)
-      val parts = {
-        val out = mutable.ArrayBuffer.empty[(String, Long)]
-        val it = fs.listFiles(staging, true)
-        while (it.hasNext) {
-          val st = it.next()
-          if (st.getPath.getName.endsWith(".parquet"))
-            out += ((st.getPath.toString, st.getLen))
-        }
-        out.toSeq
-      }
-      val counts = recordCounts(spark, parts.map(_._1))
-      val delFiles = parts.filter(p => counts.getOrElse(p._1, 0L) > 0L)
-        .map { case (srcPath, len) =>
-          val dst = new Path(new Path(root, "data"),
-            s"eqdelete-${UUID.randomUUID()}.parquet")
-          fs.mkdirs(dst.getParent)
-          if (!fs.rename(new Path(srcPath), dst))
-            throw new java.io.IOException(s"rename $srcPath -> $dst failed")
-          FileInfo(fs.makeQualified(dst).toString, Map.empty, len,
-            counts(srcPath), equalityIds = eqIds)
-        }
-      commit(spark, tablePath, snap.schema, pfields, adds, kept = Nil,
-        operation = "overwrite", carryCurrentManifests = true,
-        expectedParent = Some(snap.snapshotId), deleteAdds = delFiles)
-    } finally fs.delete(staging, true)
+    commit(spark, tablePath, snap.schema, pfields, adds, kept = Nil,
+      operation = "overwrite", carryCurrentManifests = true,
+      expectedParent = Some(snap.snapshotId),
+      deleteAdds = writeDeleteFiles(keyDf, tablePath, "eqdelete", eqIds))
   }
 
   /** Create or move a named snapshot REF (spec v2 `refs` — `tag` pins a
@@ -1542,7 +1384,7 @@ object IcebergWriter {
         Map("schema.name-mapping.default" -> defaultNameMapping(schema)))
     val root = new Path(tablePath)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val counts = recordCounts(spark, files)
+    val counts = TableFiles.recordCounts(spark, files)
     val adds = files.map { f =>
       val p = new Path(f)
       FileInfo(fs.makeQualified(p).toString, Map.empty,
@@ -1587,7 +1429,7 @@ object IcebergWriter {
     // carries them from the previous snapshot) skip the footer sweep —
     // the refresh then reads footers only for files NEW since last time
     val unknown = files.map(_._1).filterNot(knownCounts.contains)
-    val counts = knownCounts ++ recordCounts(spark, unknown)
+    val counts = knownCounts ++ TableFiles.recordCounts(spark, unknown)
     val adds = files.map { case (f, pv) =>
       val p = new Path(f)
       FileInfo(fs.makeQualified(p).toString, pv,
@@ -1704,7 +1546,7 @@ object IcebergWriter {
           mutable.ArrayBuffer[MEntry]]
       val carriedUnmerged = mutable.ArrayBuffer.empty[GenericRecord]
       dataMfs.foreach { lr =>
-        val mPath = IcebergReader.resolve(root,
+        val mPath = TableFiles.location(root,
           lr.get("manifest_path").toString)
         val (entries, fMeta) = IcebergReader.readAvroWithMeta(spark, mPath)
         if (entries.nonEmpty) {
@@ -1946,17 +1788,17 @@ object IcebergWriter {
       s"no parseable Iceberg metadata at $tablePath"))._2
     val live = mutable.Set.empty[String]
     IcebergReaderAccess.jsonArray(meta2.get("snapshots")).foreach { s =>
-      val listPath = IcebergReader.resolve(root, s.get("manifest-list").asText)
+      val listPath = TableFiles.location(root, s.get("manifest-list").asText)
       live += fs.makeQualified(listPath).toString
       IcebergReader.readAvro(spark, listPath).foreach { m =>
-        val mp = IcebergReader.resolve(root, m.get("manifest_path").toString)
+        val mp = TableFiles.location(root, m.get("manifest_path").toString)
         val q = fs.makeQualified(mp).toString
         if (!live.contains(q)) {
           live += q
           IcebergReader.readAvro(spark, mp).foreach { e =>
             val df = e.get("data_file").asInstanceOf[GenericRecord]
             live += fs.makeQualified(
-              IcebergReader.resolve(root, df.get("file_path").toString)).toString
+              TableFiles.location(root, df.get("file_path").toString)).toString
           }
         }
       }
@@ -2008,21 +1850,6 @@ object IcebergWriter {
       // explicitly (spec: carried entries must not be re-assigned)
       firstRowId = f.firstRowId)
 
-  /** Append must not silently drop or retype columns (the reference's
-    * schema check, `s3/_s3_tables_iceberg.py:200-219`). */
-  private def checkAppendSchema(table: StructType, incoming: StructType): Unit = {
-    val t = table.fields.map(f => f.name -> f.dataType).toMap
-    incoming.fields.foreach { f =>
-      t.get(f.name) match {
-        case None => throw new IllegalArgumentException(
-          s"append column ${f.name} not in table schema (use overwrite to evolve)")
-        case Some(dt) if dt != f.dataType => throw new IllegalArgumentException(
-          s"append column ${f.name}: ${f.dataType.simpleString} != table's ${dt.simpleString}")
-        case _ => ()
-      }
-    }
-  }
-
   // ---- data files --------------------------------------------------------
 
   /** Stage as parquet (partition values computed into hidden path
@@ -2034,85 +1861,37 @@ object IcebergWriter {
       partFields: Seq[PartitionField]): Seq[FileInfo] = {
     val spark = df.sparkSession
     val root = new Path(tablePath)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val staging = new Path(root, s".iceberg-staging-${UUID.randomUUID()}")
     val Pt = "__ipt_"
-    try {
-      // embed the table's field-ids in the parquet files (the spec
-      // requires them of native writers; field-id-resolving readers —
-      // ours included — need them for rename-safe column resolution).
-      // The id assignment is the same positional scheme commit() writes
-      // into the metadata JSON and the manifest bounds use.
-      val ids = topLevelFieldIds(df.schema)
-      val withIds = df.select(df.schema.fields.map { f =>
-        ids.get(f.name).map { id =>
-          col(f.name).as(f.name,
-            new org.apache.spark.sql.types.MetadataBuilder()
-              .withMetadata(f.metadata)
-              .putLong("parquet.field.id", id.toLong).build())
-        }.getOrElse(col(f.name))
-      }.toSeq: _*)
-      val dup = partFields.foldLeft(withIds)((d, f) => d.withColumn(
-        Pt + f.name,
-        IcebergTransforms.column(spark, f, df.schema(f.source).dataType)))
-      val w = dup.write.mode("overwrite")
-      (if (partFields.nonEmpty) w.partitionBy(partFields.map(Pt + _.name): _*)
-       else w)
-        .parquet(staging.toString)
-      val stagingStr = fs.makeQualified(staging).toString
-      val moved = mutable.ArrayBuffer.empty[(String, Long)]
-      val it = fs.listFiles(staging, true)
-      while (it.hasNext) {
-        val st = it.next()
-        if (st.getPath.getName.endsWith(".parquet")) {
-          val rel = st.getPath.toString.stripPrefix(stagingStr)
-            .stripPrefix("/").split('/')
-            .map(seg => if (seg.startsWith(Pt)) seg.stripPrefix(Pt) else seg)
-            .mkString("/")
-          val dst = new Path(new Path(root, "data"), rel)
-          fs.mkdirs(dst.getParent)
-          if (!fs.rename(st.getPath, dst))
-            throw new java.io.IOException(s"rename ${st.getPath} -> $dst failed")
-          moved += ((fs.makeQualified(dst).toString, st.getLen))
-        }
-      }
-      val stats = footerStats(spark, moved.map(_._1).toSeq)
-      val idOf = topLevelFieldIds(df.schema)
-      moved.map { case (path, size) =>
-        val (cnt, lo, hi, nulls) = stats.getOrElse(path,
-          (0L, Map.empty[String, Array[Byte]], Map.empty[String, Array[Byte]],
-            Map.empty[String, Long]))
-        FileInfo(path, partitionValuesOf(path), size, cnt,
-          lo.flatMap { case (n, b) => idOf.get(n).map(_ -> b) },
-          hi.flatMap { case (n, b) => idOf.get(n).map(_ -> b) },
-          nullCounts =
-            nulls.flatMap { case (n, c) => idOf.get(n).map(_ -> c) })
-      }.toSeq
-    } finally fs.delete(staging, true)
-  }
-
-  /** Per-file row counts from parquet footers, read ON EXECUTORS
-    * (metadata-only; the driver receives one (path, count) pair per
-    * file — manifest-scale by definition). */
-  private def recordCounts(spark: SparkSession,
-      paths: Seq[String]): Map[String, Long] = {
-    if (paths.isEmpty) return Map.empty
-    import spark.implicits._
-    val confBc = spark.sparkContext.broadcast(
-      new org.apache.spark.util.SerializableConfiguration(
-        spark.sparkContext.hadoopConfiguration))
-    spark.createDataset(paths)
-      .mapPartitions { it =>
-        val conf = confBc.value.value
-        it.map { f =>
-          val in = org.apache.parquet.hadoop.util.HadoopInputFile
-            .fromPath(new Path(f), conf)
-          val rdr = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-          try (f, rdr.getRecordCount)
-          finally rdr.close()
-        }
-      }
-      .collect().toMap
+    // embed the table's field-ids in the parquet files (the spec
+    // requires them of native writers; field-id-resolving readers —
+    // ours included — need them for rename-safe column resolution).
+    // The id assignment is the same positional scheme commit() writes
+    // into the metadata JSON and the manifest bounds use.
+    val ids = topLevelFieldIds(df.schema)
+    val withIds = df.select(df.schema.fields.map { f =>
+      ids.get(f.name).map { id =>
+        col(f.name).as(f.name,
+          new org.apache.spark.sql.types.MetadataBuilder()
+            .withMetadata(f.metadata)
+            .putLong("parquet.field.id", id.toLong).build())
+      }.getOrElse(col(f.name))
+    }.toSeq: _*)
+    val dup = partFields.foldLeft(withIds)((d, f) => d.withColumn(
+      Pt + f.name,
+      IcebergTransforms.column(spark, f, df.schema(f.source).dataType)))
+    def relOf(staged: String) = staged.split('/').map(_.stripPrefix(Pt)).mkString("/")
+    val moved = TableFiles.writeStaged(dup, root, partFields.map(Pt + _.name))(
+      rel => new Path(new Path(root, "data"), relOf(rel)))
+    val stats = footerStats(spark, moved.map(_.path))
+    moved.map { m =>
+      val (cnt, lo, hi, nulls) = stats.getOrElse(m.path,
+        (0L, Map.empty[String, Array[Byte]], Map.empty[String, Array[Byte]],
+          Map.empty[String, Long]))
+      FileInfo(m.path, TableFiles.partitionValuesOf(relOf(m.rel)), m.size, cnt,
+        lo.flatMap { case (n, b) => ids.get(n).map(_ -> b) },
+        hi.flatMap { case (n, b) => ids.get(n).map(_ -> b) },
+        nullCounts = nulls.flatMap { case (n, c) => ids.get(n).map(_ -> c) })
+    }
   }
 
   /** Top-level column name → Iceberg field-id, mirroring exactly the id
@@ -2275,30 +2054,6 @@ object IcebergWriter {
     (acc.map { case (n, (mn, _)) => n -> mn._2 }.toMap,
       acc.map { case (n, (_, mx)) => n -> mx._2 }.toMap,
       nulls.toMap)
-  }
-
-  /** `…/data/p=a/q=__HIVE_DEFAULT_PARTITION__/part….parquet` ⇒
-    * {p→Some(a), q→None}. */
-  private def partitionValuesOf(path: String): Map[String, Option[String]] =
-    path.split('/').dropRight(1).filter(_.contains('=')).map { seg =>
-      val Array(k, v) = seg.split("=", 2)
-      k -> (if (v == "__HIVE_DEFAULT_PARTITION__") None
-            else Some(unescapePathName(v)))
-    }.toMap
-
-  private def unescapePathName(s: String): String = {
-    val sb = new StringBuilder
-    var i = 0
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (c == '%' && i + 2 < s.length) {
-        try {
-          sb.append(Integer.parseInt(s.substring(i + 1, i + 3), 16).toChar)
-          i += 3
-        } catch { case _: Exception => sb.append(c); i += 1 }
-      } else { sb.append(c); i += 1 }
-    }
-    sb.toString
   }
 
   // ---- commit ------------------------------------------------------------
@@ -2507,7 +2262,7 @@ object IcebergWriter {
     // parquet or puffin DVs)? Read once per manifest, manifest-scale.
     def holdsPositionDeletes(listRec: GenericRecord): Boolean = {
       val entries = IcebergReader.readAvro(spark,
-        IcebergReader.resolve(root, listRec.get("manifest_path").toString))
+        TableFiles.location(root, listRec.get("manifest_path").toString))
       val kinds = entries.map { e =>
         val df = e.get("data_file").asInstanceOf[GenericRecord]
         val hasEqIds = Option(df.getSchema.getField("equality_ids"))
@@ -2599,7 +2354,7 @@ object IcebergWriter {
           // in the manifest, DELETED entries included (the declared
           // added/existing row counts exclude them and would
           // under-reserve, colliding _row_id ranges)
-          val rows = IcebergReader.readAvro(spark, IcebergReader.resolve(root,
+          val rows = IcebergReader.readAvro(spark, TableFiles.location(root,
               r.get("manifest_path").toString))
             .map(e => e.get("data_file").asInstanceOf[GenericRecord])
             .filter { df =>
@@ -2720,7 +2475,7 @@ object IcebergWriter {
     IcebergReaderAccess.jsonArray(meta.get("snapshots"))
       .find(_.get("snapshot-id").asLong == cur)
       .map(s => IcebergReader.readAvro(spark,
-        IcebergReader.resolve(root, s.get("manifest-list").asText)))
+        TableFiles.location(root, s.get("manifest-list").asText)))
       .getOrElse(Nil)
   }
 

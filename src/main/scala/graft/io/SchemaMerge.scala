@@ -112,6 +112,24 @@ object SchemaMerge {
     }: _*)
   }
 
+  /** The strict append check — no evolution: every incoming column
+    * exists in the table with the same type, so an append can neither
+    * add nor silently retype a column (the reference's schema check,
+    * `s3/_s3_tables_iceberg.py:200-219`). A stream's schema is fixed at
+    * plan time, so drift mid-run is a bug, not evolution. */
+  private[io] def checkAppendSchema(table: StructType, incoming: StructType): Unit = {
+    val t = table.fields.map(f => f.name -> f.dataType).toMap
+    incoming.fields.foreach { f =>
+      t.get(f.name) match {
+        case None => throw new IllegalArgumentException(
+          s"append column ${f.name} not in table schema (use overwrite to evolve)")
+        case Some(dt) if dt != f.dataType => throw new IllegalArgumentException(
+          s"append column ${f.name}: ${f.dataType.simpleString} != table's ${dt.simpleString}")
+        case _ => ()
+      }
+    }
+  }
+
   /** True when the schema carries Delta column-mapping physical names —
     * evolving such a table needs new `delta.columnMapping.id`/
     * `physicalName` assignments we deliberately don't fabricate. */

@@ -595,7 +595,7 @@ object Curation {
         // so this is the narrow-cache case the rejected r13 `counts`
         // persist (9 prefix rows per window) was not. DISK_ONLY per the
         // corpus-proportional convention; [[Dedup.releaseCaches]]
-        // lifecycle. Measured (r16_time, idle, min-of-N): sf0.1
+        // lifecycle. Measured (idle, min-of-N): sf0.1
         // 6.08 -> 4.73 s, sf1 47.2 -> 41.9 s.
         val wgroups = wins
           .groupBy(col("doc_id"), col("w"))
@@ -1241,7 +1241,7 @@ object Curation {
     * vocabulary aggregate) — it is model-sized (bigram TYPES, the
     * KenLM-table analogue), never corpus-sized, and the
     * [[Dedup.releaseCaches]] lifecycle frees it with `pd`. Measured
-    * idle sf0.1 (tools/r16_time): curate_ppl_bucket 4.6 -> see
+    * idle sf0.1: curate_ppl_bucket 4.6 -> see
     * OPTIMIZATION_r16.md; arithmetic unchanged (same
     * [[pplWeightCol]] inputs), so every oracled consumer stays
     * bit-identical. */
@@ -1397,28 +1397,14 @@ object Curation {
     graft.table.SnapshotTree.publish(spark, modelPath) { t =>
       val pb = pmod(xxhash64(col("p")), lit(nBuckets.toLong)).cast("int")
       // tr and pr are independent projections of the cached type
-      // table — write them as two concurrent driver-thread jobs
-      // (guide §2.6: overlap independent jobs) so the small pr write
-      // back-fills the tr write's task tail
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
-      implicit val ec: scala.concurrent.ExecutionContext =
-        scala.concurrent.ExecutionContext.fromExecutor(pool)
-      try {
-        val ftr = scala.concurrent.Future(
-          trainTypes.withColumn("pb", pb).repartition(col("pb"))
-            .write.partitionBy("pb").mode("overwrite").parquet(s"$t/tr"))
-        val fpr = scala.concurrent.Future(
-          pr.withColumn("pb", pb).repartition(col("pb"))
-            .write.partitionBy("pb").mode("overwrite").parquet(s"$t/pr"))
-        // await BOTH completions (success or failure) before propagating
-        // the first error — a fail-fast zip would let publish abort and
-        // race snapshot cleanup with the sibling's in-flight write
-        val (rtr, rpr) = scala.concurrent.Await.result(
-          ftr.transform(scala.util.Success(_))
-            .zip(fpr.transform(scala.util.Success(_))),
-          scala.concurrent.duration.Duration.Inf)
-        rtr.get; rpr.get
-      } finally pool.shutdown()
+      // table — write them as two concurrent jobs so the small pr write
+      // back-fills the tr write's task tail; both finish before publish
+      // can abort and clean up the snapshot
+      graft.session.Jobs.concurrently(
+        trainTypes.withColumn("pb", pb).repartition(col("pb"))
+          .write.partitionBy("pb").mode("overwrite").parquet(s"$t/tr"),
+        pr.withColumn("pb", pb).repartition(col("pb"))
+          .write.partitionBy("pb").mode("overwrite").parquet(s"$t/pr"))
       val p = new org.apache.hadoop.fs.Path(t, "_ppl_meta")
       val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
       val out = fs.create(p, true)
