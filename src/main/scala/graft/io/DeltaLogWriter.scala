@@ -1409,9 +1409,10 @@ object DeltaLogWriter {
         spark.sparkContext.parallelize(manifestRows, 1), manifestSchema)
       df = df.join(broadcast(manifest), Seq("__file"), "left")
     }
-    // per-file RAW row counts come from parquet FOOTERS, read on
-    // executors — metadata-only, never a count() over the data pages
-    val totals = TableFiles.recordCounts(spark, located.map(_._1))
+    // per-file RAW row counts (a DV re-add keeps its file's stats):
+    // metadata-only, never a count() over the data pages
+    val totals = recordCountsOf(spark, root,
+      located.map { case (uri, f) => uri -> f.stats })
     val conf = new org.apache.spark.util.SerializableConfiguration(
       spark.sparkContext.hadoopConfiguration)
     val oldDvs = spark.sparkContext.broadcast(
@@ -1536,25 +1537,22 @@ object DeltaLogWriter {
           .getOrElse(col(f.name))
       }.toSeq: _*)
 
-  /** Per-add record counts for row-id assignment: stats numRecords
-    * where present, else one executor-side footer sweep of the rest. */
-  private def recordCountsForAdds(spark: SparkSession, tablePath: String,
-      adds: Seq[AddEntry]): Map[String, Long] = {
-    val fromStats = adds.flatMap(a => a.stats.flatMap { st =>
-      try Option(mapper.readTree(st).get("numRecords")).map(n =>
-        a.path -> n.asLong)
+  /** Per-file raw record counts, keyed by the given paths (relative to
+    * `root` or absolute): a file's `stats.numRecords` where its stats
+    * carry one, else one executor-side footer sweep of the rest. */
+  private def recordCountsOf(spark: SparkSession, root: Path,
+      files: Seq[(String, Option[String])]): Map[String, Long] = {
+    val fromStats = files.flatMap { case (p, stats) => stats.flatMap { st =>
+      try Option(mapper.readTree(st).get("numRecords"))
+        .filter(_.isIntegralNumber).map(n => p -> n.asLong)
       catch { case _: Exception => None }
-    }).toMap
-    val missing = adds.filter(a =>
-      a.baseRowId.isEmpty && !fromStats.contains(a.path))
+    }}.toMap
+    val missing = files.map(_._1).filterNot(fromStats.contains)
     if (missing.isEmpty) fromStats
     else {
-      val root = new Path(tablePath)
-      def pathOf(rel: String): String = new Path(root, rel).toString
-      val counted = TableFiles.recordCounts(spark,
-        missing.map(a => pathOf(a.path)))
-      fromStats ++ missing.map(a =>
-        a.path -> counted.getOrElse(pathOf(a.path), 0L))
+      def pathOf(p: String): String = new Path(root, p).toString
+      val counted = TableFiles.recordCounts(spark, missing.map(pathOf))
+      fromStats ++ missing.map(p => p -> counted(pathOf(p)))
     }
   }
 
@@ -1628,7 +1626,8 @@ object DeltaLogWriter {
       (priorConfig.getOrElse(Map.empty) ++ config)
         .get("delta.enableRowTracking").contains("true")
     lazy val rtCounts: Map[String, Long] =
-      recordCountsForAdds(spark, tablePath, adds)
+      recordCountsOf(spark, new Path(tablePath),
+        adds.filter(_.baseRowId.isEmpty).map(a => a.path -> a.stats))
     var attempts = 0
     while (attempts < 20) {
       val version = DeltaLogReader.latestVersion(spark, tablePath) + 1

@@ -29,7 +29,7 @@ import org.apache.spark.sql.types.StringType
   *    parsed back from them, are written in. JVM `toString` is not that
   *    rendering (a `java.sql.Timestamp` appends `.0`).
   */
-private[io] object TableFiles {
+private[graft] object TableFiles {
 
   /** A partition tuple: one rendered value per partition field, `None`
     * for null. */

@@ -338,7 +338,9 @@ object SqlEngine {
     * shadow view would otherwise break every later statement on the
     * same table (a view's metadata has no location); then
     * `Catalog.getTableLocation` (DESCRIBE FORMATTED) as a last
-    * resort. */
+    * resort. A local or global temp view that no table backs resolves
+    * to None without that resort: DESCRIBE never gives a view a
+    * location. */
   private def tableResolver(spark: SparkSession,
       tables: Map[String, String]): String => Option[String] = name =>
     tables.get(name).orElse(tables.get(name.toLowerCase)).orElse {
@@ -347,9 +349,15 @@ object SqlEngine {
         spark.sessionState.catalog.getTableMetadata(ident)
           .storage.locationUri.map(_.toString)
       } catch { case _: Exception => None }
-    }.orElse(
-      try Some(graft.catalog.Catalog.getTableLocation(spark, name))
-      catch { case _: Exception => None })
+    }.orElse {
+      val isTempView =
+        try spark.sessionState.catalog.isTempView(
+          spark.sessionState.sqlParser.parseMultipartIdentifier(name))
+        catch { case _: Exception => false }
+      if (isTempView) None
+      else try Some(graft.catalog.Catalog.getTableLocation(spark, name))
+      catch { case _: Exception => None }
+    }
 
   /** Split a DDL column list at top level — like
     * [[TrinoCompat.splitTop]] but ALSO depth-tracking `<>` so commas

@@ -1,10 +1,11 @@
 package graft.sql
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{col, count, expr, lit}
 import org.apache.spark.sql.types.StructType
 
-import graft.io.{DeltaLogReader, DeltaLogWriter, IcebergReader, IcebergWriter}
+import graft.io.{DeltaLogReader, DeltaLogWriter, IcebergReader, IcebergWriter,
+  TableFiles}
 
 /** Athena's table-format DML statements — `MERGE INTO`, `UPDATE`,
   * `DELETE FROM`, `INSERT INTO` (the engine-v3 Iceberg DML surface the
@@ -274,9 +275,6 @@ object TableDml {
       else { DeltaLogWriter.write(df, path); () }
 
     val src = resolveSource(spark, srcSpec, tables)
-    def keyJoin(l: DataFrame, r: DataFrame): Column =
-      keys.map(k => if (matchNulls) l(k) <=> r(k) else l(k) === r(k))
-        .reduce(_ && _)
     // ANSI/Athena cardinality rule: a target ROW matched by MORE THAN
     // ONE source row is an error, never a silent double-replacement or
     // double-delete — enforced for EVERY matched clause, fast paths
@@ -286,18 +284,20 @@ object TableDml {
     // in the TARGET are ANSI-legal (each target row still matches one
     // source row) and a pair count would falsely flag them. So: source
     // keys with multiplicity > 1 that match ANY target row → error.
-    // Unmatched dup-key inserts stay legal; Catalyst column-prunes the
-    // probe to the key columns, a key-only shuffle.
+    // Unmatched dup-key inserts stay legal. The source alone settles
+    // the common case, no repeated key, without reading the target;
+    // only repeated keys are semi-joined against it (Catalyst
+    // column-prunes both sides to the keys).
     def checkMatchedCardinality(): Unit = {
-      val t0 = target.alias(tAlias)
       val dupSrcKeys = src
         .groupBy(keys.map(col): _*)
         .agg(count(lit(1)).as("n"))
         .filter(col("n") > 1)
-        .alias(sAlias)
-      val dupMatched = dupSrcKeys
-        .join(t0, keyJoin(t0, dupSrcKeys), "left_semi")
-        .limit(1).count() > 0
+      val dupMatched = !dupSrcKeys.isEmpty && {
+        val t = target
+        dupSrcKeys.join(t, TableFiles.keyCond(dupSrcKeys, t, keys,
+          matchNulls), "left_semi").limit(1).count() > 0
+      }
       require(!dupMatched,
         "MERGE: a target row matches more than one source row")
     }
@@ -347,15 +347,16 @@ object TableDml {
         // then one upsert (or delete + append for the DELETE+INSERT mix)
         val t = target.alias(tAlias)
         val sdf = src.alias(sAlias)
+        val on = TableFiles.keyCond(sdf, t, keys, matchNulls)
         val insRows: Option[DataFrame] = nm.map {
           case InsertStar => alignedByName(
-            sdf.join(t, keyJoin(sdf, t), "left_anti"), schema)
+            sdf.join(t, on, "left_anti"), schema)
           case InsertCols(cols, vals) =>
             cols.foreach(c => require(
               schema.fieldNames.exists(_.equalsIgnoreCase(c)),
               s"INSERT column $c not in table schema"))
             val byCol = cols.map(_.toLowerCase).zip(vals).toMap
-            sdf.join(t, keyJoin(sdf, t), "left_anti")
+            sdf.join(t, on, "left_anti")
               .select(schema.fields.map { f =>
                 byCol.get(f.name.toLowerCase)
                   .map(v => expr(dequoteExpr(v)).cast(f.dataType))
@@ -392,7 +393,7 @@ object TableDml {
             checkMatchedCardinality()
             val byCol = assignments
               .map { case (c, e) => c.toLowerCase -> e }.toMap
-            val updRows = t.join(sdf, keyJoin(t, sdf), "inner")
+            val updRows = t.join(sdf, on, "inner")
               .select(schema.fields.map { f =>
                 byCol.get(f.name.toLowerCase)
                   .map(e => expr(dequoteExpr(e)).cast(f.dataType))

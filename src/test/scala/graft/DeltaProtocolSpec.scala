@@ -330,6 +330,28 @@ class DeltaProtocolSpec extends AnyFunSuite {
     val afterFull = DeltaLogReader.snapshot(spark, dir)
     assert(!afterFull.files.exists(_.path.contains("p=x")),
       "fully-deleted file is removed, not DV'd")
+    // the same two deletes on a log whose adds carry no `stats`: a
+    // file's row total comes from its footer instead
+    val bare = s"${tmp()}/bare"
+    writeDataFile(bare, "p=x/f1.parquet",
+      Seq((1L, "a"), (2L, "b")).toDF("id", "v"))
+    writeDataFile(bare, "p=y/f2.parquet", Seq((3L, "c")).toDF("id", "v"))
+    writeCommit(bare, 0, Seq(protocolAction(1),
+      metaAction(StructType(Seq(StructField("id", LongType),
+        StructField("v", StringType), StructField("p", StringType))),
+        Seq("p")),
+      addAction("p=x/f1.parquet", Map("p" -> "x")),
+      addAction("p=y/f2.parquet", Map("p" -> "y"))))
+    io.DeltaLogWriter.deleteWhere(spark, bare, col("id") === 2L)
+    assert(DeltaLogReader.snapshot(spark, bare).files
+      .exists(f => f.path.contains("p=x") && f.deletionVector.isDefined),
+      "a partial delete of a stats-less file writes a DV")
+    io.DeltaLogWriter.deleteWhere(spark, bare, col("v") === "a")
+    assert(!DeltaLogReader.snapshot(spark, bare).files
+      .exists(_.path.contains("p=x")),
+      "fully-deleted stats-less file is removed, not DV'd")
+    assert(DeltaLogReader.read(spark, bare)
+      .as[(Long, String, String)].collect().map(_._1).toSet == Set(3L))
     // predicates over partition columns work; no-match is a no-op commit
     val v0 = DeltaLogReader.latestVersion(spark, dir)
     val noop = io.DeltaLogWriter.deleteWhere(spark, dir, col("p") === "zzz")

@@ -1,7 +1,14 @@
 package graft
 
 import java.nio.file.Files
+import scala.jdk.CollectionConverters._
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Filter}
+import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation,
+  LogicalRelation}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.io.{DeltaLogReader, DeltaLogWriter, IcebergReader, IcebergWriter}
@@ -17,13 +24,20 @@ class SqlDmlSpec extends AnyFunSuite {
 
   private def tmp(): String = Files.createTempDirectory("graft-dml").toString
 
-  private def seedIceberg(dir: String): Unit = {
+  private def seedRows: DataFrame = {
     val spark0 = spark
     import spark0.implicits._
-    IcebergWriter.write(
-      (1L to 30L).map(i => (i, s"n$i", i * 10.0)).toDF("id", "name", "amt"),
-      dir)
+    (1L to 30L).map(i => (i, s"n$i", i * 10.0)).toDF("id", "name", "amt")
   }
+
+  private def seedIceberg(dir: String): Unit = IcebergWriter.write(seedRows, dir)
+
+  private def seedDelta(dir: String): Unit = DeltaLogWriter.write(seedRows, dir)
+
+  /** Each table format: its name, the 30-row seed and the reader. */
+  private def formats: Seq[(String, String => Unit, String => DataFrame)] =
+    Seq(("iceberg", seedIceberg, IcebergReader.read(spark, _)),
+      ("delta", seedDelta, DeltaLogReader.read(spark, _)))
 
   test("UPDATE on Iceberg: one commit, zero data-file rewrite of untouched files") {
     val dir = tmp() + "/t"
@@ -497,43 +511,130 @@ class SqlDmlSpec extends AnyFunSuite {
   test("fast-path MERGE forms also enforce the cardinality rule") {
     val spark0 = spark
     import spark0.implicits._
-    val dir = tmp() + "/t"
-    seedIceberg(dir)
     Seq((3L, "X", 1.0), (3L, "Y", 2.0))
       .toDF("id", "name", "amt").createOrReplaceTempView("dup_src2")
-    // UPDATE SET * + INSERT * (the one-shot upsert fast path)
-    intercept[IllegalArgumentException] {
-      TableDml.execute(spark,
-        """MERGE INTO t USING dup_src2 s ON t.id = s.id
-          |WHEN MATCHED THEN UPDATE SET *
-          |WHEN NOT MATCHED THEN INSERT *""".stripMargin,
-        Map("t" -> dir))
-    }
-    // the reference-generated full-replace form
-    intercept[IllegalArgumentException] {
-      TableDml.execute(spark,
-        """MERGE INTO t USING dup_src2 s ON t.id = s.id
-          |WHEN MATCHED THEN UPDATE SET "id" = s."id", "name" = s."name", "amt" = s."amt"
-          |WHEN NOT MATCHED THEN INSERT ("id", "name", "amt") VALUES (s."id", s."name", s."amt")""".stripMargin,
-        Map("t" -> dir))
-    }
-    // matched-only DELETE: deleting one row twice is an error in
-    // ANSI/Athena, not an idempotent no-op
-    intercept[IllegalArgumentException] {
-      TableDml.execute(spark,
-        """MERGE INTO t USING dup_src2 s ON t.id = s.id
-          |WHEN MATCHED THEN DELETE""".stripMargin,
-        Map("t" -> dir))
-    }
-    // unmatched duplicate keys remain legal on the insert-only path
+    // unmatched duplicate keys stay legal: on the insert-only path, and
+    // in an upsert, where the repeated key is looked up in the target
+    // and found in no row
     Seq((41L, "A", 1.0), (41L, "B", 2.0))
       .toDF("id", "name", "amt").createOrReplaceTempView("dup_ins")
-    TableDml.execute(spark,
-      """MERGE INTO t USING dup_ins s ON t.id = s.id
-        |WHEN NOT MATCHED THEN INSERT *""".stripMargin,
-      Map("t" -> dir))
-    assert(IcebergReader.read(spark, dir).filter(col("id") === 41L)
-      .count() == 2)
+    Seq((3L, "U", 5.0), (42L, "A", 1.0), (42L, "B", 2.0))
+      .toDF("id", "name", "amt").createOrReplaceTempView("dup_new")
+    for ((format, seed, read) <- formats) {
+      val dir = tmp() + "/t"
+      seed(dir)
+      def merge(sql: String): Unit =
+        TableDml.execute(spark, sql, Map("t" -> dir))
+      // UPDATE SET * + INSERT * (the one-shot upsert fast path)
+      intercept[IllegalArgumentException] {
+        merge("""MERGE INTO t USING dup_src2 s ON t.id = s.id
+          |WHEN MATCHED THEN UPDATE SET *
+          |WHEN NOT MATCHED THEN INSERT *""".stripMargin)
+      }
+      // the reference-generated full-replace form
+      intercept[IllegalArgumentException] {
+        merge("""MERGE INTO t USING dup_src2 s ON t.id = s.id
+          |WHEN MATCHED THEN UPDATE SET "id" = s."id", "name" = s."name", "amt" = s."amt"
+          |WHEN NOT MATCHED THEN INSERT ("id", "name", "amt") VALUES (s."id", s."name", s."amt")""".stripMargin)
+      }
+      // matched-only DELETE: deleting one row twice is an error in
+      // ANSI/Athena, not an idempotent no-op
+      intercept[IllegalArgumentException] {
+        merge("""MERGE INTO t USING dup_src2 s ON t.id = s.id
+          |WHEN MATCHED THEN DELETE""".stripMargin)
+      }
+      assert(read(dir).count() == 30, s"$format: a refused MERGE wrote")
+      merge("""MERGE INTO t USING dup_ins s ON t.id = s.id
+        |WHEN NOT MATCHED THEN INSERT *""".stripMargin)
+      assert(read(dir).filter(col("id") === 41L).count() == 2, format)
+      merge("""MERGE INTO t USING dup_new s ON t.id = s.id
+        |WHEN MATCHED THEN UPDATE SET *
+        |WHEN NOT MATCHED THEN INSERT *""".stripMargin)
+      val after = read(dir)
+      assert(after.filter(col("id") === 42L).count() == 2, format)
+      assert(after.filter(col("id") === 3L).select("name").as[String]
+        .collect().toSeq == Seq("U"), format)
+      assert(after.count() == 34, format)
+    }
+  }
+
+  /** The query executions `body` runs, as a `QueryExecutionListener`
+    * reports them. Listener events arrive asynchronously but in order,
+    * so a marker query run after `body` closes the capture. */
+  private def executionsOf(body: => Unit): Seq[QueryExecution] = {
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[QueryExecution]
+    val closed = new java.util.concurrent.CountDownLatch(1)
+    val marker = "plan_capture_marker"
+    val listener = new QueryExecutionListener {
+      def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        if (qe.analyzed.output.exists(_.name == marker)) closed.countDown()
+        else seen.add(qe)
+      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit =
+        seen.add(qe)
+    }
+    spark.listenerManager.register(listener)
+    try {
+      body
+      spark.range(1).toDF(marker).collect()
+      assert(closed.await(60, java.util.concurrent.TimeUnit.SECONDS))
+    } finally spark.listenerManager.unregister(listener)
+    seen.asScala.toSeq
+  }
+
+  test("executeSql MERGE from a unique temp-view source: no DESCRIBE, " +
+    "and the cardinality check never scans the target") {
+    val spark0 = spark
+    import spark0.implicits._
+    val MergeSql =
+      """MERGE INTO t USING %s s ON t.id = s.id
+        |WHEN MATCHED THEN UPDATE SET *
+        |WHEN NOT MATCHED THEN INSERT *""".stripMargin
+    for ((format, seed, read) <- formats) {
+      val dir = tmp() + "/t"
+      seed(dir)
+      Seq((2L, "X", 1.0), (31L, "Y", 2.0)).toDF("id", "name", "amt")
+        .createOrReplaceTempView("uniq_src")
+      val execs = executionsOf {
+        graft.sql.SqlEngine.executeSql(spark, MergeSql.format("uniq_src"),
+          tables = Map("t" -> dir))
+      }
+      assert(read(dir).count() == 31, format)
+      val describes = execs.filter(qe =>
+        qe.logical.exists(_.nodeName.startsWith("Describe")))
+      assert(describes.isEmpty, s"$format: DESCRIBE ran:\n" +
+        describes.map(_.logical).mkString("\n"))
+      // the cardinality probe is the plan that counts source rows per
+      // key and keeps the counts above one
+      def isProbe(qe: QueryExecution): Boolean =
+        qe.optimizedPlan.exists {
+          case f: Filter => f.child.isInstanceOf[Aggregate] &&
+            f.condition.references.exists(_.name == "n")
+          case _ => false
+        }
+      def scansTarget(qe: QueryExecution): Boolean =
+        qe.optimizedPlan.exists {
+          case r: LogicalRelation => r.relation match {
+            case h: HadoopFsRelation =>
+              h.location.rootPaths.exists(_.toString.contains(dir))
+            case _ => false
+          }
+          case _ => false
+        }
+      val probes = execs.filter(isProbe)
+      assert(probes.nonEmpty, s"$format: no cardinality probe ran")
+      assert(!probes.exists(scansTarget),
+        s"$format: the cardinality probe read the target:\n" +
+          probes.filter(scansTarget).map(_.optimizedPlan).mkString("\n"))
+      // a key repeated in the source that matches a target row still
+      // raises
+      Seq((5L, "X", 1.0), (5L, "Y", 2.0)).toDF("id", "name", "amt")
+        .createOrReplaceTempView("dup_matched_src")
+      intercept[IllegalArgumentException] {
+        graft.sql.SqlEngine.executeSql(spark,
+          MergeSql.format("dup_matched_src"), tables = Map("t" -> dir))
+      }
+      assert(read(dir).count() == 31, format)
+    }
   }
 
   test("fully quoted qualified SET lhs parses to the bare column") {
