@@ -2,8 +2,11 @@ package graft.io
 
 import java.util.UUID
 import scala.collection.mutable
-import com.fasterxml.jackson.databind.ObjectMapper
+import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import org.apache.hadoop.fs.Path
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.io.api.Binary
+import org.apache.parquet.schema.PrimitiveType
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
@@ -993,7 +996,6 @@ object DeltaLogWriter {
 
   def vacuum(spark: SparkSession, tablePath: String,
       retentionMs: Long = 7L * 24 * 3600 * 1000): Seq[String] = {
-    import spark.implicits._
     val snap = DeltaLogReader.snapshot(spark, tablePath)
     val root = new Path(tablePath)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -1005,35 +1007,11 @@ object DeltaLogWriter {
           .filter(d => d.storageType == "u" || d.storageType == "p")
           .map(d => fs.makeQualified(DeltaDeletionVectors
             .sidecarPath(new Path(qualifiedRoot), d)).toString)
-    val cutoff = System.currentTimeMillis() - retentionMs
-    // the table tree is listed and deleted AS A JOB — the driver's part
-    // is the root's immediate children plus the live set (O(active
-    // files)); a 100k-file table never loops file-by-file on the driver
-    val liveBc = spark.sparkContext.broadcast(live)
-    val confBc = spark.sparkContext.broadcast(
-      new org.apache.spark.util.SerializableConfiguration(
-        spark.sparkContext.hadoopConfiguration))
-    DatasetReader.listObjects(spark, tablePath)
-      .where(col("modified_ms") < cutoff)
-      .select("path").as[String]
-      .mapPartitions { it =>
-        val conf = confBc.value.value
-        val liveSet = liveBc.value
-        // qualify each listed path exactly as the live set was built —
-        // a raw-vs-qualified string mismatch (default-FS authority
-        // normalization) must never classify a live file as dead
-        it.filter { p =>
-          val name = p.substring(p.lastIndexOf('/') + 1)
-          val isData = name.endsWith(".parquet") || name.endsWith(".bin")
-          val pp = new Path(p)
-          val q = pp.getFileSystem(conf).makeQualified(pp).toString
-          isData && !p.contains("/_delta_log/") && !liveSet.contains(q)
-        }.map { p =>
-          val pp = new Path(p)
-          pp.getFileSystem(conf).delete(pp, false)
-          p
-        }
-      }.collect().toSeq
+    TableFiles.sweepOrphans(spark, tablePath, live,
+        System.currentTimeMillis() - retentionMs) { p =>
+      (p.endsWith(".parquet") || p.endsWith(".bin")) &&
+        !p.contains("/_delta_log/")
+    }
   }
 
   /** Sweep EXPIRED `_delta_log` metadata — the retention pass real Delta
@@ -1140,20 +1118,15 @@ object DeltaLogWriter {
     // mapped tables also stamp parquet field ids (keyed by physical
     // name) so mode=id readers resolve the files
     val out =
-      if (fieldIds.isEmpty) renamed
-      else renamed.select(renamed.columns.map { c =>
-        fieldIds.get(c).map(id => col(c).as(c,
-            new org.apache.spark.sql.types.MetadataBuilder()
-              .putLong("parquet.field.id", id).build()))
-          .getOrElse(col(c))
-      }.toSeq: _*)
+      if (fieldIds.isEmpty) renamed else TableFiles.withFieldIds(renamed, fieldIds)
     def relOf(rel: String) = if (destPrefix.isEmpty) rel else s"$destPrefix/$rel"
     val moved = TableFiles.writeStaged(out, root,
       partCols.map(c => physOf.getOrElse(c, c)))(rel => new Path(root, relOf(rel)))
     // cdc actions carry no stats field in the protocol — skip the
     // footer sweep for `_change_data` writes
     val stats =
-      if (destPrefix.isEmpty) fileStatsJson(df.sparkSession, moved.map(_.path))
+      if (destPrefix.isEmpty)
+        TableFiles.footers(df.sparkSession, moved.map(_.path))(statsJson)
       else Map.empty[String, String]
     moved.map { m =>
       AddEntry(relOf(m.rel), TableFiles.partitionValuesOf(m.rel), m.size,
@@ -1169,140 +1142,68 @@ object DeltaLogWriter {
       baseRowId: Option[Long] = None,
       defaultRowCommitVersion: Option[Long] = None)
 
-  /** Per-file `stats` JSON (numRecords + per-column min/max/nullCount)
-    * from parquet FOOTERS, computed on executors — the metadata other
-    * Delta engines (and [[DeltaLogReader]]'s file skipping) use to prune
-    * selective scans without opening files. Columns whose physical type
-    * has no safe JSON rendering here (decimals, nested, NaN floats) are
-    * simply omitted — stats are per-column optional in the protocol. */
-  private def fileStatsJson(spark: SparkSession,
-      uris: Seq[String]): Map[String, String] = {
-    if (uris.isEmpty) return Map.empty
-    import spark.implicits._
-    val confBc = spark.sparkContext.broadcast(
-      new org.apache.spark.util.SerializableConfiguration(
-        spark.sparkContext.hadoopConfiguration))
-    spark.createDataset(uris).mapPartitions { it =>
-      val conf = confBc.value.value
-      it.map { u =>
-        val in = org.apache.parquet.hadoop.util.HadoopInputFile
-          .fromPath(new Path(u), conf)
-        val rdr = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-        try (u, statsOfFooter(rdr)) finally rdr.close()
-      }
-    }.collect().toMap
-  }
-
-  private def statsOfFooter(
-      rdr: org.apache.parquet.hadoop.ParquetFileReader): String = {
-    import scala.jdk.CollectionConverters._
-    import org.apache.parquet.schema.LogicalTypeAnnotation
-    import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
-    val blocks = rdr.getFooter.getBlocks.asScala
-    // (column name) -> (min, max, nullCount) folded across row groups
-    val acc = mutable.LinkedHashMap.empty[String, (Any, Any, Long)]
-    val dropped = mutable.Set.empty[String]
-    def render(tpe: org.apache.parquet.schema.PrimitiveType,
-        v: Any): Option[Any] = {
-      val ann = tpe.getLogicalTypeAnnotation
-      (tpe.getPrimitiveTypeName, v) match {
-        case (INT32, i: java.lang.Integer) => ann match {
-          case _: LogicalTypeAnnotation.DateLogicalTypeAnnotation =>
-            Some(java.time.LocalDate.ofEpochDay(i.longValue).toString)
-          case _: LogicalTypeAnnotation.DecimalLogicalTypeAnnotation => None
-          case _ => Some(BigDecimal(i.intValue))
-        }
-        case (INT64, l: java.lang.Long) => ann match {
-          case t: LogicalTypeAnnotation.TimestampLogicalTypeAnnotation =>
-            val micros = t.getUnit match {
-              case LogicalTypeAnnotation.TimeUnit.MILLIS => l * 1000L
-              case LogicalTypeAnnotation.TimeUnit.MICROS => l.longValue
-              case _ => return None
-            }
-            val ldt = java.time.LocalDateTime.ofEpochSecond(
-              Math.floorDiv(micros, 1000000L),
-              (Math.floorMod(micros, 1000000L) * 1000L).toInt,
-              java.time.ZoneOffset.UTC)
-            Some(ldt.toString.replace('T', ' '))
-          case _: LogicalTypeAnnotation.DecimalLogicalTypeAnnotation => None
-          case _ => Some(BigDecimal(l.longValue))
-        }
-        case (FLOAT, f: java.lang.Float) =>
-          if (f.isNaN || f.isInfinite) None else Some(BigDecimal(f.toString))
-        case (DOUBLE, d: java.lang.Double) =>
-          if (d.isNaN || d.isInfinite) None else Some(BigDecimal(d.toString))
-        case (BINARY, b: org.apache.parquet.io.api.Binary) => ann match {
-          case _: LogicalTypeAnnotation.StringLogicalTypeAnnotation =>
-            Some(b.toStringUsingUTF8)
-          case _ => None
-        }
-        case (BOOLEAN, b: java.lang.Boolean) => Some(b.booleanValue)
-        case _ => None
-      }
-    }
-    blocks.foreach { b =>
-      b.getColumns.asScala.foreach { c =>
-        val path = c.getPath.toArray
-        if (path.length == 1) {
-          val name = path(0)
-          val st = c.getStatistics
-          if (st == null || dropped.contains(name)) ()
-          else if (!st.hasNonNullValue && st.isNumNullsSet) {
-            // all-null chunk: nulls still count, bounds unchanged
-            acc.get(name) match {
-              case Some((mn, mx, nulls)) =>
-                acc(name) = (mn, mx, nulls + st.getNumNulls)
-              case None => acc(name) = (null, null, st.getNumNulls)
-            }
-          } else if (!st.hasNonNullValue || !st.isNumNullsSet) {
-            dropped += name; acc.remove(name)
-          } else {
-            val tpe = c.getPrimitiveType
-            (render(tpe, st.genericGetMin), render(tpe, st.genericGetMax)) match {
-              case (Some(mn), Some(mx)) =>
-                acc.get(name) match {
-                  case Some((m0, x0, nulls)) =>
-                    val newMin =
-                      if (m0 == null || leq(mn, m0)) mn else m0
-                    val newMax =
-                      if (x0 == null || leq(x0, mx)) mx else x0
-                    acc(name) = (newMin, newMax, nulls + st.getNumNulls)
-                  case None => acc(name) = (mn, mx, st.getNumNulls)
-                }
-              case _ => dropped += name; acc.remove(name)
-            }
-          }
-        }
-      }
-    }
+  /** A data file's `stats` JSON — numRecords plus each top-level
+    * column's min/max/nullCount, from its footer
+    * ([[TableFiles.columnStats]]) — the metadata other Delta engines
+    * (and [[DeltaLogReader]]'s file skipping) use to prune selective
+    * scans without opening files. Bounds whose type has no safe JSON
+    * rendering here are omitted; stats are per-column optional in the
+    * protocol. */
+  private def statsJson(rdr: ParquetFileReader): String = {
     val node = mapper.createObjectNode()
     node.put("numRecords", rdr.getRecordCount)
     val minN = node.putObject("minValues")
     val maxN = node.putObject("maxValues")
     val nullN = node.putObject("nullCount")
-    acc.foreach { case (name, (mn, mx, nulls)) =>
-      def put(o: com.fasterxml.jackson.databind.node.ObjectNode, v: Any): Unit =
-        v match {
-          case null => ()
-          case d: BigDecimal =>
-            if (d.isWhole && d.isValidLong) o.put(name, d.longValue)
-            else o.put(name, d.doubleValue)
-          case s: String => o.put(name, s)
-          case b: Boolean => o.put(name, b)
-          case _ => ()
-        }
-      put(minN, mn)
-      put(maxN, mx)
-      nullN.put(name, nulls)
+    TableFiles.columnStats(rdr).foreach { c =>
+      for ((lo, hi) <- c.bounds; mn <- statsValue(c.tpe, lo);
+           mx <- statsValue(c.tpe, hi)) {
+        minN.set[JsonNode](c.name, mn)
+        maxN.set[JsonNode](c.name, mx)
+      }
+      c.nulls.foreach(nullN.put(c.name, _))
     }
     mapper.writeValueAsString(node)
   }
 
-  private def leq(a: Any, b: Any): Boolean = (a, b) match {
-    case (x: BigDecimal, y: BigDecimal) => x <= y
-    case (x: String, y: String) => x <= y
-    case (x: Boolean, y: Boolean) => x <= y
-    case _ => false
+  /** A statistics value as `stats` JSON: a date as its ISO day, a
+    * timestamp as UTC `yyyy-MM-dd HH:mm:ss[.ffffff]`, a number as a
+    * JSON number (a long when integral), a string or boolean as itself.
+    * None for decimals, non-string binary, NaN or infinite floats and
+    * nanosecond timestamps. */
+  private def statsValue(tpe: PrimitiveType, v: Any): Option[JsonNode] = {
+    import org.apache.parquet.schema.LogicalTypeAnnotation._
+    import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
+    val json = mapper.getNodeFactory
+    def num(d: BigDecimal): JsonNode =
+      if (d.isWhole && d.isValidLong) json.numberNode(d.longValue)
+      else json.numberNode(d.doubleValue)
+    (tpe.getPrimitiveTypeName, v, tpe.getLogicalTypeAnnotation) match {
+      case (_, _, _: DecimalLogicalTypeAnnotation) => None
+      case (INT32, i: java.lang.Integer, _: DateLogicalTypeAnnotation) =>
+        Some(json.textNode(java.time.LocalDate.ofEpochDay(i.longValue).toString))
+      case (INT32, i: java.lang.Integer, _) => Some(num(BigDecimal(i.intValue)))
+      case (INT64, l: java.lang.Long, t: TimestampLogicalTypeAnnotation) =>
+        val micros = t.getUnit match {
+          case TimeUnit.MILLIS => l * 1000L
+          case TimeUnit.MICROS => l.longValue
+          case _ => return None
+        }
+        val ldt = java.time.LocalDateTime.ofEpochSecond(
+          Math.floorDiv(micros, 1000000L),
+          (Math.floorMod(micros, 1000000L) * 1000L).toInt,
+          java.time.ZoneOffset.UTC)
+        Some(json.textNode(ldt.toString.replace('T', ' ')))
+      case (INT64, l: java.lang.Long, _) => Some(num(BigDecimal(l.longValue)))
+      case (FLOAT, f: java.lang.Float, _) =>
+        if (f.isNaN || f.isInfinite) None else Some(num(BigDecimal(f.toString)))
+      case (DOUBLE, d: java.lang.Double, _) =>
+        if (d.isNaN || d.isInfinite) None else Some(num(BigDecimal(d.toString)))
+      case (BINARY, b: Binary, _: StringLogicalTypeAnnotation) =>
+        Some(json.textNode(b.toStringUsingUTF8))
+      case (BOOLEAN, b: java.lang.Boolean, _) => Some(json.booleanNode(b))
+      case _ => None
+    }
   }
 
   /** Delete rows matching `predicate` by WRITING DELETION VECTORS —

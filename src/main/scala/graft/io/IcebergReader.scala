@@ -781,8 +781,9 @@ object IcebergReader {
     * distributed footer-tail sweep, id-carrying files take the id scan,
     * and each id-less shape group reads the mapping's historical name
     * for each field-id (null for unmapped fields, as the spec
-    * projects). Top-level fields only, like [[withFieldIds]] — nested
-    * members resolve by name inside their matched parent. A mixed table
+    * projects). Top-level fields only, like
+    * [[TableFiles.withFieldIds]] — nested members resolve by name
+    * inside their matched parent. A mixed table
     * WITHOUT a name mapping raises up front, naming the property.
     * Without a mapping the probe stays O(1) driver-side (head + tail
     * footer); the full sweep runs only for tables that declare a
@@ -853,7 +854,8 @@ object IcebergReader {
       val prev = org.apache.spark.sql.classic.SparkSession.getActiveSession
       val ses = spark.newSession()
       ses.conf.set("spark.sql.parquet.fieldId.read.enabled", "true")
-      try metaCols(ses.read.schema(withFieldIds(snap.schema, idOf))
+      try metaCols(ses.read.schema(TableFiles.withFieldIds(snap.schema,
+        idOf.map { case (n, id) => n -> id.toLong }))
         .parquet(ps: _*))
       finally prev.foreach(
         org.apache.spark.sql.classic.SparkSession.setActiveSession)
@@ -944,7 +946,7 @@ object IcebergReader {
     * Serialization") into field-id → acceptable file column names.
     * Entries without a `field-id` exist to BLOCK names and are
     * skipped; nested `fields` are not descended (top-level mapping,
-    * matching [[withFieldIds]]). */
+    * matching [[TableFiles.withFieldIds]]). */
   private def nameMapping(
       props: Map[String, String]): Option[Map[Int, Seq[String]]] =
     props.get("schema.name-mapping.default").map { json =>
@@ -954,39 +956,17 @@ object IcebergReader {
       }.toMap
     }
 
-  /** (path, hasFieldIds, top-level column names) for every data file —
-    * ONE distributed job over footer tails, collected at one row per
-    * file (manifest scale). Runs only when the table declares a name
-    * mapping. */
+  /** (path, hasFieldIds, top-level column names) for every data file,
+    * in `paths` order — ONE distributed job over footer tails. Runs only
+    * when the table declares a name mapping or column defaults. */
   private def footerShapes(spark: SparkSession,
       paths: Seq[String]): Seq[(String, Boolean, Seq[String])] = {
-    val confBc = spark.sparkContext.broadcast(
-      new org.apache.spark.util.SerializableConfiguration(
-        spark.sparkContext.hadoopConfiguration))
-    spark.sparkContext
-      .parallelize(paths, math.max(1, math.min(paths.size, 32)))
-      .map { p =>
-        val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-          new Path(p), confBc.value.value)
-        val rdr = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-        try {
-          val fields = rdr.getFileMetaData.getSchema.getFields.asScala
-          (p, fields.exists(_.getId != null), fields.map(_.getName).toSeq)
-        } finally rdr.close()
-      }.collect().toSeq
+    val shapes = TableFiles.footers(spark, paths) { rdr =>
+      val fields = rdr.getFileMetaData.getSchema.getFields.asScala
+      (fields.exists(_.getId != null), fields.map(_.getName).toSeq)
+    }
+    paths.map { p => val (ids, names) = shapes(p); (p, ids, names) }
   }
-
-  /** Attach `parquet.field.id` metadata to the top-level fields that
-    * have ids in the table schema (nested-field ids are not mapped —
-    * nested members resolve by name within their id-matched parent). */
-  private def withFieldIds(schema: StructType,
-      idOf: Map[String, Int]): StructType =
-    StructType(schema.fields.map { f =>
-      idOf.get(f.name).map { id =>
-        f.copy(metadata = new MetadataBuilder().withMetadata(f.metadata)
-          .putLong("parquet.field.id", id.toLong).build())
-      }.getOrElse(f)
-    })
 
   /** Does this parquet file's footer declare field-ids? One driver-side
     * footer open — the probe that decides id- vs name-resolution. */

@@ -381,17 +381,13 @@ object IcebergWriter {
     // does not resolve through a name-mapped union)
     val matched = IcebergReader.dataScan(spark, snap, withMeta = true)
       .filter(predicate)
-      .select(
-        // the spec's reserved field-ids for position-delete columns,
-        // embedded so field-id-resolving readers open these files
-        col("__file").as("file_path",
-          new org.apache.spark.sql.types.MetadataBuilder()
-            .putLong("parquet.field.id", 2147483546L).build()),
-        col("__pos").cast("long").as("pos",
-          new org.apache.spark.sql.types.MetadataBuilder()
-            .putLong("parquet.field.id", 2147483545L).build()))
+      .select(col("__file").as("file_path"), col("__pos").cast("long").as("pos"))
+    // the spec's reserved field-ids for position-delete columns,
+    // embedded so field-id-resolving readers open these files
+    val stamped = TableFiles.withFieldIds(matched,
+      Map("file_path" -> 2147483546L, "pos" -> 2147483545L))
     val delFiles = writeDeleteFiles(
-      matched.repartitionByRange(col("file_path"), col("pos"))
+      stamped.repartitionByRange(col("file_path"), col("pos"))
         .sortWithinPartitions("file_path", "pos"),
       tablePath, "delete")
     if (delFiles.isEmpty) return Committed(snap.snapshotId, -1L, 0)
@@ -833,10 +829,8 @@ object IcebergWriter {
     val adds = writeDataFiles(src, tablePath, pfields)
     // the equality-delete file: distinct key tuples, key columns only,
     // written distributed with the keys' field-ids embedded
-    val keyDf = src.select(keys.map { k =>
-      col(k).as(k, new org.apache.spark.sql.types.MetadataBuilder()
-        .putLong("parquet.field.id", ids(k).toLong).build())
-    }.toSeq: _*).distinct()
+    val keyDf = TableFiles.withFieldIds(src.select(keys.map(col): _*),
+      keys.map(k => k -> ids(k).toLong).toMap).distinct()
     commit(spark, tablePath, snap.schema, pfields, adds, kept = Nil,
       operation = "overwrite", carryCurrentManifests = true,
       expectedParent = Some(snap.snapshotId),
@@ -1713,7 +1707,6 @@ object IcebergWriter {
   def expireSnapshots(spark: SparkSession, tablePath: String,
       retentionMs: Long = 7L * 24 * 3600 * 1000,
       retainLast: Int = 1): Seq[String] = {
-    import spark.implicits._
     val root = new Path(tablePath)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val metaDir = new Path(root, "metadata")
@@ -1803,39 +1796,14 @@ object IcebergWriter {
         }
       }
     }
-    val cutoff = now - retentionMs
-    val liveBc = spark.sparkContext.broadcast(live.toSet)
-    val confBc = spark.sparkContext.broadcast(
-      new org.apache.spark.util.SerializableConfiguration(
-        spark.sparkContext.hadoopConfiguration))
     val MetaFile = """v(\d+)\.metadata\.json""".r
-    graft.io.DatasetReader.listObjects(spark, tablePath)
-      .where(col("modified_ms") < cutoff)
-      .select("path").as[String]
-      .mapPartitions { it =>
-        val conf = confBc.value.value
-        val lv = liveBc.value
-        it.filter { p =>
-          val name = p.substring(p.lastIndexOf('/') + 1)
-          // qualify listed paths exactly as the live set was built, so
-          // authority-normalization differences never sweep a live file
-          val pp = new Path(p)
-          lazy val q = pp.getFileSystem(conf).makeQualified(pp).toString
-          val dataOrManifest =
-            (name.endsWith(".parquet") || name.endsWith(".avro") ||
-              name.endsWith(".puffin")) &&
-              !lv.contains(q)
-          val staleMeta = name match {
-            case MetaFile(v) => v.toLong < currentVersion
-            case _ => false
-          }
-          dataOrManifest || staleMeta
-        }.map { p =>
-          val pp = new Path(p)
-          pp.getFileSystem(conf).delete(pp, false)
-          p
-        }
-      }.collect().toSeq
+    TableFiles.sweepOrphans(spark, tablePath, live.toSet, now - retentionMs) { p =>
+      p.endsWith(".parquet") || p.endsWith(".avro") || p.endsWith(".puffin") ||
+        (p.substring(p.lastIndexOf('/') + 1) match {
+          case MetaFile(v) => v.toLong < currentVersion
+          case _ => false
+        })
+    }
   }
 
   private def asInfo(f: IcebergReader.DataFileEntry): FileInfo =
@@ -1868,25 +1836,16 @@ object IcebergWriter {
     // The id assignment is the same positional scheme commit() writes
     // into the metadata JSON and the manifest bounds use.
     val ids = topLevelFieldIds(df.schema)
-    val withIds = df.select(df.schema.fields.map { f =>
-      ids.get(f.name).map { id =>
-        col(f.name).as(f.name,
-          new org.apache.spark.sql.types.MetadataBuilder()
-            .withMetadata(f.metadata)
-            .putLong("parquet.field.id", id.toLong).build())
-      }.getOrElse(col(f.name))
-    }.toSeq: _*)
+    val withIds = TableFiles.withFieldIds(df, ids.map { case (n, id) => n -> id.toLong })
     val dup = partFields.foldLeft(withIds)((d, f) => d.withColumn(
       Pt + f.name,
       IcebergTransforms.column(spark, f, df.schema(f.source).dataType)))
     def relOf(staged: String) = staged.split('/').map(_.stripPrefix(Pt)).mkString("/")
     val moved = TableFiles.writeStaged(dup, root, partFields.map(Pt + _.name))(
       rel => new Path(new Path(root, "data"), relOf(rel)))
-    val stats = footerStats(spark, moved.map(_.path))
+    val stats = TableFiles.footers(spark, moved.map(_.path))(dataFileStats)
     moved.map { m =>
-      val (cnt, lo, hi, nulls) = stats.getOrElse(m.path,
-        (0L, Map.empty[String, Array[Byte]], Map.empty[String, Array[Byte]],
-          Map.empty[String, Long]))
+      val (cnt, lo, hi, nulls) = stats(m.path)
       FileInfo(m.path, TableFiles.partitionValuesOf(relOf(m.rel)), m.size, cnt,
         lo.flatMap { case (n, b) => ids.get(n).map(_ -> b) },
         hi.flatMap { case (n, b) => ids.get(n).map(_ -> b) },
@@ -1916,144 +1875,60 @@ object IcebergWriter {
     }.toMap
   }
 
-  /** Per-file (record count, lower bounds, upper bounds) from parquet
-    * footers, read ON EXECUTORS — bounds as the spec's Appendix-D
-    * single-value bytes keyed by top-level column NAME (mapped to
-    * field-ids driver-side). Columns without safe stats (INT96, NaN
-    * floats, decimals, nested) are omitted — bounds are per-column
-    * optional. */
-  private def footerStats(spark: SparkSession, paths: Seq[String])
-      : Map[String, (Long, Map[String, Array[Byte]],
-          Map[String, Array[Byte]], Map[String, Long])] = {
-    if (paths.isEmpty) return Map.empty
-    import spark.implicits._
-    val confBc = spark.sparkContext.broadcast(
-      new org.apache.spark.util.SerializableConfiguration(
-        spark.sparkContext.hadoopConfiguration))
-    spark.createDataset(paths)
-      .mapPartitions { it =>
-        val conf = confBc.value.value
-        it.map { f =>
-          val in = org.apache.parquet.hadoop.util.HadoopInputFile
-            .fromPath(new Path(f), conf)
-          val rdr = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-          try {
-            val (lo, hi, nulls) = footerBounds(rdr)
-            (f, (rdr.getRecordCount, lo, hi, nulls))
-          } finally rdr.close()
-        }
-      }
-      .collect().toMap
+  /** A data file's record count, lower and upper bounds and null
+    * counts from its footer ([[TableFiles.columnStats]]), bounds as the
+    * spec's Appendix-D single-value bytes, all keyed by top-level column
+    * NAME (mapped to field-ids driver-side). Bounds whose type has no
+    * safe encoding here (INT96, NaN or infinite floats, decimals) are
+    * omitted; bounds are per-column optional. */
+  private def dataFileStats(rdr: org.apache.parquet.hadoop.ParquetFileReader)
+      : (Long, Map[String, Array[Byte]], Map[String, Array[Byte]],
+         Map[String, Long]) = {
+    val cols = TableFiles.columnStats(rdr)
+    val bounds = for {
+      c <- cols; (lo, hi) <- c.bounds
+      l <- boundBytes(c.tpe, lo, upper = false)
+      h <- boundBytes(c.tpe, hi, upper = true)
+    } yield (c.name, l, h)
+    (rdr.getRecordCount, bounds.map(b => b._1 -> b._2).toMap,
+      bounds.map(b => b._1 -> b._3).toMap,
+      cols.flatMap(c => c.nulls.map(c.name -> _)).toMap)
   }
 
-  private def footerBounds(rdr: org.apache.parquet.hadoop.ParquetFileReader)
-      : (Map[String, Array[Byte]], Map[String, Array[Byte]],
-         Map[String, Long]) = {
-    import scala.jdk.CollectionConverters._
-    import org.apache.parquet.schema.LogicalTypeAnnotation
+  /** A statistics value as Appendix-D single-value bytes. A millisecond
+    * timestamp becomes microseconds: the floor for a lower bound, +999
+    * for an upper one, so the true values stay inside the interval. */
+  private def boundBytes(tpe: org.apache.parquet.schema.PrimitiveType, v: Any,
+      upper: Boolean): Option[Array[Byte]] = {
+    import org.apache.parquet.schema.LogicalTypeAnnotation._
     import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
     def le(n: Int)(fill: java.nio.ByteBuffer => Unit): Array[Byte] = {
       val bb = java.nio.ByteBuffer.allocate(n)
         .order(java.nio.ByteOrder.LITTLE_ENDIAN)
       fill(bb); bb.array()
     }
-    // typed (comparable, encoded-bytes) of one chunk statistic; None
-    // drops the column
-    def render(tpe: org.apache.parquet.schema.PrimitiveType, v: Any,
-        upper: Boolean): Option[(Any, Array[Byte])] = {
-      val ann = tpe.getLogicalTypeAnnotation
-      (tpe.getPrimitiveTypeName, v) match {
-        case (INT32, i: java.lang.Integer) => ann match {
-          case _: LogicalTypeAnnotation.DecimalLogicalTypeAnnotation => None
-          case _ => Some((i.intValue, le(4)(_.putInt(i))))
-        }
-        case (INT64, l: java.lang.Long) => ann match {
-          case t: LogicalTypeAnnotation.TimestampLogicalTypeAnnotation =>
-            t.getUnit match {
-              case LogicalTypeAnnotation.TimeUnit.MICROS =>
-                Some((l.longValue, le(8)(_.putLong(l))))
-              case LogicalTypeAnnotation.TimeUnit.MILLIS =>
-                // micros bound: floor for lower, +999 for upper so the
-                // true microsecond values stay inside the interval
-                val micros = l * 1000L + (if (upper) 999L else 0L)
-                Some((micros, le(8)(_.putLong(micros))))
-              case _ => None
-            }
-          case _: LogicalTypeAnnotation.DecimalLogicalTypeAnnotation => None
-          case _ => Some((l.longValue, le(8)(_.putLong(l))))
-        }
-        case (FLOAT, f: java.lang.Float) =>
-          if (f.isNaN || f.isInfinite) None
-          else Some((f.floatValue, le(4)(_.putFloat(f))))
-        case (DOUBLE, d: java.lang.Double) =>
-          if (d.isNaN || d.isInfinite) None
-          else Some((d.doubleValue, le(8)(_.putDouble(d))))
-        case (BINARY, b: org.apache.parquet.io.api.Binary) => ann match {
-          case _: LogicalTypeAnnotation.StringLogicalTypeAnnotation =>
-            val s = b.toStringUsingUTF8
-            Some((s, s.getBytes("UTF-8")))
+    (tpe.getPrimitiveTypeName, v, tpe.getLogicalTypeAnnotation) match {
+      case (_, _, _: DecimalLogicalTypeAnnotation) => None
+      case (INT32, i: java.lang.Integer, _) => Some(le(4)(_.putInt(i)))
+      case (INT64, l: java.lang.Long, t: TimestampLogicalTypeAnnotation) =>
+        t.getUnit match {
+          case TimeUnit.MICROS => Some(le(8)(_.putLong(l)))
+          case TimeUnit.MILLIS =>
+            Some(le(8)(_.putLong(l * 1000L + (if (upper) 999L else 0L))))
           case _ => None
         }
-        case (BOOLEAN, b: java.lang.Boolean) =>
-          Some((b.booleanValue, Array[Byte](if (b) 1 else 0)))
-        case _ => None
-      }
+      case (INT64, l: java.lang.Long, _) => Some(le(8)(_.putLong(l)))
+      case (FLOAT, f: java.lang.Float, _) =>
+        if (f.isNaN || f.isInfinite) None else Some(le(4)(_.putFloat(f)))
+      case (DOUBLE, d: java.lang.Double, _) =>
+        if (d.isNaN || d.isInfinite) None else Some(le(8)(_.putDouble(d)))
+      case (BINARY, b: org.apache.parquet.io.api.Binary,
+          _: StringLogicalTypeAnnotation) =>
+        Some(b.toStringUsingUTF8.getBytes("UTF-8"))
+      case (BOOLEAN, b: java.lang.Boolean, _) =>
+        Some(Array[Byte](if (b) 1 else 0))
+      case _ => None
     }
-    def lt(a: Any, b: Any): Boolean = (a, b) match {
-      case (x: Int, y: Int) => x < y
-      case (x: Long, y: Long) => x < y
-      case (x: Float, y: Float) => x < y
-      case (x: Double, y: Double) => x < y
-      case (x: String, y: String) => x < y
-      case (x: Boolean, y: Boolean) => !x && y
-      case _ => false
-    }
-    val acc = mutable.LinkedHashMap
-      .empty[String, ((Any, Array[Byte]), (Any, Array[Byte]))]
-    val dropped = mutable.Set.empty[String]
-    // per-column null totals (spec `null_value_counts`, field 110):
-    // summed across chunks, dropped the moment any chunk lacks the
-    // count — a partial sum would under-report and prune wrongly
-    val nulls = mutable.LinkedHashMap.empty[String, Long]
-    val nullsDropped = mutable.Set.empty[String]
-    rdr.getFooter.getBlocks.asScala.foreach { b =>
-      b.getColumns.asScala.foreach { c =>
-        val path = c.getPath.toArray
-        if (path.length == 1 && !nullsDropped.contains(path(0))) {
-          val st0 = c.getStatistics
-          if (st0 == null || st0.isEmpty || !st0.isNumNullsSet) {
-            nullsDropped += path(0); nulls.remove(path(0))
-          } else nulls(path(0)) =
-            nulls.getOrElse(path(0), 0L) + st0.getNumNulls
-        }
-        if (path.length == 1 && !dropped.contains(path(0))) {
-          val name = path(0)
-          val st = c.getStatistics
-          if (st == null || st.isEmpty) {
-            // chunk carries NO stats: bounds would be wrong — drop column
-            dropped += name; acc.remove(name)
-          } else if (!st.hasNonNullValue) {
-            () // all-null chunk: other chunks' bounds still hold
-          } else {
-            val tpe = c.getPrimitiveType
-            (render(tpe, st.genericGetMin, upper = false),
-              render(tpe, st.genericGetMax, upper = true)) match {
-              case (Some(mn), Some(mx)) =>
-                acc.get(name) match {
-                  case Some((m0, x0)) =>
-                    acc(name) = (if (lt(mn._1, m0._1)) mn else m0,
-                      if (lt(x0._1, mx._1)) mx else x0)
-                  case None => acc(name) = (mn, mx)
-                }
-              case _ => dropped += name; acc.remove(name)
-            }
-          }
-        }
-      }
-    }
-    (acc.map { case (n, (mn, _)) => n -> mn._2 }.toMap,
-      acc.map { case (n, (_, mx)) => n -> mx._2 }.toMap,
-      nulls.toMap)
   }
 
   // ---- commit ------------------------------------------------------------

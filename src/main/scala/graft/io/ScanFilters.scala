@@ -7,6 +7,7 @@ import org.apache.spark.sql.catalyst.expressions.{And, AttributeReference, Cast,
 import org.apache.spark.sql.catalyst.plans.logical.Filter
 import org.apache.spark.sql.functions.{col, lit}
 import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
 
 /** One conjunct of a file-pruning predicate for the external-format
   * readers — the Spark-side shape of the reference's `partitions`
@@ -229,8 +230,8 @@ object ScanFilters {
       val p = f.value.toString
       val lo0 = minRaw.map(_.toString)
       val hi0 = maxRaw.map(_.toString)
-      return hi0.forall(h => h >= p) &&
-        lo0.forall(l => l <= p || l.startsWith(p))
+      return hi0.forall(h => cmpString(h, p) >= 0) &&
+        lo0.forall(l => cmpString(l, p) <= 0 || l.startsWith(p))
     }
     val lo = minRaw.flatMap(toComparable(dt, _))
     val hi = maxRaw.flatMap(toComparable(dt, _))
@@ -269,10 +270,16 @@ object ScanFilters {
 
   private def cmpAny(a: Any, b: Any): Option[Int] = (a, b) match {
     case (x: BigDecimal, y: BigDecimal) => Some(x.compare(y))
-    case (x: String, y: String) => Some(x.compareTo(y))
+    case (x: String, y: String) => Some(cmpString(x, y))
     case (x: Boolean, y: Boolean) => Some(x.compareTo(y))
     case _ => None
   }
+
+  /** Strings in the order Parquet bounds and Spark use: by UTF-8 bytes,
+    * which is code point order. `String.compareTo` (UTF-16 order) puts
+    * a supplementary character below U+E000–U+FFFF. */
+  private def cmpString(x: String, y: String): Int =
+    UTF8String.fromString(x).compareTo(UTF8String.fromString(y))
 
   /** Normalize a raw value (hive partition string, avro scalar, user
     * filter literal) to a comparable form for `dt`: BigDecimal for

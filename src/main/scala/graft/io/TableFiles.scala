@@ -1,20 +1,30 @@
 package graft.io
 
 import java.util.UUID
+import scala.collection.mutable
+import scala.jdk.CollectionConverters._
+import scala.reflect.ClassTag
 import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.parquet.schema.PrimitiveType
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
 import org.apache.spark.sql.functions.{broadcast, col, input_file_name, instr,
   regexp_replace, udf, when}
-import org.apache.spark.sql.types.StringType
+import org.apache.spark.sql.types.{MetadataBuilder, StringType, StructType}
+import org.apache.spark.util.SerializableConfiguration
 
 /** The table-file steps the Delta and Iceberg writers share: the staged
   * partitioned Parquet write, a file's path spellings, hive partition
-  * values, footer record counts, partition-granular rewrite planning
-  * for MERGE and delete-matched, and the executor-side per-file
-  * row-position bitmap loop of the deletion-vector deletes. Nothing here
-  * asks which format called it: format facts — a file's partition
-  * tuple, a delete-applied scan of a file subset — arrive as values.
+  * values, the executor-side footer sweep and per-column statistics
+  * fold, the orphan-file sweep, the field-id stamp, partition-granular
+  * rewrite planning for MERGE and delete-matched, and the
+  * executor-side per-file row-position bitmap loop of the
+  * deletion-vector deletes. Nothing here asks which format called it:
+  * format facts — a file's partition tuple, a delete-applied scan of a
+  * file subset, a file's candidacy for the orphan sweep — arrive as
+  * values. Each format renders the statistics fold in its own terms.
   *
   * Two invariants hold throughout:
   *  - A Delta log stores a file's path URI-encoded, as the Delta
@@ -138,24 +148,122 @@ private[graft] object TableFiles {
     when(instr(f, "%") > 0, unescapeUdf(f)).otherwise(f)
   }
 
-  /** Per-file row counts from Parquet footers, read on executors
-    * (metadata only; the driver receives one (path, count) pair per
-    * file). Keyed by the given plain paths. */
-  def recordCounts(spark: SparkSession, paths: Seq[String]): Map[String, Long] = {
+  // ---- footers and orphans -----------------------------------------------
+
+  /** `f` applied to the Parquet footer of each of `paths`, on executors
+    * (metadata only: no data page is read), one value per path back on
+    * the driver. A path without its value fails the sweep. */
+  def footers[T: ClassTag](spark: SparkSession, paths: Seq[String])(
+      f: ParquetFileReader => T): Map[String, T] = {
     if (paths.isEmpty) return Map.empty
-    import spark.implicits._
-    val confBc = spark.sparkContext.broadcast(
-      new org.apache.spark.util.SerializableConfiguration(
-        spark.sparkContext.hadoopConfiguration))
-    spark.createDataset(paths).mapPartitions { it =>
-      val conf = confBc.value.value
-      it.map { p =>
-        val rdr = org.apache.parquet.hadoop.ParquetFileReader.open(
-          org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(new Path(p), conf))
-        try (p, rdr.getRecordCount) finally rdr.close()
-      }
-    }.collect().toMap
+    val sc = spark.sparkContext
+    val confBc = sc.broadcast(new SerializableConfiguration(sc.hadoopConfiguration))
+    val out = sc.parallelize(paths, math.min(paths.size, sc.defaultParallelism))
+      .map { p =>
+        val rdr = ParquetFileReader.open(
+          HadoopInputFile.fromPath(new Path(p), confBc.value.value))
+        try (p, f(rdr)) finally rdr.close()
+      }.collect().toMap
+    paths.find(p => !out.contains(p)).foreach(p =>
+      throw new IllegalStateException(s"no footer read back for $p"))
+    out
   }
+
+  /** Per-file row counts from Parquet footers, keyed by the given plain
+    * paths. */
+  def recordCounts(spark: SparkSession, paths: Seq[String]): Map[String, Long] =
+    footers(spark, paths)(_.getRecordCount)
+
+  /** What a file's footer says about one top-level column. `bounds` are
+    * raw statistics values (a boxed primitive or a `Binary`), to be
+    * rendered against `tpe`; `nulls` is the column's null count. */
+  final case class ColumnStats(name: String, tpe: PrimitiveType,
+      bounds: Option[(Any, Any)], nulls: Option[Long])
+
+  /** Each top-level column's statistics folded over the file's row
+    * groups, in schema order, min and max by Parquet's own ordering for
+    * the column's type (strings by unsigned UTF-8 bytes, which is code
+    * point order):
+    *  - a chunk without bounds (no statistics, or non-null values but
+    *    no min/max) drops the bounds;
+    *  - an all-null chunk leaves the bounds unchanged;
+    *  - null counts add up independently of the bounds, and are dropped
+    *    only when some chunk lacks one. */
+  def columnStats(rdr: ParquetFileReader): Seq[ColumnStats] = {
+    final class Fold(val tpe: PrimitiveType) {
+      val cmp = tpe.comparator[Any]()
+      var bounds: Option[(Any, Any)] = None
+      var boundsOk, nullsOk = true
+      var nulls = 0L
+    }
+    val acc = mutable.LinkedHashMap.empty[String, Fold]
+    for (b <- rdr.getFooter.getBlocks.asScala; c <- b.getColumns.asScala
+         if c.getPath.size == 1) {
+      val fold = acc.getOrElseUpdate(c.getPath.toArray.head,
+        new Fold(c.getPrimitiveType))
+      val st = c.getStatistics
+      if (st == null || !st.isNumNullsSet) fold.nullsOk = false
+      else fold.nulls += st.getNumNulls
+      if (st == null || st.isEmpty) fold.boundsOk = false
+      else if (!st.hasNonNullValue) {
+        // no min/max but some non-null values: Parquet drops the bounds
+        // of a float chunk holding a NaN
+        if (st.getNumNulls < c.getValueCount) fold.boundsOk = false
+      } else if (fold.boundsOk) {
+        val (lo, hi) = (st.genericGetMin: Any, st.genericGetMax: Any)
+        fold.bounds = Some(fold.bounds.fold((lo, hi)) { case (l0, h0) =>
+          (if (fold.cmp.compare(lo, l0) < 0) lo else l0,
+            if (fold.cmp.compare(hi, h0) > 0) hi else h0)
+        })
+      }
+    }
+    acc.map { case (name, f) =>
+      ColumnStats(name, f.tpe, f.bounds.filter(_ => f.boundsOk),
+        Some(f.nulls).filter(_ => f.nullsOk))
+    }.toSeq
+  }
+
+  /** Delete the files under `root` older than `cutoffMs` that
+    * `candidate` (given a listed path) selects and that are not `live`,
+    * returning the deleted paths. The tree is listed and deleted as a
+    * Spark job, so the driver holds only the live set. A listed path
+    * is qualified the way the live set was built (`makeQualified`), so
+    * no spelling difference can ever sweep a live file. */
+  def sweepOrphans(spark: SparkSession, root: String, live: Set[String],
+      cutoffMs: Long)(candidate: String => Boolean): Seq[String] = {
+    import spark.implicits._
+    val sc = spark.sparkContext
+    val liveBc = sc.broadcast(live)
+    val confBc = sc.broadcast(new SerializableConfiguration(sc.hadoopConfiguration))
+    DatasetReader.listObjects(spark, root)
+      .where(col("modified_ms") < cutoffMs)
+      .select("path").as[String]
+      .mapPartitions { it =>
+        val conf = confBc.value.value
+        it.filter { p =>
+          val pp = new Path(p)
+          candidate(p) &&
+            !liveBc.value.contains(pp.getFileSystem(conf).makeQualified(pp).toString)
+        }.map { p =>
+          val pp = new Path(p)
+          pp.getFileSystem(conf).delete(pp, false)
+          p
+        }
+      }.collect().toSeq
+  }
+
+  /** `schema` with `parquet.field.id` metadata on the top-level fields
+    * `ids` names, each field's existing metadata kept. Nested fields get
+    * no ids: their members resolve by name inside an id-matched parent. */
+  def withFieldIds(schema: StructType, ids: Map[String, Long]): StructType =
+    StructType(schema.fields.map(f => ids.get(f.name).fold(f)(id =>
+      f.copy(metadata = new MetadataBuilder().withMetadata(f.metadata)
+        .putLong("parquet.field.id", id).build()))))
+
+  /** `df` with its columns stamped as [[withFieldIds]] stamps a schema. */
+  def withFieldIds(df: DataFrame, ids: Map[String, Long]): DataFrame =
+    df.select(withFieldIds(df.schema, ids).fields.toSeq
+      .map(f => col(f.name).as(f.name, f.metadata)): _*)
 
   // ---- rewrite planning --------------------------------------------------
 

@@ -428,44 +428,35 @@ object TxnLog {
     }
   }
 
-  /** (session, table, version, commit-ts)-keyed cache of RESOLVED
-    * parquet relations (r17, the per-micro-batch planning fix): a
-    * snapshot's data directories are immutable once its manifest is
-    * published (exclusive-create), so the relation resolved for a
-    * version — the file listing plus the footer schema-inference job —
-    * can be reused by every later read at that version. The streaming
-    * ingest loops re-read the SAME index snapshot every micro-batch
-    * (probe path: two sub-tables per batch), and without this each
-    * read re-lists the data dirs and re-runs schema inference. This
-    * caches table METADATA (a logical plan) within one JVM, the moral
-    * twin of Spark's own `filesourceTableRelationCacheSize` — never
-    * query results, and every bench/verify invocation still starts
-    * cold. The commit timestamp in the key guards the
-    * delete-table-recreate-same-path case (versions restart at 1 but
-    * ts differs); version resolution itself (manifest listing/parse)
-    * stays uncached, so a new commit is always picked up. */
+  /** Cache of RESOLVED parquet relations, keyed by table root and the
+    * snapshot's data directories. Those are unique `files/<uuid>/…`
+    * directories, immutable once a manifest names them, so the relation
+    * resolved for them — the file listing plus the footer
+    * schema-inference job — serves every later read of the same set,
+    * and a table deleted and recreated at the same path never shares a
+    * key with its old incarnation. The streaming ingest loops re-read
+    * the SAME index snapshot every micro-batch (probe path: two
+    * sub-tables per batch), and without this each read re-lists the
+    * data dirs and re-runs schema inference. This caches table METADATA
+    * (a logical plan) within one JVM, the twin of Spark's own
+    * `filesourceTableRelationCacheSize` — never query results. An entry
+    * serves only the session that resolved it; version resolution
+    * itself (manifest listing/parse) stays uncached, so a new commit is
+    * always picked up. */
   private val RelationCacheMax = 512
-  /** A/B escape hatch (`SPARK_GRAFT_TXN_RELCACHE=off`) — measurement
-    * harnesses isolate the cache's effect without a rebuild. */
-  private[graft] var relationCacheEnabled =
-    !sys.env.get("SPARK_GRAFT_TXN_RELCACHE").contains("off")
   private val relationCache = new java.util.concurrent.ConcurrentHashMap[
-    (Int, String, Int, Long), DataFrame]()
+    (String, Seq[String]), DataFrame]()
 
   private def readSnapshot(spark: SparkSession, path: String,
       snap: Snapshot): DataFrame = {
     val (_, root) = fsFor(spark, path)
-    val key = (System.identityHashCode(spark), root.toString,
-      snap.version, snap.timestampMs)
-    val cached = if (relationCacheEnabled) relationCache.get(key) else null
-    if (cached != null) cached
+    val key = (root.toString, snap.dataDirs)
+    val cached = relationCache.get(key)
+    if (cached != null && (cached.sparkSession eq spark)) cached
     else {
-      val dirs = snap.dataDirs.map(d => new Path(root, d).toString)
-      val df = spark.read.parquet(dirs: _*)
-      if (relationCacheEnabled) {
-        if (relationCache.size >= RelationCacheMax) relationCache.clear()
-        relationCache.put(key, df)
-      }
+      val df = spark.read.parquet(snap.dataDirs.map(d => new Path(root, d).toString): _*)
+      if (relationCache.size >= RelationCacheMax) relationCache.clear()
+      relationCache.put(key, df)
       df
     }
   }

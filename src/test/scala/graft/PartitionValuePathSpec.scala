@@ -22,6 +22,10 @@ class PartitionValuePathSpec extends AnyFunSuite {
     def read(dir: String): DataFrame
     def merge(dir: String, src: DataFrame): Unit
     def deleteMatched(dir: String, keys: DataFrame): Unit
+    /** The current snapshot's data file paths. */
+    def files(dir: String): Seq[String]
+    /** Vacuum or expire with zero retention; the deleted paths. */
+    def sweep(dir: String): Seq[String]
   }
 
   private object Delta extends Format {
@@ -33,6 +37,10 @@ class PartitionValuePathSpec extends AnyFunSuite {
       DeltaLogWriter.merge(spark, dir, src, keys = Seq("id"))
     def deleteMatched(dir: String, keys: DataFrame): Unit =
       DeltaLogWriter.deleteMatched(spark, dir, keys, Seq("id"))
+    def files(dir: String): Seq[String] =
+      DeltaLogReader.snapshot(spark, dir).files.map(_.path)
+    def sweep(dir: String): Seq[String] =
+      DeltaLogWriter.vacuum(spark, dir, retentionMs = 0L)
   }
 
   private object Iceberg extends Format {
@@ -44,6 +52,10 @@ class PartitionValuePathSpec extends AnyFunSuite {
       IcebergWriter.merge(spark, dir, src, keys = Seq("id"))
     def deleteMatched(dir: String, keys: DataFrame): Unit =
       IcebergWriter.deleteMatched(spark, dir, keys, Seq("id"))
+    def files(dir: String): Seq[String] =
+      IcebergReader.snapshot(spark, dir).files.map(_.path)
+    def sweep(dir: String): Seq[String] =
+      IcebergWriter.expireSnapshots(spark, dir, retentionMs = 0L)
   }
 
   private def frame(pType: DataType, rows: Seq[(Long, Any, String)]): DataFrame =
@@ -113,5 +125,33 @@ class PartitionValuePathSpec extends AnyFunSuite {
       assert(rowsOf(Iceberg.read(dir)) ==
         Seq((1L, v, "a"), (3L, "other", "c2")),
         "merge into the neighbour partition")
+    }
+
+  /** A zero-retention vacuum (Delta) or snapshot expiry (Iceberg) after
+    * a MERGE into the `50%` partition deletes exactly the data file the
+    * MERGE replaced: every live file, escaped directory name and all,
+    * survives. */
+  for (fmt <- Seq(Delta, Iceberg))
+    test(s"${fmt.name}: a zero-retention sweep after a merge keeps every " +
+        "live file in partition '50%'") {
+      val dir = Files.createTempDirectory("graft-ppath-sweep").toString + "/t"
+      // partition directory and file name: part-file names repeat
+      // across partitions
+      def name(p: String) = p.split('/').takeRight(2).mkString("/")
+      fmt.write(frame(StringType,
+        Seq((1L, "50%", "a"), (2L, "50%", "b"), (3L, "other", "c"))), dir)
+      val before = fmt.files(dir).map(name).toSet
+      fmt.merge(dir, frame(StringType, Seq((1L, "50%", "a2"))))
+      val live = fmt.files(dir)
+      val replaced = before -- live.map(name)
+      assert(replaced.nonEmpty && live.exists(_.contains("p=50%25/")),
+        "the merge rewrites the 50% partition")
+      // the sweep deletes only files older than its cutoff
+      Thread.sleep(1100)
+      val swept = fmt.sweep(dir).filter(_.endsWith(".parquet"))
+      assert(swept.map(name).toSet == replaced, swept)
+      assert(swept.forall(_.contains("p=50%25/")), swept)
+      assert(rowsOf(fmt.read(dir)) == Seq((1L, "50%", "a2"), (2L, "50%", "b"),
+        (3L, "other", "c")), "the table still reads after the sweep")
     }
 }
