@@ -5,7 +5,7 @@ import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions.{broadcast, col, lit}
-import org.apache.spark.sql.types.{DataType, LongType, StringType, StructField, StructType, TimestampType}
+import org.apache.spark.sql.types.{DataType, LongType, StringType, StructField, StructType, TimestampNTZType, TimestampType}
 import org.apache.spark.util.SerializableConfiguration
 
 /** The requested Delta table uses a protocol feature this reader does not
@@ -748,6 +748,14 @@ object DeltaLogReader {
                   .filterNot(_.isNull)
               def bound(name: String): Option[Any] = section(name)
                 .map(n => if (n.isNumber) BigDecimal(n.asText) else n.asText)
+              // Delta Spark floors timestamp bounds to the millisecond,
+              // so a max covers values up to 999 µs above it
+              val max = field.dataType match {
+                case TimestampType | TimestampNTZType =>
+                  bound("maxValues").flatMap(ScanFilters.toComparable(field.dataType, _))
+                    .collect { case m: BigDecimal => m + 999 }
+                case _ => bound("maxValues")
+              }
               // nullness ops decide from the stats' per-column
               // nullCount against numRecords; everything else from the
               // min/max interval
@@ -756,7 +764,7 @@ object DeltaLogReader {
                 Option(st.get("numRecords")).filterNot(_.isNull)
                   .map(_.asLong), fl) &&
                 ScanFilters.intervalMayMatch(field.dataType,
-                  bound("minValues"), bound("maxValues"), fl)
+                  bound("minValues"), max, fl)
           }
       }
     }

@@ -205,12 +205,11 @@ object DeltaLogWriter {
         if (p.writerFeatures.contains("changeDataFeed")) Nil
         else {
           val writerFeats = (p.writerFeatures + "changeDataFeed").toSeq.sorted
-          def arr(xs: Seq[String]) = xs.map(jstr).mkString("[", ",", "]")
           val readerPart =
             if (p.minReaderVersion >= 3)
-              s""","readerFeatures":${arr(p.readerFeatures.toSeq.sorted)}"""
+              s""","readerFeatures":${jarr(p.readerFeatures.toSeq.sorted)}"""
             else ""
-          Seq(s"""{"protocol":{"minReaderVersion":${p.minReaderVersion},"minWriterVersion":7$readerPart,"writerFeatures":${arr(writerFeats)}}}""")
+          Seq(s"""{"protocol":{"minReaderVersion":${p.minReaderVersion},"minWriterVersion":7$readerPart,"writerFeatures":${jarr(writerFeats)}}}""")
         }
       } else if (p.minWriterVersion >= 4) Nil // legacy 4+ implies CDF
       else
@@ -350,16 +349,15 @@ object DeltaLogWriter {
     * enumerated. */
   private def writerFeaturesUpgrade(p: DeltaLogReader.Protocol,
       features: Set[String], legacyVersion: Option[Int]): Seq[String] = {
-    def arr(xs: Seq[String]) = xs.map(jstr).mkString("[", ",", "]")
     val readerPart =
       if (p.minReaderVersion >= 3)
-        s""","readerFeatures":${arr(p.readerFeatures.toSeq.sorted)}"""
+        s""","readerFeatures":${jarr(p.readerFeatures.toSeq.sorted)}"""
       else ""
     if (p.minWriterVersion >= 7) {
       if (features.subsetOf(p.writerFeatures)) Nil
       else {
         val writerFeats = (p.writerFeatures ++ features).toSeq.sorted
-        Seq(s"""{"protocol":{"minReaderVersion":${p.minReaderVersion},"minWriterVersion":7$readerPart,"writerFeatures":${arr(writerFeats)}}}""")
+        Seq(s"""{"protocol":{"minReaderVersion":${p.minReaderVersion},"minWriterVersion":7$readerPart,"writerFeatures":${jarr(writerFeats)}}}""")
       }
     } else if (legacyVersion.exists(p.minWriterVersion >= _)) Nil
     else legacyVersion match {
@@ -368,7 +366,7 @@ object DeltaLogWriter {
       case None =>
         val writerFeats =
           (legacyWriterFeatures(p.minWriterVersion) ++ features).toSeq.sorted
-        Seq(s"""{"protocol":{"minReaderVersion":${p.minReaderVersion},"minWriterVersion":7$readerPart,"writerFeatures":${arr(writerFeats)}}}""")
+        Seq(s"""{"protocol":{"minReaderVersion":${p.minReaderVersion},"minWriterVersion":7$readerPart,"writerFeatures":${jarr(writerFeats)}}}""")
     }
   }
 
@@ -443,15 +441,14 @@ object DeltaLogWriter {
         f.baseRowId, f.defaultRowCommitVersion)
     }
     val p = snap.protocol
-    def arr(xs: Seq[String]) = xs.map(jstr).mkString("[", ",", "]")
     val protocolLine = {
       val rf =
         if (p.minReaderVersion >= 3)
-          s""","readerFeatures":${arr(p.readerFeatures.toSeq.sorted)}"""
+          s""","readerFeatures":${jarr(p.readerFeatures.toSeq.sorted)}"""
         else ""
       val wf =
         if (p.minWriterVersion >= 7)
-          s""","writerFeatures":${arr(p.writerFeatures.toSeq.sorted)}"""
+          s""","writerFeatures":${jarr(p.writerFeatures.toSeq.sorted)}"""
         else ""
       s"""{"protocol":{"minReaderVersion":${p.minReaderVersion},"minWriterVersion":${p.minWriterVersion}$rf$wf}}"""
     }
@@ -987,8 +984,7 @@ object DeltaLogWriter {
       val writerFeats = ((if (p.minWriterVersion >= 7) p.writerFeatures
                           else legacyWriterFeatures(p.minWriterVersion)) +
         "columnMapping").toSeq.sorted
-      def arr(xs: Seq[String]) = xs.map(jstr).mkString("[", ",", "]")
-      Seq(s"""{"protocol":{"minReaderVersion":3,"minWriterVersion":7,"readerFeatures":${arr(readerFeats)},"writerFeatures":${arr(writerFeats)}}}""")
+      Seq(s"""{"protocol":{"minReaderVersion":3,"minWriterVersion":7,"readerFeatures":${jarr(readerFeats)},"writerFeatures":${jarr(writerFeats)}}}""")
     } else // legacy range: columnMapping is reader 2 / writer 5
       Seq(s"""{"protocol":{"minReaderVersion":2,"minWriterVersion":${math.max(5, p.minWriterVersion)}}}""")
     (schema, config, upgrade)
@@ -1166,11 +1162,20 @@ object DeltaLogWriter {
     mapper.writeValueAsString(node)
   }
 
+  /** Timestamp bounds in Delta Spark's `stats` form: UTC to the
+    * millisecond, with the offset for a UTC-adjusted column (`Z`) and
+    * without one for TIMESTAMP_NTZ. Both bounds are floored, so readers
+    * widen a timestamp max by 999 µs. */
+  private val StatsTimestamp = java.time.format.DateTimeFormatter
+    .ofPattern("yyyy-MM-dd'T'HH:mm:ss.SSSXXX").withZone(java.time.ZoneOffset.UTC)
+  private val StatsTimestampNtz = java.time.format.DateTimeFormatter
+    .ofPattern("yyyy-MM-dd'T'HH:mm:ss.SSS").withZone(java.time.ZoneOffset.UTC)
+
   /** A statistics value as `stats` JSON: a date as its ISO day, a
-    * timestamp as UTC `yyyy-MM-dd HH:mm:ss[.ffffff]`, a number as a
-    * JSON number (a long when integral), a string or boolean as itself.
-    * None for decimals, non-string binary, NaN or infinite floats and
-    * nanosecond timestamps. */
+    * timestamp in Delta Spark's form (see [[StatsTimestamp]]), a number
+    * as a JSON number (a long when integral), a string or boolean as
+    * itself. None for decimals, non-string binary, NaN or infinite
+    * floats and nanosecond timestamps. */
   private def statsValue(tpe: PrimitiveType, v: Any): Option[JsonNode] = {
     import org.apache.parquet.schema.LogicalTypeAnnotation._
     import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
@@ -1184,16 +1189,13 @@ object DeltaLogWriter {
         Some(json.textNode(java.time.LocalDate.ofEpochDay(i.longValue).toString))
       case (INT32, i: java.lang.Integer, _) => Some(num(BigDecimal(i.intValue)))
       case (INT64, l: java.lang.Long, t: TimestampLogicalTypeAnnotation) =>
-        val micros = t.getUnit match {
-          case TimeUnit.MILLIS => l * 1000L
-          case TimeUnit.MICROS => l.longValue
+        val millis = t.getUnit match {
+          case TimeUnit.MILLIS => l.longValue
+          case TimeUnit.MICROS => Math.floorDiv(l.longValue, 1000L)
           case _ => return None
         }
-        val ldt = java.time.LocalDateTime.ofEpochSecond(
-          Math.floorDiv(micros, 1000000L),
-          (Math.floorMod(micros, 1000000L) * 1000L).toInt,
-          java.time.ZoneOffset.UTC)
-        Some(json.textNode(ldt.toString.replace('T', ' ')))
+        val fmt = if (t.isAdjustedToUTC) StatsTimestamp else StatsTimestampNtz
+        Some(json.textNode(fmt.format(java.time.Instant.ofEpochMilli(millis))))
       case (INT64, l: java.lang.Long, _) => Some(num(BigDecimal(l.longValue)))
       case (FLOAT, f: java.lang.Float, _) =>
         if (f.isNaN || f.isInfinite) None else Some(num(BigDecimal(f.toString)))
@@ -1377,8 +1379,7 @@ object DeltaLogWriter {
       val writerFeats = ((if (p.minWriterVersion >= 7) p.writerFeatures
                           else legacyWriterFeatures(p.minWriterVersion)) +
         "deletionVectors").toSeq.sorted
-      def arr(xs: Seq[String]) = xs.map(jstr).mkString("[", ",", "]")
-      Seq(s"""{"protocol":{"minReaderVersion":3,"minWriterVersion":7,"readerFeatures":${arr(readerFeats)},"writerFeatures":${arr(writerFeats)}}}""")
+      Seq(s"""{"protocol":{"minReaderVersion":3,"minWriterVersion":7,"readerFeatures":${jarr(readerFeats)},"writerFeatures":${jarr(writerFeats)}}}""")
     }
     // UPDATE: the replacement rows (live matched, assignments applied)
     // land in the same commit as the DVs that hide the old positions
@@ -1588,8 +1589,7 @@ object DeltaLogWriter {
         else if (version == 0L) {
           val writerFeats =
             (legacyWriterFeatures(2) + "timestampNtz").toSeq.sorted
-          def arr(xs: Seq[String]) = xs.map(jstr).mkString("[", ",", "]")
-          Seq(s"""{"protocol":{"minReaderVersion":3,"minWriterVersion":7,"readerFeatures":["timestampNtz"],"writerFeatures":${arr(writerFeats)}}}""")
+          Seq(s"""{"protocol":{"minReaderVersion":3,"minWriterVersion":7,"readerFeatures":["timestampNtz"],"writerFeatures":${jarr(writerFeats)}}}""")
         } else {
           val p = DeltaLogReader.snapshot(spark, tablePath).protocol
           if (p.minReaderVersion >= 3 &&
@@ -1603,8 +1603,7 @@ object DeltaLogWriter {
               ((if (p.minWriterVersion >= 7) p.writerFeatures
                 else legacyWriterFeatures(p.minWriterVersion)) +
                 "timestampNtz").toSeq.sorted
-            def arr(xs: Seq[String]) = xs.map(jstr).mkString("[", ",", "]")
-            Seq(s"""{"protocol":{"minReaderVersion":3,"minWriterVersion":7,"readerFeatures":${arr(readerFeats)},"writerFeatures":${arr(writerFeats)}}}""")
+            Seq(s"""{"protocol":{"minReaderVersion":3,"minWriterVersion":7,"readerFeatures":${jarr(readerFeats)},"writerFeatures":${jarr(writerFeats)}}}""")
           }
         }
       // In-Commit Timestamps (PROTOCOL.md): on an enabled table every
@@ -1659,6 +1658,8 @@ object DeltaLogWriter {
   }
 
   private def jstr(s: String): String = mapper.writeValueAsString(s)
+
+  private def jarr(xs: Seq[String]): String = xs.map(jstr).mkString("[", ",", "]")
 
   /** Does the schema carry TIMESTAMP_NTZ anywhere (including nested)? */
   private def hasNtz(dt: org.apache.spark.sql.types.DataType): Boolean = {
@@ -1810,11 +1811,10 @@ object DeltaLogWriter {
       val writerFeats = ((if (p.minWriterVersion >= 7) p.writerFeatures
                           else legacyWriterFeatures(p.minWriterVersion)) +
         "v2Checkpoint").toSeq.sorted
-      def arr(xs: Seq[String]) = xs.map(jstr).mkString("[", ",", "]")
       commitLoop(spark, tablePath, snap0.schema, snap0.partitionColumns,
         adds = Nil, removes = Nil, "UPGRADE PROTOCOL", emitMeta = false,
         extraActions = Seq(
-          s"""{"protocol":{"minReaderVersion":3,"minWriterVersion":7,"readerFeatures":${arr(readerFeats)},"writerFeatures":${arr(writerFeats)}}}"""),
+          s"""{"protocol":{"minReaderVersion":3,"minWriterVersion":7,"readerFeatures":${jarr(readerFeats)},"writerFeatures":${jarr(writerFeats)}}}"""),
         dataChange = false, priorConfig = Some(snap0.configuration))
     }
     val snap = if (needsUpgrade) DeltaLogReader.snapshot(spark, tablePath)

@@ -165,20 +165,11 @@ object IcebergReader {
           .map(s => readAvro(spark, TableFiles.location(root, s.get("manifest-list").asText)))
           .getOrElse(Nil)
         list.map { m =>
-          def intOpt(f: String): Int = Option(m.getSchema.getField(f))
-            .flatMap(_ => Option(m.get(f))).collect {
-              case i: java.lang.Integer => i.intValue
-              case l: java.lang.Long => l.intValue
-            }.getOrElse(0)
+          def int(f: String) = fieldOpt(m, f).flatMap(intOf).getOrElse(0)
           (m.get("manifest_path").toString,
-            Option(m.get("manifest_length")).collect {
-              case l: java.lang.Long => l.longValue
-              case i: java.lang.Integer => i.longValue
-            }.getOrElse(0L),
-            intOpt("partition_spec_id"), intOpt("content"),
-            Option(m.get("added_snapshot_id")).collect {
-              case l: java.lang.Long => l.longValue
-            }.getOrElse(-1L))
+            longOf(m.get("manifest_length")).getOrElse(0L),
+            int("partition_spec_id"), int("content"),
+            longOf(m.get("added_snapshot_id")).getOrElse(-1L))
         }.toDF("path", "length", "partition_spec_id", "content",
           "added_snapshot_id")
       case "files" =>
@@ -214,23 +205,19 @@ object IcebergReader {
             TableFiles.location(root, s.get("manifest-list").asText)))
           .getOrElse(Nil)
         manifests.flatMap { m =>
-          def longIn(v: Any): Option[Long] = Option(v).collect {
-            case l: java.lang.Long => l.longValue
-            case i: java.lang.Integer => i.longValue
-          }
-          val addedId = fieldOpt(m, "added_snapshot_id").flatMap(longIn)
-          val mSeq = fieldOpt(m, "sequence_number").flatMap(longIn)
+          val addedId = fieldOpt(m, "added_snapshot_id").flatMap(longOf)
+          val mSeq = fieldOpt(m, "sequence_number").flatMap(longOf)
             .getOrElse(0L)
           readAvro(spark, TableFiles.location(root, m.get("manifest_path").toString))
             .map { e =>
               val df = e.get("data_file").asInstanceOf[GenericRecord]
               (e.get("status").asInstanceOf[Int],
-                fieldOpt(e, "snapshot_id").flatMap(longIn)
+                fieldOpt(e, "snapshot_id").flatMap(longOf)
                   .orElse(addedId).getOrElse(-1L),
-                fieldOpt(e, "sequence_number").flatMap(longIn)
+                fieldOpt(e, "sequence_number").flatMap(longOf)
                   .getOrElse(mSeq),
                 TableFiles.location(root, df.get("file_path").toString).toString,
-                longIn(df.get("record_count")).getOrElse(0L))
+                longOf(df.get("record_count")).getOrElse(0L))
             }
         }.toDF("status", "snapshot_id", "sequence_number", "file_path",
           "record_count")
@@ -324,60 +311,41 @@ object IcebergReader {
     val posDeletes = mutable.LinkedHashMap.empty[String, DataFileEntry]
     val eqDeletes = mutable.LinkedHashMap.empty[String, DataFileEntry]
     val dvs = mutable.LinkedHashMap.empty[String, DataFileEntry]
-    def longIn(v: Any): Option[Long] = Option(v).collect {
-      case l: java.lang.Long => l.longValue
-      case i: java.lang.Integer => i.longValue
-    }
     readAvro(spark, manifestList).foreach { m =>
-      val mContent = intOf(fieldOpt(m, "content").orNull).getOrElse(0)
+      val mContent = fieldOpt(m, "content").flatMap(intOf).getOrElse(0)
       // v2 sequence numbers: entries inherit the manifest's unless they
       // carry their own (carried-forward EXISTING entries do)
-      val mSeq = fieldOpt(m, "sequence_number")
-        .flatMap(v => Option(v)).collect {
-          case l: java.lang.Long => l.longValue
-          case i: java.lang.Integer => i.longValue
-        }.getOrElse(0L)
+      val mSeq = fieldOpt(m, "sequence_number").flatMap(longOf).getOrElse(0L)
       // the spec the manifest's partition tuples were written under —
       // after partition-spec evolution, files prune under THEIR spec
-      val mSpecId = intOf(fieldOpt(m, "partition_spec_id").orNull)
+      val mSpecId = fieldOpt(m, "partition_spec_id").flatMap(intOf)
         .getOrElse(0)
       // v3 row lineage: the manifest list's first_row_id (field-id 520)
       // seeds the spec's inheritance walk — data files without an
       // explicit first_row_id (142) are assigned running values in
       // entry order, advancing by record_count
-      val mFirstRowId = fieldOpt(m, "first_row_id").flatMap(longIn)
+      val mFirstRowId = fieldOpt(m, "first_row_id").flatMap(longOf)
       var rowIdCursor = mFirstRowId
       readAvro(spark, TableFiles.location(root, m.get("manifest_path").toString))
         .foreach { entry =>
           val status = entry.get("status").asInstanceOf[Int]
-          val entrySeq = fieldOpt(entry, "sequence_number")
-            .flatMap(v => Option(v)).collect {
-              case l: java.lang.Long => l.longValue
-              case i: java.lang.Integer => i.longValue
-            }.getOrElse(mSeq)
+          val entrySeq = fieldOpt(entry, "sequence_number").flatMap(longOf)
+            .getOrElse(mSeq)
           val df = entry.get("data_file").asInstanceOf[GenericRecord]
           val path = TableFiles.location(root, df.get("file_path").toString).toString
-          def longOf(field: String): Long = df.get(field) match {
-            case l: java.lang.Long => l
-            case i: java.lang.Integer => i.toLong
-            case _ => 0L
+          def long(field: String): Long = longOf(df.get(field)).getOrElse(0L)
+          val eqIds: Seq[Int] = fieldOpt(df, "equality_ids").toSeq.flatMap {
+            case l: java.util.List[_] => l.asScala.toSeq.flatMap(intOf)
+            case _ => Nil
           }
-          val eqIds: Seq[Int] = fieldOpt(df, "equality_ids")
-            .flatMap(v => Option(v)).map {
-              case l: java.util.List[_] => l.asScala.toSeq.collect {
-                case i: java.lang.Integer => i.intValue
-                case i: java.lang.Long => i.intValue
-              }
-              case _ => Nil
-            }.getOrElse(Nil)
           val fmt = fieldOpt(df, "file_format").map(_.toString)
             .getOrElse("PARQUET").toUpperCase
           val refFile = fieldOpt(df, "referenced_data_file")
-            .flatMap(Option(_)).map(v => TableFiles.location(root, v.toString).toString)
+            .map(v => TableFiles.location(root, v.toString).toString)
           // explicit first_row_id wins; otherwise inherit from the
           // manifest's cursor (data files only), advancing it either way
-          val explicitFri = fieldOpt(df, "first_row_id").flatMap(longIn)
-          val fileContent = intOf(fieldOpt(df, "content").orNull)
+          val explicitFri = fieldOpt(df, "first_row_id").flatMap(longOf)
+          val fileContent = fieldOpt(df, "content").flatMap(intOf)
             .getOrElse(if (mContent == 1) 1 else 0)
           // spec assignment rule: within a manifest, a null first_row_id
           // is assigned the manifest's first_row_id plus the record
@@ -387,17 +355,17 @@ object IcebergReader {
             if (fileContent != 0) None
             else explicitFri.orElse {
               val assigned = rowIdCursor
-              rowIdCursor = rowIdCursor.map(_ + longOf("record_count"))
+              rowIdCursor = rowIdCursor.map(_ + long("record_count"))
               assigned
             }
           def fileEntry = DataFileEntry(path, partitionMap(df),
-            longOf("record_count"), longOf("file_size_in_bytes"),
+            long("record_count"), long("file_size_in_bytes"),
             entrySeq, eqIds,
             boundsMap(df, "lower_bounds"), boundsMap(df, "upper_bounds"),
             countsMap(df, "null_value_counts"), mSpecId,
             fmt, refFile,
-            fieldOpt(df, "content_offset").flatMap(longIn),
-            fieldOpt(df, "content_size_in_bytes").flatMap(longIn),
+            fieldOpt(df, "content_offset").flatMap(longOf),
+            fieldOpt(df, "content_size_in_bytes").flatMap(longOf),
             fri)
           // v2 content: manifest-list distinguishes data (0) from delete
           // (1) manifests; inside a delete manifest the data_file content
@@ -409,7 +377,7 @@ object IcebergReader {
               if (status == 2) active.remove(path) else active(path) = fileEntry
             case 1 if fmt == "PUFFIN" || refFile.isDefined =>
               val key = s"$path#${fieldOpt(df, "content_offset")
-                .flatMap(longIn).getOrElse(0L)}"
+                .flatMap(longOf).getOrElse(0L)}"
               if (status == 2) dvs.remove(key) else dvs(key) = fileEntry
             case 1 =>
               if (status == 2) posDeletes.remove(path)
@@ -996,16 +964,22 @@ object IcebergReader {
       spark.sparkContext.parallelize(normalized, 1), schema)
   }
 
-  private def intOf(v: Any): Option[Int] = v match {
-    case i: java.lang.Integer => Some(i.intValue)
-    case l: java.lang.Long => Some(l.intValue)
+  /** An Avro int or long widened to a Long; None for null or any other
+    * value. */
+  private[io] def longOf(v: Any): Option[Long] = v match {
+    case l: java.lang.Long => Some(l.longValue)
+    case i: java.lang.Integer => Some(i.longValue)
     case _ => None
   }
 
-  /** avro `Record.get(name)` THROWS on a field absent from the writer's
-    * schema (v1 manifests have no `content`); guard through the schema. */
-  private def fieldOpt(r: GenericRecord, name: String): Option[Any] =
-    Option(r.getSchema.getField(name)).map(_ => r.get(name))
+  /** An Avro int or long as an Int; None for null or any other value. */
+  private[io] def intOf(v: Any): Option[Int] = longOf(v).map(_.toInt)
+
+  /** A field of `r`; None when it is null or absent from the record's
+    * schema (avro `Record.get(name)` THROWS on an absent field, and v1
+    * manifests have no `content`). */
+  private[io] def fieldOpt(r: GenericRecord, name: String): Option[Any] =
+    Option(r.getSchema.getField(name)).flatMap(_ => Option(r.get(name)))
 
   // ---- metadata plumbing -------------------------------------------------
 
@@ -1105,20 +1079,15 @@ object IcebergReader {
   private def addedFilePaths(spark: SparkSession, root: Path,
       snapNode: JsonNode): Seq[String] = {
     val snapId = snapNode.get("snapshot-id").asLong
-    def longIn(v: Any): Option[Long] = Option(v).collect {
-      case l: java.lang.Long => l.longValue
-      case i: java.lang.Integer => i.longValue
-    }
     readAvro(spark, TableFiles.location(root, snapNode.get("manifest-list").asText))
       .flatMap { m =>
-        val mContent = intOf(fieldOpt(m, "content").orNull).getOrElse(0)
-        val addedId = fieldOpt(m, "added_snapshot_id")
-          .flatMap(longIn)
+        val mContent = fieldOpt(m, "content").flatMap(intOf).getOrElse(0)
+        val addedId = fieldOpt(m, "added_snapshot_id").flatMap(longOf)
         if (mContent != 0 || addedId.exists(_ != snapId)) Nil
         else readAvro(spark,
             TableFiles.location(root, m.get("manifest_path").toString)).flatMap { e =>
           val status = e.get("status").asInstanceOf[Int]
-          val entrySnap = fieldOpt(e, "snapshot_id").flatMap(longIn)
+          val entrySnap = fieldOpt(e, "snapshot_id").flatMap(longOf)
             .getOrElse(addedId.getOrElse(snapId))
           if (status == 1 && entrySnap == snapId)
             Some(TableFiles.location(root,
@@ -1207,17 +1176,12 @@ object IcebergReader {
     * array-encoded int-keyed map shape as the bounds. */
   private def countsMap(dataFile: GenericRecord,
       field: String): Map[Int, Long] = {
-    def longVal(v: Any): Option[Long] = v match {
-      case l: java.lang.Long => Some(l.longValue)
-      case i: java.lang.Integer => Some(i.longValue)
-      case _ => None
-    }
-    fieldOpt(dataFile, field).flatMap(v => Option(v)) match {
+    fieldOpt(dataFile, field) match {
       case Some(l: java.util.List[_]) =>
         l.asScala.collect { case r: GenericRecord =>
           for {
             k <- intOf(r.get("key"))
-            c <- longVal(r.get("value"))
+            c <- longOf(r.get("value"))
           } yield k -> c
         }.flatten.toMap
       case Some(m: java.util.Map[_, _]) =>
@@ -1228,7 +1192,7 @@ object IcebergReader {
             case i: java.lang.Integer => Some(i.intValue)
             case _ => None
           }
-          for { kk <- key; c <- longVal(v) } yield kk -> c
+          for { kk <- key; c <- longOf(v) } yield kk -> c
         }.toMap
       case _ => Map.empty
     }
@@ -1247,7 +1211,7 @@ object IcebergReader {
       case f: org.apache.avro.generic.GenericFixed => Some(f.bytes())
       case _ => None
     }
-    fieldOpt(dataFile, field).flatMap(v => Option(v)) match {
+    fieldOpt(dataFile, field) match {
       case Some(l: java.util.List[_]) =>
         l.asScala.collect { case r: GenericRecord =>
           for {

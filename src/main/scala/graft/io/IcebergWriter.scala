@@ -3,7 +3,8 @@ package graft.io
 import java.util.UUID
 import scala.collection.mutable
 import scala.jdk.CollectionConverters._
-import com.fasterxml.jackson.databind.ObjectMapper
+import scala.reflect.ClassTag
+import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import com.fasterxml.jackson.databind.node.{ArrayNode, ObjectNode}
 import org.apache.avro.file.DataFileWriter
 import org.apache.avro.generic.{GenericData, GenericDatumWriter, GenericRecord}
@@ -42,6 +43,7 @@ import org.apache.spark.sql.types._
 object IcebergWriter {
 
   import IcebergTransforms.PartitionField
+  import IcebergReader.{fieldOpt, intOf, longOf}
 
   private val mapper = new ObjectMapper()
 
@@ -67,8 +69,7 @@ object IcebergWriter {
   /** `to_iceberg(df, path, mode=…)` in the real format. `partitionBy`
     * entries are transform specs: a bare column name (identity),
     * `day/month/year/hour(col)`, or `bucket(n, col)` — the call shapes
-    * the reference accepts (`athena/_write_iceberg.py:269-281`). */
-  /** `to_iceberg(df, path, mode=…)` in the real format.
+    * the reference accepts (`athena/_write_iceberg.py:269-281`).
     *
     * Appends evolve additively by default, mirroring the reference's
     * diff-and-ALTER flow (`athena/_write_iceberg.py:112-234`): new
@@ -565,33 +566,19 @@ object IcebergWriter {
       case _ => true
     }, s"addColumn supports primitive types only, not ${dataType.simpleString}" +
       " (nested types consume field-ids; evolve through an append instead)")
-    def renderDefault(v: Any): com.fasterxml.jackson.databind.JsonNode =
-      v match {
-        case b: Boolean => mapper.getNodeFactory.booleanNode(b)
-        case i: Int => mapper.getNodeFactory.numberNode(i)
-        case l: Long => mapper.getNodeFactory.numberNode(l)
-        case f: Float => mapper.getNodeFactory.numberNode(f.toDouble)
-        case d: Double => mapper.getNodeFactory.numberNode(d)
-        case s: String => mapper.getNodeFactory.textNode(s)
-        case d: java.math.BigDecimal => mapper.getNodeFactory.numberNode(d)
-        case other => throw new IllegalArgumentException(
-          s"unsupported default value $other")
-      }
-    val root = new Path(tablePath)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val metaDir = new Path(root, "metadata")
-    var attempts = 0
-    while (attempts < 20) {
-      val (claimedMax, parsedOpt) = logState(fs, metaDir)
-      val (_, meta) = parsedOpt.getOrElse(throw new IllegalStateException(
-        s"no parseable Iceberg metadata at $tablePath"))
-      val node = meta.deepCopy[com.fasterxml.jackson.databind.JsonNode]()
-        .asInstanceOf[ObjectNode]
-      val curId = Option(node.get("current-schema-id")).map(_.asInt)
-        .getOrElse(0)
-      val schemas = IcebergReaderAccess.jsonArray(node.get("schemas"))
-        .collect { case o: ObjectNode => o }
-      val current = schemas.find(_.get("schema-id").asInt == curId)
+    def renderDefault(v: Any): JsonNode = v match {
+      case b: Boolean => mapper.getNodeFactory.booleanNode(b)
+      case i: Int => mapper.getNodeFactory.numberNode(i)
+      case l: Long => mapper.getNodeFactory.numberNode(l)
+      case f: Float => mapper.getNodeFactory.numberNode(f.toDouble)
+      case d: Double => mapper.getNodeFactory.numberNode(d)
+      case s: String => mapper.getNodeFactory.textNode(s)
+      case d: java.math.BigDecimal => mapper.getNodeFactory.numberNode(d)
+      case other => throw new IllegalArgumentException(
+        s"unsupported default value $other")
+    }
+    editMetadata(spark, tablePath, "an add-column commit") { node =>
+      val current = currentSchema(node)
         .getOrElse(throw new IllegalStateException("no current schema"))
       require(!IcebergReaderAccess.jsonArray(current.get("fields"))
           .exists(_.get("name").asText == name),
@@ -602,33 +589,25 @@ object IcebergWriter {
       fieldNode.put("id", newId)
       fieldNode.put("name", name)
       fieldNode.put("required", required)
-      fieldNode.set[com.fasterxml.jackson.databind.JsonNode]("type",
+      fieldNode.set[JsonNode]("type",
         icebergTypeJson(dataType,
           new java.util.concurrent.atomic.AtomicInteger(newId)))
       initialDefault.foreach(v =>
-        fieldNode.set[com.fasterxml.jackson.databind.JsonNode](
-          "initial-default", renderDefault(v)))
+        fieldNode.set[JsonNode]("initial-default", renderDefault(v)))
       writeDefault.orElse(initialDefault).foreach(v =>
-        fieldNode.set[com.fasterxml.jackson.databind.JsonNode](
-          "write-default", renderDefault(v)))
+        fieldNode.set[JsonNode]("write-default", renderDefault(v)))
       val evolved = current.deepCopy()
-      val newSchemaId = schemas.map(_.get("schema-id").asInt).max + 1
+      val schemas = child(node, "schemas")(mapper.createArrayNode())
+      val newSchemaId = IcebergReaderAccess.jsonArray(schemas)
+        .map(_.get("schema-id").asInt).foldLeft(-1)(math.max) + 1
       evolved.put("schema-id", newSchemaId)
       evolved.get("fields").asInstanceOf[ArrayNode].add(fieldNode)
-      node.get("schemas").asInstanceOf[ArrayNode].add(evolved)
+      schemas.add(evolved)
       node.put("current-schema-id", newSchemaId)
       node.set[ObjectNode]("schema", evolved.deepCopy())
       node.put("last-column-id", newId)
-      node.put("last-updated-ms", System.currentTimeMillis())
-      val targetPath = new Path(metaDir, s"v${claimedMax + 1}.metadata.json")
-      if (AtomicWrite.claim(fs, targetPath,
-          mapper.writerWithDefaultPrettyPrinter().writeValueAsBytes(node))) {
-        writeHint(fs, metaDir, claimedMax + 1)
-        return
-      } else attempts += 1
+      Successor(node, ())
     }
-    throw new java.io.IOException(
-      s"could not claim the add-column commit at $tablePath")
   }
 
   /** Upgrade a table's format version (only 2→3 / 1→3 supported). v3
@@ -644,13 +623,9 @@ object IcebergWriter {
       version: Int): Unit = {
     require(version == 3,
       s"only upgrading to format-version 3 is supported, not $version")
-    val fv = IcebergReader.formatVersion(spark, tablePath)
-    if (fv >= 3) return
-    val root = new Path(tablePath)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val metaDir = new Path(root, "metadata")
-    val snapOpt = IcebergReader.snapshotOpt(spark, tablePath)
-    snapOpt.filter(_.deleteFiles.nonEmpty) match {
+    if (IcebergReader.formatVersion(spark, tablePath) >= 3) return
+    IcebergReader.snapshotOpt(spark, tablePath)
+      .filter(_.deleteFiles.nonEmpty) match {
       case Some(snap) =>
         // conversion commit: all pos-delete parquet positions re-encode
         // as DVs; minFormatVersion=3 lifts the metadata in the same claim
@@ -659,25 +634,14 @@ object IcebergWriter {
         ()
       case None =>
         // metadata-only bump: format-version 3 + row-lineage bookkeeping
-        var attempts = 0
-        while (attempts < 20) {
-          val (claimedMax, parsedOpt) = logState(fs, metaDir)
-          val (_, meta) = parsedOpt.getOrElse(throw new IllegalStateException(
-            s"no parseable Iceberg metadata at $tablePath"))
-          val node = meta.deepCopy[com.fasterxml.jackson.databind.JsonNode]()
-            .asInstanceOf[ObjectNode]
-          node.put("format-version", 3)
-          if (!node.has("next-row-id")) node.put("next-row-id", 0L)
-          node.put("last-updated-ms", System.currentTimeMillis())
-          val targetPath = new Path(metaDir, s"v${claimedMax + 1}.metadata.json")
-          if (AtomicWrite.claim(fs, targetPath,
-              mapper.writerWithDefaultPrettyPrinter().writeValueAsBytes(node))) {
-            writeHint(fs, metaDir, claimedMax + 1)
-            return
-          } else attempts += 1
+        editMetadata(spark, tablePath, "a format-version upgrade") { node =>
+          if (node.get("format-version").asInt >= 3) Unchanged(())
+          else {
+            node.put("format-version", 3)
+            if (!node.has("next-row-id")) node.put("next-row-id", 0L)
+            Successor(node, ())
+          }
         }
-        throw new java.io.IOException(
-          s"could not claim the format-version upgrade at $tablePath")
     }
   }
 
@@ -848,42 +812,21 @@ object IcebergWriter {
     require(refType == "tag" || refType == "branch",
       s"refType must be tag|branch, got $refType")
     require(name.nonEmpty, "ref name must be non-empty")
-    val root = new Path(tablePath)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val metaDir = new Path(root, "metadata")
-    var attempts = 0
-    while (attempts < 20) {
-      val (claimedMax, parsedOpt) = logState(fs, metaDir)
-      val (_, meta) = parsedOpt.getOrElse(throw new IllegalStateException(
-        s"no parseable Iceberg metadata at $tablePath"))
-      val known = IcebergReaderAccess.jsonArray(meta.get("snapshots"))
+    editMetadata(spark, tablePath, "a ref commit") { node =>
+      val known = IcebergReaderAccess.jsonArray(node.get("snapshots"))
         .map(_.get("snapshot-id").asLong).toSet
       val target = snapshotId.orElse(
-        Option(meta.get("current-snapshot-id")).map(_.asLong)
+        Option(node.get("current-snapshot-id")).map(_.asLong)
           .filter(_ >= 0)).getOrElse(throw new IllegalArgumentException(
         s"no snapshot to $refType at $tablePath"))
       require(known.contains(target),
         s"snapshot $target not in the log of $tablePath")
-      val node = meta.deepCopy[com.fasterxml.jackson.databind.JsonNode]()
-        .asInstanceOf[ObjectNode]
-      val refs =
-        if (node.has("refs") && node.get("refs").isObject)
-          node.get("refs").asInstanceOf[ObjectNode]
-        else { val r = mapper.createObjectNode(); node.set[ObjectNode]("refs", r); r }
-      val entry = mapper.createObjectNode()
+      val entry = child(node, "refs")(mapper.createObjectNode())
+        .putObject(name)
       entry.put("snapshot-id", target)
       entry.put("type", refType)
-      refs.set[ObjectNode](name, entry)
-      node.put("last-updated-ms", System.currentTimeMillis())
-      val targetPath = new Path(metaDir, s"v${claimedMax + 1}.metadata.json")
-      if (AtomicWrite.claim(fs, targetPath,
-          mapper.writerWithDefaultPrettyPrinter().writeValueAsBytes(node))) {
-        writeHint(fs, metaDir, claimedMax + 1)
-        return target
-      } else attempts += 1 // lost the claim
+      Successor(node, target)
     }
-    throw new java.io.IOException(
-      s"could not claim a ref commit after $attempts attempts at $tablePath")
   }
 
   /** Iceberg's `rollback_to_snapshot`: make an earlier snapshot current
@@ -896,51 +839,14 @@ object IcebergWriter {
     * concurrent writers. */
   def rollbackTo(spark: SparkSession, tablePath: String,
       snapshotId: Long): Unit = {
-    val root = new Path(tablePath)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val metaDir = new Path(root, "metadata")
-    var attempts = 0
-    while (attempts < 20) {
-      val (claimedMax, parsedOpt) = logState(fs, metaDir)
-      val (_, meta) = parsedOpt.getOrElse(throw new IllegalStateException(
-        s"no parseable Iceberg metadata at $tablePath"))
-      val known = IcebergReaderAccess.jsonArray(meta.get("snapshots"))
+    editMetadata(spark, tablePath, "a rollback commit") { node =>
+      val known = IcebergReaderAccess.jsonArray(node.get("snapshots"))
         .map(_.get("snapshot-id").asLong).toSet
       require(known.contains(snapshotId),
         s"snapshot $snapshotId not in the log of $tablePath")
-      val now = System.currentTimeMillis()
-      val node = meta.deepCopy[com.fasterxml.jackson.databind.JsonNode]()
-        .asInstanceOf[ObjectNode]
-      node.put("current-snapshot-id", snapshotId)
-      val log =
-        if (node.has("snapshot-log") && node.get("snapshot-log").isArray)
-          node.get("snapshot-log").asInstanceOf[ArrayNode]
-        else {
-          val l = mapper.createArrayNode()
-          node.set[ArrayNode]("snapshot-log", l); l
-        }
-      val entry = mapper.createObjectNode()
-      entry.put("timestamp-ms", now)
-      entry.put("snapshot-id", snapshotId)
-      log.add(entry)
-      if (node.has("refs") && node.get("refs").isObject) {
-        val refs = node.get("refs").asInstanceOf[ObjectNode]
-        if (refs.has("main") &&
-            "branch" == Option(refs.get("main").get("type"))
-              .map(_.asText).getOrElse("branch"))
-          refs.get("main").asInstanceOf[ObjectNode]
-            .put("snapshot-id", snapshotId)
-      }
-      node.put("last-updated-ms", now)
-      val targetPath = new Path(metaDir, s"v${claimedMax + 1}.metadata.json")
-      if (AtomicWrite.claim(fs, targetPath,
-          mapper.writerWithDefaultPrettyPrinter().writeValueAsBytes(node))) {
-        writeHint(fs, metaDir, claimedMax + 1)
-        return
-      } else attempts += 1 // lost the claim
+      advanceMain(node, Seq(snapshotId))
+      Successor(node, ())
     }
-    throw new java.io.IOException(
-      s"could not claim a rollback commit after $attempts attempts at $tablePath")
   }
 
   /** Declare the table's ACTIVE sort order (spec `sort-orders` /
@@ -951,36 +857,15 @@ object IcebergWriter {
   def declareSortOrder(spark: SparkSession, tablePath: String,
       cols: Seq[String]): Int = {
     require(cols.nonEmpty, "declareSortOrder needs at least one column")
-    val root = new Path(tablePath)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val metaDir = new Path(root, "metadata")
-    var attempts = 0
-    while (attempts < 20) {
-      val (claimedMax, parsedOpt) = logState(fs, metaDir)
-      val (_, meta) = parsedOpt.getOrElse(throw new IllegalStateException(
-        s"no parseable Iceberg metadata at $tablePath"))
-      val curSchemaId = Option(meta.get("current-schema-id"))
-        .map(_.asInt).getOrElse(0)
-      val fieldsArr = IcebergReaderAccess.jsonArray(meta.get("schemas"))
-        .find(s => Option(s.get("schema-id")).exists(_.asInt == curSchemaId))
-        .orElse(Option(meta.get("schema")))
-        .map(s => IcebergReaderAccess.jsonArray(s.get("fields")))
-        .getOrElse(Seq.empty)
-      val idOf = fieldsArr.map(f =>
-        f.get("name").asText -> f.get("id").asInt).toMap
+    editMetadata(spark, tablePath, "a sort-order commit") { node =>
+      val idOf = currentSchema(node).toSeq
+        .flatMap(s => IcebergReaderAccess.jsonArray(s.get("fields")))
+        .map(f => f.get("name").asText -> f.get("id").asInt).toMap
       val srcIds = cols.map(c => idOf.getOrElse(c,
         throw new IllegalArgumentException(
           s"sort column $c not in the current schema of $tablePath")))
-      val node = meta.deepCopy[com.fasterxml.jackson.databind.JsonNode]()
-        .asInstanceOf[ObjectNode]
-      val orders =
-        if (node.has("sort-orders") && node.get("sort-orders").isArray)
-          node.get("sort-orders").asInstanceOf[ArrayNode]
-        else {
-          val a = mapper.createArrayNode()
-          node.set[ArrayNode]("sort-orders", a); a
-        }
-      def matches(o: com.fasterxml.jackson.databind.JsonNode): Boolean = {
+      val orders = child(node, "sort-orders")(mapper.createArrayNode())
+      def matches(o: JsonNode): Boolean = {
         val fs0 = IcebergReaderAccess.jsonArray(o.get("fields"))
         fs0.size == srcIds.size && fs0.zip(srcIds).forall { case (f, id) =>
           f.get("source-id").asInt == id &&
@@ -988,37 +873,26 @@ object IcebergWriter {
             f.get("direction").asText == "asc"
         }
       }
-      val existing = IcebergReaderAccess.jsonArray(node.get("sort-orders"))
+      val existing = IcebergReaderAccess.jsonArray(orders)
         .find(matches).map(_.get("order-id").asInt)
       val orderId = existing.getOrElse {
-        val next = IcebergReaderAccess.jsonArray(node.get("sort-orders"))
+        val next = IcebergReaderAccess.jsonArray(orders)
           .map(_.get("order-id").asInt).foldLeft(0)(math.max) + 1
-        val o = mapper.createObjectNode()
+        val o = orders.addObject()
         o.put("order-id", next)
-        val fArr = mapper.createArrayNode()
+        val fArr = o.putArray("fields")
         srcIds.foreach { id =>
-          val f = mapper.createObjectNode()
+          val f = fArr.addObject()
           f.put("transform", "identity")
           f.put("source-id", id)
           f.put("direction", "asc")
           f.put("null-order", "nulls-first")
-          fArr.add(f)
         }
-        o.set[ArrayNode]("fields", fArr)
-        orders.add(o)
         next
       }
       node.put("default-sort-order-id", orderId)
-      node.put("last-updated-ms", System.currentTimeMillis())
-      val targetPath = new Path(metaDir, s"v${claimedMax + 1}.metadata.json")
-      if (AtomicWrite.claim(fs, targetPath,
-          mapper.writerWithDefaultPrettyPrinter().writeValueAsBytes(node))) {
-        writeHint(fs, metaDir, claimedMax + 1)
-        return orderId
-      } else attempts += 1 // lost the claim
+      Successor(node, orderId)
     }
-    throw new java.io.IOException(
-      s"could not claim a sort-order commit after $attempts attempts at $tablePath")
   }
 
   /** Remove a branch or tag ref — the ref-lifecycle closer: a dropped
@@ -1029,30 +903,13 @@ object IcebergWriter {
   def dropRef(spark: SparkSession, tablePath: String,
       name: String): Unit = {
     require(name != "main", "cannot drop the main branch ref")
-    val root = new Path(tablePath)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val metaDir = new Path(root, "metadata")
-    var attempts = 0
-    while (attempts < 20) {
-      val (claimedMax, parsedOpt) = logState(fs, metaDir)
-      val (_, meta) = parsedOpt.getOrElse(throw new IllegalStateException(
-        s"no parseable Iceberg metadata at $tablePath"))
-      require(Option(meta.get("refs")).filter(_.isObject)
+    editMetadata(spark, tablePath, "a drop-ref commit") { node =>
+      require(Option(node.get("refs")).filter(_.isObject)
           .exists(_.has(name)),
         s"no ref '$name' in $tablePath")
-      val node = meta.deepCopy[com.fasterxml.jackson.databind.JsonNode]()
-        .asInstanceOf[ObjectNode]
       node.get("refs").asInstanceOf[ObjectNode].remove(name)
-      node.put("last-updated-ms", System.currentTimeMillis())
-      val targetPath = new Path(metaDir, s"v${claimedMax + 1}.metadata.json")
-      if (AtomicWrite.claim(fs, targetPath,
-          mapper.writerWithDefaultPrettyPrinter().writeValueAsBytes(node))) {
-        writeHint(fs, metaDir, claimedMax + 1)
-        return
-      } else attempts += 1 // lost the claim
+      Successor(node, ())
     }
-    throw new java.io.IOException(
-      s"could not claim a drop-ref commit after $attempts attempts at $tablePath")
   }
 
   /** PUBLISH a staged branch — Iceberg's `fast_forward(main, branch)`,
@@ -1068,76 +925,42 @@ object IcebergWriter {
     * dropped and `expireSnapshots` sweeps them. */
   def fastForward(spark: SparkSession, tablePath: String,
       branch: String): Long = {
-    val root = new Path(tablePath)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val metaDir = new Path(root, "metadata")
-    var attempts = 0
-    while (attempts < 20) {
-      val (claimedMax, parsedOpt) = logState(fs, metaDir)
-      val (_, meta) = parsedOpt.getOrElse(throw new IllegalStateException(
-        s"no parseable Iceberg metadata at $tablePath"))
-      val target = Option(meta.get("refs")).filter(_.isObject)
+    editMetadata(spark, tablePath, "a fast-forward commit") { node =>
+      val target = Option(node.get("refs")).filter(_.isObject)
         .flatMap(r => Option(r.get(branch)))
         .map(_.get("snapshot-id").asLong)
         .getOrElse(throw new IllegalArgumentException(
           s"no branch '$branch' in the refs of $tablePath"))
-      val cur = Option(meta.get("current-snapshot-id")).map(_.asLong)
+      val cur = Option(node.get("current-snapshot-id")).map(_.asLong)
         .filter(_ >= 0)
-      if (cur.contains(target)) return target // already published
-      val parentOf: Map[Long, Option[Long]] =
-        IcebergReaderAccess.jsonArray(meta.get("snapshots")).map(s =>
-          s.get("snapshot-id").asLong ->
-            Option(s.get("parent-snapshot-id")).filterNot(_.isNull)
-              .map(_.asLong)).toMap
-      // the branch chain from target back to main's head (exclusive) —
-      // the fast-forward condition AND the history being published
-      val chainBack = Iterator.iterate(Option(target))(
-        _.flatMap(parentOf.get).flatten)
-        .takeWhile(c => c.isDefined && c != cur).flatten.toSeq
-      val reachedMain =
-        cur.isEmpty || chainBack.lastOption.flatMap(parentOf.get)
-          .flatten == cur
-      require(reachedMain,
-        s"cannot fast-forward $tablePath to branch '$branch': main " +
-          s"(${cur.getOrElse(-1L)}) is not an ancestor of the branch " +
-          s"head ($target) — main advanced since the branch forked; " +
-          "rebase the branch")
-      val now = System.currentTimeMillis()
-      val node = meta.deepCopy[com.fasterxml.jackson.databind.JsonNode]()
-        .asInstanceOf[ObjectNode]
-      node.put("current-snapshot-id", target)
-      val log =
-        if (node.has("snapshot-log") && node.get("snapshot-log").isArray)
-          node.get("snapshot-log").asInstanceOf[ArrayNode]
-        else {
-          val l = mapper.createArrayNode()
-          node.set[ArrayNode]("snapshot-log", l); l
-        }
-      // the WHOLE published chain lands in the log, oldest first — the
-      // log is main's history, and incremental consumers walk it; an
-      // entry for the head alone would make the staged snapshots
-      // invisible to a log-ranged scan
-      chainBack.reverse.foreach { id =>
-        val entry = mapper.createObjectNode()
-        entry.put("timestamp-ms", now)
-        entry.put("snapshot-id", id)
-        log.add(entry)
+      if (cur.contains(target)) Unchanged(target) // already published
+      else {
+        val parentOf: Map[Long, Option[Long]] =
+          IcebergReaderAccess.jsonArray(node.get("snapshots")).map(s =>
+            s.get("snapshot-id").asLong ->
+              Option(s.get("parent-snapshot-id")).filterNot(_.isNull)
+                .map(_.asLong)).toMap
+        // the branch chain from target back to main's head (exclusive) —
+        // the fast-forward condition AND the history being published
+        val chainBack = Iterator.iterate(Option(target))(
+          _.flatMap(parentOf.get).flatten)
+          .takeWhile(c => c.isDefined && c != cur).flatten.toSeq
+        val reachedMain =
+          cur.isEmpty || chainBack.lastOption.flatMap(parentOf.get)
+            .flatten == cur
+        require(reachedMain,
+          s"cannot fast-forward $tablePath to branch '$branch': main " +
+            s"(${cur.getOrElse(-1L)}) is not an ancestor of the branch " +
+            s"head ($target) — main advanced since the branch forked; " +
+            "rebase the branch")
+        // the WHOLE published chain lands in the log, oldest first — the
+        // log is main's history, and incremental consumers walk it; an
+        // entry for the head alone would make the staged snapshots
+        // invisible to a log-ranged scan
+        advanceMain(node, chainBack.reverse)
+        Successor(node, target)
       }
-      val refs = node.get("refs").asInstanceOf[ObjectNode]
-      if (refs.has("main"))
-        refs.get("main").asInstanceOf[ObjectNode]
-          .put("snapshot-id", target)
-      node.put("last-updated-ms", now)
-      val targetPath = new Path(metaDir, s"v${claimedMax + 1}.metadata.json")
-      if (AtomicWrite.claim(fs, targetPath,
-          mapper.writerWithDefaultPrettyPrinter().writeValueAsBytes(node))) {
-        writeHint(fs, metaDir, claimedMax + 1)
-        return target
-      } else attempts += 1 // lost the claim
     }
-    throw new java.io.IOException(
-      s"could not claim a fast-forward commit after $attempts attempts " +
-        s"at $tablePath")
   }
 
   /** Merge `props` into the table's `properties` map — a metadata-only
@@ -1150,32 +973,11 @@ object IcebergWriter {
   def setProperties(spark: SparkSession, tablePath: String,
       props: Map[String, String]): Unit = {
     require(props.nonEmpty, "no properties to set")
-    val root = new Path(tablePath)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val metaDir = new Path(root, "metadata")
-    var attempts = 0
-    while (attempts < 20) {
-      val (claimedMax, parsedOpt) = logState(fs, metaDir)
-      val (_, meta) = parsedOpt.getOrElse(throw new IllegalStateException(
-        s"no parseable Iceberg metadata at $tablePath"))
-      val node = meta.deepCopy[com.fasterxml.jackson.databind.JsonNode]()
-        .asInstanceOf[ObjectNode]
-      val tgt =
-        if (node.has("properties") && node.get("properties").isObject)
-          node.get("properties").asInstanceOf[ObjectNode]
-        else { val p = mapper.createObjectNode()
-               node.set[ObjectNode]("properties", p); p }
+    editMetadata(spark, tablePath, "a properties commit") { node =>
+      val tgt = child(node, "properties")(mapper.createObjectNode())
       props.foreach { case (k, v) => tgt.put(k, v) }
-      node.put("last-updated-ms", System.currentTimeMillis())
-      val targetPath = new Path(metaDir, s"v${claimedMax + 1}.metadata.json")
-      if (AtomicWrite.claim(fs, targetPath,
-          mapper.writerWithDefaultPrettyPrinter().writeValueAsBytes(node))) {
-        writeHint(fs, metaDir, claimedMax + 1)
-        return
-      } else attempts += 1 // lost the claim
+      Successor(node, ())
     }
-    throw new java.io.IOException(
-      s"could not claim a properties commit after $attempts attempts at $tablePath")
   }
 
   /** Rename a top-level column — a metadata-only commit that changes the
@@ -1187,18 +989,9 @@ object IcebergWriter {
   def renameColumn(spark: SparkSession, tablePath: String,
       from: String, to: String): Unit = {
     require(from != to, "rename to the same name is a no-op")
-    val root = new Path(tablePath)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val metaDir = new Path(root, "metadata")
-    var attempts = 0
-    while (attempts < 20) {
-      val (claimedMax, parsedOpt) = logState(fs, metaDir)
-      val (_, meta) = parsedOpt.getOrElse(throw new IllegalStateException(
-        s"no parseable Iceberg metadata at $tablePath"))
-      val node = meta.deepCopy[com.fasterxml.jackson.databind.JsonNode]()
-        .asInstanceOf[ObjectNode]
+    editMetadata(spark, tablePath, "a rename commit") { node =>
       var renamedId = -1
-      def renameIn(schemaNode: com.fasterxml.jackson.databind.JsonNode): Unit =
+      def renameIn(schemaNode: JsonNode): Unit =
         IcebergReaderAccess.jsonArray(schemaNode.get("fields")).foreach { f =>
           if (f.get("name").asText == from) {
             renamedId = f.get("id").asInt
@@ -1228,16 +1021,8 @@ object IcebergWriter {
           propsNode.get.put("schema.name-mapping.default",
             mapper.writeValueAsString(arr))
         }
-      node.put("last-updated-ms", System.currentTimeMillis())
-      val targetPath = new Path(metaDir, s"v${claimedMax + 1}.metadata.json")
-      if (AtomicWrite.claim(fs, targetPath,
-          mapper.writerWithDefaultPrettyPrinter().writeValueAsBytes(node))) {
-        writeHint(fs, metaDir, claimedMax + 1)
-        return
-      } else attempts += 1 // lost the claim
+      Successor(node, ())
     }
-    throw new java.io.IOException(
-      s"could not claim a rename commit after $attempts attempts at $tablePath")
   }
 
   /** Evolve the table's partition spec (spec "Partition Evolution";
@@ -1255,23 +1040,9 @@ object IcebergWriter {
   def updatePartitionSpec(spark: SparkSession, tablePath: String,
       partitionBy: Seq[String]): Int = {
     val requested = partitionBy.map(IcebergTransforms.parse)
-    val root = new Path(tablePath)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val metaDir = new Path(root, "metadata")
-    var attempts = 0
-    while (attempts < 20) {
-      val (claimedMax, parsedOpt) = logState(fs, metaDir)
-      val (_, meta) = parsedOpt.getOrElse(throw new IllegalStateException(
-        s"no parseable Iceberg metadata at $tablePath"))
-      val node = meta.deepCopy[com.fasterxml.jackson.databind.JsonNode]()
-        .asInstanceOf[ObjectNode]
+    editMetadata(spark, tablePath, "a partition-spec commit") { node =>
       // source-ids from the CURRENT schema's field ids
-      val curSchemaId = Option(node.get("current-schema-id"))
-        .map(_.asInt).getOrElse(0)
-      val schemaNode = Option(node.get("schemas"))
-        .flatMap(ss => IcebergReaderAccess.jsonArray(ss)
-          .find(s => Option(s.get("schema-id")).forall(_.asInt == curSchemaId)))
-        .orElse(Option(node.get("schema")))
+      val schemaNode = currentSchema(node)
         .getOrElse(throw new IllegalStateException(
           s"no schema in Iceberg metadata at $tablePath"))
       val idByName: Map[String, Int] =
@@ -1291,8 +1062,7 @@ object IcebergWriter {
           o.put("spec-id",
             Option(node.get("default-spec-id")).map(_.asInt).getOrElse(0))
           o.set[ArrayNode]("fields",
-            s.deepCopy[com.fasterxml.jackson.databind.JsonNode]()
-              .asInstanceOf[ArrayNode])
+            s.deepCopy[JsonNode]().asInstanceOf[ArrayNode])
           Seq(o)
         }.getOrElse(Nil)
       }
@@ -1334,24 +1104,17 @@ object IcebergWriter {
           node.set[ArrayNode]("partition-specs", specs)
           id
       }
-      if (newDefault == curDefault && existing.nonEmpty) return curDefault
-      node.put("default-spec-id", newDefault)
-      // v1 compat: the singular partition-spec mirrors the default
-      val defaultFields = existing.map(_.get("fields")).getOrElse(newFields)
-      node.set[ArrayNode]("partition-spec",
-        defaultFields.deepCopy[com.fasterxml.jackson.databind.JsonNode]()
-          .asInstanceOf[ArrayNode])
-      node.put("last-partition-id", lastPartId)
-      node.put("last-updated-ms", System.currentTimeMillis())
-      val targetPath = new Path(metaDir, s"v${claimedMax + 1}.metadata.json")
-      if (AtomicWrite.claim(fs, targetPath,
-          mapper.writerWithDefaultPrettyPrinter().writeValueAsBytes(node))) {
-        writeHint(fs, metaDir, claimedMax + 1)
-        return newDefault
-      } else attempts += 1 // lost the claim
+      if (newDefault == curDefault && existing.nonEmpty) Unchanged(curDefault)
+      else {
+        node.put("default-spec-id", newDefault)
+        // v1 compat: the singular partition-spec mirrors the default
+        val defaultFields = existing.map(_.get("fields")).getOrElse(newFields)
+        node.set[ArrayNode]("partition-spec",
+          defaultFields.deepCopy[JsonNode]().asInstanceOf[ArrayNode])
+        node.put("last-partition-id", lastPartId)
+        Successor(node, newDefault)
+      }
     }
-    throw new java.io.IOException(
-      s"could not claim a partition-spec commit after $attempts attempts at $tablePath")
   }
 
   /** Register EXISTING parquet files as table data — the `add_files`
@@ -1451,28 +1214,6 @@ object IcebergWriter {
     mapper.writeValueAsString(arr)
   }
 
-  /** `expire_snapshots` + orphan-file cleanup — the maintenance every
-    * long-lived Iceberg table needs (the reference defers to S3 Tables
-    * auto-maintenance; this engine owns the table). Two phases:
-    *
-    *  1. COMMIT a new metadata version whose `snapshots`/`snapshot-log`
-    *     keep only: the current snapshot, the newest `retainLast`, and
-    *     every snapshot younger than `retentionMs` (claimed with the
-    *     same create-exclusive loop as data commits, so it composes
-    *     with concurrent writers);
-    *  2. DELETE files no retained snapshot references — expired
-    *     manifest lists, manifests, data/delete files, and orphans from
-    *     crashed commits — plus superseded `vN.metadata.json` documents,
-    *     all gated on a modification time older than `retentionMs` so a
-    *     concurrent writer's just-staged files are never swept. The
-    *     table tree is listed and deleted AS A JOB (the driver holds
-    *     only the live set — O(retained files), the cost every Iceberg
-    *     expire pays); retained snapshots' trees are walked driver-side
-    *     at manifest scale.
-    *
-    * Returns deleted paths. Time travel to an expired snapshot raises
-    * afterwards (it is gone from the log); retained reads are
-    * untouched. */
   /** REWRITE MANIFESTS — Iceberg's metadata-compaction maintenance op
     * (the `rewrite_manifests` procedure): consolidate the current
     * snapshot's DATA manifests into one manifest per (partition-spec,
@@ -1511,15 +1252,8 @@ object IcebergWriter {
     val lSchema = manifestListSchema
     val now = System.currentTimeMillis()
     val snapshotId = math.abs(UUID.randomUUID().getMostSignificantBits)
-    def longValOf(v: Any): java.lang.Long = v match {
-      case l: java.lang.Long => l
-      case i: java.lang.Integer => Long.box(i.longValue)
-      case _ => null
-    }
-    var attempts = 0
-    while (attempts < 20) {
-      val (claimedMax, parsed) = logState(fs, metaDir)
-      val meta = parsed.map(_._2).getOrElse(
+    claimLoop(fs, tablePath, "a manifest rewrite") { (claimedMax, parsed, attempt) =>
+      val meta = parsed.getOrElse(
         throw new IllegalArgumentException(s"no Iceberg table at $tablePath"))
       val fv = Option(meta.get("format-version")).map(_.asInt).getOrElse(1)
       val priorSeq = Option(meta.get("last-sequence-number"))
@@ -1529,181 +1263,170 @@ object IcebergWriter {
         .map(_.asLong).filter(_ >= 0)
       val listRecs = currentManifestRecords(spark, fs, root, meta)
       val (dataMfs, deleteMfs) =
-        listRecs.partition(r => intValOf(r.get("content")) == 0)
+        listRecs.partition(r => intOf(r.get("content")).getOrElse(0) == 0)
       if (dataMfs.size <= 1)
-        return Committed(curSnap.getOrElse(-1L), claimedMax, 0)
-
-      final case class MEntry(dseq: java.lang.Long, fseq: java.lang.Long,
-        esnap: java.lang.Long, df: GenericRecord)
-      val merged = mutable.LinkedHashMap
-        .empty[(Int, org.apache.avro.Schema, Map[String, String]),
-          mutable.ArrayBuffer[MEntry]]
-      val carriedUnmerged = mutable.ArrayBuffer.empty[GenericRecord]
-      dataMfs.foreach { lr =>
-        val mPath = TableFiles.location(root,
-          lr.get("manifest_path").toString)
-        val (entries, fMeta) = IcebergReader.readAvroWithMeta(spark, mPath)
-        if (entries.nonEmpty) {
-          val dfSchema = entries.head.getSchema.getField("data_file").schema()
-          val specId = intValOf(lr.get("partition_spec_id"))
-          val mSeq = longValOf(lr.get("sequence_number"))
-          val addedSnap = longValOf(lr.get("added_snapshot_id"))
-          val listFri =
-            if (lSchema.getField("first_row_id") == null) null
-            else longValOf(lr.get("first_row_id"))
-          val hasFriField = dfSchema.getField("first_row_id") != null
-          def dfOf(e: GenericRecord) =
-            e.get("data_file").asInstanceOf[GenericRecord]
-          def isData(df: GenericRecord): Boolean =
-            dfSchema.getField("content") == null ||
-              intValOf(df.get("content")) == 0
-          val needsFri = fv >= 3 && entries.exists { e =>
-            val df = dfOf(e)
-            isData(df) && (!hasFriField || df.get("first_row_id") == null)
-          }
-          if (needsFri && (listFri == null || !hasFriField)) {
-            // lineage that cannot be materialized per-entry — either
-            // un-stamped (pre-upgrade manifest before its lazy
-            // re-stamp) or a v2-schema manifest whose data_file record
-            // has no first_row_id field to make explicit: carry
-            // unmerged, never guess or silently drop row ids
-            carriedUnmerged += reencode(lSchema, lr)
-          } else {
-            var cursor: Long = if (listFri == null) 0L else listFri.longValue
-            val buf = merged.getOrElseUpdate((specId, dfSchema, fMeta),
-              mutable.ArrayBuffer.empty[MEntry])
-            entries.foreach { e =>
+        Unchanged(Committed(curSnap.getOrElse(-1L), claimedMax, 0))
+      else {
+        final case class MEntry(dseq: Long, fseq: Long, esnap: Option[Long],
+          df: GenericRecord)
+        val merged = mutable.LinkedHashMap
+          .empty[(Int, org.apache.avro.Schema, Map[String, String]),
+            mutable.ArrayBuffer[MEntry]]
+        val carriedUnmerged = mutable.ArrayBuffer.empty[GenericRecord]
+        dataMfs.foreach { lr =>
+          val mPath = TableFiles.location(root,
+            lr.get("manifest_path").toString)
+          val (entries, fMeta) = IcebergReader.readAvroWithMeta(spark, mPath)
+          if (entries.nonEmpty) {
+            val dfSchema = entries.head.getSchema.getField("data_file").schema()
+            val specId = intOf(lr.get("partition_spec_id")).getOrElse(0)
+            val mSeq = longOf(lr.get("sequence_number"))
+            val addedSnap = longOf(lr.get("added_snapshot_id"))
+            val listFri = fieldOpt(lr, "first_row_id").flatMap(longOf)
+            val hasFriField = dfSchema.getField("first_row_id") != null
+            def dfOf(e: GenericRecord) =
+              e.get("data_file").asInstanceOf[GenericRecord]
+            def isData(df: GenericRecord): Boolean =
+              dfSchema.getField("content") == null ||
+                intOf(df.get("content")).getOrElse(0) == 0
+            val needsFri = fv >= 3 && entries.exists { e =>
               val df = dfOf(e)
-              if (fv >= 3 && isData(df) && hasFriField &&
-                  df.get("first_row_id") == null) {
-                df.put("first_row_id", Long.box(cursor))
-                cursor += (df.get("record_count") match {
-                  case l: java.lang.Long => l.longValue
-                  case i: java.lang.Integer => i.longValue
-                  case _ => 0L
-                })
-              }
-              if (intValOf(e.get("status")) != 2) {
-                val eseq =
-                  if (e.getSchema.getField("sequence_number") == null) null
-                  else longValOf(e.get("sequence_number"))
-                val efseq =
-                  if (e.getSchema.getField("file_sequence_number") == null)
-                    null
-                  else longValOf(e.get("file_sequence_number"))
-                val esnap = longValOf(e.get("snapshot_id"))
-                // a v1-era manifest under a v2+ table carries no
-                // sequence number — the spec's upgrade rule assigns
-                // DATA SEQUENCE 0 to pre-upgrade files, and that must
-                // become explicit here (inheriting the NEW manifest's
-                // sequence would let later deletes skip these files)
-                val inherited: java.lang.Long =
-                  if (mSeq != null) mSeq else Long.box(0L)
-                buf += MEntry(
-                  if (eseq != null) eseq else inherited,
-                  if (efseq != null) efseq else inherited,
-                  if (esnap != null) esnap else addedSnap,
-                  df)
+              isData(df) && (!hasFriField || df.get("first_row_id") == null)
+            }
+            if (needsFri && (listFri.isEmpty || !hasFriField)) {
+              // lineage that cannot be materialized per-entry — either
+              // un-stamped (pre-upgrade manifest before its lazy
+              // re-stamp) or a v2-schema manifest whose data_file record
+              // has no first_row_id field to make explicit: carry
+              // unmerged, never guess or silently drop row ids
+              carriedUnmerged += reencode(lSchema, lr)
+            } else {
+              var cursor = listFri.getOrElse(0L)
+              val buf = merged.getOrElseUpdate((specId, dfSchema, fMeta),
+                mutable.ArrayBuffer.empty[MEntry])
+              entries.foreach { e =>
+                val df = dfOf(e)
+                if (fv >= 3 && isData(df) && hasFriField &&
+                    df.get("first_row_id") == null) {
+                  df.put("first_row_id", Long.box(cursor))
+                  cursor += longOf(df.get("record_count")).getOrElse(0L)
+                }
+                if (intOf(e.get("status")).getOrElse(0) != 2) {
+                  // a v1-era manifest under a v2+ table carries no
+                  // sequence number — the spec's upgrade rule assigns
+                  // DATA SEQUENCE 0 to pre-upgrade files, and that must
+                  // become explicit here (inheriting the NEW manifest's
+                  // sequence would let later deletes skip these files)
+                  val inherited = mSeq.getOrElse(0L)
+                  buf += MEntry(
+                    fieldOpt(e, "sequence_number").flatMap(longOf)
+                      .getOrElse(inherited),
+                    fieldOpt(e, "file_sequence_number").flatMap(longOf)
+                      .getOrElse(inherited),
+                    longOf(e.get("snapshot_id")).orElse(addedSnap),
+                    df)
+                }
               }
             }
           }
         }
-      }
 
-      var totalFiles = 0L
-      val mergedList = merged.toSeq.zipWithIndex.map {
-        case (((specId, dfSchema, fMeta), buf), i) =>
-          val mSchema = new org.apache.avro.Schema.Parser().parse(
-            s"""{"type":"record","name":"manifest_entry","fields":[
-               |  {"name":"status","type":"int","field-id":0},
-               |  {"name":"snapshot_id","type":["null","long"],"default":null,"field-id":1},
-               |  {"name":"sequence_number","type":["null","long"],"default":null,"field-id":3},
-               |  {"name":"file_sequence_number","type":["null","long"],"default":null,"field-id":4},
-               |  {"name":"data_file","field-id":2,"type":${dfSchema.toString}}
-               |]}""".stripMargin)
-          val recs = buf.map { me =>
-            val r = new GenericData.Record(mSchema)
-            r.put("status", 0)
-            r.put("snapshot_id", me.esnap)
-            r.put("sequence_number", if (fv >= 2) me.dseq else null)
-            r.put("file_sequence_number", if (fv >= 2) me.fseq else null)
-            r.put("data_file", me.df)
-            r
-          }
-          val p = new Path(metaDir, s"manifest-rw-$snapshotId-$attempts-$i.avro")
-          val len = writeAvro(fs, p, mSchema, recs.toSeq, fMeta)
-          val rows = buf.map(me => me.df.get("record_count") match {
-            case l: java.lang.Long => l.longValue
-            case n: java.lang.Integer => n.longValue
-            case _ => 0L
-          }).sum
-          totalFiles += buf.size
-          val mf = new GenericData.Record(lSchema)
-          mf.put("manifest_path", fs.makeQualified(p).toString)
-          mf.put("manifest_length", len)
-          mf.put("partition_spec_id", specId)
-          mf.put("content", 0)
-          mf.put("sequence_number", seq.map(Long.box).orNull)
-          val minSeq: java.lang.Long = {
-            val seqs = buf.flatMap(me => Option(me.dseq)).map(_.longValue)
-            if (seqs.isEmpty) seq.map(Long.box).orNull else Long.box(seqs.min)
-          }
-          mf.put("min_sequence_number",
-            if (fv >= 2) minSeq else null)
-          mf.put("added_snapshot_id", snapshotId)
-          mf.put("added_data_files_count", 0)
-          mf.put("existing_data_files_count", buf.size)
-          mf.put("deleted_data_files_count", 0)
-          mf.put("added_rows_count", 0L)
-          mf.put("existing_rows_count", rows)
-          // every entry carries an explicit first_row_id, so the merged
-          // manifest needs no inheritance base
-          mf.put("first_row_id", null)
-          mf
-      }
-      val deleteCarried = deleteMfs.map(reencode(lSchema, _))
-      val listPath = new Path(metaDir, s"snap-$snapshotId-$attempts.avro")
-      writeAvro(fs, listPath, lSchema,
-        mergedList ++ carriedUnmerged.toSeq ++ deleteCarried,
-        Map("format-version" -> fv.toString,
-          "snapshot-id" -> snapshotId.toString))
-      val rowBase = Option(meta.get("next-row-id")).map(_.asLong).getOrElse(0L)
-      val node = metadataJson(parsed.map(_._2),
-        fs.makeQualified(root).toString, schema, pfields, snapshotId,
-        fs.makeQualified(listPath).toString, "replace", now, fv, seq,
-        firstRowId = if (fv >= 3) Some(rowBase) else None,
-        nextRowId = if (fv >= 3) Some(rowBase) else None,
-        summaryStats = Map(
-          "manifests-replaced" ->
-            (dataMfs.size - carriedUnmerged.size).toLong,
-          "manifests-created" -> mergedList.size.toLong,
-          "total-data-files" -> totalFiles))
-      val version = claimedMax + 1
-      val target = new Path(metaDir, s"v$version.metadata.json")
-      if (AtomicWrite.claim(fs, target,
-          mapper.writerWithDefaultPrettyPrinter().writeValueAsBytes(node))) {
-        writeHint(fs, metaDir, version)
-        val (_, latest) = logState(fs, metaDir)
-        val visible = latest.exists { case (_, m) =>
-          IcebergReaderAccess.jsonArray(m.get("snapshots"))
-            .exists(s => s.get("snapshot-id").asLong == snapshotId)
+        var totalFiles = 0L
+        val mergedList = merged.toSeq.zipWithIndex.map {
+          case (((specId, dfSchema, fMeta), buf), i) =>
+            val mSchema = new org.apache.avro.Schema.Parser().parse(
+              s"""{"type":"record","name":"manifest_entry","fields":[
+                 |  {"name":"status","type":"int","field-id":0},
+                 |  {"name":"snapshot_id","type":["null","long"],"default":null,"field-id":1},
+                 |  {"name":"sequence_number","type":["null","long"],"default":null,"field-id":3},
+                 |  {"name":"file_sequence_number","type":["null","long"],"default":null,"field-id":4},
+                 |  {"name":"data_file","field-id":2,"type":${dfSchema.toString}}
+                 |]}""".stripMargin)
+            val recs = buf.map { me =>
+              val r = new GenericData.Record(mSchema)
+              r.put("status", 0)
+              r.put("snapshot_id", me.esnap.map(Long.box).orNull)
+              r.put("sequence_number", if (fv >= 2) Long.box(me.dseq) else null)
+              r.put("file_sequence_number",
+                if (fv >= 2) Long.box(me.fseq) else null)
+              r.put("data_file", me.df)
+              r
+            }
+            val p = new Path(metaDir, s"manifest-rw-$snapshotId-$attempt-$i.avro")
+            val len = writeAvro(fs, p, mSchema, recs.toSeq, fMeta)
+            val rows = buf.map(me =>
+              longOf(me.df.get("record_count")).getOrElse(0L)).sum
+            totalFiles += buf.size
+            val mf = new GenericData.Record(lSchema)
+            mf.put("manifest_path", fs.makeQualified(p).toString)
+            mf.put("manifest_length", len)
+            mf.put("partition_spec_id", specId)
+            mf.put("content", 0)
+            mf.put("sequence_number", seq.map(Long.box).orNull)
+            val minSeq = if (buf.isEmpty) seq else Some(buf.map(_.dseq).min)
+            mf.put("min_sequence_number",
+              if (fv >= 2) minSeq.map(Long.box).orNull else null)
+            mf.put("added_snapshot_id", snapshotId)
+            mf.put("added_data_files_count", 0)
+            mf.put("existing_data_files_count", buf.size)
+            mf.put("deleted_data_files_count", 0)
+            mf.put("added_rows_count", 0L)
+            mf.put("existing_rows_count", rows)
+            // every entry carries an explicit first_row_id, so the merged
+            // manifest needs no inheritance base
+            mf.put("first_row_id", null)
+            mf
         }
-        if (visible) return Committed(snapshotId, version, totalFiles.toInt)
-        attempts += 1
-      } else {
-        // losing attempt: sweep EVERYTHING this attempt wrote — the
-        // merged manifests too, not just the list (they are referenced
-        // by nothing and no later cleanup would find them)
-        fs.delete(listPath, false)
-        mergedList.foreach(mf => fs.delete(
-          new Path(mf.get("manifest_path").toString), false))
-        attempts += 1
+        val deleteCarried = deleteMfs.map(reencode(lSchema, _))
+        val listPath = new Path(metaDir, s"snap-$snapshotId-$attempt.avro")
+        writeAvro(fs, listPath, lSchema,
+          mergedList ++ carriedUnmerged.toSeq ++ deleteCarried,
+          Map("format-version" -> fv.toString,
+            "snapshot-id" -> snapshotId.toString))
+        val rowBase = Option(meta.get("next-row-id")).map(_.asLong).getOrElse(0L)
+        val node = metadataJson(parsed,
+          fs.makeQualified(root).toString, schema, pfields, snapshotId,
+          fs.makeQualified(listPath).toString, "replace", now, fv, seq,
+          firstRowId = if (fv >= 3) Some(rowBase) else None,
+          nextRowId = if (fv >= 3) Some(rowBase) else None,
+          summaryStats = Map(
+            "manifests-replaced" ->
+              (dataMfs.size - carriedUnmerged.size).toLong,
+            "manifests-created" -> mergedList.size.toLong,
+            "total-data-files" -> totalFiles))
+        // a losing attempt sweeps EVERYTHING it wrote — the merged
+        // manifests too, not just the list (they are referenced by nothing
+        // and no later cleanup would find them)
+        Successor(node, Committed(snapshotId, claimedMax + 1, totalFiles.toInt),
+          staged = listPath +: mergedList.map(mf =>
+            new Path(mf.get("manifest_path").toString)),
+          snapshotId = Some(snapshotId))
       }
     }
-    throw new java.io.IOException(
-      s"could not claim a manifest rewrite after $attempts attempts at $tablePath")
   }
 
+  /** `expire_snapshots` + orphan-file cleanup — the maintenance every
+    * long-lived Iceberg table needs (the reference defers to S3 Tables
+    * auto-maintenance; this engine owns the table). Two phases:
+    *
+    *  1. COMMIT a new metadata version whose `snapshots`/`snapshot-log`
+    *     keep only: the current snapshot, the newest `retainLast`, and
+    *     every snapshot younger than `retentionMs` (claimed with the
+    *     same create-exclusive loop as data commits, so it composes
+    *     with concurrent writers);
+    *  2. DELETE files no retained snapshot references — expired
+    *     manifest lists, manifests, data/delete files, and orphans from
+    *     crashed commits — plus superseded `vN.metadata.json` documents,
+    *     all gated on a modification time older than `retentionMs` so a
+    *     concurrent writer's just-staged files are never swept. The
+    *     table tree is listed and deleted AS A JOB (the driver holds
+    *     only the live set — O(retained files), the cost every Iceberg
+    *     expire pays); retained snapshots' trees are walked driver-side
+    *     at manifest scale.
+    *
+    * Returns deleted paths. Time travel to an expired snapshot raises
+    * afterwards (it is gone from the log); retained reads are
+    * untouched. */
   def expireSnapshots(spark: SparkSession, tablePath: String,
       retentionMs: Long = 7L * 24 * 3600 * 1000,
       retainLast: Int = 1): Seq[String] = {
@@ -1711,18 +1434,13 @@ object IcebergWriter {
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val metaDir = new Path(root, "metadata")
     val now = System.currentTimeMillis()
-    var attempts = 0
-    var done = false
-    while (!done && attempts < 20) {
-      val (claimedMax, parsedOpt) = logState(fs, metaDir)
-      val (_, meta) = parsedOpt.getOrElse(throw new IllegalStateException(
-        s"no parseable Iceberg metadata at $tablePath"))
-      val snaps = IcebergReaderAccess.jsonArray(meta.get("snapshots"))
-      val current = Option(meta.get("current-snapshot-id"))
+    editMetadata(spark, tablePath, "a snapshot expiry") { node =>
+      val snaps = IcebergReaderAccess.jsonArray(node.get("snapshots"))
+      val current = Option(node.get("current-snapshot-id"))
         .map(_.asLong).getOrElse(-1L)
       // refs PIN their snapshots (real Iceberg expiry honors branch/tag
       // retention) — expiring a tagged snapshot would dangle the ref
-      val refIds = Option(meta.get("refs")).toSeq
+      val refIds = Option(node.get("refs")).toSeq
         .flatMap(r => r.elements().asScala.toSeq
           .map(_.get("snapshot-id").asLong))
       // retainLast / the retention window apply to snapshots REACHABLE
@@ -1752,26 +1470,16 @@ object IcebergWriter {
           .filter(_.get("timestamp-ms").asLong >= now - retentionMs)
           .map(_.get("snapshot-id").asLong) ++ refIds + current
       val expired = snaps.map(_.get("snapshot-id").asLong).toSet -- keepIds
-      if (expired.isEmpty) done = true
+      if (expired.isEmpty) Unchanged(())
       else {
-        val node = meta.deepCopy[com.fasterxml.jackson.databind.JsonNode]()
-          .asInstanceOf[ObjectNode]
-        val newSnaps = mapper.createArrayNode()
+        val log = IcebergReaderAccess.jsonArray(node.get("snapshot-log"))
+        val newSnaps = node.putArray("snapshots")
         snaps.filter(s => keepIds.contains(s.get("snapshot-id").asLong))
           .foreach(newSnaps.add)
-        node.set[ArrayNode]("snapshots", newSnaps)
-        val newLog = mapper.createArrayNode()
-        IcebergReaderAccess.jsonArray(meta.get("snapshot-log"))
-          .filter(e => keepIds.contains(e.get("snapshot-id").asLong))
+        val newLog = node.putArray("snapshot-log")
+        log.filter(e => keepIds.contains(e.get("snapshot-id").asLong))
           .foreach(newLog.add)
-        node.set[ArrayNode]("snapshot-log", newLog)
-        node.put("last-updated-ms", now)
-        val target = new Path(metaDir, s"v${claimedMax + 1}.metadata.json")
-        if (AtomicWrite.claim(fs, target,
-            mapper.writerWithDefaultPrettyPrinter().writeValueAsBytes(node))) {
-          writeHint(fs, metaDir, claimedMax + 1)
-          done = true
-        } else attempts += 1 // lost the claim
+        Successor(node, ())
       }
     }
     // live set: every file any RETAINED snapshot references, walked from
@@ -2155,14 +1863,12 @@ object IcebergWriter {
       kinds.contains(true)
     }
 
-    // claim vN+1 with create-exclusive; manifest list is (re)built INSIDE
-    // the loop so appends observe the manifests of whoever won a race
-    var attempts = 0
-    while (attempts < 20) {
-      val (claimedMax, parsed) = logState(fs, metaDir)
+    // the manifest list is (re)built in every attempt, so appends
+    // observe the manifests of whoever won a race
+    claimLoop(fs, tablePath, "an Iceberg commit") { (claimedMax, parsed, attempt) =>
       expectedParent.foreach { p =>
-        val cur = parsed.flatMap(l =>
-          Option(l._2.get("current-snapshot-id")).map(_.asLong))
+        val cur = parsed.flatMap(m =>
+          Option(m.get("current-snapshot-id")).map(_.asLong))
         if (!cur.contains(p))
           throw new ConcurrentCommit(
             s"table advanced past snapshot $p (now $cur); re-resolve")
@@ -2170,42 +1876,39 @@ object IcebergWriter {
       // format-version and sequence numbers are PRESERVED: appending to a
       // v2/v3 table must not downgrade its metadata (external readers use
       // last-sequence-number to order deletes against data)
-      val priorFv = parsed.flatMap(p =>
-        Option(p._2.get("format-version")).map(_.asInt)).getOrElse(1)
+      val priorFv = parsed.flatMap(m =>
+        Option(m.get("format-version")).map(_.asInt)).getOrElse(1)
       val fv =
         if (math.max(priorFv, minFormatVersion) >= 3) 3
         else if (needsV2 || priorFv >= 2) 2
         else 1
-      val priorSeq = parsed.flatMap(p =>
-        Option(p._2.get("last-sequence-number")).map(_.asLong)).getOrElse(0L)
+      val priorSeq = parsed.flatMap(m =>
+        Option(m.get("last-sequence-number")).map(_.asLong)).getOrElse(0L)
       val seq = if (fv >= 2) Some(priorSeq + 1) else None
       // v3 row lineage: this snapshot's first-row-id is the table's
       // next-row-id; explicit ids are assigned to our adds (and to kept
       // files lacking one), then to carried manifests missing a
       // first_row_id (the post-upgrade lazy re-stamp)
-      val rowBase: Long = parsed.flatMap(p =>
-        Option(p._2.get("next-row-id")).map(_.asLong)).getOrElse(0L)
+      val rowBase: Long = parsed.flatMap(m =>
+        Option(m.get("next-row-id")).map(_.asLong)).getOrElse(0L)
       // the spec-id OUR manifests are written under — resolved against
       // the freshly-claimed metadata so an evolution landing between
       // retries is observed; carried manifests keep their own spec-ids
       // through reencode
-      val specId = resolveSpecId(parsed.map(_._2), schema, partFields)
+      val specId = resolveSpecId(parsed, schema, partFields)
       // a branch commit builds on the BRANCH head's state (falling back
       // to the fork point — the current snapshot — when the branch does
       // not exist yet), and its parent is that head, not main's
       val branchHead: Option[Long] = branch.flatMap { b =>
-        parsed.flatMap { case (_, meta) =>
-          Option(meta.get("refs")).filter(_.isObject)
-            .flatMap(r => Option(r.get(b)))
-            .map(_.get("snapshot-id").asLong)
-        }
+        parsed.flatMap(m => Option(m.get("refs")).filter(_.isObject))
+          .flatMap(r => Option(r.get(b)))
+          .map(_.get("snapshot-id").asLong)
       }
       val carried0: Seq[GenericRecord] =
         if (!carryCurrentManifests) Nil
-        else parsed.toSeq.flatMap { case (_, meta) =>
-          currentManifestRecords(spark, fs, root, meta, branchHead)
-            .map(reencode(lSchema, _))
-        }
+        else parsed.toSeq.flatMap(m =>
+          currentManifestRecords(spark, fs, root, m, branchHead)
+            .map(reencode(lSchema, _)))
       // a deletion-vector commit REPLACES all positional delete state:
       // the new DVs already union every prior deleted position, so
       // carried pos/DV delete manifests drop (the invariant is at most
@@ -2213,7 +1916,7 @@ object IcebergWriter {
       val carried =
         if (!dropPosDeleteManifests) carried0
         else carried0.filterNot { r =>
-          intValOf(r.get("content")) == 1 && holdsPositionDeletes(r)
+          intOf(r.get("content")).contains(1) && holdsPositionDeletes(r)
         }
       val ourData = dataManifest(fv, specId, rowBase)
       val afterOurs: Long = ourData.map(_._3).getOrElse(rowBase)
@@ -2222,7 +1925,8 @@ object IcebergWriter {
       // counts (summed from the manifest when the counts are absent)
       var rowCursor = afterOurs
       if (fv >= 3) carried.foreach { r =>
-        if (intValOf(r.get("content")) == 0 && r.get("first_row_id") == null) {
+        if (intOf(r.get("content")).getOrElse(0) == 0 &&
+            r.get("first_row_id") == null) {
           r.put("first_row_id", Long.box(rowCursor))
           // advance by EXACTLY what the reader's inheritance walk will
           // consume: record_count of every NULL-first_row_id data entry
@@ -2233,18 +1937,13 @@ object IcebergWriter {
               r.get("manifest_path").toString))
             .map(e => e.get("data_file").asInstanceOf[GenericRecord])
             .filter { df =>
-              val isData = intValOf(
-                if (df.getSchema.getField("content") == null) null
-                else df.get("content")) == 0
+              val isData =
+                fieldOpt(df, "content").flatMap(intOf).getOrElse(0) == 0
               val hasFri = df.getSchema.getField("first_row_id") != null &&
                 df.get("first_row_id") != null
               isData && !hasFri
             }
-            .map(df => df.get("record_count") match {
-              case l: java.lang.Long => l.longValue
-              case i: java.lang.Integer => i.longValue
-              case _ => 0L
-            }).sum
+            .map(df => longOf(df.get("record_count")).getOrElse(0L)).sum
           rowCursor += rows
         }
       }
@@ -2258,12 +1957,11 @@ object IcebergWriter {
         listEntry(p, len, 1, seq, deleteAdds.length, 0, specId,
           addedRows = deleteAdds.map(_.recordCount).sum)
       }
-      val listPath = new Path(metaDir, s"snap-$snapshotId-$attempts.avro")
+      val listPath = new Path(metaDir, s"snap-$snapshotId-$attempt.avro")
       writeAvro(fs, listPath, lSchema, ours ++ carried,
         Map("format-version" -> fv.toString,
           "snapshot-id" -> snapshotId.toString))
-      val version = claimedMax + 1
-      val node = metadataJson(parsed.map(_._2), fs.makeQualified(root).toString,
+      val node = metadataJson(parsed, fs.makeQualified(root).toString,
         schema, partFields, snapshotId,
         fs.makeQualified(listPath).toString, operation, now, fv, seq,
         branch, branchHead,
@@ -2276,39 +1974,122 @@ object IcebergWriter {
           "added-delete-files" -> deleteAdds.length.toLong,
           "total-data-files" -> (adds.length + kept.length +
             (if (carryCurrentManifests)
-               carried.map(c => Option(c.get("added_data_files_count"))
-                 .collect { case i: java.lang.Integer => i.longValue
-                            case l: java.lang.Long => l.longValue }
-                 .getOrElse(0L) +
-                 Option(c.get("existing_data_files_count"))
-                 .collect { case i: java.lang.Integer => i.longValue
-                            case l: java.lang.Long => l.longValue }
-                 .getOrElse(0L)).sum
+               carried.map(c =>
+                 longOf(c.get("added_data_files_count")).getOrElse(0L) +
+                   longOf(c.get("existing_data_files_count")).getOrElse(0L)).sum
              else 0L))))
-      val target = new Path(metaDir, s"v$version.metadata.json")
-      if (AtomicWrite.claim(fs, target,
-          mapper.writerWithDefaultPrettyPrinter().writeValueAsBytes(node))) {
-        writeHint(fs, metaDir, version)
-        // A writer paused between claiming vN and writing the body past
-        // tornGraceMs has its claim SKIPPED by competitors — returning
-        // success here without checking would acknowledge a dropped
-        // commit. Verify our snapshot is in the visible chain; if a
-        // competitor advanced past us without carrying it, retry the
-        // whole claim (merge paths re-raise ConcurrentCommit upstream).
-        val (_, latest) = logState(fs, metaDir)
-        val visible = latest.exists { case (_, meta) =>
-          IcebergReaderAccess.jsonArray(meta.get("snapshots"))
-            .exists(s => s.get("snapshot-id").asLong == snapshotId)
-        }
-        if (visible) return Committed(snapshotId, version, adds.length)
-        attempts += 1
-      } else { // lost the claim; retry
-        fs.delete(listPath, false)
-        attempts += 1
+      // a lost claim deletes this attempt's list; the manifests are
+      // rewritten only when the format version, spec or row base moves
+      Successor(node, Committed(snapshotId, claimedMax + 1, adds.length),
+        staged = Seq(listPath), snapshotId = Some(snapshotId))
+    }
+  }
+
+  /** What one attempt of [[claimLoop]] decided. */
+  private sealed trait Attempt[+A]
+
+  /** Nothing to commit: the loop returns `answer` without a claim. */
+  private final case class Unchanged[A](answer: A) extends Attempt[A]
+
+  /** Claim `node` as the next metadata version, then return `answer`.
+    * `staged` are the files written for this attempt alone, deleted when
+    * the claim is lost; `snapshotId`, when set, must be in the visible
+    * chain after the claim, or the attempt counts as lost. */
+  private final case class Successor[A](node: ObjectNode, answer: A,
+      staged: Seq[Path] = Nil, snapshotId: Option[Long] = None)
+      extends Attempt[A]
+
+  /** The optimistic-commit protocol under every Iceberg commit. Each
+    * attempt reads the log, and `attempt` builds from the highest
+    * claimed version, the newest parseable metadata and the attempt
+    * number; the loop claims `v{max+1}.metadata.json` create-exclusive
+    * and advances the version hint on a win. A lost claim deletes the
+    * attempt's staged files and retries, up to 20 attempts. */
+  private def claimLoop[A](fs: FileSystem, tablePath: String, what: String)(
+      attempt: (Long, Option[JsonNode], Int) => Attempt[A]): A = {
+    val metaDir = new Path(new Path(tablePath), "metadata")
+    var attempts = 0
+    while (attempts < 20) {
+      val (claimedMax, parsed) = logState(fs, metaDir)
+      attempt(claimedMax, parsed.map(_._2), attempts) match {
+        case Unchanged(answer) => return answer
+        case Successor(node, answer, staged, snapshotId) =>
+          val version = claimedMax + 1
+          if (AtomicWrite.claim(fs, new Path(metaDir, s"v$version.metadata.json"),
+              mapper.writerWithDefaultPrettyPrinter().writeValueAsBytes(node))) {
+            writeHint(fs, metaDir, version)
+            // A writer paused between claiming vN and writing the body
+            // past tornGraceMs has its claim SKIPPED by competitors —
+            // returning success without checking would acknowledge a
+            // dropped commit. If a competitor advanced past us without
+            // carrying our snapshot, retry the whole claim (merge paths
+            // re-raise ConcurrentCommit upstream).
+            val visible = snapshotId.forall(id =>
+              logState(fs, metaDir)._2.exists { case (_, meta) =>
+                IcebergReaderAccess.jsonArray(meta.get("snapshots"))
+                  .exists(_.get("snapshot-id").asLong == id)
+              })
+            if (visible) return answer
+          } else staged.foreach(fs.delete(_, false))
+          attempts += 1
       }
     }
     throw new java.io.IOException(
-      s"could not claim an Iceberg commit after $attempts attempts at $tablePath")
+      s"could not claim $what after $attempts attempts at $tablePath")
+  }
+
+  /** A metadata-only commit through [[claimLoop]]: `edit` gets a deep
+    * copy of the newest metadata, stamped with a new `last-updated-ms`,
+    * and returns it as the [[Successor]] or answers [[Unchanged]]. Its
+    * checks run against the metadata each attempt reads. */
+  private def editMetadata[A](spark: SparkSession, tablePath: String,
+      what: String)(edit: ObjectNode => Attempt[A]): A =
+    claimLoop(new Path(tablePath).getFileSystem(
+        spark.sparkContext.hadoopConfiguration), tablePath, what) {
+      (_, parsed, _) =>
+        val node = parsed.getOrElse(throw new IllegalStateException(
+            s"no parseable Iceberg metadata at $tablePath"))
+          .deepCopy[JsonNode]().asInstanceOf[ObjectNode]
+        node.put("last-updated-ms", System.currentTimeMillis())
+        edit(node)
+    }
+
+  /** The child `name` of `node`, created by `make` when it is absent or
+    * of another kind. */
+  private def child[N <: JsonNode: ClassTag](node: ObjectNode, name: String)(
+      make: => N): N = node.get(name) match {
+    case n: N => n
+    case _ => val n = make; node.set[JsonNode](name, n); n
+  }
+
+  /** The current schema of a metadata document: the `schemas` entry
+    * whose id is `current-schema-id` (0 when absent), else the singular
+    * v1 `schema`. */
+  private def currentSchema(meta: JsonNode): Option[ObjectNode] = {
+    val curId = Option(meta.get("current-schema-id")).map(_.asInt).getOrElse(0)
+    IcebergReaderAccess.jsonArray(meta.get("schemas"))
+      .find(s => Option(s.get("schema-id")).exists(_.asInt == curId))
+      .orElse(Option(meta.get("schema")))
+      .collect { case o: ObjectNode => o }
+  }
+
+  /** Advance main through `ids` (oldest first) to `ids.last`: set
+    * `current-snapshot-id`, append one snapshot-log entry per id stamped
+    * with the document's `last-updated-ms`, and move a `main` ref of
+    * type branch. */
+  private def advanceMain(node: ObjectNode, ids: Seq[Long]): Unit = {
+    val now = node.get("last-updated-ms").asLong
+    node.put("current-snapshot-id", ids.last)
+    val log = child(node, "snapshot-log")(mapper.createArrayNode())
+    ids.foreach { id =>
+      val entry = log.addObject()
+      entry.put("timestamp-ms", now)
+      entry.put("snapshot-id", id)
+    }
+    Option(node.get("refs")).flatMap(r => Option(r.get("main")))
+      .collect { case m: ObjectNode => m }
+      .filter(m => Option(m.get("type")).forall(_.asText == "branch"))
+      .foreach(_.put("snapshot-id", ids.last))
   }
 
   /** Advance `version-hint.text` monotonically: a slow writer must not
@@ -2335,14 +2116,8 @@ object IcebergWriter {
 
   /** The manifest-list records of `meta`'s current snapshot (empty for a
     * table with no current snapshot). */
-  private def intValOf(v: Any): Int = v match {
-    case i: java.lang.Integer => i.intValue
-    case l: java.lang.Long => l.intValue
-    case _ => 0
-  }
-
   private def currentManifestRecords(spark: SparkSession, fs: FileSystem,
-      root: Path, meta: com.fasterxml.jackson.databind.JsonNode,
+      root: Path, meta: JsonNode,
       atSnapshot: Option[Long] = None): Seq[GenericRecord] = {
     val cur = atSnapshot.orElse(
       Option(meta.get("current-snapshot-id")).map(_.asLong).filter(_ >= 0))
@@ -2364,38 +2139,20 @@ object IcebergWriter {
   private def reencode(lSchema: org.apache.avro.Schema,
       r: GenericRecord): GenericRecord = {
     val out = new GenericData.Record(lSchema)
-    def raw(f: String): Any =
-      if (r.getSchema.getField(f) == null) null else r.get(f)
-    def longOf(f: String): Any = raw(f) match {
-      case l: java.lang.Long => l
-      case i: java.lang.Integer => i.longValue(): java.lang.Long
-      case _ => null
-    }
-    def intOf(f: String, dflt: java.lang.Integer): Any = raw(f) match {
-      case i: java.lang.Integer => i
-      case l: java.lang.Long => l.intValue(): java.lang.Integer
-      case _ => dflt
-    }
+    def long(f: String) = fieldOpt(r, f).flatMap(longOf)
+    def int(f: String) = fieldOpt(r, f).flatMap(intOf)
     out.put("manifest_path", r.get("manifest_path").toString)
-    out.put("manifest_length", longOf("manifest_length") match {
-      case null => 0L: java.lang.Long
-      case l => l
-    })
-    out.put("partition_spec_id", intOf("partition_spec_id", 0))
-    out.put("content", intOf("content", 0))
-    out.put("sequence_number", longOf("sequence_number"))
-    out.put("min_sequence_number", longOf("min_sequence_number"))
-    out.put("added_snapshot_id", longOf("added_snapshot_id"))
-    out.put("added_data_files_count", intOf("added_data_files_count", null))
-    out.put("existing_data_files_count",
-      intOf("existing_data_files_count", null))
-    out.put("deleted_data_files_count", intOf("deleted_data_files_count", null))
-    // v3 row lineage: a carried manifest KEEPS its first_row_id (and the
-    // row counts the assignment walk advances by); external manifests
-    // may use the spec's alternate count field names
-    out.put("added_rows_count", longOf("added_rows_count"))
-    out.put("existing_rows_count", longOf("existing_rows_count"))
-    out.put("first_row_id", longOf("first_row_id"))
+    out.put("manifest_length", long("manifest_length").getOrElse(0L))
+    out.put("partition_spec_id", int("partition_spec_id").getOrElse(0))
+    out.put("content", int("content").getOrElse(0))
+    Seq("sequence_number", "min_sequence_number", "added_snapshot_id",
+      // v3 row lineage: a carried manifest KEEPS its first_row_id (and
+      // the row counts the assignment walk advances by)
+      "added_rows_count", "existing_rows_count", "first_row_id")
+      .foreach(f => out.put(f, long(f).map(Long.box).orNull))
+    Seq("added_data_files_count", "existing_data_files_count",
+      "deleted_data_files_count")
+      .foreach(f => out.put(f, int(f).map(Int.box).orNull))
     out
   }
 
@@ -2413,7 +2170,7 @@ object IcebergWriter {
     * read parses as an empty node and an append silently carries
     * nothing — the lost-update this method exists to prevent. */
   private def logState(fs: FileSystem, metaDir: Path)
-      : (Long, Option[(Long, com.fasterxml.jackson.databind.JsonNode)]) = {
+      : (Long, Option[(Long, JsonNode)]) = {
     val Meta = """v(\d+)\.metadata\.json""".r
     val deadline = System.currentTimeMillis() + tornGraceMs
     while (true) {
@@ -2425,7 +2182,7 @@ object IcebergWriter {
       if (versions.isEmpty) return (0L, None)
       val claimedMax = versions.head._1
       var waitForInflight = false
-      var parsed: Option[(Long, com.fasterxml.jackson.databind.JsonNode)] = None
+      var parsed: Option[(Long, JsonNode)] = None
       val it = versions.iterator
       while (it.hasNext && parsed.isEmpty && !waitForInflight) {
         val (v, st) = it.next()
@@ -2448,7 +2205,7 @@ object IcebergWriter {
   /** Parse a metadata json; None when torn/incomplete (missing body or
     * not yet a full Iceberg metadata document). */
   private def tryParse(fs: FileSystem, p: Path)
-      : Option[com.fasterxml.jackson.databind.JsonNode] =
+      : Option[JsonNode] =
     try {
       val in = fs.open(p)
       val text =
@@ -2463,7 +2220,7 @@ object IcebergWriter {
   /** Fields shared by every metadata document (identity, schema,
     * partition spec). */
   private def baseMetadata(
-      prior: Option[com.fasterxml.jackson.databind.JsonNode],
+      prior: Option[JsonNode],
       location: String, schema: StructType, partFields: Seq[PartitionField],
       now: Long, formatVersion: Int = 1): ObjectNode = {
     val node = mapper.createObjectNode()
@@ -2480,7 +2237,7 @@ object IcebergWriter {
     prior.flatMap(p => Option(p.get("sort-orders")).filter(_.isArray)) match {
       case Some(a) =>
         node.set[ObjectNode]("sort-orders",
-          a.deepCopy[com.fasterxml.jackson.databind.JsonNode]())
+          a.deepCopy[JsonNode]())
         ()
       case None =>
         val arr = mapper.createArrayNode()
@@ -2529,7 +2286,7 @@ object IcebergWriter {
           val (pa, pb) = (ps(a), ps(b))
           pa(1) == pb(1) && pa(0) <= pb(0)
         })
-    def compatible(prior: Seq[com.fasterxml.jackson.databind.JsonNode]): Boolean =
+    def compatible(prior: Seq[JsonNode]): Boolean =
       prior.size <= newFields.size && prior.zip(newFields).forall {
         case (p, n) =>
           p.get("id") == n.get("id") && p.get("name") == n.get("name") &&
@@ -2580,8 +2337,7 @@ object IcebergWriter {
         val specsJson = mapper.createArrayNode()
         priorSpecs.foreach(specsJson.add)
         node.set[ArrayNode]("partition-spec",
-          m.get("fields").deepCopy[com.fasterxml.jackson.databind.JsonNode]()
-            .asInstanceOf[ArrayNode])
+          m.get("fields").deepCopy[JsonNode]().asInstanceOf[ArrayNode])
         node.set[ArrayNode]("partition-specs", specsJson)
         node.put("default-spec-id", m.get("spec-id").asInt)
       case None =>
@@ -2604,8 +2360,7 @@ object IcebergWriter {
     // silently drop schema.name-mapping.default and break id-less reads
     node.set[ObjectNode]("properties",
       prior.flatMap(p => Option(p.get("properties")).filter(_.isObject))
-        .map(_.deepCopy[com.fasterxml.jackson.databind.JsonNode]()
-          .asInstanceOf[ObjectNode])
+        .map(_.deepCopy[JsonNode]().asInstanceOf[ObjectNode])
         .getOrElse(mapper.createObjectNode()))
     node
   }
@@ -2613,7 +2368,7 @@ object IcebergWriter {
   /** Identity of a partition spec for history matching: the
     * (name, transform, source-id) triple list — field-ids belong to the
     * history entry that first declared the field, not to the shape. */
-  private def specKey(fields: com.fasterxml.jackson.databind.JsonNode)
+  private def specKey(fields: JsonNode)
       : Seq[(String, String, Int)] =
     IcebergReaderAccess.jsonArray(fields).map(f =>
       (f.get("name").asText,
@@ -2625,7 +2380,7 @@ object IcebergWriter {
     * when the history has no such spec (fresh table / redeclaring
     * overwrite, which resets the history to a single spec 0). */
   private def resolveSpecId(
-      prior: Option[com.fasterxml.jackson.databind.JsonNode],
+      prior: Option[JsonNode],
       schema: StructType, partFields: Seq[PartitionField]): Int =
     prior.flatMap { p =>
       val key = specKey(partitionSpecFields(schema, partFields))
@@ -2679,7 +2434,7 @@ object IcebergWriter {
     * `main` ref are untouched, so main readers never see staged data
     * until [[IcebergWriter.fastForward]] publishes it. */
   private def metadataJson(
-      prior: Option[com.fasterxml.jackson.databind.JsonNode],
+      prior: Option[JsonNode],
       location: String, schema: StructType, partFields: Seq[PartitionField],
       snapshotId: Long, manifestList: String, operation: String,
       now: Long, formatVersion: Int = 1,
@@ -2703,12 +2458,10 @@ object IcebergWriter {
     // spec's optional lineage field — incremental consumers (and this
     // reader's append scan) walk ancestry with it where available.
     // A branch commit's parent is the BRANCH head, not main's.
+    val priorCurrent = prior.flatMap(p => Option(p.get("current-snapshot-id")))
+      .filterNot(_.isNull).map(_.asLong).filter(_ >= 0)
     val parent =
-      if (branch.isDefined) branchParent.orElse(
-        prior.flatMap(p => Option(p.get("current-snapshot-id")))
-          .filterNot(_.isNull).map(_.asLong).filter(_ >= 0))
-      else prior.flatMap(p => Option(p.get("current-snapshot-id")))
-        .filterNot(_.isNull).map(_.asLong).filter(_ >= 0)
+      if (branch.isDefined) branchParent.orElse(priorCurrent) else priorCurrent
     parent.foreach(snap.put("parent-snapshot-id", _))
     snap.put("timestamp-ms", now)
     sequenceNumber.foreach(snap.put("sequence-number", _))
@@ -2728,51 +2481,21 @@ object IcebergWriter {
     snap.put("manifest-list", manifestList)
     snaps.add(snap)
     node.set[ArrayNode]("snapshots", snaps)
+    // main's pointer, history and refs carry over; a main commit then
+    // advances main, while a BRANCH commit (staged: main readers never
+    // see it until fastForward publishes it) moves only its branch ref
+    priorCurrent.foreach(node.put("current-snapshot-id", _))
+    val log = node.putArray("snapshot-log")
+    prior.foreach(p => IcebergReaderAccess.jsonArray(p.get("snapshot-log"))
+      .foreach(log.add))
+    prior.flatMap(p => Option(p.get("refs")).filter(_.isObject))
+      .foreach(r => node.set[JsonNode]("refs", r.deepCopy[JsonNode]()))
     branch match {
-      case None =>
-        node.put("current-snapshot-id", snapshotId)
-        val log = mapper.createArrayNode()
-        prior.foreach(p => IcebergReaderAccess.jsonArray(p.get("snapshot-log"))
-          .foreach(s => log.add(s)))
-        val logEntry = mapper.createObjectNode()
-        logEntry.put("timestamp-ms", now)
-        logEntry.put("snapshot-id", snapshotId)
-        log.add(logEntry)
-        node.set[ArrayNode]("snapshot-log", log)
-        // refs (branches/tags) survive data commits; the main branch
-        // (when present) follows the new snapshot
-        prior.flatMap(p => Option(p.get("refs")).filter(_.isObject)).foreach {
-          priorRefs =>
-            val refs = priorRefs.deepCopy[com.fasterxml.jackson.databind.JsonNode]()
-              .asInstanceOf[ObjectNode]
-            if (refs.has("main") &&
-                "branch" == Option(refs.get("main").get("type"))
-                  .map(_.asText).getOrElse("branch")) {
-              val main = refs.get("main").asInstanceOf[ObjectNode]
-              main.put("snapshot-id", snapshotId)
-            }
-            node.set[ObjectNode]("refs", refs)
-        }
+      case None => advanceMain(node, Seq(snapshotId))
       case Some(b) =>
-        // staged: main's pointer, history, and ref stay exactly as they
-        // were; only the named branch advances to the new snapshot
-        prior.flatMap(p => Option(p.get("current-snapshot-id")))
-          .filterNot(_.isNull).map(_.asLong).filter(_ >= 0)
-          .foreach(node.put("current-snapshot-id", _))
-        val log = mapper.createArrayNode()
-        prior.foreach(p => IcebergReaderAccess.jsonArray(p.get("snapshot-log"))
-          .foreach(s => log.add(s)))
-        node.set[ArrayNode]("snapshot-log", log)
-        val refs = prior.flatMap(p =>
-            Option(p.get("refs")).filter(_.isObject))
-          .map(_.deepCopy[com.fasterxml.jackson.databind.JsonNode]()
-            .asInstanceOf[ObjectNode])
-          .getOrElse(mapper.createObjectNode())
-        val entry = mapper.createObjectNode()
+        val entry = child(node, "refs")(mapper.createObjectNode()).putObject(b)
         entry.put("snapshot-id", snapshotId)
         entry.put("type", "branch")
-        refs.set[ObjectNode](b, entry)
-        node.set[ObjectNode]("refs", refs)
     }
     node
   }
@@ -2789,14 +2512,13 @@ object IcebergWriter {
       fn.put("id", ids.incrementAndGet())
       fn.put("name", f.name)
       fn.put("required", !f.nullable)
-      fn.set[com.fasterxml.jackson.databind.JsonNode](
-        "type", icebergTypeJson(f.dataType, ids))
+      fn.set[JsonNode]("type", icebergTypeJson(f.dataType, ids))
       // v3 column defaults survive re-rendered schema history
       if (f.metadata.contains("iceberg.initial-default"))
-        fn.set[com.fasterxml.jackson.databind.JsonNode]("initial-default",
+        fn.set[JsonNode]("initial-default",
           mapper.readTree(f.metadata.getString("iceberg.initial-default")))
       if (f.metadata.contains("iceberg.write-default"))
-        fn.set[com.fasterxml.jackson.databind.JsonNode]("write-default",
+        fn.set[JsonNode]("write-default",
           mapper.readTree(f.metadata.getString("iceberg.write-default")))
       fields.add(fn)
     }
@@ -2806,7 +2528,7 @@ object IcebergWriter {
 
   private def icebergTypeJson(dt: DataType,
       ids: java.util.concurrent.atomic.AtomicInteger)
-      : com.fasterxml.jackson.databind.JsonNode = dt match {
+      : JsonNode = dt match {
     case BooleanType => mapper.getNodeFactory.textNode("boolean")
     case ByteType | ShortType | IntegerType =>
       mapper.getNodeFactory.textNode("int")
@@ -2824,8 +2546,7 @@ object IcebergWriter {
       val n = mapper.createObjectNode()
       n.put("type", "list")
       n.put("element-id", ids.incrementAndGet())
-      n.set[com.fasterxml.jackson.databind.JsonNode](
-        "element", icebergTypeJson(a.elementType, ids))
+      n.set[JsonNode]("element", icebergTypeJson(a.elementType, ids))
       n.put("element-required", !a.containsNull)
       n
     case s: StructType => icebergSchemaJson(s, ids)
@@ -2833,11 +2554,9 @@ object IcebergWriter {
       val n = mapper.createObjectNode()
       n.put("type", "map")
       n.put("key-id", ids.incrementAndGet())
-      n.set[com.fasterxml.jackson.databind.JsonNode](
-        "key", icebergTypeJson(m.keyType, ids))
+      n.set[JsonNode]("key", icebergTypeJson(m.keyType, ids))
       n.put("value-id", ids.incrementAndGet())
-      n.set[com.fasterxml.jackson.databind.JsonNode](
-        "value", icebergTypeJson(m.valueType, ids))
+      n.set[JsonNode]("value", icebergTypeJson(m.valueType, ids))
       n.put("value-required", !m.valueContainsNull)
       n
     case other => throw new IllegalArgumentException(
@@ -2947,7 +2666,7 @@ object IcebergWriter {
 
 /** Reader internals the writer shares (json array walk). */
 private[io] object IcebergReaderAccess {
-  def jsonArray(n: com.fasterxml.jackson.databind.JsonNode)
-      : Seq[com.fasterxml.jackson.databind.JsonNode] =
+  def jsonArray(n: JsonNode)
+      : Seq[JsonNode] =
     if (n == null) Nil else (0 until n.size()).map(n.get)
 }

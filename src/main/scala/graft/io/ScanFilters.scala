@@ -315,11 +315,14 @@ object ScanFilters {
     case i: java.time.Instant => i.getEpochSecond * 1000000L + i.getNano / 1000
     case n: Number => n.longValue // micros (Iceberg avro encoding)
     case s =>
-      // accept both "yyyy-MM-dd HH:mm:ss[.f]" and ISO forms incl. a
-      // trailing Z (delta-rs stats render timestamps with it)
-      val txt = s.toString.trim.stripSuffix("Z").replace(' ', 'T')
-      val ldt = java.time.LocalDateTime.parse(txt)
-      ldt.toEpochSecond(java.time.ZoneOffset.UTC) * 1000000L +
-        ldt.getNano / 1000
+      // accept both "yyyy-MM-dd HH:mm:ss[.f]" and ISO forms, with an
+      // offset (`Z`, `-08:00`: Delta Spark and delta-rs stats) or
+      // without one (read as UTC)
+      val txt = s.toString.trim.replace(' ', 'T')
+      val at =
+        try java.time.OffsetDateTime.parse(txt).toInstant
+        catch { case _: java.time.format.DateTimeParseException =>
+          java.time.LocalDateTime.parse(txt).toInstant(java.time.ZoneOffset.UTC) }
+      at.getEpochSecond * 1000000L + at.getNano / 1000
   }
 }

@@ -146,4 +146,33 @@ class DeltaInteropSpec extends AnyFunSuite {
       io.DeltaLogReader.read(spark, dir, asOfVersion = Some(0))
     }
   }
+
+  test("delta interop: a timestamp max floored to the millisecond keeps its file") {
+    val spark0 = spark
+    import spark0.implicits._
+    // Delta Spark writes timestamp bounds truncated to the millisecond:
+    // the file holds 00:00:00.000500 under max 00:00:00.000Z
+    val t = java.sql.Timestamp.from(
+      java.time.Instant.parse("2024-01-01T00:00:00.000500Z"))
+    val dir = s"${tmp()}/ts"
+    val stg = s"${tmp()}/stg"
+    Seq((1L, t)).toDF("id", "t").coalesce(1).write.parquet(stg)
+    val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val part = fs.listStatus(new Path(stg))
+      .map(_.getPath).find(_.getName.endsWith(".parquet")).get
+    fs.mkdirs(new Path(dir))
+    assert(fs.rename(part, new Path(dir, "part-00000-t0.parquet")))
+    val json = com.fasterxml.jackson.databind.json.JsonMapper.builder().build()
+    val schema = StructType(Seq(StructField("id", LongType),
+      StructField("t", TimestampType)))
+    val bound = "2024-01-01T00:00:00.000Z"
+    val stats = s"""{"numRecords":1,"minValues":{"id":1,"t":"$bound"},""" +
+      s""""maxValues":{"id":1,"t":"$bound"},"nullCount":{"id":0,"t":0}}"""
+    writeCommit(dir, 0, Seq(commitInfo("WRITE", 10),
+      s"""{"metaData":{"id":"fixture-ts","format":{"provider":"parquet","options":{}},"schemaString":${json.writeValueAsString(schema.json)},"partitionColumns":[],"configuration":{}}}""",
+      s"""{"protocol":{"minReaderVersion":1,"minWriterVersion":2}}""",
+      s"""{"add":{"path":"part-00000-t0.parquet","partitionValues":{},"size":1,"modificationTime":1,"dataChange":true,"stats":${json.writeValueAsString(stats)}}}"""))
+    assert(io.DeltaLogReader.readWhere(spark, dir,
+      org.apache.spark.sql.functions.col("t") === t).count() == 1)
+  }
 }

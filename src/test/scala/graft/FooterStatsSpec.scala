@@ -87,11 +87,11 @@ class FooterStatsSpec extends AnyFunSuite {
     val expected =
       """{"numRecords":200,""" +
       """"minValues":{"l":-199,"i":-597,"d":"2021-06-23","b":false,""" +
-      """"s":"a101","u":"x1","t":"2024-01-01 00:00",""" +
+      """"s":"a101","u":"x1","t":"2024-01-01T00:00:00.000Z",""" +
       """"n":"n101"},""" +
       """"maxValues":{"l":99,"i":297,"d":"2022-04-17","b":true,""" +
       """"s":"m099","u":"SMILE",""" +
-      """"t":"2024-01-01 00:03:19.000199","n":"n199"},""" +
+      """"t":"2024-01-01T00:03:19.000Z","n":"n199"},""" +
       """"nullCount":{"l":0,"i":0,"d":0,"b":0,"s":2,"u":0,"x":0,"m":0,""" +
       """"t":0,"n":110}}"""
     assert(files.head.stats.contains(expected.replace("SMILE", "\uD83D\uDE00")),
