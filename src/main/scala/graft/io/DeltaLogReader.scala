@@ -323,13 +323,13 @@ object DeltaLogReader {
   private def processJsonAction(state: ReplayState, node: JsonNode): Unit = {
     Option(node.get("protocol")).foreach { p =>
       state.protocol = Protocol(p.get("minReaderVersion").asInt,
-        jsonArray(p.get("readerFeatures")).map(_.asText).toSet,
+        IcebergReader.jsonArray(p.get("readerFeatures")).map(_.asText).toSet,
         Option(p.get("minWriterVersion")).map(_.asInt).getOrElse(1),
-        jsonArray(p.get("writerFeatures")).map(_.asText).toSet)
+        IcebergReader.jsonArray(p.get("writerFeatures")).map(_.asText).toSet)
     }
     Option(node.get("metaData")).foreach { m =>
       state.schema = Some(parseSchema(m.get("schemaString").asText))
-      state.partCols = jsonArray(m.get("partitionColumns")).map(_.asText)
+      state.partCols = IcebergReader.jsonArray(m.get("partitionColumns")).map(_.asText)
       state.configuration = Option(m.get("configuration")).map { o =>
         val it = o.fields()
         val b = Map.newBuilder[String, String]
@@ -876,10 +876,6 @@ object DeltaLogReader {
 
   private def parseSchema(schemaString: String): StructType =
     DataType.fromJson(schemaString).asInstanceOf[StructType]
-
-  private def jsonArray(n: JsonNode): Seq[JsonNode] =
-    if (n == null) Nil
-    else (0 until n.size()).map(n.get)
 
   /** (version → commit json path, version → checkpoint ref). Multi-part
     * checkpoints (`N.checkpoint.i.of.n.parquet` in the `%010d` forms the

@@ -1314,7 +1314,9 @@ object IcebergReader {
     finally in.close()
   }
 
-  private def jsonArray(n: JsonNode): Seq[JsonNode] =
+  /** The elements of a JSON array node; none for a missing node. The
+    * one array walk under the Delta and Iceberg log readers and writers. */
+  private[io] def jsonArray(n: JsonNode): Seq[JsonNode] =
     if (n == null) Nil else (0 until n.size()).map(n.get)
 
   // ---- Iceberg schema JSON → Spark --------------------------------------

@@ -580,7 +580,7 @@ object IcebergWriter {
     editMetadata(spark, tablePath, "an add-column commit") { node =>
       val current = currentSchema(node)
         .getOrElse(throw new IllegalStateException("no current schema"))
-      require(!IcebergReaderAccess.jsonArray(current.get("fields"))
+      require(!IcebergReader.jsonArray(current.get("fields"))
           .exists(_.get("name").asText == name),
         s"column $name already exists in $tablePath")
       val newId = Option(node.get("last-column-id")).map(_.asInt)
@@ -598,7 +598,7 @@ object IcebergWriter {
         fieldNode.set[JsonNode]("write-default", renderDefault(v)))
       val evolved = current.deepCopy()
       val schemas = child(node, "schemas")(mapper.createArrayNode())
-      val newSchemaId = IcebergReaderAccess.jsonArray(schemas)
+      val newSchemaId = IcebergReader.jsonArray(schemas)
         .map(_.get("schema-id").asInt).foldLeft(-1)(math.max) + 1
       evolved.put("schema-id", newSchemaId)
       evolved.get("fields").asInstanceOf[ArrayNode].add(fieldNode)
@@ -813,7 +813,7 @@ object IcebergWriter {
       s"refType must be tag|branch, got $refType")
     require(name.nonEmpty, "ref name must be non-empty")
     editMetadata(spark, tablePath, "a ref commit") { node =>
-      val known = IcebergReaderAccess.jsonArray(node.get("snapshots"))
+      val known = IcebergReader.jsonArray(node.get("snapshots"))
         .map(_.get("snapshot-id").asLong).toSet
       val target = snapshotId.orElse(
         Option(node.get("current-snapshot-id")).map(_.asLong)
@@ -840,7 +840,7 @@ object IcebergWriter {
   def rollbackTo(spark: SparkSession, tablePath: String,
       snapshotId: Long): Unit = {
     editMetadata(spark, tablePath, "a rollback commit") { node =>
-      val known = IcebergReaderAccess.jsonArray(node.get("snapshots"))
+      val known = IcebergReader.jsonArray(node.get("snapshots"))
         .map(_.get("snapshot-id").asLong).toSet
       require(known.contains(snapshotId),
         s"snapshot $snapshotId not in the log of $tablePath")
@@ -859,24 +859,24 @@ object IcebergWriter {
     require(cols.nonEmpty, "declareSortOrder needs at least one column")
     editMetadata(spark, tablePath, "a sort-order commit") { node =>
       val idOf = currentSchema(node).toSeq
-        .flatMap(s => IcebergReaderAccess.jsonArray(s.get("fields")))
+        .flatMap(s => IcebergReader.jsonArray(s.get("fields")))
         .map(f => f.get("name").asText -> f.get("id").asInt).toMap
       val srcIds = cols.map(c => idOf.getOrElse(c,
         throw new IllegalArgumentException(
           s"sort column $c not in the current schema of $tablePath")))
       val orders = child(node, "sort-orders")(mapper.createArrayNode())
       def matches(o: JsonNode): Boolean = {
-        val fs0 = IcebergReaderAccess.jsonArray(o.get("fields"))
+        val fs0 = IcebergReader.jsonArray(o.get("fields"))
         fs0.size == srcIds.size && fs0.zip(srcIds).forall { case (f, id) =>
           f.get("source-id").asInt == id &&
             f.get("transform").asText == "identity" &&
             f.get("direction").asText == "asc"
         }
       }
-      val existing = IcebergReaderAccess.jsonArray(orders)
+      val existing = IcebergReader.jsonArray(orders)
         .find(matches).map(_.get("order-id").asInt)
       val orderId = existing.getOrElse {
-        val next = IcebergReaderAccess.jsonArray(orders)
+        val next = IcebergReader.jsonArray(orders)
           .map(_.get("order-id").asInt).foldLeft(0)(math.max) + 1
         val o = orders.addObject()
         o.put("order-id", next)
@@ -936,7 +936,7 @@ object IcebergWriter {
       if (cur.contains(target)) Unchanged(target) // already published
       else {
         val parentOf: Map[Long, Option[Long]] =
-          IcebergReaderAccess.jsonArray(node.get("snapshots")).map(s =>
+          IcebergReader.jsonArray(node.get("snapshots")).map(s =>
             s.get("snapshot-id").asLong ->
               Option(s.get("parent-snapshot-id")).filterNot(_.isNull)
                 .map(_.asLong)).toMap
@@ -992,7 +992,7 @@ object IcebergWriter {
     editMetadata(spark, tablePath, "a rename commit") { node =>
       var renamedId = -1
       def renameIn(schemaNode: JsonNode): Unit =
-        IcebergReaderAccess.jsonArray(schemaNode.get("fields")).foreach { f =>
+        IcebergReader.jsonArray(schemaNode.get("fields")).foreach { f =>
           if (f.get("name").asText == from) {
             renamedId = f.get("id").asInt
             f.asInstanceOf[ObjectNode].put("name", to)
@@ -1001,7 +1001,7 @@ object IcebergWriter {
         }
       Option(node.get("schema")).foreach(renameIn)
       Option(node.get("schemas"))
-        .foreach(ss => IcebergReaderAccess.jsonArray(ss).foreach(renameIn))
+        .foreach(ss => IcebergReader.jsonArray(ss).foreach(renameIn))
       require(renamedId > 0, s"column $from not in the schema of $tablePath")
       // keep id-less imported files resolvable: the mapping entry for
       // this field keeps (or gains) the old name
@@ -1046,7 +1046,7 @@ object IcebergWriter {
         .getOrElse(throw new IllegalStateException(
           s"no schema in Iceberg metadata at $tablePath"))
       val idByName: Map[String, Int] =
-        IcebergReaderAccess.jsonArray(schemaNode.get("fields"))
+        IcebergReader.jsonArray(schemaNode.get("fields"))
           .map(f => f.get("name").asText -> f.get("id").asInt).toMap
       requested.foreach(pf => require(idByName.contains(pf.source),
         s"partition source column ${pf.source} not in schema of $tablePath"))
@@ -1054,7 +1054,7 @@ object IcebergWriter {
       // partition-spec — synthesize the history entry so the existing
       // files keep a spec to prune under
       val priorSpecs = {
-        val arr = IcebergReaderAccess.jsonArray(node.get("partition-specs"))
+        val arr = IcebergReader.jsonArray(node.get("partition-specs"))
           .collect { case o: ObjectNode => o }
         if (arr.nonEmpty) arr
         else Option(node.get("partition-spec")).filter(_.isArray).map { s =>
@@ -1071,7 +1071,7 @@ object IcebergWriter {
       // reuse partition field-ids for equivalent (transform, source-id)
       // fields anywhere in history (spec requirement)
       val knownIds: Map[(String, Int), Int] = priorSpecs.flatMap(s =>
-        IcebergReaderAccess.jsonArray(s.get("fields")).map(f =>
+        IcebergReader.jsonArray(s.get("fields")).map(f =>
           (Option(f.get("transform")).map(_.asText).getOrElse("identity"),
             f.get("source-id").asInt) -> f.get("field-id").asInt)).toMap
       val newFields = mapper.createArrayNode()
@@ -1435,7 +1435,7 @@ object IcebergWriter {
     val metaDir = new Path(root, "metadata")
     val now = System.currentTimeMillis()
     editMetadata(spark, tablePath, "a snapshot expiry") { node =>
-      val snaps = IcebergReaderAccess.jsonArray(node.get("snapshots"))
+      val snaps = IcebergReader.jsonArray(node.get("snapshots"))
       val current = Option(node.get("current-snapshot-id"))
         .map(_.asLong).getOrElse(-1L)
       // refs PIN their snapshots (real Iceberg expiry honors branch/tag
@@ -1472,7 +1472,7 @@ object IcebergWriter {
       val expired = snaps.map(_.get("snapshot-id").asLong).toSet -- keepIds
       if (expired.isEmpty) Unchanged(())
       else {
-        val log = IcebergReaderAccess.jsonArray(node.get("snapshot-log"))
+        val log = IcebergReader.jsonArray(node.get("snapshot-log"))
         val newSnaps = node.putArray("snapshots")
         snaps.filter(s => keepIds.contains(s.get("snapshot-id").asLong))
           .foreach(newSnaps.add)
@@ -1488,7 +1488,7 @@ object IcebergWriter {
     val meta2 = parsed2.getOrElse(throw new IllegalStateException(
       s"no parseable Iceberg metadata at $tablePath"))._2
     val live = mutable.Set.empty[String]
-    IcebergReaderAccess.jsonArray(meta2.get("snapshots")).foreach { s =>
+    IcebergReader.jsonArray(meta2.get("snapshots")).foreach { s =>
       val listPath = TableFiles.location(root, s.get("manifest-list").asText)
       live += fs.makeQualified(listPath).toString
       IcebergReader.readAvro(spark, listPath).foreach { m =>
@@ -2026,7 +2026,7 @@ object IcebergWriter {
             // re-raise ConcurrentCommit upstream).
             val visible = snapshotId.forall(id =>
               logState(fs, metaDir)._2.exists { case (_, meta) =>
-                IcebergReaderAccess.jsonArray(meta.get("snapshots"))
+                IcebergReader.jsonArray(meta.get("snapshots"))
                   .exists(_.get("snapshot-id").asLong == id)
               })
             if (visible) return answer
@@ -2067,7 +2067,7 @@ object IcebergWriter {
     * v1 `schema`. */
   private def currentSchema(meta: JsonNode): Option[ObjectNode] = {
     val curId = Option(meta.get("current-schema-id")).map(_.asInt).getOrElse(0)
-    IcebergReaderAccess.jsonArray(meta.get("schemas"))
+    IcebergReader.jsonArray(meta.get("schemas"))
       .find(s => Option(s.get("schema-id")).exists(_.asInt == curId))
       .orElse(Option(meta.get("schema")))
       .collect { case o: ObjectNode => o }
@@ -2122,7 +2122,7 @@ object IcebergWriter {
     val cur = atSnapshot.orElse(
       Option(meta.get("current-snapshot-id")).map(_.asLong).filter(_ >= 0))
       .getOrElse(return Nil)
-    IcebergReaderAccess.jsonArray(meta.get("snapshots"))
+    IcebergReader.jsonArray(meta.get("snapshots"))
       .find(_.get("snapshot-id").asLong == cur)
       .map(s => IcebergReader.readAvro(spark,
         TableFiles.location(root, s.get("manifest-list").asText)))
@@ -2263,7 +2263,7 @@ object IcebergWriter {
     // REPLACES the history (ids would conflict across entries
     // otherwise) — the existing replace-world semantics.
     val priorSchemas: Seq[ObjectNode] = prior.toSeq.flatMap { p =>
-      val arr = IcebergReaderAccess.jsonArray(p.get("schemas"))
+      val arr = IcebergReader.jsonArray(p.get("schemas"))
         .collect { case o: ObjectNode => o.deepCopy() }
       if (arr.nonEmpty) arr
       else Option(p.get("schema")).collect { case o: ObjectNode =>
@@ -2273,7 +2273,7 @@ object IcebergWriter {
     val priorCurrentId = prior.flatMap(p =>
       Option(p.get("current-schema-id")).map(_.asInt)).getOrElse(0)
     val priorCurrent = priorSchemas.find(_.get("schema-id").asInt == priorCurrentId)
-    def fieldsOf(s: ObjectNode) = IcebergReaderAccess.jsonArray(s.get("fields"))
+    def fieldsOf(s: ObjectNode) = IcebergReader.jsonArray(s.get("fields"))
     val newFields = fieldsOf(schemaNode)
     // a prior field matches when identical OR legally promoted in place
     // (int→long, float→double, decimal precision widening — the spec's
@@ -2328,7 +2328,7 @@ object IcebergWriter {
     // partitioning) replaces the history, like schemas.
     val specFields = partitionSpecFields(schema, partFields)
     val priorSpecs: Seq[ObjectNode] = prior.toSeq.flatMap(p =>
-      IcebergReaderAccess.jsonArray(p.get("partition-specs"))
+      IcebergReader.jsonArray(p.get("partition-specs"))
         .collect { case o: ObjectNode => o.deepCopy() })
     val matchedSpec = priorSpecs.find(s =>
       specKey(s.get("fields")) == specKey(specFields))
@@ -2370,7 +2370,7 @@ object IcebergWriter {
     * history entry that first declared the field, not to the shape. */
   private def specKey(fields: JsonNode)
       : Seq[(String, String, Int)] =
-    IcebergReaderAccess.jsonArray(fields).map(f =>
+    IcebergReader.jsonArray(fields).map(f =>
       (f.get("name").asText,
         Option(f.get("transform")).map(_.asText).getOrElse("identity"),
         Option(f.get("source-id")).map(_.asInt).getOrElse(-1)))
@@ -2384,7 +2384,7 @@ object IcebergWriter {
       schema: StructType, partFields: Seq[PartitionField]): Int =
     prior.flatMap { p =>
       val key = specKey(partitionSpecFields(schema, partFields))
-      IcebergReaderAccess.jsonArray(p.get("partition-specs"))
+      IcebergReader.jsonArray(p.get("partition-specs"))
         .find(s => specKey(s.get("fields")) == key)
         .map(_.get("spec-id").asInt)
     }.getOrElse(0)
@@ -2451,7 +2451,7 @@ object IcebergWriter {
     // committing snapshot records its assigned base as first-row-id
     nextRowId.foreach(node.put("next-row-id", _))
     val snaps = mapper.createArrayNode()
-    prior.foreach(p => IcebergReaderAccess.jsonArray(p.get("snapshots"))
+    prior.foreach(p => IcebergReader.jsonArray(p.get("snapshots"))
       .foreach(s => snaps.add(s)))
     val snap = mapper.createObjectNode()
     snap.put("snapshot-id", snapshotId)
@@ -2486,7 +2486,7 @@ object IcebergWriter {
     // see it until fastForward publishes it) moves only its branch ref
     priorCurrent.foreach(node.put("current-snapshot-id", _))
     val log = node.putArray("snapshot-log")
-    prior.foreach(p => IcebergReaderAccess.jsonArray(p.get("snapshot-log"))
+    prior.foreach(p => IcebergReader.jsonArray(p.get("snapshot-log"))
       .foreach(log.add))
     prior.flatMap(p => Option(p.get("refs")).filter(_.isObject))
       .foreach(r => node.set[JsonNode]("refs", r.deepCopy[JsonNode]()))
@@ -2662,11 +2662,4 @@ object IcebergWriter {
         |  {"name":"existing_rows_count","type":["null","long"],"default":null,"field-id":513},
         |  {"name":"first_row_id","type":["null","long"],"default":null,"field-id":520}
         |]}""".stripMargin)
-}
-
-/** Reader internals the writer shares (json array walk). */
-private[io] object IcebergReaderAccess {
-  def jsonArray(n: JsonNode)
-      : Seq[JsonNode] =
-    if (n == null) Nil else (0 until n.size()).map(n.get)
 }

@@ -167,7 +167,7 @@ object Puffin {
         s"$path: footer payload not preceded by magic")
       val meta = new ObjectMapper().readTree(
         new String(payload, StandardCharsets.UTF_8))
-      IcebergReaderAccess.jsonArray(meta.get("blobs")).map { b =>
+      IcebergReader.jsonArray(meta.get("blobs")).map { b =>
         val props = Option(b.get("properties")).filter(_.isObject)
           .map(p => p.fieldNames().asScala.map(n =>
             n -> p.get(n).asText).toMap)

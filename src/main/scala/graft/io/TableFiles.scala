@@ -15,13 +15,15 @@ import org.apache.spark.sql.functions.{broadcast, col, input_file_name, instr,
 import org.apache.spark.sql.types.{MetadataBuilder, StringType, StructType}
 import org.apache.spark.util.SerializableConfiguration
 
-/** The table-file steps the Delta and Iceberg writers share: the staged
-  * partitioned Parquet write, a file's path spellings, hive partition
-  * values, the executor-side footer sweep and per-column statistics
-  * fold, the orphan-file sweep, the field-id stamp, partition-granular
-  * rewrite planning for MERGE and delete-matched, and the
-  * executor-side per-file row-position bitmap loop of the
-  * deletion-vector deletes. Nothing here asks which format called it:
+/** The table-file steps every writer shares: the staged partitioned
+  * Parquet write, a file's path spellings, hive partition values, the
+  * executor-side footer sweep and per-column statistics fold, the
+  * orphan-file sweep, the field-id stamp, and the executor-side
+  * per-file row-position bitmap loop of the deletion-vector deletes
+  * (Delta and Iceberg); and the partition-granular rewrite planning
+  * under every MERGE and delete-matched — Delta, Iceberg, the
+  * [[graft.table.TxnLog]] snapshot log and the plain dataset DML of
+  * [[graft.table.MergeOps]]. Nothing here asks which format called it:
   * format facts — a file's partition tuple, a delete-applied scan of a
   * file subset, a file's candidacy for the orphan sweep — arrive as
   * values. Each format renders the statistics fold in its own terms.
@@ -37,7 +39,8 @@ import org.apache.spark.util.SerializableConfiguration
   *  - Partition tuples compare in Spark's cast-to-string rendering —
   *    the rendering hive directory names, and so the partition values
   *    parsed back from them, are written in. JVM `toString` is not that
-  *    rendering (a `java.sql.Timestamp` appends `.0`).
+  *    rendering (a `java.sql.Timestamp` appends `.0`). Tuples are
+  *    rendered here only; callers hand over parsed directory values.
   */
 private[graft] object TableFiles {
 

@@ -7,11 +7,12 @@ import graft.table.TxnLog
   * `s3.to_deltalake` / `read_deltalake` (`s3/_write_deltalake.py:51-226`,
   * `s3/_read_deltalake.py:38-136`) and `athena.to_iceberg` /
   * `from_iceberg` (`athena/_write_iceberg.py`, `s3/_s3_tables_iceberg.py`)
-  * — writes backed by the in-repo snapshot log [[graft.table.TxnLog]]
-  * (atomic manifest commits, optimistic concurrency, `VERSION AS OF`;
-  * no Delta/Iceberg jars exist in this environment, the commit semantics
-  * are the surface), and `read_deltalake` additionally reading REAL
-  * Delta tables other engines wrote via the jar-free [[DeltaLogReader]].
+  * — [[toTable]] writes the in-repo snapshot log [[graft.table.TxnLog]]
+  * (atomic manifest commits, optimistic concurrency, `VERSION AS OF`),
+  * `toDeltalake`/`toIceberg` write the real formats through the in-repo
+  * [[DeltaLogWriter]]/[[IcebergWriter]] (the engine depends on no Delta
+  * or Iceberg library), and `read_deltalake` also reads real Delta
+  * tables other engines wrote, via [[DeltaLogReader]].
   * A user of the reference keeps their call shape: mode strings, merge
   * keys, versioned reads.
   */
@@ -19,8 +20,9 @@ object TableFormats {
 
   /** `to_deltalake(df, path, mode=…)`; `mergeKeys` engages the MERGE
     * path (`athena.to_iceberg(merge_cols=…)` semantics); `partitionBy`
-    * makes snapshots partition-granular (MERGE rewrites only touched
-    * partitions — `athena/_write_iceberg.py` partitioned tables). */
+    * makes snapshots partition-granular (MERGE rewrites only the
+    * partitions its rows land in or its matched keys live in —
+    * `athena/_write_iceberg.py` partitioned tables). */
   def toTable(
       df: DataFrame,
       path: String,

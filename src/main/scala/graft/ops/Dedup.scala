@@ -731,35 +731,24 @@ object Dedup {
   private[graft] var foldBarrier: () => Unit = () => ()
 
   /** Rewrite one index sub-table through the TxnLog's optimistic
-    * maintenance commit: pin the current snapshot, compute the
-    * replacement FROM that pinned version, publish with
+    * maintenance commit ([[graft.table.TxnLog.pinned]]): compute the
+    * replacement FROM the pinned snapshot and publish with
     * `expectedVersion` — a concurrent daily append landing in between
-    * raises CommitConflict and the rewrite re-reads and retries, so
-    * the append is never silently dropped (the losing attempt's data
-    * files are unreferenced and reclaimed by [[vacuumDedupIndex]]). */
+    * makes the rewrite re-read and retry, so the append is never
+    * silently dropped (the losing attempt's data files are
+    * unreferenced and reclaimed by [[vacuumDedupIndex]]). */
   private def rewriteIndexSub(spark: SparkSession, table: String,
       partCols: Seq[String])(
       transform: (DataFrame, graft.table.TxnLog.Snapshot) => DataFrame)
       : Unit = {
     import graft.table.TxnLog
-    val MaxAttempts = 6
-    var attempts = 0
-    while (attempts < MaxAttempts) {
-      val snap = TxnLog.currentSnapshot(spark, table).getOrElse(
-        throw new IllegalArgumentException(s"no index sub-table at $table"))
+    TxnLog.pinned(spark, table, "index rewrite") { snap =>
       val out = transform(
         TxnLog.read(spark, table, asOfVersion = Some(snap.version)), snap)
       maintenanceBarrier()
-      try {
-        TxnLog.rewrite(out, table, partCols,
-          expectedVersion = snap.version)
-        return
-      } catch {
-        case _: TxnLog.CommitConflict => attempts += 1
-      }
-    }
-    throw new IllegalStateException(
-      s"index rewrite at $table lost the commit race $MaxAttempts times")
+      TxnLog.rewrite(out, table, partCols, expectedVersion = snap.version)
+    }.getOrElse(throw new IllegalArgumentException(
+      s"no index sub-table at $table"))
   }
 
   /** Total bytes of the data directories a snapshot references

@@ -63,7 +63,7 @@ object Postings {
     // as a UNIT (a rebuild changing nBuckets re-routes every term; the
     // corpus stats normalize BM25) — the whole tree publishes as one
     // snapshot, so a query concurrent with a rebuild reads one
-    // generation (round 14, the VectorIndex treatment)
+    // generation
     graft.table.SnapshotTree.publish(spark, indexPath) { t =>
       writeTree(docs, t,
         Meta(nBuckets, textCol, idCol, carryCols))
@@ -105,7 +105,7 @@ object Postings {
       sumDlen = if (stats.isNullAt(1)) 0L else stats.getLong(1)))
   }
 
-  // ---- incremental maintenance (round 15) -----------------------------
+  // ---- incremental maintenance --------------------------------------
 
   /** Append one ingest batch as a LAYER tree — the postings index's
     * daily/streaming loop (mirrors the dedup index's
@@ -116,15 +116,10 @@ object Postings {
     * merged document frequencies and corpus stats ([[layerInfo]] —
     * integer sums, so an incremental index answers bit-identically to
     * a one-shot rebuild), and [[fold]] periodically consolidates.
-    *
-    * Replay-idempotent under the streaming ingest contract (batch ids
-    * monotone, only the latest batch can replay after a crash): an id
-    * already in the current manifest is skipped; an id below the base
-    * layer's `foldedUpto` watermark was consolidated by a fold and is
-    * skipped; a crash between the tree write and the manifest publish
-    * leaves an invisible dir the replay overwrites. Returns false on
-    * a skipped replay. Layer routing (nBuckets) and analyzed columns
-    * inherit the base geometry — uniform by construction.
+    * Replay handling is [[graft.table.SnapshotTree.appendLayer]]'s:
+    * returns false on a skipped replay. Layer routing (nBuckets) and
+    * analyzed columns inherit the base geometry — uniform by
+    * construction.
     *
     * CONTRACT: batch doc ids must be DISJOINT from every already-
     * indexed layer (the streaming-ingest invariant — each doc is
@@ -138,35 +133,23 @@ object Postings {
   def appendBatch(docs: DataFrame, indexPath: String,
       batchId: Long, assertDisjoint: Boolean = false): Boolean = {
     val spark = docs.sparkSession
-    val snap = graft.table.TxnLog.currentSnapshot(spark, indexPath)
-      .getOrElse(throw new IllegalStateException(
-        s"no postings index at $indexPath; build() it first"))
-    val dirName = s"files/batch-$batchId"
-    if (snap.dataDirs.contains(dirName)) return false // replayed, published
-    val r = new Path(indexPath)
-    val fs = r.getFileSystem(spark.sessionState.newHadoopConf())
-    val baseMeta = readMeta(spark,
-      fs.makeQualified(new Path(r, snap.dataDirs.head)).toString)
-    if (batchId < baseMeta.foldedUpto) return false // replayed, folded
-    if (assertDisjoint) {
-      val dup = snap.dataDirs
-        .map(d => spark.read.parquet(
-          s"${fs.makeQualified(new Path(r, d))}/_doclens")
-          .select(col(baseMeta.idCol)))
-        .reduce(_.unionByName(_))
-        .join(docs.select(col(baseMeta.idCol)).distinct(), baseMeta.idCol)
-        .limit(3).collect().map(_.get(0))
-      require(dup.isEmpty,
-        s"appendBatch batch $batchId re-ingests already-indexed docs " +
-          s"(e.g. ${dup.mkString(", ")}): layered df/corpus stats would " +
-          "double-count and BM25 would drift from a rebuild")
+    graft.table.SnapshotTree.appendLayer(spark, indexPath, batchId)(
+        readMeta(spark, _).foldedUpto) { (roots, t) =>
+      val base = readMeta(spark, roots.head)
+      if (assertDisjoint) {
+        val dup = roots
+          .map(rt => spark.read.parquet(s"$rt/_doclens").select(col(base.idCol)))
+          .reduce(_.unionByName(_))
+          .join(docs.select(col(base.idCol)).distinct(), base.idCol)
+          .limit(3).collect().map(_.get(0))
+        require(dup.isEmpty,
+          s"appendBatch batch $batchId re-ingests already-indexed docs " +
+            s"(e.g. ${dup.mkString(", ")}): layered df/corpus stats would " +
+            "double-count and BM25 would drift from a rebuild")
+      }
+      writeTree(docs, t,
+        Meta(base.nBuckets, base.textCol, base.idCol, base.carryCols))
     }
-    writeTree(docs, fs.makeQualified(new Path(r, dirName)).toString,
-      Meta(baseMeta.nBuckets, baseMeta.textCol, baseMeta.idCol,
-        baseMeta.carryCols))
-    graft.table.TxnLog.commitStagedDirs(spark, indexPath, Seq(dirName),
-      op = "batch-append")
-    true
   }
 
   /** Test hook: invoked by [[fold]] after the merged tree is staged,
@@ -179,45 +162,15 @@ object Postings {
     * [[Dedup.foldStreamIndex]], for postings): layer postings rows are
     * disjoint by the ingest contract (docs are layer-partitioned), so
     * the merge is a union + one repartition to one file per term
-    * bucket, doclens union, corpus stats summed exactly; the
-    * `foldedUpto` watermark advances past every folded batch id so a
-    * late replay of a folded batch is detected and skipped.
-    *
-    * Published OPTIMISTICALLY at the pinned version: a concurrent
-    * [[appendBatch]] landing mid-fold conflicts the manifest swap and
-    * the fold re-resolves (bounded retries), never dropping the new
-    * layer. A probe pinned before the fold keeps reading its own
-    * generation until vacuum (`keepVersions` >= 2 when probes can
-    * overlap). A crash anywhere re-converges: the staged merge dir is
-    * invisible until its manifest, and a re-run folds the same layers.
-    * Returns the number of layers folded (0 = nothing to do). */
+    * bucket, doclens union, corpus stats summed exactly. Publication,
+    * retry and the replay watermark are
+    * [[graft.table.SnapshotTree.foldLayers]]'s. Returns the number of
+    * layers folded (0 = nothing to do). */
   def fold(spark: SparkSession, indexPath: String,
-      keepVersions: Int = 2): Int = {
-    var attempts = 0
-    while (attempts < 5) {
-      val snap = graft.table.TxnLog.currentSnapshot(spark, indexPath)
-        .getOrElse(return 0)
-      if (snap.dataDirs.size <= 1) return 0
-      val r = new Path(indexPath)
-      val fs = r.getFileSystem(spark.sessionState.newHadoopConf())
-      val roots = snap.dataDirs.map(d =>
-        fs.makeQualified(new Path(r, d)).toString)
-      val metas = roots.map(readMeta(spark, _))
-      require(metas.map(m =>
-          (m.nBuckets, m.textCol, m.idCol, m.carryCols)).distinct.size == 1,
-        s"postings layers at $indexPath disagree on geometry")
-      val base = metas.head
-      val maxBatch = snap.dataDirs.flatMap { d =>
-        val n = d.stripPrefix("files/")
-        if (n.startsWith("batch-"))
-          scala.util.Try(n.stripPrefix("batch-").toLong).toOption
-        else None
-      }.foldLeft(-1L)(math.max)
-      val merged = Meta(base.nBuckets, base.textCol, base.idCol,
-        base.carryCols, metas.map(_.nDocs).sum, metas.map(_.sumDlen).sum,
-        math.max(base.foldedUpto, maxBatch + 1))
-      val dirName = s"files/fold-${java.util.UUID.randomUUID()}"
-      val t = fs.makeQualified(new Path(r, dirName)).toString
+      keepVersions: Int = 2): Int =
+    graft.table.SnapshotTree.foldLayers(spark, indexPath, keepVersions)(
+        readMeta(spark, _).foldedUpto, () => foldBarrier()) { (roots, upto, t) =>
+      val merged = mergedMeta(indexPath, roots.map(readMeta(spark, _)))
       roots.map(rt => spark.read.option("basePath", rt).parquet(rt))
         .reduce(_.unionByName(_))
         .repartition(col("tok_bucket"))
@@ -225,43 +178,27 @@ object Postings {
       roots.map(rt => spark.read.parquet(s"$rt/_doclens"))
         .reduce(_.unionByName(_))
         .write.mode("overwrite").parquet(s"$t/_doclens")
-      writeMeta(spark, t, merged)
-      foldBarrier()
-      try {
-        graft.table.TxnLog.commitStagedDirs(spark, indexPath,
-          Seq(dirName), op = "fold", replace = true,
-          expectedVersion = Some(snap.version))
-        graft.table.TxnLog.vacuum(spark, indexPath, keepVersions)
-        return roots.size
-      } catch {
-        case _: graft.table.TxnLog.CommitConflict =>
-          // a batch landed mid-fold; the staged merge dir is never
-          // referenced by any manifest, so vacuum reclaims it once it
-          // ages past TxnLog.stagedGraceMs (the grace that ALSO keeps
-          // this fold's vacuum from deleting a concurrent append's
-          // staged-but-unpublished batch dir) — re-resolve and retry
-          attempts += 1
-      }
+      writeMeta(spark, t, merged.copy(foldedUpto = upto))
     }
-    throw new IllegalStateException(
-      s"fold at $indexPath lost the publish race 5 times; " +
-        "pause the ingest loop and re-run")
+
+  /** The layers' metas as one: geometry must be uniform, corpus stats
+    * sum exactly (integers), the head's watermark stays. */
+  private def mergedMeta(indexPath: String, metas: Seq[Meta]): Meta = {
+    require(metas.map(m =>
+        (m.nBuckets, m.textCol, m.idCol, m.carryCols)).distinct.size == 1,
+      s"postings layers at $indexPath disagree on geometry")
+    metas.head.copy(nDocs = metas.map(_.nDocs).sum,
+      sumDlen = metas.map(_.sumDlen).sum)
   }
 
-  /** All layer roots of the current snapshot plus their merged meta:
-    * geometry must be uniform, corpus stats sum exactly (integers), so
+  /** All layer roots of the current snapshot plus their merged meta, so
     * BM25 over an incremental index derives the identical avgdl/IDF a
     * one-shot rebuild would. ONE resolution per query — every layer
     * read under it is one consistent generation. */
   private def layerInfo(spark: SparkSession,
       indexPath: String): (Seq[String], Meta) = {
     val roots = graft.table.SnapshotTree.roots(spark, indexPath)
-    val metas = roots.map(readMeta(spark, _))
-    require(metas.map(m =>
-        (m.nBuckets, m.textCol, m.idCol, m.carryCols)).distinct.size == 1,
-      s"postings layers at $indexPath disagree on geometry")
-    (roots, metas.head.copy(nDocs = metas.map(_.nDocs).sum,
-      sumDlen = metas.map(_.sumDlen).sum))
+    (roots, mergedMeta(indexPath, roots.map(readMeta(spark, _))))
   }
 
   /** Weighted multi-term match over the postings: reads ONLY the term

@@ -27,31 +27,27 @@ import org.apache.spark.sql.functions._
   */
 object VectorIndex {
 
-  // ---- snapshotted index trees (round 14) -----------------------------
+  // ---- snapshotted index trees ---------------------------------------
 
   /** Every index family (LSH / IVF / PQ) builds MULTIPLE sub-tables
     * that must be read as a consistent unit — PQ's `codes` are only
     * meaningful under the `pq_meta` codebook that produced them, IVF's
-    * assignments under their `centroids`. Round-13 rebuilds overwrote
-    * the live directories in place, so a search running concurrently
-    * with a nightly re-index could read the NEW codebook against the
-    * OLD codes — silently wrong distances, worse than the
-    * file-not-found race. Round 14 versions the WHOLE index tree
-    * through [[graft.table.TxnLog]]: a rebuild stages a fresh
-    * self-contained tree under `files/idx-<uuid>/` and publishes it as
-    * ONE manifest (atomic whole-index swap), a search resolves the
-    * current manifest ONCE and reads every sub-table from inside that
-    * immutable tree, and [[vacuumIndex]] reclaims superseded trees
-    * with a probe-covering retention — the same snapshot contract the
-    * dedup index got, strengthened to multi-sub-table atomicity by
-    * the single-dir manifest. */
+    * assignments under their `centroids`; a search reading a new
+    * codebook against old codes computes silently wrong distances. So
+    * the WHOLE index tree is versioned through
+    * [[graft.table.SnapshotTree]]: a rebuild stages a fresh
+    * self-contained tree and publishes it as ONE manifest (atomic
+    * whole-index swap), a search resolves the current manifest ONCE and
+    * reads every sub-table from inside that immutable tree, and
+    * [[vacuumIndex]] reclaims superseded trees with a probe-covering
+    * retention. */
   private def publishIndexTree(spark: SparkSession, indexPath: String)(
       build: String => Unit): Unit =
     graft.table.SnapshotTree.publish(spark, indexPath)(build)
 
   /** The CURRENT snapshot's tree root — directory resolution happens
     * here, once per search, so the returned path stays consistent
-    * under a concurrent rebuild. Paths without a TxnLog (pre-round-14
+    * under a concurrent rebuild. Paths without a TxnLog (unversioned
     * indexes) resolve to themselves. */
   private[graft] def indexRoot(spark: SparkSession,
       indexPath: String): String =
@@ -873,7 +869,7 @@ object VectorIndex {
     }
   }
 
-  // ---- incremental maintenance (round 16) -----------------------------
+  // ---- incremental maintenance ---------------------------------------
 
   /** Per-tree ANN sidecar: `nVectors` in THIS tree's codes/data,
     * `builtN` = corpus size the GEOMETRY (centroids + codebook) was
@@ -935,78 +931,28 @@ object VectorIndex {
     * the optimistic-commit retry (cf. [[Postings.foldBarrier]]). */
   private[graft] var annFoldBarrier: () => Unit = () => ()
 
-  /** Shared layer-append plumbing (the [[Postings.appendBatch]]
-    * contract, for index trees): replay-idempotent via manifest
-    * membership + the head tree's foldedUpto watermark; the staged
-    * layer is invisible until its one-manifest commit; TxnLog's
-    * staged-grace vacuum protection covers the append-vs-fold race. */
+  /** Layer append on [[graft.table.SnapshotTree.appendLayer]]: `build`
+    * gets the head tree's root (the geometry) and the layer's root. */
   private def appendLayer(spark: SparkSession, indexPath: String,
-      batchId: Long)(buildLayer: (String, String) => Unit): Boolean = {
-    val snap = graft.table.TxnLog.currentSnapshot(spark, indexPath)
-      .getOrElse(throw new IllegalStateException(
-        s"no ANN index at $indexPath; put*() it first"))
-    val dirName = s"files/batch-$batchId"
-    if (snap.dataDirs.contains(dirName)) return false // replayed, published
-    val r = new org.apache.hadoop.fs.Path(indexPath)
-    val fs = r.getFileSystem(spark.sessionState.newHadoopConf())
-    val head = fs.makeQualified(
-      new org.apache.hadoop.fs.Path(r, snap.dataDirs.head)).toString
-    if (batchId < readAnnMeta(spark, head).foldedUpto)
-      return false // replayed, folded
-    buildLayer(head,
-      fs.makeQualified(new org.apache.hadoop.fs.Path(r, dirName)).toString)
-    graft.table.TxnLog.commitStagedDirs(spark, indexPath, Seq(dirName),
-      op = "batch-append")
-    true
-  }
+      batchId: Long)(build: (String, String) => Unit): Boolean =
+    graft.table.SnapshotTree.appendLayer(spark, indexPath, batchId)(
+      readAnnMeta(spark, _).foldedUpto)((roots, t) => build(roots.head, t))
 
-  /** Shared fold plumbing: optimistic consolidation at the pinned
-    * version (a concurrent append conflicts the publish and the fold
-    * re-resolves — never dropping the new layer), merged AnnMeta with
-    * exact-integer counts, watermark past every folded batch id. */
+  /** Fold on [[graft.table.SnapshotTree.foldLayers]]: `merge` writes the
+    * data of the new tree from the roots; the merged AnnMeta carries
+    * exact-integer counts and the fold's watermark. */
   private def foldLayers(spark: SparkSession, indexPath: String,
       keepVersions: Int)(
-      merge: (Seq[String], String) => Unit): Int = {
-    var attempts = 0
-    while (attempts < 5) {
-      val snap = graft.table.TxnLog.currentSnapshot(spark, indexPath)
-        .getOrElse(return 0)
-      if (snap.dataDirs.size <= 1) return 0
-      val r = new org.apache.hadoop.fs.Path(indexPath)
-      val fs = r.getFileSystem(spark.sessionState.newHadoopConf())
-      val roots = snap.dataDirs.map(d => fs.makeQualified(
-        new org.apache.hadoop.fs.Path(r, d)).toString)
-      val metas = roots.map(readAnnMeta(spark, _))
-      val maxBatch = snap.dataDirs.flatMap { d =>
-        val n = d.stripPrefix("files/")
-        if (n.startsWith("batch-"))
-          scala.util.Try(n.stripPrefix("batch-").toLong).toOption
-        else None
-      }.foldLeft(-1L)(math.max)
-      val dirName = s"files/fold-${java.util.UUID.randomUUID()}"
-      val t = fs.makeQualified(
-        new org.apache.hadoop.fs.Path(r, dirName)).toString
-      merge(roots, t)
-      val mergedCells = metas.flatMap(_.cellCounts.toSeq)
-        .groupMapReduce(_._1)(_._2)(_ + _)
-      writeAnnMeta(spark, t, AnnMeta(metas.map(_.nVectors).sum,
-        metas.head.builtN,
-        math.max(metas.head.foldedUpto, maxBatch + 1), mergedCells))
-      annFoldBarrier()
-      try {
-        graft.table.TxnLog.commitStagedDirs(spark, indexPath,
-          Seq(dirName), op = "fold", replace = true,
-          expectedVersion = Some(snap.version))
-        graft.table.TxnLog.vacuum(spark, indexPath, keepVersions)
-        return roots.size
-      } catch {
-        case _: graft.table.TxnLog.CommitConflict => attempts += 1
-      }
+      merge: (Seq[String], String) => Unit): Int =
+    graft.table.SnapshotTree.foldLayers(spark, indexPath, keepVersions)(
+        readAnnMeta(spark, _).foldedUpto, () => annFoldBarrier()) {
+      (roots, upto, t) =>
+        val metas = roots.map(readAnnMeta(spark, _))
+        merge(roots, t)
+        writeAnnMeta(spark, t, AnnMeta(metas.map(_.nVectors).sum,
+          metas.head.builtN, upto, metas.flatMap(_.cellCounts.toSeq)
+            .groupMapReduce(_._1)(_._2)(_ + _)))
     }
-    throw new IllegalStateException(
-      s"fold at $indexPath lost the publish race 5 times; " +
-        "pause the ingest loop and re-run")
-  }
 
   /** Append one ingest batch to a LIVE IVF-PQ index as a layer — the
     * reference's append-shaped vector API

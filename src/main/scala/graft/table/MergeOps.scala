@@ -1,52 +1,67 @@
 package graft.table
 
-import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import graft.io.TableFiles
 
-/** Table-format DML — the MERGE/DELETE/upsert surface of the reference
+/** Dataset DML — the MERGE/DELETE/upsert surface of the reference
   * (`athena/_write_iceberg.py:297-393` MERGE INTO generation,
   * `715-868` delete-from, `redshift/_write.py:544-769` upsert with
-  * `precombine_key`, `timestream/_write.py` version upsert) implemented
-  * as staged copy-on-write over parquet datasets, committed atomically
-  * through [[StagedCommit]] (no Delta/Iceberg jars in this environment —
-  * the op semantics and the commit guarantee, not the log format, are
-  * the surface).
+  * `precombine_key`, `timestream/_write.py` version upsert) over a plain
+  * hive-partitioned Parquet dataset with no table log: staged
+  * copy-on-write, committed through [[StagedCommit]].
   *
-  * Scale design: the merge plan streams from the current table files
-  * directly into the staging write — nothing is materialized on the
-  * driver or in the block manager. With partition columns declared, only
-  * partitions that contain matched keys (in EITHER the source or the
-  * target — a matched key whose partition value changed is removed from
-  * its old partition too) are rewritten. The key match is a shuffle join
-  * on the merge keys; the small sides (key set, partition set) are
-  * broadcast.
+  * MERGE and delete-matched plan through the same planner as the Delta
+  * and Iceberg writers ([[TableFiles.planMerge]],
+  * [[TableFiles.planDeleteMatched]]) over the dataset's data files, each
+  * file's partition tuple parsed from the directory names Spark wrote.
+  * With partition columns declared, only the partitions where source
+  * rows land or matched keys live are rewritten, so a key whose
+  * partition value changed leaves its old partition; the commit swaps
+  * those directories and the staged ones by name. Without partition
+  * columns the dataset is rewritten whole. The merge plan streams from
+  * the current files into the staging write; nothing is materialized on
+  * the driver beyond the distinct touched partition tuples.
   */
 object MergeOps {
 
-  /** Key-match condition: plain `=` by default, `<=>` (IS NOT DISTINCT
-    * FROM) with `matchNulls` — the reference's `merge_match_nulls`
-    * option (`athena/_write_iceberg.py:297-393`). Without it a
-    * null-keyed source row can never match its target row and
-    * duplicates on every upsert. */
-  private def keyCond(l: DataFrame, r: DataFrame, keys: Seq[String],
-      matchNulls: Boolean): Column =
-    keys.map(k => if (matchNulls) l(k) <=> r(k) else l(k) === r(k))
-      .reduce(_ && _)
+  /** The dataset at `targetPath` as a rewrite target over its data
+    * files (paths relative to the root), plus the whole-dataset scan. A
+    * file subset reads in the whole dataset's schema. */
+  private def target(spark: SparkSession, targetPath: String,
+      partitionCols: Seq[String]): (TableFiles.Target[String], DataFrame) = {
+    val whole = spark.read.option("basePath", targetPath).parquet(targetPath)
+    val root = new Path(targetPath)
+    val files = StagedCommit.dataFiles(
+      root.getFileSystem(spark.sparkContext.hadoopConfiguration), root)
+    def scan(sub: Seq[String]): DataFrame =
+      if (sub.size == files.size) whole
+      else if (sub.isEmpty)
+        spark.createDataFrame(spark.sparkContext.emptyRDD[Row], whole.schema)
+      else spark.read.schema(whole.schema).option("basePath", targetPath)
+        .parquet(sub.map(f => new Path(root, f).toString): _*)
+    (TableFiles.Target(files, scan, partitionCols.map(col), f => {
+      val values = TableFiles.partitionValuesOf(f)
+      Some(partitionCols.map(c => values.get(c).flatten))
+    }), whole)
+  }
 
-  /** Partition-tuple match is ALWAYS null-safe: a null partition value
-    * (`__HIVE_DEFAULT_PARTITION__`) is a legitimate partition, and a
-    * `=`-join would exclude its rows from the rewrite set while the
-    * affected-partition list still overwrites the directory — silently
-    * dropping every unmatched row in the null partition. */
-  private def partCond(l: DataFrame, r: DataFrame,
-      partitionCols: Seq[String]): Column =
-    partitionCols.map(c => l(c) <=> r(c)).reduce(_ && _)
+  /** Commit `rewritten` over the planned rewrite: a whole swap without
+    * partition columns, else a swap of the touched files' directories
+    * and the staged ones. */
+  private def commit(rewritten: DataFrame, targetPath: String,
+      partitionCols: Seq[String], touched: Seq[String]): Long =
+    if (partitionCols.isEmpty) StagedCommit.overwrite(rewritten, targetPath)
+    else StagedCommit.overwritePartitions(rewritten, targetPath,
+      partitionCols, touched.map(f => f.take(f.lastIndexOf('/'))).distinct)
 
   /** MERGE … WHEN MATCHED THEN UPDATE (replace row) WHEN NOT MATCHED
-    * THEN INSERT — the `athena.to_iceberg(merge_cols=…)` semantic.
-    * Returns the merged row count.
-    */
+    * THEN INSERT — the `athena.to_iceberg(merge_cols=…)` semantic;
+    * `matchNulls` is the reference's `merge_match_nulls`. Returns the
+    * row count of the rewritten partitions (the whole dataset when
+    * unpartitioned). */
   def upsert(
       spark: SparkSession,
       targetPath: String,
@@ -55,40 +70,16 @@ object MergeOps {
       partitionCols: Seq[String] = Nil,
       matchNulls: Boolean = false): Long = {
     require(keys.nonEmpty, "merge requires key columns")
-    val target = spark.read.option("basePath", targetPath).parquet(targetPath)
-    val sourceKeys = source.select(keys.map(col): _*).distinct()
-
-    if (partitionCols.isEmpty) {
-      val kept = target.join(sourceKeys,
-        keyCond(target, sourceKeys, keys, matchNulls), "left_anti")
-      val merged = kept.unionByName(source.select(target.columns.map(col): _*))
-      StagedCommit.overwrite(merged, targetPath)
-    } else {
-      // Affected partitions = partitions the source writes into UNION
-      // partitions that currently hold a matched key (so a key whose
-      // partition value changed sheds its stale row — Iceberg MERGE
-      // updates the row wherever it lives). The target probe prunes to
-      // (keys ++ partitionCols) columns only.
-      val sourceParts = source.select(partitionCols.map(col): _*).distinct()
-      val matchedParts = target
-        .join(broadcast(sourceKeys),
-          keyCond(target, sourceKeys, keys, matchNulls), "left_semi")
-        .select(partitionCols.map(col): _*).distinct()
-      val affectedDf = sourceParts.unionByName(matchedParts).distinct()
-      val affected = collectPartitionValues(affectedDf, partitionCols)
-
-      val targetAffected = target.join(broadcast(affectedDf),
-        partCond(target, affectedDf, partitionCols), "left_semi")
-      val kept = targetAffected.join(sourceKeys,
-        keyCond(targetAffected, sourceKeys, keys, matchNulls), "left_anti")
-      val merged = kept.unionByName(source.select(target.columns.map(col): _*))
-      StagedCommit.overwritePartitions(merged, targetPath, partitionCols,
-        affected)
-    }
+    val (t, whole) = target(spark, targetPath, partitionCols)
+    val (plan, merged) = TableFiles.planMerge(t,
+      source.select(whole.columns.map(col).toSeq: _*), keys, matchNulls)
+    commit(merged, targetPath, partitionCols, plan.touched)
   }
 
   /** DELETE FROM target WHERE key IN (source keys) — the
-    * `athena.delete_from_iceberg_table` semantic. */
+    * `athena.delete_from_iceberg_table` semantic. Returns the row count
+    * of the rewritten partitions (the whole dataset when
+    * unpartitioned). */
   def deleteMatched(
       spark: SparkSession,
       targetPath: String,
@@ -96,23 +87,10 @@ object MergeOps {
       keyCols: Seq[String],
       partitionCols: Seq[String] = Nil,
       matchNulls: Boolean = false): Long = {
-    val target = spark.read.option("basePath", targetPath).parquet(targetPath)
-    val keySet = keys.select(keyCols.map(col): _*).distinct()
-    val remaining = target.join(broadcast(keySet),
-      keyCond(target, keySet, keyCols, matchNulls), "left_anti")
-    // partitionCols keeps the hive layout through the rewrite; only
-    // partitions holding matched keys are touched
-    if (partitionCols.isEmpty) StagedCommit.overwrite(remaining, targetPath)
-    else {
-      val matchedParts = target.join(broadcast(keySet),
-        keyCond(target, keySet, keyCols, matchNulls), "left_semi")
-        .select(partitionCols.map(col): _*).distinct()
-      val affected = collectPartitionValues(matchedParts, partitionCols)
-      val remainingAffected = remaining.join(broadcast(matchedParts),
-        partCond(remaining, matchedParts, partitionCols), "left_semi")
-      StagedCommit.overwritePartitions(remainingAffected, targetPath,
-        partitionCols, affected)
-    }
+    val (plan, remaining) = TableFiles.planDeleteMatched(
+      target(spark, targetPath, partitionCols)._1,
+      keys.select(keyCols.map(col): _*).distinct(), keyCols, matchNulls)
+    commit(remaining, targetPath, partitionCols, plan.touched)
   }
 
   /** Upsert with a precombine column (`redshift.copy(mode="upsert",
@@ -137,16 +115,4 @@ object MergeOps {
       .drop("__rn")
     StagedCommit.overwrite(deduped, targetPath, partitionCols)
   }
-
-  /** Collect the (small, distinct) affected-partition value tuples as
-    * hive-encodable strings. The list is the same driver-side partition
-    * tracking every dynamic-partition-overwrite commit performs. */
-  private def collectPartitionValues(
-      parts: DataFrame, partitionCols: Seq[String]): Seq[Map[String, String]] =
-    parts.collect().toIndexedSeq.map { (r: Row) =>
-      partitionCols.map { c =>
-        val v = r.getAs[Any](c)
-        c -> (if (v == null) null else v.toString)
-      }.toMap
-    }
 }

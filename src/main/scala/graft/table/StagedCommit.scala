@@ -3,30 +3,29 @@ package graft.table
 import java.util.UUID
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
-import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
 import org.apache.spark.sql.functions.{count, lit}
 
-/** Staged, atomically-committed dataset rewrites — the minimal
-  * transaction layer under the DML surface. The reference commits
+/** Staged, atomically-committed dataset rewrites — the transaction layer
+  * under the dataset DML surface ([[MergeOps]]). The reference commits
   * copy-on-write table rewrites through the table format's metadata swap
   * (Iceberg snapshot commit, `athena/_write_iceberg.py:411-714`; Delta
   * single-transaction streaming commit, `s3/_write_deltalake.py:139-226`).
-  * With no table-format jars in this environment the same guarantee is
+  * A plain Parquet dataset has no log to swap, so the same guarantee is
   * built from the filesystem primitive every format bottoms out on:
   * write everything to a staging directory, then swap directories with
   * atomic renames.
   *
   * Properties:
-  *  - The merged plan streams straight from the old target files into the
-  *    staging write — no driver materialization, no block-manager copy of
-  *    the table (the old code's full-table `localCheckpoint(true)` pinned
-  *    2x the dataset in executor memory; at 100 TB that is fatal).
+  *  - The rewritten plan streams straight from the old target files into
+  *    the staging write: no driver materialization and no block-manager
+  *    copy of the table.
   *  - The target is never touched until the staged write has fully
   *    succeeded: a crash mid-write leaves the target intact plus an
   *    inert `.staging-*` directory ([[recover]] sweeps those).
-  *  - Partition-granular commits swap only the affected partition
-  *    directories — the same copy-on-write granularity Iceberg uses for
-  *    non-deletion-vector tables.
+  *  - Partition-granular commits swap only the rewritten partition
+  *    directories, by the names Spark wrote them under — the same
+  *    copy-on-write granularity Iceberg uses for tables without
+  *    deletion vectors.
   */
 object StagedCommit {
 
@@ -55,10 +54,10 @@ object StagedCommit {
       if (had) fs.delete(old, true)
     }
 
-    /** Replace exactly the partition directories listed in `affected`
-      * (hive-encoded values, one map per partition). A staged dataset may
-      * legitimately contain NO rows for an affected partition (every row
-      * moved elsewhere) — that partition is deleted.
+    /** Replace the partition directories `touched` (paths relative to
+      * the target) and every directory the staged write produced, each
+      * by the name Spark wrote it under. A touched directory the staged
+      * data holds no rows for (every row moved elsewhere) is deleted.
       *
       * Atomicity is PER PARTITION, not table-level: each partition swap is
       * its own rename pair, so a crash mid-commit leaves some partitions
@@ -68,16 +67,12 @@ object StagedCommit {
       * a table-level atomic view should commit through [[graft.table.TxnLog]],
       * which publishes all partition dirs in one manifest.
       */
-    def commitPartitions(affected: Seq[Map[String, String]]): Unit = {
+    def commitPartitions(touched: Seq[String]): Unit = {
       require(partitionCols.nonEmpty, "commitPartitions needs partitionCols")
       val (fs, target) = fsFor(spark, targetPath)
       val staging = new Path(stagingPath)
-      affected.foreach { values =>
-        val rel = partitionCols.map { c =>
-          val v = values.getOrElse(c, null)
-          ExternalCatalogUtils.getPartitionPathString(c,
-            if (v == null) null else v)
-        }.mkString("/")
+      val staged = dataFiles(fs, staging).map(f => f.take(f.lastIndexOf('/')))
+      (touched ++ staged).distinct.foreach { rel =>
         val tgtPart = new Path(target, rel)
         val stgPart = new Path(staging, rel)
         val hasNew = fs.exists(stgPart)
@@ -138,18 +133,34 @@ object StagedCommit {
     staged.rows
   }
 
-  /** Stage + partition-granular commit; `affected` is the exact set of
-    * partitions being rewritten (including ones the staged data may have
-    * emptied). Returns the committed row count. */
+  /** Stage + partition-granular commit; `touched` are the partition
+    * directories being rewritten (including ones the staged data may
+    * have emptied). Returns the committed row count. */
   def overwritePartitions(
       df: DataFrame,
       targetPath: String,
       partitionCols: Seq[String],
-      affected: Seq[Map[String, String]],
+      touched: Seq[String],
       format: String = "parquet"): Long = {
     val staged = stage(df, targetPath, partitionCols, format)
-    staged.commitPartitions(affected)
+    staged.commitPartitions(touched)
     staged.rows
+  }
+
+  /** The data files under `root`, as paths relative to it, skipping
+    * every hidden name (`_`/`.` prefix) the way Spark's reader does. */
+  private[table] def dataFiles(fs: FileSystem, root: Path): Seq[String] = {
+    val prefix = fs.makeQualified(root).toString.stripSuffix("/") + "/"
+    val out = Seq.newBuilder[String]
+    if (fs.exists(root)) {
+      val it = fs.listFiles(root, true)
+      while (it.hasNext) {
+        val rel = it.next().getPath.toString.stripPrefix(prefix)
+        if (!rel.split('/').exists(n => n.startsWith("_") || n.startsWith(".")))
+          out += rel
+      }
+    }
+    out.result()
   }
 
   /** Sweep leftovers of crashed commits: beside `targetPath`, inert

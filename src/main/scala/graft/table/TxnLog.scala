@@ -3,9 +3,10 @@ package graft.table
 import java.util.UUID
 import java.util.concurrent.atomic.AtomicLong
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
 import org.apache.spark.sql.functions._
+import graft.io.TableFiles
 
 /** A minimal snapshot transaction log — the table-format layer the
   * reference gets from Delta/Iceberg (`s3/_read_deltalake.py:38-136`
@@ -27,13 +28,14 @@ import org.apache.spark.sql.functions._
   * partitioned table the entries are PARTITION-level directories
   * (`files/<uuid>/__pt_c=v`), so a snapshot is a set of immutable
   * partition dirs contributed by possibly many commits: MERGE rewrites
-  * only the partitions its source touches and carries every other
-  * partition's directory forward by reference — copy-on-write at
-  * partition granularity, the Iceberg model. Partition values are
-  * duplicated into hidden `__pt_*` path columns so the data files keep
-  * the real columns and leaf dirs read back standalone; the manifest
-  * itself carries the partition values, so reads prune partitions from
-  * metadata alone, with zero listing of pruned directories.
+  * only the partitions its source lands in or holds a matched key in,
+  * and carries every other partition's directory forward by reference
+  * — copy-on-write at partition granularity, the Iceberg model.
+  * Partition values are duplicated into hidden `__pt_*` path columns so
+  * the data files keep the real columns and leaf dirs read back
+  * standalone; the manifest itself carries the partition values, so
+  * reads prune partitions from metadata alone, with zero listing of
+  * pruned directories.
   *
   * Commit = exclusive-create of `v{N+1}`: two concurrent writers race on
   * the version number and exactly one wins; the loser re-resolves the
@@ -121,62 +123,59 @@ object TxnLog {
       expectedParent = Some(expectedVersion))
 
   /** MERGE (upsert by key) as a single snapshot: rows of the current
-    * snapshot not matched by `source` keys, plus `source`, with snapshot
-    * isolation (the read and the commit see one consistent version; a
-    * concurrent commit in between raises [[CommitConflict]] handled by
-    * retry).
+    * snapshot not matched by `source` keys, plus `source`, read and
+    * published at one pinned version ([[pinned]]).
     *
-    * On a partitioned table only the partitions present in `source` are
-    * read and rewritten; every untouched partition's directory is carried
-    * forward by reference — the merge costs O(touched partitions), not a
-    * full-table rewrite. */
+    * [[graft.io.TableFiles.planMerge]] plans the rewrite over the
+    * snapshot's data dirs. On a partitioned table the rewritten
+    * partitions are those `source` rows land in plus those holding a
+    * matched key, so a key whose partition value changed leaves its old
+    * partition; every other partition's directory is carried forward by
+    * reference. An unpartitioned table is rewritten whole. */
   def merge(
       spark: SparkSession,
       path: String,
       source: DataFrame,
-      keys: Seq[String]): Snapshot = {
-    var attempt = 0
+      keys: Seq[String]): Snapshot =
+    pinned(spark, path, "merge") { snap =>
+      val (_, root) = fsFor(spark, path)
+      val schema =
+        if (snap.dataDirs.isEmpty) source.schema
+        else readSnapshot(spark, path, snap).schema
+      def scan(dirs: Seq[String]): DataFrame =
+        if (dirs.isEmpty)
+          spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
+        else if (dirs.size == snap.dataDirs.size) readSnapshot(spark, path, snap)
+        else spark.read.schema(schema)
+          .parquet(dirs.map(d => new Path(root, d).toString): _*)
+      val (plan, merged) = TableFiles.planMerge(
+        TableFiles.Target[String](snap.dataDirs, scan,
+          snap.partitionCols.map(col), d => Some(partValuesOf(d))),
+        source.select(schema.fieldNames.map(col).toSeq: _*), keys,
+        matchNulls = false)
+      commitData(merged, path, "merge", snap.partitionCols,
+        base = Some(plan.kept), expectedParent = Some(snap.version))
+    }.getOrElse(throw new IllegalArgumentException(s"no table at $path"))
+
+  /** The one loop under every commit computed from a pinned snapshot
+    * (MERGE, index compaction, index folds): resolve the current
+    * snapshot, let `attempt` build the successor from it and publish
+    * with `expectedVersion`, and when a commit landed in between
+    * ([[CommitConflict]]) re-resolve and run `attempt` again, up to
+    * [[MaxRetries]] times. A losing attempt's data dirs are referenced
+    * by no manifest; [[vacuum]] reclaims them once they age past
+    * [[stagedGraceMs]]. None when `path` holds no table. */
+  private[graft] def pinned[T](spark: SparkSession, path: String, op: String)(
+      attempt: Snapshot => T): Option[T] = {
+    var conflicts = 0
     while (true) {
-      val snap = currentSnapshot(spark, path).getOrElse(
-        throw new IllegalArgumentException(s"no table at $path"))
-      val partCols = snap.partitionCols
-      try {
-        if (partCols.isEmpty) {
-          val target = readSnapshot(spark, path, snap)
-          val kept = target.join(
-            source.select(keys.map(col): _*).distinct(), keys, "left_anti")
-          val merged =
-            kept.unionByName(source.select(target.columns.map(col): _*))
-          return commitData(merged, path, "merge", Nil, base = Some(Nil),
-            expectedParent = Some(snap.version))
-        } else {
-          // partition-granular: source's distinct partition tuples are
-          // metadata-scale (same collect every dynamic-overwrite commit
-          // does); untouched dirs carry forward by reference
-          val touched: Set[List[Option[String]]] =
-            source.select(partCols.map(col): _*).distinct()
-              .collect()
-              .map(r => partCols.indices.toList
-                .map(i => Option(r.get(i)).map(_.toString)))
-              .toSet
-          val (touchedDirs, carried) = snap.dataDirs.partition(d =>
-            touched.contains(partValuesOf(d)))
-          val merged =
-            if (touchedDirs.isEmpty) source
-            else {
-              val (_, root) = fsFor(spark, path)
-              val target = spark.read.parquet(
-                touchedDirs.map(d => new Path(root, d).toString): _*)
-              target.join(
-                  source.select(keys.map(col): _*).distinct(), keys,
-                  "left_anti")
-                .unionByName(source.select(target.columns.map(col): _*))
-            }
-          return commitData(merged, path, "merge", partCols,
-            base = Some(carried), expectedParent = Some(snap.version))
-        }
-      } catch {
-        case _: CommitConflict if attempt < MaxRetries => attempt += 1
+      val snap = currentSnapshot(spark, path).getOrElse(return None)
+      try return Some(attempt(snap))
+      catch {
+        case _: CommitConflict if conflicts < MaxRetries => conflicts += 1
+        case e: CommitConflict =>
+          throw new IllegalStateException(s"$op at $path lost the commit " +
+            s"race ${conflicts + 1} times; pause concurrent writers and re-run", e)
       }
     }
     throw new IllegalStateException("unreachable")
@@ -269,7 +268,7 @@ object TxnLog {
       val (current, claimed) = logState(fs, root)
       // Legacy-layout guard: starting a FRESH log in a directory that
       // already holds data (raw parquet written before this path was a
-      // TxnLog table — e.g. a pre-round-14 dedup index) would publish a
+      // TxnLog table — e.g. an unversioned dedup index) would publish a
       // v1 that silently shadows every pre-existing row for all TxnLog
       // readers. Read paths fall back loudly or resolve the raw layout;
       // the write path must not orphan it quietly. All legitimate
@@ -289,7 +288,7 @@ object TxnLog {
       expectedParent.foreach { p =>
         if (current.map(_.version).getOrElse(0) != p)
           throw new CommitConflict(
-            s"table advanced past v$p; merge must re-resolve")
+            s"table advanced past v$p; re-resolve and retry")
       }
       val version = math.max(current.map(_.version).getOrElse(0),
         claimed) + 1

@@ -5,12 +5,15 @@ import java.sql.Timestamp
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
-import graft.io.{DeltaLogReader, DeltaLogWriter, IcebergReader, IcebergWriter}
+import graft.io.{DatasetWriter, DeltaLogReader, DeltaLogWriter, IcebergReader,
+  IcebergWriter}
+import graft.table.{MergeOps, TxnLog}
 
 /** Partition values whose hive directory names need escaping (a space,
   * `:`, `%`) or whose string rendering differs between the JVM and
   * Spark (a timestamp) survive write, read, MERGE and delete-matched on
-  * both real table formats. Each table holds the tricky value and one
+  * both real table formats, the plain partitioned dataset and the
+  * snapshot log (merge only). Each table holds the tricky value and one
   * plain neighbour partition, so the partition-granular rewrite paths
   * must both find the tricky value's files and carry the neighbour's. */
 class PartitionValuePathSpec extends AnyFunSuite {
@@ -21,14 +24,22 @@ class PartitionValuePathSpec extends AnyFunSuite {
     def write(df: DataFrame, dir: String): Unit
     def read(dir: String): DataFrame
     def merge(dir: String, src: DataFrame): Unit
+  }
+
+  /** A format with a delete-matched path. */
+  private trait DmlFormat extends Format {
     def deleteMatched(dir: String, keys: DataFrame): Unit
+  }
+
+  /** A format with a file-level snapshot and an orphan-file sweep. */
+  private trait TableFormat extends DmlFormat {
     /** The current snapshot's data file paths. */
     def files(dir: String): Seq[String]
     /** Vacuum or expire with zero retention; the deleted paths. */
     def sweep(dir: String): Seq[String]
   }
 
-  private object Delta extends Format {
+  private object Delta extends TableFormat {
     val name = "delta"
     def write(df: DataFrame, dir: String): Unit =
       DeltaLogWriter.write(df, dir, partitionBy = Seq("p"))
@@ -43,7 +54,7 @@ class PartitionValuePathSpec extends AnyFunSuite {
       DeltaLogWriter.vacuum(spark, dir, retentionMs = 0L)
   }
 
-  private object Iceberg extends Format {
+  private object Iceberg extends TableFormat {
     val name = "iceberg"
     def write(df: DataFrame, dir: String): Unit =
       IcebergWriter.write(df, dir, partitionBy = Seq("p"))
@@ -58,6 +69,31 @@ class PartitionValuePathSpec extends AnyFunSuite {
       IcebergWriter.expireSnapshots(spark, dir, retentionMs = 0L)
   }
 
+  /** A hive-partitioned Parquet dataset under [[MergeOps]]. */
+  private object Dataset extends DmlFormat {
+    val name = "dataset"
+    def write(df: DataFrame, dir: String): Unit =
+      DatasetWriter.toParquet(df, dir, mode = DatasetWriter.Overwrite,
+        partitionCols = Seq("p"))
+    def read(dir: String): DataFrame =
+      spark.read.option("basePath", dir).parquet(dir)
+    def merge(dir: String, src: DataFrame): Unit =
+      MergeOps.upsert(spark, dir, src, keys = Seq("id"),
+        partitionCols = Seq("p"))
+    def deleteMatched(dir: String, keys: DataFrame): Unit =
+      MergeOps.deleteMatched(spark, dir, keys, Seq("id"),
+        partitionCols = Seq("p"))
+  }
+
+  private object Txn extends Format {
+    val name = "txnlog"
+    def write(df: DataFrame, dir: String): Unit =
+      TxnLog.create(df, dir, partitionBy = Seq("p"))
+    def read(dir: String): DataFrame = TxnLog.read(spark, dir)
+    def merge(dir: String, src: DataFrame): Unit =
+      TxnLog.merge(spark, dir, src, keys = Seq("id"))
+  }
+
   private def frame(pType: DataType, rows: Seq[(Long, Any, String)]): DataFrame =
     spark.createDataFrame(
       spark.sparkContext.parallelize(rows.map { case (i, p, v) => Row(i, p, v) }, 2),
@@ -70,38 +106,88 @@ class PartitionValuePathSpec extends AnyFunSuite {
       .map(r => (r.getLong(0), String.valueOf(r.get(1)), r.getString(2)))
       .sortBy(r => (r._1, r._3))
 
-  private def roundTrip(fmt: Format, pType: DataType, value: Any,
-      neighbour: Any): Unit = {
+  private def expect(rows: (Long, Any, String)*): Seq[(Long, String, String)] =
+    rows.map { case (i, p, v) => (i, String.valueOf(p), v) }
+      .sortBy(r => (r._1, r._3))
+
+  /** A table holding keys 1 and 2 in partition `value` and key 3 in
+    * `neighbour`. */
+  private def seeded(fmt: Format, pType: DataType, value: Any,
+      neighbour: Any): String = {
     val dir = Files.createTempDirectory(s"graft-ppath-${fmt.name}").toString + "/t"
-    def expect(rows: (Long, Any, String)*): Seq[(Long, String, String)] =
-      rows.map { case (i, p, v) => (i, String.valueOf(p), v) }
-        .sortBy(r => (r._1, r._3))
     fmt.write(frame(pType,
       Seq((1L, value, "a"), (2L, value, "b"), (3L, neighbour, "c"))), dir)
     assert(rowsOf(fmt.read(dir)) ==
       expect((1L, value, "a"), (2L, value, "b"), (3L, neighbour, "c")),
       "write then read")
+    dir
+  }
+
+  private def roundTrip(fmt: Format, pType: DataType, value: Any,
+      neighbour: Any): Unit = {
+    val dir = seeded(fmt, pType, value, neighbour)
     fmt.merge(dir, frame(pType, Seq((1L, value, "a2"), (4L, value, "d"))))
     assert(rowsOf(fmt.read(dir)) == expect((1L, value, "a2"),
       (2L, value, "b"), (3L, neighbour, "c"), (4L, value, "d")),
       "merge updates the matched row once and inserts the new one")
-    fmt.deleteMatched(dir, frame(pType, Seq((2L, value, "b"))).select("id"))
-    assert(rowsOf(fmt.read(dir)) == expect((1L, value, "a2"),
-      (3L, neighbour, "c"), (4L, value, "d")),
-      "delete-matched removes only the matched key")
+    fmt match {
+      case dml: DmlFormat =>
+        dml.deleteMatched(dir, frame(pType, Seq((2L, value, "b"))).select("id"))
+        assert(rowsOf(fmt.read(dir)) == expect((1L, value, "a2"),
+          (3L, neighbour, "c"), (4L, value, "d")),
+          "delete-matched removes only the matched key")
+      case _ =>
+    }
   }
 
   private val stringValues = Seq("plain", "a b", "a:b", "50%")
+  private val timestamps = (Timestamp.valueOf("2024-03-01 10:00:00"),
+    Timestamp.valueOf("2024-03-02 00:00:00"))
 
-  for (fmt <- Seq(Delta, Iceberg); v <- stringValues)
+  for (fmt <- Seq(Delta, Iceberg, Dataset); v <- stringValues)
     test(s"${fmt.name}: partition value '$v' survives write, read, merge, delete") {
       roundTrip(fmt, StringType, v, "other")
     }
 
-  for (fmt <- Seq(Delta, Iceberg))
+  for (fmt <- Seq(Delta, Iceberg, Dataset))
     test(s"${fmt.name}: a timestamp partition survives write, read, merge, delete") {
-      roundTrip(fmt, TimestampType, Timestamp.valueOf("2024-03-01 10:00:00"),
-        Timestamp.valueOf("2024-03-02 00:00:00"))
+      roundTrip(fmt, TimestampType, timestamps._1, timestamps._2)
+    }
+
+  for (v <- stringValues)
+    test(s"txnlog: partition value '$v' survives write, read, merge") {
+      roundTrip(Txn, StringType, v, "other")
+    }
+
+  test("txnlog: a timestamp partition survives write, read, merge") {
+    roundTrip(Txn, TimestampType, timestamps._1, timestamps._2)
+  }
+
+  private val kinds = Seq(
+    ("string", StringType, "a:b", "other"),
+    ("timestamp", TimestampType, timestamps._1, timestamps._2))
+
+  /** MERGE replaces a matched row wherever it lives: a key whose
+    * partition value changes leaves its old partition. */
+  for (fmt <- Seq(Delta, Iceberg, Dataset, Txn);
+       (kind, pType, value, neighbour) <- kinds)
+    test(s"${fmt.name}: merge moves a key from a $kind partition into its " +
+        "neighbour") {
+      val dir = seeded(fmt, pType, value, neighbour)
+      fmt.merge(dir, frame(pType, Seq((1L, neighbour, "a2"))))
+      assert(rowsOf(fmt.read(dir)) == expect((1L, neighbour, "a2"),
+        (2L, value, "b"), (3L, neighbour, "c")),
+        "the moved key is in the neighbour partition only")
+    }
+
+  /** Delete-matched on a freshly written table, no MERGE before it. */
+  for (fmt <- Seq[DmlFormat](Delta, Iceberg, Dataset);
+       (kind, pType, value, neighbour) <- kinds)
+    test(s"${fmt.name}: delete-matched in a $kind partition keeps the rest") {
+      val dir = seeded(fmt, pType, value, neighbour)
+      fmt.deleteMatched(dir, frame(pType, Seq((2L, value, "b"))).select("id"))
+      assert(rowsOf(fmt.read(dir)) == expect((1L, value, "a"),
+        (3L, neighbour, "c")), "only the matched key is gone")
     }
 
   /** A row-level DELETE in the tricky partition records its data file
@@ -131,7 +217,7 @@ class PartitionValuePathSpec extends AnyFunSuite {
     * a MERGE into the `50%` partition deletes exactly the data file the
     * MERGE replaced: every live file, escaped directory name and all,
     * survives. */
-  for (fmt <- Seq(Delta, Iceberg))
+  for (fmt <- Seq[TableFormat](Delta, Iceberg))
     test(s"${fmt.name}: a zero-retention sweep after a merge keeps every " +
         "live file in partition '50%'") {
       val dir = Files.createTempDirectory("graft-ppath-sweep").toString + "/t"
