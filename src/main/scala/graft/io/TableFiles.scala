@@ -299,6 +299,20 @@ private[graft] object TableFiles {
   final case class Target[F](files: Seq[F], scan: Seq[F] => DataFrame,
       parts: Seq[Column], tupleOf: F => Option[Tuple])
 
+  /** A [[Target]] scan over `files` (paths relative to `root`) of the
+    * table `whole` reads: no files read as an empty frame in `whole`'s
+    * schema, every file as `whole` itself, and a proper subset as a
+    * Parquet read pinned to that schema, with reader `options`. */
+  def subsetScan(whole: DataFrame, root: Path, files: Seq[String],
+      options: Map[String, String] = Map.empty)(sub: Seq[String]): DataFrame = {
+    val spark = whole.sparkSession
+    if (sub.isEmpty)
+      spark.createDataFrame(spark.sparkContext.emptyRDD[Row], whole.schema)
+    else if (sub.size == files.size) whole
+    else spark.read.schema(whole.schema).options(options)
+      .parquet(sub.map(f => new Path(root, f).toString): _*)
+  }
+
   /** Partition-granular plan: a file is touched when its partition
     * tuple is one `changed` produces; an unpartitioned table is touched
     * whole. */

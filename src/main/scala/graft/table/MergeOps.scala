@@ -1,7 +1,7 @@
 package graft.table
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.io.TableFiles
@@ -22,30 +22,31 @@ import graft.io.TableFiles
   * partition value changed leaves its old partition; the commit swaps
   * those directories and the staged ones by name. Without partition
   * columns the dataset is rewritten whole. The merge plan streams from
-  * the current files into the staging write; nothing is materialized on
-  * the driver beyond the distinct touched partition tuples.
+  * the current files into the staging write; the driver holds only the
+  * partitioned dataset's file list and the distinct touched partition
+  * tuples.
   */
 object MergeOps {
 
-  /** The dataset at `targetPath` as a rewrite target over its data
-    * files (paths relative to the root), plus the whole-dataset scan. A
-    * file subset reads in the whole dataset's schema. */
+  /** The dataset at `targetPath` as a rewrite target, plus the
+    * whole-dataset scan. A partitioned dataset's target is its data files
+    * (paths relative to the root), each file's tuple parsed from its
+    * directory names. An unpartitioned one is rewritten whole, so it
+    * lists no files and its scan is the whole dataset. */
   private def target(spark: SparkSession, targetPath: String,
       partitionCols: Seq[String]): (TableFiles.Target[String], DataFrame) = {
     val whole = spark.read.option("basePath", targetPath).parquet(targetPath)
+    if (partitionCols.isEmpty)
+      return (TableFiles.Target[String](Nil, _ => whole, Nil, _ => None), whole)
     val root = new Path(targetPath)
     val files = StagedCommit.dataFiles(
       root.getFileSystem(spark.sparkContext.hadoopConfiguration), root)
-    def scan(sub: Seq[String]): DataFrame =
-      if (sub.size == files.size) whole
-      else if (sub.isEmpty)
-        spark.createDataFrame(spark.sparkContext.emptyRDD[Row], whole.schema)
-      else spark.read.schema(whole.schema).option("basePath", targetPath)
-        .parquet(sub.map(f => new Path(root, f).toString): _*)
-    (TableFiles.Target(files, scan, partitionCols.map(col), f => {
-      val values = TableFiles.partitionValuesOf(f)
-      Some(partitionCols.map(c => values.get(c).flatten))
-    }), whole)
+    (TableFiles.Target(files,
+      TableFiles.subsetScan(whole, root, files, Map("basePath" -> targetPath)),
+      partitionCols.map(col), f => {
+        val values = TableFiles.partitionValuesOf(f)
+        Some(partitionCols.map(c => values.get(c).flatten))
+      }), whole)
   }
 
   /** Commit `rewritten` over the planned rewrite: a whole swap without

@@ -148,7 +148,7 @@ object StagedCommit {
   }
 
   /** The data files under `root`, as paths relative to it, skipping
-    * every hidden name (`_`/`.` prefix) the way Spark's reader does. */
+    * the names Spark's reader skips ([[hidden]]). */
   private[table] def dataFiles(fs: FileSystem, root: Path): Seq[String] = {
     val prefix = fs.makeQualified(root).toString.stripSuffix("/") + "/"
     val out = Seq.newBuilder[String]
@@ -156,12 +156,19 @@ object StagedCommit {
       val it = fs.listFiles(root, true)
       while (it.hasNext) {
         val rel = it.next().getPath.toString.stripPrefix(prefix)
-        if (!rel.split('/').exists(n => n.startsWith("_") || n.startsWith(".")))
-          out += rel
+        if (!rel.split('/').exists(hidden)) out += rel
       }
     }
     out.result()
   }
+
+  /** Whether Spark's file reader skips a path segment named `n`: a `.`
+    * name, a `_` name that is not a `k=v` partition directory (so
+    * `_SUCCESS` is hidden and `_p=1` is not), or an in-flight
+    * `._COPYING_` upload. */
+  private def hidden(n: String): Boolean =
+    n.startsWith(".") || (n.startsWith("_") && !n.contains("=")) ||
+      n.endsWith("._COPYING_")
 
   /** Sweep leftovers of crashed commits: beside `targetPath`, inert
     * `.staging-*` dirs are deleted and a table-level `.old-*` dir with no
@@ -207,8 +214,7 @@ object StagedCommit {
           if (!fs.exists(live)) fs.rename(st.getPath, live)
           else fs.delete(st.getPath, true)
           handled += 1
-        case n if !n.startsWith(".") && !n.startsWith("_") =>
-          handled += recoverTree(fs, st.getPath)
+        case n if !hidden(n) => handled += recoverTree(fs, st.getPath)
         case _ => () // other hidden/metadata dirs are not ours to touch
       }
     }

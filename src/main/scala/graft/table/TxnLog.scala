@@ -3,7 +3,7 @@ package graft.table
 import java.util.UUID
 import java.util.concurrent.atomic.AtomicLong
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
 import org.apache.spark.sql.functions._
 import graft.io.TableFiles
@@ -139,19 +139,14 @@ object TxnLog {
       keys: Seq[String]): Snapshot =
     pinned(spark, path, "merge") { snap =>
       val (_, root) = fsFor(spark, path)
-      val schema =
-        if (snap.dataDirs.isEmpty) source.schema
-        else readSnapshot(spark, path, snap).schema
-      def scan(dirs: Seq[String]): DataFrame =
-        if (dirs.isEmpty)
-          spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
-        else if (dirs.size == snap.dataDirs.size) readSnapshot(spark, path, snap)
-        else spark.read.schema(schema)
-          .parquet(dirs.map(d => new Path(root, d).toString): _*)
+      val whole =
+        if (snap.dataDirs.isEmpty) source.limit(0)
+        else readSnapshot(spark, path, snap)
       val (plan, merged) = TableFiles.planMerge(
-        TableFiles.Target[String](snap.dataDirs, scan,
+        TableFiles.Target[String](snap.dataDirs,
+          TableFiles.subsetScan(whole, root, snap.dataDirs),
           snap.partitionCols.map(col), d => Some(partValuesOf(d))),
-        source.select(schema.fieldNames.map(col).toSeq: _*), keys,
+        source.select(whole.columns.map(col).toSeq: _*), keys,
         matchNulls = false)
       commitData(merged, path, "merge", snap.partitionCols,
         base = Some(plan.kept), expectedParent = Some(snap.version))

@@ -69,21 +69,28 @@ class PartitionValuePathSpec extends AnyFunSuite {
       IcebergWriter.expireSnapshots(spark, dir, retentionMs = 0L)
   }
 
-  /** A hive-partitioned Parquet dataset under [[MergeOps]]. */
-  private object Dataset extends DmlFormat {
-    val name = "dataset"
+  /** A hive-partitioned Parquet dataset under [[MergeOps]], its `p`
+    * column stored as partition column `part`. */
+  private final class Dataset(part: String) extends DmlFormat {
+    val name = if (part == "p") "dataset" else s"dataset by $part"
+    private def stored(df: DataFrame): DataFrame = df.withColumnRenamed("p", part)
     def write(df: DataFrame, dir: String): Unit =
-      DatasetWriter.toParquet(df, dir, mode = DatasetWriter.Overwrite,
-        partitionCols = Seq("p"))
+      DatasetWriter.toParquet(stored(df), dir, mode = DatasetWriter.Overwrite,
+        partitionCols = Seq(part))
     def read(dir: String): DataFrame =
-      spark.read.option("basePath", dir).parquet(dir)
+      spark.read.option("basePath", dir).parquet(dir).withColumnRenamed(part, "p")
     def merge(dir: String, src: DataFrame): Unit =
-      MergeOps.upsert(spark, dir, src, keys = Seq("id"),
-        partitionCols = Seq("p"))
+      MergeOps.upsert(spark, dir, stored(src), keys = Seq("id"),
+        partitionCols = Seq(part))
     def deleteMatched(dir: String, keys: DataFrame): Unit =
       MergeOps.deleteMatched(spark, dir, keys, Seq("id"),
-        partitionCols = Seq("p"))
+        partitionCols = Seq(part))
   }
+
+  private val Dataset = new Dataset("p")
+  /** Spark reads a `_`-prefixed `k=v` directory as a partition, so the
+    * dataset DML must find and swap `_p=…` directories too. */
+  private val UnderscoreDataset = new Dataset("_p")
 
   private object Txn extends Format {
     val name = "txnlog"
@@ -144,12 +151,12 @@ class PartitionValuePathSpec extends AnyFunSuite {
   private val timestamps = (Timestamp.valueOf("2024-03-01 10:00:00"),
     Timestamp.valueOf("2024-03-02 00:00:00"))
 
-  for (fmt <- Seq(Delta, Iceberg, Dataset); v <- stringValues)
+  for (fmt <- Seq(Delta, Iceberg, Dataset, UnderscoreDataset); v <- stringValues)
     test(s"${fmt.name}: partition value '$v' survives write, read, merge, delete") {
       roundTrip(fmt, StringType, v, "other")
     }
 
-  for (fmt <- Seq(Delta, Iceberg, Dataset))
+  for (fmt <- Seq(Delta, Iceberg, Dataset, UnderscoreDataset))
     test(s"${fmt.name}: a timestamp partition survives write, read, merge, delete") {
       roundTrip(fmt, TimestampType, timestamps._1, timestamps._2)
     }
@@ -169,7 +176,7 @@ class PartitionValuePathSpec extends AnyFunSuite {
 
   /** MERGE replaces a matched row wherever it lives: a key whose
     * partition value changes leaves its old partition. */
-  for (fmt <- Seq(Delta, Iceberg, Dataset, Txn);
+  for (fmt <- Seq(Delta, Iceberg, Dataset, UnderscoreDataset, Txn);
        (kind, pType, value, neighbour) <- kinds)
     test(s"${fmt.name}: merge moves a key from a $kind partition into its " +
         "neighbour") {
@@ -181,7 +188,7 @@ class PartitionValuePathSpec extends AnyFunSuite {
     }
 
   /** Delete-matched on a freshly written table, no MERGE before it. */
-  for (fmt <- Seq[DmlFormat](Delta, Iceberg, Dataset);
+  for (fmt <- Seq[DmlFormat](Delta, Iceberg, Dataset, UnderscoreDataset);
        (kind, pType, value, neighbour) <- kinds)
     test(s"${fmt.name}: delete-matched in a $kind partition keeps the rest") {
       val dir = seeded(fmt, pType, value, neighbour)
