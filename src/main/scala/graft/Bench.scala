@@ -23,6 +23,23 @@ import graft.io.DatasetWriter
   * map-shaped ones pay their real cost.
   */
 object Bench {
+  /** Comma-separated entry-name prefixes in environment variable `v`;
+    * empty when it is unset. */
+  private def prefixes(v: String): Seq[String] = sys.env.get(v)
+    .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq).getOrElse(Nil)
+
+  /** Whether entry `name` runs in this sweep. `SPARK_GRAFT_ONLY`
+    * restricts a sweep to names with one of its prefixes (the sf10 scale
+    * run measures only the flagship paths); `SPARK_GRAFT_SKIP` leaves
+    * out names with one of its prefixes (the sf1 scale run excludes the
+    * documented dup-density-quadratic pair-enumeration family). The one
+    * entry filter of [[Bench]] and [[ScaleProbe]]. */
+  private[graft] def wanted(name: String): Boolean = {
+    val only = prefixes("SPARK_GRAFT_ONLY")
+    (only.isEmpty || only.exists(name.startsWith)) &&
+      !prefixes("SPARK_GRAFT_SKIP").exists(name.startsWith)
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
@@ -139,21 +156,9 @@ object Bench {
     probe(minOfTwo = true)
     val calibStart = calibSamples.head
 
-    // SPARK_GRAFT_SKIP: comma-separated name prefixes to leave out of a
-    // sweep (used by the sf1 scale run to exclude the documented
-    // dup-density-quadratic pair-enumeration family — the skip list is
-    // recorded in the output JSON, never silent)
-    val skip = sys.env.get("SPARK_GRAFT_SKIP")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq).getOrElse(Nil)
-    // SPARK_GRAFT_ONLY: comma-separated name prefixes to RESTRICT a
-    // sweep to (used by the sf10 scale run, where only the flagship
-    // paths are measured — the restriction is recorded in the output
-    // JSON, never silent)
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq).getOrElse(Nil)
-    def wanted(name: String): Boolean =
-      (only.isEmpty || only.exists(name.startsWith)) &&
-        !skip.exists(name.startsWith)
+    // both lists are recorded in the output JSON, never silent
+    val skip = prefixes("SPARK_GRAFT_SKIP")
+    val only = prefixes("SPARK_GRAFT_ONLY")
     val sweptQueries = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (name, _) => wanted(name) }
     // per-entry bracketing probe indices, for the burst re-run pass:

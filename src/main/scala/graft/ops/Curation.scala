@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
@@ -27,11 +27,20 @@ object Curation {
   /** Non-empty whitespace tokens of the `text` column — THE tokenizer
     * shared by every token-counting operator ([[gopherRules]],
     * [[perplexityBuckets]], [[Dedup.substrDedup]]); its DuckDB twin is
-    * `list_filter(string_split(text, ' '), t -> length(t) > 0)`. One
-    * definition, so a tokenization tweak cannot silently diverge the
-    * operators from each other. */
-  private[ops] def words =
-    expr("filter(split(text, ' '), t -> length(t) > 0)")
+    * `list_filter(string_split(text, ' '), t -> length(t) > 0)`, and
+    * its Spark form the `toks` field of the native
+    * [[graft.expr.GopherStats]] kernel (equal to
+    * `filter(split(text, ' '), t -> length(t) > 0)`, whose lambda runs
+    * interpreted). One definition, so a tokenization tweak cannot
+    * silently diverge the operators from each other. */
+  private[ops] def words: Column =
+    native(graft.expr.GopherStats(_, Nil, 0, 0)).getField("toks")
+
+  /** A native [[graft.expr]] kernel over the `text` column. */
+  private def native(k: org.apache.spark.sql.catalyst.expressions.Expression
+      => org.apache.spark.sql.catalyst.expressions.Expression): Column =
+    org.apache.spark.sql.GraftBridge.column(
+      k(org.apache.spark.sql.GraftBridge.expr(col("text"))))
 
   /** The CCNet head/tail mean-log-prob cutoffs — ONE definition (r17,
     * advice fix): [[perplexityBucketsOn]]'s defaults,
@@ -97,37 +106,25 @@ object Curation {
     ws.map(w => s"'$w'").mkString(", ")
   }
 
-  /** The per-doc statistic columns the rules read, appended to the
-    * input frame (ONE definition of each formula, shared by the stats
-    * view and the filtering gate). */
-  private def gopherStats(docs: DataFrame,
-      stopWords: Seq[String]): DataFrame =
-    docs
-      .withColumn("toks", words)
-      .withColumn("n_words", size(col("toks")).cast("bigint"))
-      .withColumn("sum_word_len",
-        expr("aggregate(toks, 0L, (a, t) -> a + length(t))"))
-      .withColumn("n_alpha_words",
-        expr("cast(size(filter(toks, t -> t rlike '[A-Za-z]')) as bigint)"))
-      .withColumn("n_stopwords",
-        expr(s"""cast(size(array_intersect(array_distinct(toks),
-                |  array(${sqlList(stopWords)})))
-                |  as bigint)""".stripMargin))
-      // '#', the ASCII '...', AND the single-char U+2026 ellipsis —
-      // the common form in real web text
-      .withColumn("n_symbols",
-        expr("""cast((length(text) - length(replace(text, '#', ''))) +
-               |  (length(text) - length(replace(text, '...', ''))) div 3 +
-               |  (length(text) - length(replace(text, '…', '')))
-               |  as bigint)""".stripMargin))
+  /** The per-doc statistic columns the rules read, and the `keep`
+    * verdict, as one struct column: ONE native pass
+    * ([[graft.expr.GopherStats]]) computes the tokens, every statistic
+    * and the verdict, shared by the stats view and the filtering gate.
+    * Its reference is the interpreted chain `toks = words`,
+    * `size(toks)`, `aggregate(toks, 0L, (a, t) -> a + length(t))`,
+    * `size(filter(toks, t -> t rlike '[A-Za-z]'))`,
+    * `size(array_intersect(array_distinct(toks), array(stops)))` and the
+    * `length(text) - length(replace(text, s, ''))` symbol counts ('#',
+    * the ASCII '...', AND the single-char U+2026 ellipsis — the common
+    * form in real web text) that [[gopherSqlCtes]] still spells out for
+    * DuckDB; CurationSpec pins the two equal. */
+  private def gopherStats(stopWords: Seq[String], minWords: Int,
+      maxWords: Int): Column = {
+    sqlList(stopWords) // same stop-word contract as the oracle's
+    native(graft.expr.GopherStats(_, stopWords, minWords, maxWords))
+  }
 
-  private def gopherKeep(minWords: Int, maxWords: Int) =
-    col("n_words") >= minWords && col("n_words") <= maxWords &&
-      lit(3) * col("n_words") <= col("sum_word_len") &&
-      col("sum_word_len") <= lit(10) * col("n_words") &&
-      lit(10) * col("n_symbols") <= col("n_words") &&
-      lit(10) * col("n_alpha_words") >= lit(8) * col("n_words") &&
-      col("n_stopwords") >= 2
+  private val GopherStruct = "__gopher"
 
   /** The rule set over an explicit (doc_id, text) frame — the
     * [[Dedup.segmentDedupPass]] pattern, shared by [[gopherRules]] and
@@ -135,29 +132,28 @@ object Curation {
   private[graft] def gopherRulesOn(docs: DataFrame,
       minWords: Int = 50, maxWords: Int = 100000,
       stopWords: Seq[String] = GopherStopWords): DataFrame =
-    gopherStats(docs, stopWords)
-      .select(col("doc_id"), col("n_words"), col("sum_word_len"),
-        col("n_alpha_words"), col("n_stopwords"), col("n_symbols"),
-        gopherKeep(minWords, maxWords).as("keep"))
+    docs.select(col("doc_id"),
+        gopherStats(stopWords, minWords, maxWords).as(GopherStruct))
+      .select(col("doc_id") +: graft.expr.GopherStatsImpl.Fields.tail.map(f =>
+        col(s"$GopherStruct.$f").as(f)): _*)
 
   /** The same rules as a FILTER: input rows that pass, original
     * columns untouched — the map-side gate
     * [[curatePipelineModern]] fuses into its scan. Public (r16): the
     * gate a caller plugs into streaming ingestion
-    * ([[graft.streaming.EventStream.curationIngestV3]]'s `gate`). */
+    * ([[graft.streaming.EventStream.curationIngestV3]]'s `gate`). The
+    * filter reads the kernel's `keep` field, so the whole gate is one
+    * codegen'd scan → filter with one kernel call per row. */
   def gopherGate(docs: DataFrame,
       minWords: Int = 50, maxWords: Int = 100000,
       stopWords: Seq[String] = GopherStopWords): DataFrame = {
-    // withColumn REPLACES same-named input columns — an input already
-    // carrying a stat name would silently get the gate's recomputed
-    // value back instead of its own data
-    val statNames = Set("toks", "n_words", "sum_word_len",
-      "n_alpha_words", "n_stopwords", "n_symbols")
-    val clash = docs.columns.filter(statNames)
-    require(clash.isEmpty,
-      s"gopherGate input must not carry stat columns: ${clash.mkString(", ")}")
+    // withColumn REPLACES a same-named input column, which the final
+    // select would then hand back in place of the input's own data
+    require(!docs.columns.contains(GopherStruct),
+      s"gopherGate input must not carry a $GopherStruct column")
     val orig = docs.columns.map(col).toSeq
-    gopherStats(docs, stopWords).filter(gopherKeep(minWords, maxWords))
+    docs.withColumn(GopherStruct, gopherStats(stopWords, minWords, maxWords))
+      .filter(col(s"$GopherStruct.keep"))
       .select(orig: _*)
   }
 
@@ -532,10 +528,10 @@ object Curation {
   private[graft] def gopherRepetitionOn(docs: DataFrame,
       prefixDerivation: Boolean = true): DataFrame = {
     val base = docs
-      .withColumn("toks", words)
-      .select(col("doc_id"), col("toks"),
-        expr("cast(aggregate(toks, 0, (a, t) -> a + length(t)) as bigint)")
-          .as("den"))
+      .withColumn(GopherStruct,
+        native(graft.expr.GopherStats(_, Nil, 0, Int.MaxValue)))
+      .select(col("doc_id"), col(s"$GopherStruct.toks").as("toks"),
+        col(s"$GopherStruct.sum_word_len").as("den"))
     // ONE window-level aggregation (on the RAW gram string) feeds both
     // the top and dup paths. (Round-13 correction: Spark does NOT
     // reuse the exchange here — the branch filters push through the

@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
+import graft.session.Jobs
 
 /** Near-duplicate detection for training-data pipelines: character-n-gram
   * Jaccard, MinHash + LSH banding, and SimHash. These are the extension
@@ -250,7 +251,9 @@ object Dedup {
     */
   def minhashLsh(s: SparkSession, dir: String): DataFrame = {
     graft.expr.ArrayMatchCount.register(s)
-    val sig = withToks(Tables.documents(s, dir))
+    // the signature is the operator's CPU-bound stage, and a one-file
+    // corpus would run it as one task: spread it over every core
+    val sig = withToks(Jobs.spread(Tables.documents(s, dir)))
       .select(col("doc_id"), minhashSig.as("sig"))
     val bandKeys = expr(
       s"""transform(sequence(0, ${BANDS - 1}),
@@ -1240,7 +1243,8 @@ object Dedup {
   def minhashFastVerified(s: SparkSession, dir: String): DataFrame = {
     graft.expr.MinHashSigs.register(s)
     val k = 32; val bands = 4; val rows = k / bands
-    val sig0 = withToks(Tables.documents(s, dir))
+    // one task per core for the signatures, as in minhashLsh
+    val sig0 = withToks(Jobs.spread(Tables.documents(s, dir)))
       .select(col("doc_id"),
         call_function("minhash_sigs", col("__toks"), lit(k)).as("sig"))
     val sig = sig0.persist(org.apache.spark.storage.StorageLevel.DISK_ONLY)

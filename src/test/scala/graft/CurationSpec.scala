@@ -285,4 +285,118 @@ class CurationSpec extends AnyFunSuite {
       .collect().map(_.toString).sorted.toSeq
     assert(a == b)
   }
+
+  /** The interpreted chain the native Gopher kernel replaced, kept as
+    * its reference: one column per [[graft.expr.GopherStatsImpl.Fields]]
+    * entry, over `text`. */
+  private def referenceGopherStats(stops: Seq[String]) = {
+    val toks = "filter(split(text, ' '), t -> length(t) > 0)"
+    Seq(
+      expr(toks),
+      expr(s"size($toks)").cast("bigint"),
+      expr(s"aggregate($toks, 0L, (a, t) -> a + length(t))"),
+      expr(s"cast(size(filter($toks, t -> t rlike '[A-Za-z]')) as bigint)"),
+      expr(s"""cast(size(array_intersect(array_distinct($toks),
+              |  array(${stops.map(w => s"'$w'").mkString(", ")}))) as bigint)"""
+        .stripMargin),
+      expr("""cast((length(text) - length(replace(text, '#', ''))) +
+             |  (length(text) - length(replace(text, '...', ''))) div 3 +
+             |  (length(text) - length(replace(text, '…', ''))) as bigint)"""
+        .stripMargin))
+  }
+
+  /** Rows of `texts` where the native tokens, any statistic or the
+    * verdict differ from the reference chain (`<=>`, so NULLs must
+    * agree too). */
+  private def kernelMismatches(texts: org.apache.spark.sql.DataFrame,
+      stops: Seq[String], minWords: Int = 50,
+      maxWords: Int = 100000): Array[org.apache.spark.sql.Row] = {
+    import org.apache.spark.sql.GraftBridge.{column, expr => catalyst}
+    val fields = graft.expr.GopherStatsImpl.Fields
+    val k = column(graft.expr.GopherStats(catalyst(col("text")), stops,
+      minWords, maxWords))
+    // the token-only form `Curation.words` reads, with no stop words
+    val w = column(graft.expr.GopherStats(catalyst(col("text")), Nil, 0, 0))
+      .getField("toks")
+    def r(f: String) = col(s"ref_$f")
+    val refKeep = r("n_words") >= minWords && r("n_words") <= maxWords &&
+      lit(3) * r("n_words") <= r("sum_word_len") &&
+      r("sum_word_len") <= lit(10) * r("n_words") &&
+      lit(10) * r("n_symbols") <= r("n_words") &&
+      lit(10) * r("n_alpha_words") >= lit(8) * r("n_words") &&
+      r("n_stopwords") >= 2
+    val both = texts.select(col("text") +: k.as("k") +: w.as("w") +:
+        referenceGopherStats(stops).zip(fields).map { case (c, f) =>
+          c.as(s"ref_$f") }: _*)
+      .withColumn("ref_keep", refKeep)
+    val same = fields.map(f => col(s"k.$f") <=> r(f))
+      .reduce(_ && _) && (col("w") <=> r("toks"))
+    both.filter(!same).collect()
+  }
+
+  test("native gopher kernel equals the interpreted chain on the corpus") {
+    // the sf0.01 corpus, beside the suite's default sf0.001 one
+    val docs = Tables.documents(spark, sf.stripSuffix("sf0.001") + "sf0.01")
+    assert(docs.count() > 0)
+    Seq(Curation.CorpusStopWords, Curation.GopherStopWords).foreach { st =>
+      val bad = kernelMismatches(docs, st)
+      assert(bad.isEmpty, s"stop words $st: ${bad.take(3).mkString("\n")}")
+    }
+  }
+
+  test("native gopher kernel equals the interpreted chain on edge texts") {
+    import spark.implicits._
+    import org.apache.spark.sql.GraftBridge.{column, expr => catalyst}
+    val texts = Seq[String](null, "", " ", "    ", "  lead", "trail  ",
+      "a  b   c", "tab\there x", "new\nline\r\nx", "a\tb",
+      "é", "café naïve", "𝄞 ab😀c 😀", "x𝄞y", "123 456 7z", "....",
+      "......", ".....", "…", "……", "#", "## # a#b", "a...b ...c... .. .", "the a the abc", "the a abcdefgh",
+      "wait… what...", "The the the", "the a the a", "The THE", "thee a",
+      "the\tthe a", "Z z A a", "@[`{", "the a . the")
+      .toDF("text")
+    Seq(Curation.CorpusStopWords, Seq("the", "the", "a"),
+        Curation.GopherStopWords).foreach { st =>
+      Seq(1 -> 100000, 3 -> 4, 50 -> 100000).foreach { case (lo, hi) =>
+        val bad = kernelMismatches(texts, st, lo, hi)
+        assert(bad.isEmpty, s"stop words $st, words in [$lo, $hi]: " +
+          bad.mkString("\n"))
+      }
+    }
+    // the probe must reach both verdicts
+    val keeps = texts.select(column(graft.expr.GopherStats(
+        catalyst(col("text")), Curation.CorpusStopWords, 1, 100000))
+      .getField("keep")).collect().map(r => Option(r.get(0)))
+    assert(keeps.contains(Some(true)) && keeps.contains(Some(false)))
+    // the NULL value of the size-derived statistics follows the config,
+    // as `size` does
+    Seq("true", "false").foreach { legacy =>
+      spark.conf.set("spark.sql.legacy.sizeOfNull", legacy)
+      spark.conf.set("spark.sql.ansi.enabled", "false")
+      try {
+        val bad = kernelMismatches(Seq[String](null, "a b").toDF("text"),
+          Curation.CorpusStopWords)
+        assert(bad.isEmpty, s"legacySizeOfNull=$legacy: ${bad.mkString}")
+      } finally {
+        spark.conf.unset("spark.sql.legacy.sizeOfNull")
+        spark.conf.unset("spark.sql.ansi.enabled")
+      }
+    }
+  }
+
+  test("gopherGate runs fully codegen'd, the kernel evaluated once per row") {
+    import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
+    val plan = Curation.gopherGate(Tables.documents(spark, sf),
+      stopWords = Curation.CorpusStopWords).queryExecution.executedPlan
+    val exprs = plan.collect { case p => p.expressions }.flatten
+    val fallbacks = exprs.flatMap(_.collect { case e: CodegenFallback => e })
+    assert(fallbacks.isEmpty, s"interpreted expressions in\n$plan")
+    // the scan lists the filter as a DataFilter it cannot push down;
+    // only the Filter evaluates it
+    val kernels = plan.collect {
+      case p if !p.isInstanceOf[
+        org.apache.spark.sql.execution.FileSourceScanExec] => p.expressions
+    }.flatten.flatMap(_.collect { case e: graft.expr.GopherStats => e })
+    assert(kernels.size == 1, s"kernel not evaluated exactly once in\n$plan")
+    assert(!plan.toString.contains("Exchange"))
+  }
 }
