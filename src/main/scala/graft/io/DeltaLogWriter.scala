@@ -199,24 +199,10 @@ object DeltaLogWriter {
     val snap = DeltaLogReader.snapshot(spark, tablePath)
     if (cdfEnabled(snap)) return Committed(snap.version, 0)
     val config = snap.configuration + ("delta.enableChangeDataFeed" -> "true")
-    val p = snap.protocol
-    val upgrade =
-      if (p.minWriterVersion >= 7) {
-        if (p.writerFeatures.contains("changeDataFeed")) Nil
-        else {
-          val writerFeats = (p.writerFeatures + "changeDataFeed").toSeq.sorted
-          val readerPart =
-            if (p.minReaderVersion >= 3)
-              s""","readerFeatures":${jarr(p.readerFeatures.toSeq.sorted)}"""
-            else ""
-          Seq(s"""{"protocol":{"minReaderVersion":${p.minReaderVersion},"minWriterVersion":7$readerPart,"writerFeatures":${jarr(writerFeats)}}}""")
-        }
-      } else if (p.minWriterVersion >= 4) Nil // legacy 4+ implies CDF
-      else
-        Seq(s"""{"protocol":{"minReaderVersion":${p.minReaderVersion},"minWriterVersion":4}}""")
     commitLoop(spark, tablePath, snap.schema, snap.partitionColumns,
       adds = Nil, removes = Nil, "SET TBLPROPERTIES", emitMeta = true,
-      extraActions = upgrade, dataChange = false, config = config)
+      extraActions = writerFeatureUpgrade(snap.protocol, "changeDataFeed", 4),
+      dataChange = false, config = config)
   }
 
   // ---- CHECK constraints + append-only (PROTOCOL.md "CHECK Constraints"
@@ -337,9 +323,27 @@ object DeltaLogWriter {
     * implicit feature set includes it. The existing sets are MERGED,
     * never replaced: dropping a feature the table already declares
     * would downgrade its protocol. */
-  private def writerFeatureUpgrade(p: DeltaLogReader.Protocol,
+  private[graft] def writerFeatureUpgrade(p: DeltaLogReader.Protocol,
       feature: String, legacyVersion: Int): Seq[String] =
     writerFeaturesUpgrade(p, Set(feature), Some(legacyVersion))
+
+  /** The protocol action merging the reader+writer feature `feature`
+    * into `p`: always minReaderVersion 3 / minWriterVersion 7. The
+    * existing sets are MERGED — a feature-range table keeps every
+    * feature it declares (columnMapping, timestampNtz, …), and a legacy
+    * version's implied features are enumerated as it crosses into the
+    * feature range — because replacing them would drop capabilities
+    * later gated reads depend on. Callers decide whether `p` needs it. */
+  private[graft] def readerWriterFeatureUpgrade(p: DeltaLogReader.Protocol,
+      feature: String): String = {
+    val readerFeats = ((if (p.minReaderVersion >= 3) p.readerFeatures
+                        else legacyReaderFeatures(p.minReaderVersion)) +
+      feature).toSeq.sorted
+    val writerFeats = ((if (p.minWriterVersion >= 7) p.writerFeatures
+                        else legacyWriterFeatures(p.minWriterVersion)) +
+      feature).toSeq.sorted
+    s"""{"protocol":{"minReaderVersion":3,"minWriterVersion":7,"readerFeatures":${jarr(readerFeats)},"writerFeatures":${jarr(writerFeats)}}}"""
+  }
 
   /** Generalized form: merge `features` into the writer feature set.
     * `legacyVersion` = a pre-feature writer version that implies them
@@ -977,15 +981,9 @@ object DeltaLogWriter {
     val needsUpgrade = p.minReaderVersion < 2 ||
       (p.minReaderVersion >= 3 && !p.readerFeatures.contains("columnMapping"))
     val upgrade = if (!needsUpgrade) Nil else if (p.minReaderVersion >= 3 ||
-        p.minWriterVersion >= 7) {
-      val readerFeats = ((if (p.minReaderVersion >= 3) p.readerFeatures
-                          else legacyReaderFeatures(p.minReaderVersion)) +
-        "columnMapping").toSeq.sorted
-      val writerFeats = ((if (p.minWriterVersion >= 7) p.writerFeatures
-                          else legacyWriterFeatures(p.minWriterVersion)) +
-        "columnMapping").toSeq.sorted
-      Seq(s"""{"protocol":{"minReaderVersion":3,"minWriterVersion":7,"readerFeatures":${jarr(readerFeats)},"writerFeatures":${jarr(writerFeats)}}}""")
-    } else // legacy range: columnMapping is reader 2 / writer 5
+        p.minWriterVersion >= 7)
+      Seq(readerWriterFeatureUpgrade(p, "columnMapping"))
+    else // legacy range: columnMapping is reader 2 / writer 5
       Seq(s"""{"protocol":{"minReaderVersion":2,"minWriterVersion":${math.max(5, p.minWriterVersion)}}}""")
     (schema, config, upgrade)
   }
@@ -1367,20 +1365,9 @@ object DeltaLogWriter {
     val needsUpgrade = adds.nonEmpty && (p.minReaderVersion < 3 ||
       !p.readerFeatures.contains("deletionVectors") ||
       !p.writerFeatures.contains("deletionVectors"))
-    // upgrading MERGES the existing protocol: a reader-version-3 table's
-    // features (columnMapping, timestampNtz, …) must survive, and a
-    // legacy version's implicit features are enumerated when it crosses
-    // into the table-features range — replacing the sets would drop
-    // capabilities subsequent gated reads depend on
-    val upgrade = if (!needsUpgrade) Nil else {
-      val readerFeats = ((if (p.minReaderVersion >= 3) p.readerFeatures
-                          else legacyReaderFeatures(p.minReaderVersion)) +
-        "deletionVectors").toSeq.sorted
-      val writerFeats = ((if (p.minWriterVersion >= 7) p.writerFeatures
-                          else legacyWriterFeatures(p.minWriterVersion)) +
-        "deletionVectors").toSeq.sorted
-      Seq(s"""{"protocol":{"minReaderVersion":3,"minWriterVersion":7,"readerFeatures":${jarr(readerFeats)},"writerFeatures":${jarr(writerFeats)}}}""")
-    }
+    val upgrade =
+      if (needsUpgrade) Seq(readerWriterFeatureUpgrade(p, "deletionVectors"))
+      else Nil
     // UPDATE: the replacement rows (live matched, assignments applied)
     // land in the same commit as the DVs that hide the old positions
     // the replacement frame is pinned ONCE (localCheckpoint) and shared
@@ -1586,25 +1573,14 @@ object DeltaLogWriter {
       // protocol when evolution introduces the first NTZ column.
       val ntzUpgrade: Seq[String] =
         if (!hasNtz(schema)) Nil
-        else if (version == 0L) {
-          val writerFeats =
-            (legacyWriterFeatures(2) + "timestampNtz").toSeq.sorted
-          Seq(s"""{"protocol":{"minReaderVersion":3,"minWriterVersion":7,"readerFeatures":["timestampNtz"],"writerFeatures":${jarr(writerFeats)}}}""")
-        } else {
-          val p = DeltaLogReader.snapshot(spark, tablePath).protocol
+        else {
+          // a new table upgrades from the baseline 1/2 protocol
+          val p =
+            if (version == 0L) DeltaLogReader.Protocol(minWriterVersion = 2)
+            else DeltaLogReader.snapshot(spark, tablePath).protocol
           if (p.minReaderVersion >= 3 &&
               p.readerFeatures.contains("timestampNtz")) Nil
-          else {
-            val readerFeats =
-              ((if (p.minReaderVersion >= 3) p.readerFeatures
-                else legacyReaderFeatures(p.minReaderVersion)) +
-                "timestampNtz").toSeq.sorted
-            val writerFeats =
-              ((if (p.minWriterVersion >= 7) p.writerFeatures
-                else legacyWriterFeatures(p.minWriterVersion)) +
-                "timestampNtz").toSeq.sorted
-            Seq(s"""{"protocol":{"minReaderVersion":3,"minWriterVersion":7,"readerFeatures":${jarr(readerFeats)},"writerFeatures":${jarr(writerFeats)}}}""")
-          }
+          else Seq(readerWriterFeatureUpgrade(p, "timestampNtz"))
         }
       // In-Commit Timestamps (PROTOCOL.md): on an enabled table every
       // commitInfo carries a MONOTONIC inCommitTimestamp =
@@ -1804,19 +1780,11 @@ object DeltaLogWriter {
     val needsUpgrade = p.minReaderVersion < 3 ||
       !p.readerFeatures.contains("v2Checkpoint") ||
       !p.writerFeatures.contains("v2Checkpoint")
-    if (needsUpgrade) {
-      val readerFeats = ((if (p.minReaderVersion >= 3) p.readerFeatures
-                          else legacyReaderFeatures(p.minReaderVersion)) +
-        "v2Checkpoint").toSeq.sorted
-      val writerFeats = ((if (p.minWriterVersion >= 7) p.writerFeatures
-                          else legacyWriterFeatures(p.minWriterVersion)) +
-        "v2Checkpoint").toSeq.sorted
+    if (needsUpgrade)
       commitLoop(spark, tablePath, snap0.schema, snap0.partitionColumns,
         adds = Nil, removes = Nil, "UPGRADE PROTOCOL", emitMeta = false,
-        extraActions = Seq(
-          s"""{"protocol":{"minReaderVersion":3,"minWriterVersion":7,"readerFeatures":${jarr(readerFeats)},"writerFeatures":${jarr(writerFeats)}}}"""),
+        extraActions = Seq(readerWriterFeatureUpgrade(p, "v2Checkpoint")),
         dataChange = false, priorConfig = Some(snap0.configuration))
-    }
     val snap = if (needsUpgrade) DeltaLogReader.snapshot(spark, tablePath)
                else snap0
     writeV2CheckpointFiles(spark, tablePath, snap, sidecarMaxActions)

@@ -455,29 +455,6 @@ object Curation {
       |  GROUP BY doc_id, n_tokens, gram) pc
       |GROUP BY doc_id, n_tokens""".stripMargin
 
-  /** The COMPLETE Gopher repetition table (Rae et al. 2021, Table A1) —
-    * round 12, paper-exact character fractions:
-    *  - `top_{2,3,4}gram_char_frac`: the fraction of the document's
-    *    token characters contained in occurrences of the single most
-    *    frequent n-gram (count ties broken by the longer gram —
-    *    deterministic on both engines via struct-max);
-    *  - `dup_{5..10}gram_char_frac`: the fraction of token characters
-    *    covered by n-grams occurring more than once in the document,
-    *    each character counted ONCE (the paper's "taking care not to
-    *    count characters multiple times") — covered token POSITIONS
-    *    are deduplicated before summing their character lengths;
-    *  - `keep`: all nine paper thresholds (0.20/0.18/0.16 tops,
-    *    0.15→0.10 dups) as cross-multiplied exact-integer comparisons.
-    *
-    * Scale shape: ONE corpus scan explodes every (n, window) pair for
-    * n ∈ 2..10; ONE window-level hash aggregation counts occurrences
-    * per (doc, n, gram) with map-side partials; everything downstream
-    * (top argmax, duplicated-coverage positions, the per-doc rollup)
-    * re-aggregates that table or the position-length table — no
-    * second pass over text, no per-pair work, and a pathological
-    * document costs only its own gram groups. The fractions are
-    * int/int divisions of exact numerators and denominators, so the
-    * doubles are bit-equal cross-engine. */
   /** The synthetic corpus carries no WITHIN-document n-gram repeats, so
     * the oracled entry derives them deterministically (the line-corpus
     * pattern): ~25% of docs (md5 draw on doc_id) get a fixed 10-token
@@ -491,136 +468,58 @@ object Curation {
   }
 
   def gopherRepetition(s: SparkSession, dir: String): DataFrame =
-    gopherRepetitionDerived(s, dir, prefixDerivation = true)
-
-  /** The entry with the formulation flag exposed — tools/gopher_ab.scala
-    * times both on the same derived corpus (public: spark-shell cannot
-    * see package-private members). */
-  def gopherRepetitionDerived(s: SparkSession, dir: String,
-      prefixDerivation: Boolean): DataFrame =
     gopherRepetitionOn(Tables.documents(s, dir)
       .withColumn("text", expr(
         s"""concat(text, case when substring(md5(concat('rep:',
            |    cast(doc_id as string))), 1, 1) < '4'
-           |  then '$RepPhrase' else '' end)""".stripMargin)),
-      prefixDerivation)
+           |  then '$RepPhrase' else '' end)""".stripMargin)))
 
-  /** The operator proper, over (doc_id, text).
-    *
-    * `prefixDerivation` selects between the round-12 9-way explode and
-    * the round-13 DEFAULT: explode ONE up-to-10-token window per
-    * position (~len rows instead of ~9·len), aggregate windows first,
-    * then derive each n-gram as a length-n PREFIX of the aggregated
-    * window groups. Row and byte counts through the FIRST shuffle drop
-    * ~9× / ~5×, at the price of a SECOND shuffle over
-    * 9 × |distinct windows|. Measured (tools/gopher_ab.scala, idle,
-    * min of 2 rounds each): sf0.1 5.8 s vs 9.9 s, sf1 42.5 s vs
-    * 97.4 s — the prefix path wins ~1.7–2.3×, because the second
-    * shuffle carries one count+positions row per distinct window
-    * instead of re-shuffling every occurrence, and the corpus's
-    * duplication (both natural and the rep-phrase derivation) shrinks
-    * the distinct set. At sf10 the win WIDENS to 3.8× (602.5 s vs
-    * 2308.6 s, round 14): distinct windows grow sublinearly on a
-    * dup-dense corpus while occurrences grow linearly, so the second
-    * shuffle shrinks relative to explode9's with scale — the 100×
-    * question answered on data (BASELINE.md). Both paths produce the identical `counts`
-    * table (spec-pinned on dup-heavy/short/empty docs). */
-  private[graft] def gopherRepetitionOn(docs: DataFrame,
-      prefixDerivation: Boolean = true): DataFrame = {
-    val base = docs
+  /** (doc_id, toks, den): the repetition rules' tokens and their total
+    * character length, from the native Gopher kernel. */
+  private[graft] def repetitionTokens(docs: DataFrame): DataFrame =
+    docs
       .withColumn(GopherStruct,
         native(graft.expr.GopherStats(_, Nil, 0, Int.MaxValue)))
       .select(col("doc_id"), col(s"$GopherStruct.toks").as("toks"),
         col(s"$GopherStruct.sum_word_len").as("den"))
-    // ONE window-level aggregation (on the RAW gram string) feeds both
-    // the top and dup paths. (Round-13 correction: Spark does NOT
-    // reuse the exchange here — the branch filters push through the
-    // aggregation and break subplan identity, so each branch computes
-    // the gram table; the shared-agg formulation still won its A/Bs
-    // on shuffle WIDTH, and a persist of the shared table was
-    // re-measured and rejected — see the counts note below.) SIX
-    // formulations now measured at sf0.1 / sf1 (explode9: 11.6 / 89 s):
-    //  - join-back dup keys without position arrays: 25.9 / 239 s —
-    //    three consumers with different filters get NO exchange reuse,
-    //    each redid the explode;
-    //  - join-back + DISK_ONLY persist of the window table:
-    //    17.8 / 165 s — writing 9n×tokens rows costs more than the
-    //    recompute it saves;
-    //  - md5-keyed windows (narrow shuffle rows) with the shared agg:
-    //    17.3 / 140 s — hashing every window costs more than shuffling
-    //    the gram string.
-    // The per-gram `ps` position array is bounded by one gram's
-    // occurrences within ONE document — per-doc skew, never
+
+  /** The COMPLETE Gopher repetition table (Rae et al. 2021, Table A1)
+    * over (doc_id, text), with paper-exact character fractions:
+    *  - `top_{2,3,4}gram_char_frac`: the fraction of the document's
+    *    token characters contained in occurrences of the single most
+    *    frequent n-gram (count ties broken by the longer gram —
+    *    deterministic on both engines via struct-max);
+    *  - `dup_{5..10}gram_char_frac`: the fraction of token characters
+    *    covered by n-grams occurring more than once in the document,
+    *    each character counted ONCE (the paper's "taking care not to
+    *    count characters multiple times") — covered token POSITIONS
+    *    are deduplicated before summing their character lengths;
+    *  - `keep`: all nine paper thresholds (0.20/0.18/0.16 tops,
+    *    0.15→0.10 dups) as cross-multiplied exact-integer comparisons.
+    *
+    * Scale shape: ONE corpus scan explodes one window per position and
+    * [[gramCounts]] counts occurrences per (doc, n, gram) with map-side
+    * partials; everything downstream (top argmax, duplicated-coverage
+    * positions, the per-doc rollup) re-aggregates that table or the position-length table — no
+    * second pass over text, no per-pair work, and a pathological
+    * document costs only its own gram groups. The fractions are
+    * int/int divisions of exact numerators and denominators, so the
+    * doubles are bit-equal cross-engine. */
+  private[graft] def gopherRepetitionOn(docs: DataFrame): DataFrame = {
+    val base = repetitionTokens(docs)
+    // `counts` feeds BOTH the top (n ≤ 4) and dup-coverage (n ≥ 5)
+    // paths. The branch filters push through the aggregation, so the
+    // subplans differ and Spark reuses no exchange: the gram table is
+    // computed once per branch. A DISK_ONLY persist of it was measured
+    // and rejected (cold-cache sf0.1 7.5 s vs 5.8–6.1 s recomputed,
+    // sf1 51.3 s vs 42.5–61.8 s): the columnar cache write of gram
+    // strings and position arrays costs what the second computation
+    // costs. Join-back formulations without position arrays (25.9 /
+    // 239 s at sf0.1 / sf1) and md5-keyed windows (17.3 / 140 s) were
+    // slower still. The per-gram `ps` position array is bounded by one
+    // gram's occurrences within ONE document — per-doc skew, never
     // corpus-sized.
-    val counts0 =
-      if (!prefixDerivation) {
-        val grams = base.select(col("doc_id"),
-            explode(expr(
-              """flatten(transform(sequence(2, 10), n ->
-                |  case when size(toks) < n then
-                |    cast(array() as array<struct<n: int, i: int, g: string>>)
-                |  else transform(sequence(1, size(toks) - n + 1), i ->
-                |    named_struct('n', n, 'i', i,
-                |      'g', concat_ws(' ', slice(toks, i, n))))
-                |  end))""".stripMargin)).as("w"))
-          .select(col("doc_id"), col("w.n").as("n"), col("w.i").as("i"),
-            col("w.g").as("g"))
-        grams
-          .groupBy(col("doc_id"), col("n"), col("g"))
-          .agg(count(lit(1)).as("cnt"), collect_list(col("i")).as("ps"))
-      } else {
-        // round-13 A/B: single-window explode + prefix re-aggregation.
-        // A window at position i carries min(10, len-i+1) tokens, so
-        // its length-n prefixes for n ≤ that are exactly the n-grams
-        // starting at i — per-position windows of length 1 carry no
-        // n ≥ 2 gram and are skipped.
-        val wins = base.select(col("doc_id"),
-            posexplode(expr(
-              """CASE WHEN size(toks) < 2
-                |  THEN cast(array() as array<string>)
-                |  ELSE transform(sequence(1, size(toks) - 1),
-                |         i -> concat_ws(' ', slice(toks, i, 10))) END"""
-                .stripMargin)))
-          .select(col("doc_id"), (col("pos") + 1).as("i"), col("col").as("w"))
-        // the window-group table feeds BOTH downstream branches (tops
-        // and dup-coverage recompute `counts` each — no exchange reuse,
-        // see the counts note), and each recompute re-ran the wins
-        // explode + the FIRST shuffle (every window occurrence).
-        // Persist the aggregated groups once (r17): rows are DISTINCT
-        // windows — on a dup-dense corpus far fewer than occurrences —
-        // so this is the narrow-cache case the rejected r13 `counts`
-        // persist (9 prefix rows per window) was not. DISK_ONLY per the
-        // corpus-proportional convention; [[Dedup.releaseCaches]]
-        // lifecycle. Measured (idle, min-of-N): sf0.1
-        // 6.08 -> 4.73 s, sf1 47.2 -> 41.9 s.
-        val wgroups = wins
-          .groupBy(col("doc_id"), col("w"))
-          .agg(count(lit(1)).as("wcnt"), collect_list(col("i")).as("wps"))
-          .withColumn("wtoks", split(col("w"), " "))
-          .persist(org.apache.spark.storage.StorageLevel.DISK_ONLY)
-        Dedup.registerCache(wgroups)
-        wgroups.select(col("doc_id"), col("wcnt"), col("wps"),
-            explode(expr(
-              """transform(sequence(2, size(wtoks)), n ->
-                |  named_struct('n', n,
-                |    'g', concat_ws(' ', slice(wtoks, 1, n))))"""
-                .stripMargin)).as("x"))
-          .groupBy(col("doc_id"), col("x.n").as("n"), col("x.g").as("g"))
-          .agg(sum(col("wcnt")).as("cnt"),
-            flatten(collect_list(col("wps"))).as("ps"))
-      }
-    // counts feeds BOTH the top (n ≤ 4) and dup-coverage (n ≥ 5)
-    // paths; the grouping-key filters push through the aggregation, so
-    // the subplans are not identical and NO exchange reuse happens
-    // (verified: zero ReusedExchange in either formulation's physical
-    // plan — the round-12 scaladoc's reuse claim was wrong) and the
-    // gram aggregation runs once per branch. A DISK_ONLY persist of
-    // counts was A/B'd (round 13) and REJECTED: cold-cache sf0.1
-    // 7.5 s vs 5.8–6.1 s recomputed, sf1 51.3 s vs 42.5–61.8 s — the
-    // columnar cache write of gram strings + position arrays costs
-    // what the second computation costs (the same outcome as every
-    // text-cache A/B in this repo; see the segment-dedup note).
-    val counts = counts0
+    val counts = gramCounts(base)
       .withColumn("glen",
         (length(col("g")) - (col("n") - lit(1))).cast("long"))
     val tops = counts.filter(col("n") <= 4)
@@ -660,6 +559,59 @@ object Curation {
       (5 to 10).map(n => frac(n).as(s"dup_${n}gram_char_frac")) ++
       Seq((2 to 10).map(ok).reduce(_ && _).as("keep"))
     joined.select(outCols: _*)
+  }
+
+  /** (doc_id, n, g, cnt, ps): every distinct n-gram g (n in 2..10) of
+    * each document of [[repetitionTokens]], with its occurrence count
+    * and start positions.
+    *
+    * Explodes ONE up-to-10-token window per position (~len rows, where
+    * a per-n explode makes ~9·len), aggregates the windows, then
+    * derives each n-gram as a length-n PREFIX of the aggregated window
+    * groups: the first shuffle carries ~9× fewer rows and ~5× fewer
+    * bytes, the second one count+positions row per distinct window.
+    * Against the per-n explode (CurationSpec keeps it as the reference
+    * this table must equal) it measured 1.7× faster at sf0.1, 2.3× at
+    * sf1 and 3.8× at sf10: on a dup-dense corpus distinct windows grow
+    * sublinearly while occurrences grow linearly (BASELINE.md). */
+  private[graft] def gramCounts(base: DataFrame): DataFrame = {
+    // A window at position i carries min(10, len-i+1) tokens, so
+    // its length-n prefixes for n ≤ that are exactly the n-grams
+    // starting at i — per-position windows of length 1 carry no
+    // n ≥ 2 gram and are skipped.
+    val wins = base.select(col("doc_id"),
+        posexplode(expr(
+          """CASE WHEN size(toks) < 2
+            |  THEN cast(array() as array<string>)
+            |  ELSE transform(sequence(1, size(toks) - 1),
+            |         i -> concat_ws(' ', slice(toks, i, 10))) END"""
+            .stripMargin)))
+      .select(col("doc_id"), (col("pos") + 1).as("i"), col("col").as("w"))
+    // the window-group table feeds BOTH downstream branches (tops
+    // and dup-coverage recompute the counts each — no exchange reuse),
+    // and each recompute would re-run the wins explode + the FIRST
+    // shuffle (every window occurrence). Persisted once: rows are
+    // DISTINCT windows — on a dup-dense corpus far fewer than
+    // occurrences — unlike the rejected persist of the counts
+    // themselves (9 prefix rows per window). DISK_ONLY per the
+    // corpus-proportional convention; [[Dedup.releaseCaches]]
+    // lifecycle. Measured (idle, min-of-N): sf0.1 6.08 -> 4.73 s,
+    // sf1 47.2 -> 41.9 s.
+    val wgroups = wins
+      .groupBy(col("doc_id"), col("w"))
+      .agg(count(lit(1)).as("wcnt"), collect_list(col("i")).as("wps"))
+      .withColumn("wtoks", split(col("w"), " "))
+      .persist(org.apache.spark.storage.StorageLevel.DISK_ONLY)
+    Dedup.registerCache(wgroups)
+    wgroups.select(col("doc_id"), col("wcnt"), col("wps"),
+        explode(expr(
+          """transform(sequence(2, size(wtoks)), n ->
+            |  named_struct('n', n,
+            |    'g', concat_ws(' ', slice(wtoks, 1, n))))"""
+            .stripMargin)).as("x"))
+      .groupBy(col("doc_id"), col("x.n").as("n"), col("x.g").as("g"))
+      .agg(sum(col("wcnt")).as("cnt"),
+        flatten(collect_list(col("wps"))).as("ps"))
   }
 
   /** Paper thresholds × 100 (Rae et al. 2021, Table A1), indexed by n. */
@@ -1860,8 +1812,7 @@ object Curation {
       minWords: Int = 50, maxWords: Int = 100000,
       cap: Int = 16, minEst: Double = 0.5,
       k: Int = 8, minDocs: Int = 2,
-      stopWords: Seq[String] = GopherStopWords,
-      persistSelected: Boolean = true): DataFrame = {
+      stopWords: Seq[String] = GopherStopWords): DataFrame = {
     val docs = Tables.documents(s, dir)
       .select(col("doc_id"), col("lang"), col("text"))
     // r16: the keep set derives from the bigram table alone
@@ -1887,29 +1838,21 @@ object Curation {
     // 13.0 s truncated.
     val gated = gopherGate(docs, minWords, maxWords, stopWords)
     val keep = pplSelectedDocIds(gated).localCheckpoint()
-    val selected0 = gated.join(keep, Seq("doc_id"))
-      .select(col("doc_id"), col("text"))
     // `selected` feeds the routed signature table AND the
     // fuzzy-survivor join — each recomputation re-runs the scan, the
     // gate, and the perplexity chain (its token-level shuffle is the
-    // expensive part). The DEFAULT materializes it ONCE (DISK_ONLY,
-    // the lshPairs rationale: never pin block-manager memory, keep
-    // lineage for executor-loss recompute) under the
-    // [[Dedup.releaseCaches]] lifecycle. A/B'd idle, 2 rounds each
-    // (tools/v3_persist_ab.scala, best-of-2): sf0.1 streamed 15.6 s
-    // vs persisted 11.4 s (1.4×), sf1 38.5 s vs 19.0 s (2.0×, the
-    // win GROWING with scale) — unlike the plain text-cache A/Bs
-    // this repo has rejected, the avoided recompute here carries the
-    // perplexity shuffle, which costs more than writing the
-    // selected rows once. `persistSelected = false` keeps the
-    // fully-streamed plan for memoryless executions.
-    val selected =
-      if (persistSelected) {
-        val p = selected0.persist(
-          org.apache.spark.storage.StorageLevel.DISK_ONLY)
-        Dedup.registerCache(p)
-        p
-      } else selected0
+    // expensive part). Materialized ONCE (DISK_ONLY, the lshPairs
+    // rationale: never pin block-manager memory, keep lineage for
+    // executor-loss recompute) under the [[Dedup.releaseCaches]]
+    // lifecycle. Measured idle, best of 2: sf0.1 streamed 15.6 s vs
+    // persisted 11.4 s (1.4×), sf1 38.5 s vs 19.0 s (2.0×) — unlike
+    // the plain text-cache A/Bs this repo has rejected, the avoided
+    // recompute here carries the perplexity shuffle, which costs more
+    // than writing the selected rows once.
+    val selected = gated.join(keep, Seq("doc_id"))
+      .select(col("doc_id"), col("text"))
+      .persist(org.apache.spark.storage.StorageLevel.DISK_ONLY)
+    Dedup.registerCache(selected)
     // same truncation as `keep` above: the fuzzy-survivor id set is
     // metadata-scale, and substrDedupPass references its input frame
     // twice — without the checkpoint each reference re-expands the

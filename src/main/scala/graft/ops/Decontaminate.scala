@@ -87,7 +87,6 @@ object Decontaminate {
       minAgree: Int = 8): DataFrame = {
     require(minAgree >= 1 && minAgree <= Dedup.K,
       s"minAgree must be in [1, ${Dedup.K}], got $minAgree")
-    graft.expr.ArrayMatchCount.register(s)
     // The benchmark side collapses to ONE representative per full
     // signature (the ccDedup trick): agreement is a function of the
     // signatures alone, so bench docs sharing a signature contribute
@@ -95,27 +94,20 @@ object Decontaminate {
     // `bench_rep` recovers the doc-level report exactly (hits = Σ bn
     // over matched groups; min bench id at best agreement = min rep,
     // reps being group minima) while candidate volume stops scaling
-    // with benchmark dup density. A/B at 10× replicated data: 253 s
-    // per-doc vs 57 s grouped, value-identical (BASELINE.md round 13).
-    val bgroups = Dedup.withToks(benchmark)
-      .select(col("doc_id"), Dedup.minhashSig.as("sig"))
+    // with benchmark dup density (10× replicated data: 253 s per-doc vs
+    // 57 s grouped, value-identical; BASELINE.md).
+    val bgroups = Dedup.md5Sigs(benchmark)
       .groupBy(col("sig"))
       .agg(min(col("doc_id")).as("bench_rep"), count(lit(1)).as("bn"))
-    val bbanded = bgroups
-      .withColumn("bsig", col("sig"))
-      .select(col("bench_rep"), col("bn"), col("bsig"),
-        posexplode(Dedup.bandKeysExpr))
-      .withColumnRenamed("pos", "band").withColumnRenamed("col", "bkey")
-    val cbanded = Dedup.withToks(corpus)
-      .select(col("doc_id"), Dedup.minhashSig.as("sig"))
-      .withColumn("csig", col("sig"))
-      .select(col("doc_id"), col("csig"), posexplode(Dedup.bandKeysExpr))
-      .withColumnRenamed("pos", "band").withColumnRenamed("col", "bkey")
+    val bbanded = Dedup.bandRows(bgroups.withColumn("bsig", col("sig")),
+      Dedup.md5BandKeys, col("bench_rep"), col("bn"), col("bsig"))
+    val cbanded = Dedup.bandRows(
+      Dedup.md5Sigs(corpus).withColumn("csig", col("sig")),
+      Dedup.md5BandKeys, col("doc_id"), col("csig"))
     val cand = cbanded
       .join(broadcast(bbanded), Seq("band", "bkey"))
       .select(col("doc_id"), col("bench_rep"), col("bn"),
-        call_function("array_match_count", col("csig"), col("bsig"))
-          .as("agree"))
+        Dedup.matchCount(col("csig"), col("bsig")).as("agree"))
       .where(col("agree") >= minAgree)
       .distinct() // a pair can collide in several bands
     cand.groupBy(col("doc_id"))

@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, GraftBridge, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.session.Jobs
@@ -151,119 +151,175 @@ object Dedup {
        |WHERE cast(c as double) / cast(s1.n + s2.n - c as double) >= 0.6""".stripMargin
   }
 
-  /** MinHash components / LSH geometry for the oracle variant:
+  // ---- MinHash-LSH core ---------------------------------------------------
+  // Every MinHash/SimHash operator below and [[Decontaminate.checkFuzzy]]
+  // is composed from these pure frame transforms, so the band geometry,
+  // the candidate join and the index group keys are each defined once.
+
+  /** MinHash components / LSH geometry of the md5 (oracle) family:
     * 12 components in 3 bands of 4 rows. */
   private[ops] val K = 12
   private[ops] val BANDS = 3
   private[ops] val ROWS = K / BANDS
 
-  /** MinHash signature as an array of K per-seed minima. The hash family
-    * is md5(seed || ':' || token) compared lexicographically — engine-
-    * portable (md5 is identical everywhere), which is what makes this
-    * variant differentially testable. Production variant below swaps in
-    * xxhash64. Tokenization is hoisted into its own column first —
-    * inlining `array_distinct(split(…))` inside the outer lambda would
-    * re-tokenize the document once per signature component (K×).
-    *
-    * r16: the NATIVE one-pass expression
-    * ([[graft.expr.MinHashSigsMd5]]) replaces the interpreted HOF
-    * `transform(sequence(0,K-1), i -> array_min(transform(__toks,
-    * t -> md5(concat(cast(i as string), ':', t)))))` — bit-identical
-    * (MinHashSigsSpec pins native == HOF on the real corpus; every
-    * md5-family oracle row re-checked green), one fused loop with K
-    * running 16-byte minima, hex-encoding only the K winners where
-    * the HOF hex-encoded every candidate hash of every token. */
-  private[ops] def minhashSig: org.apache.spark.sql.Column =
-    org.apache.spark.sql.GraftBridge.column(
-      graft.expr.MinHashSigsMd5(
-        org.apache.spark.sql.GraftBridge.expr(col("__toks")), K))
+  /** Components and bands of the xxhash64 (production) family. */
+  private val FastK = 32
+  private val FastBands = 4
 
-  private[ops] def withToks(df: DataFrame): DataFrame =
+  private def withToks(df: DataFrame): DataFrame =
     df.withColumn("__toks", array_distinct(split(col("text"), " ")))
 
-  /** Candidate pairs sharing at least one band, deduped, then one
-    * signature comparison per pair. With `maxBucket` set, buckets whose
-    * membership exceeds the cap are EXCLUDED from enumeration (the skew
-    * guard — see [[minhashLshCapped]]). */
-  private def lshPairs(sig0: DataFrame, bandKeys: org.apache.spark.sql.Column,
-      estimate: org.apache.spark.sql.Column,
-      maxBucket: Option[Int] = None): DataFrame = {
-    // signatures feed four plan branches (two join sides + two lookup
-    // sides); materialize once instead of recomputing the hash family per
-    // branch. DISK_ONLY, not localCheckpoint: the signature table is a
-    // large fraction of the corpus at scale, so it must not pin the block
-    // manager's memory, and lineage stays intact so a lost executor
-    // recomputes its slice instead of failing the job
-    val sig = sig0.persist(org.apache.spark.storage.StorageLevel.DISK_ONLY)
-    liveCaches.add(sig)
-    val pairs = lshCandidatePairs(sig, bandKeys, maxBucket)
-    val s1 = sig.select(col("doc_id").as("d1"), col("sig").as("sig1"))
-    val s2 = sig.select(col("doc_id").as("d2"), col("sig").as("sig2"))
-    pairs.join(s1, "d1").join(s2, "d2")
-      .select(col("d1"), col("d2"), estimate.as("est_jaccard"))
+  /** md5-family MinHash signature over `__toks`: K per-seed minima of
+    * md5(seed || ':' || token), compared lexicographically — engine-
+    * portable, which is what makes this family differentially
+    * testable. [[graft.expr.MinHashSigsMd5]] is one fused loop that
+    * hex-encodes only the K winners and is bit-identical to the SQL
+    * form `transform(sequence(0,K-1), i -> array_min(transform(__toks,
+    * t -> md5(concat(cast(i as string), ':', t)))))` (MinHashSigsSpec).
+    * Tokens are hoisted into `__toks` ([[withToks]]) so a document is
+    * tokenized once, not once per component. */
+  private def minhashSig: Column =
+    GraftBridge.column(graft.expr.MinHashSigsMd5(GraftBridge.expr(col("__toks")), K))
+
+  /** (doc_id, sig): md5-family signatures of a (doc_id, text) frame. */
+  private[ops] def md5Sigs(docs: DataFrame): DataFrame =
+    withToks(docs).select(col("doc_id"), minhashSig.as("sig"))
+
+  /** (doc_id, h, sig): content hash and md5-family signature — the
+    * derivation [[buildDedupIndex]], [[updateDedupIndex]] and the probe
+    * batch share. */
+  private def sigOf(docs: DataFrame): DataFrame = docs
+    .select(col("doc_id"), md5(col("text")).as("h"),
+      array_distinct(split(col("text"), " ")).as("__toks"))
+    .select(col("doc_id"), col("h"), minhashSig.as("sig"))
+
+  /** (doc_id, sig): xxhash64-family signatures, FastK components
+    * ([[graft.expr.MinHashSigs]], bit-identical to its HOF form). */
+  private def fastSigs(docs: DataFrame): DataFrame =
+    withToks(docs).select(col("doc_id"), GraftBridge.column(
+      graft.expr.MinHashSigs(GraftBridge.expr(col("__toks")), FastK)).as("sig"))
+
+  /** md5 band-key array over a signature column named `sig`. */
+  private[ops] def md5BandKeys: Column = expr(
+    s"""transform(sequence(0, ${BANDS - 1}),
+       |  b -> md5(concat_ws('|', slice(sig, b * $ROWS + 1, $ROWS))))""".stripMargin)
+
+  /** xxhash64 band-key array over a FastK-component `sig`. */
+  private def fastBandKeys: Column = {
+    val rows = FastK / FastBands
+    expr(s"""transform(sequence(0, ${FastBands - 1}),
+            |  b -> xxhash64(slice(sig, b * $rows + 1, $rows)))""".stripMargin)
   }
 
-  /** The banded candidate enumeration of [[lshPairs]] alone — deduped
-    * (d1, d2) pairs sharing a band, no signature re-join: the verified
-    * recall entries ([[minhashFastVerified]]) consume only the pair
-    * SET, so the two signature joins that exist to compute the
-    * estimate column are dead work there. `sig` must already be
-    * persisted by the caller. */
-  private def lshCandidatePairs(sig: DataFrame,
-      bandKeys: org.apache.spark.sql.Column,
-      maxBucket: Option[Int] = None): DataFrame = {
-    val banded0 = sig.select(col("doc_id"), posexplode(bandKeys))
+  /** One row per (document, band): the `keep` columns of `sig` plus
+    * `band` (position) and `bkey` (that band's key from `bandKeys`). */
+  private[ops] def bandRows(sig: DataFrame, bandKeys: Column,
+      keep: Column*): DataFrame =
+    sig.select(keep :+ posexplode(bandKeys): _*)
       .withColumnRenamed("pos", "band").withColumnRenamed("col", "bkey")
-    // skew guard: the OVER-cap bucket list is usually metadata-sized
-    // (it is exactly the audit report — mega-buckets are few), so the
-    // guard is a map-side-combined aggregation to that small list,
-    // joined back as an ANTI-join. Three formulations measured at sf1
-    // (10×, idle): per-side window 34.2 s, DISK_ONLY-persisted window
-    // 15.9 s, anti-join 16.9 s. The anti-join ties the persisted
-    // window on wall clock but wins the 100 TB shape: no 3×-corpus
-    // temp table on executor disk, and its aggregation shuffles one
-    // map-side-combined partial row per bucket per partition instead
-    // of every banded row. No explicit broadcast hint: the over-cap
-    // list is bounded only by distinct-buckets/cap, i.e. corpus-
-    // proportional on pathological corpora where EVERY bucket
-    // overflows — AQE sees the aggregated size at runtime and picks
-    // broadcast when it actually fits (the common case) without the
-    // hint's unconditional driver-side collect.
-    val banded = maxBucket match {
-      case Some(cap) =>
-        val over = banded0.groupBy(col("band"), col("bkey"))
-          .agg(count(lit(1)).as("__bsz")).where(col("__bsz") > cap)
-          .select(col("band"), col("bkey"))
-        banded0.join(over, Seq("band", "bkey"), "left_anti")
-      case None => banded0
-    }
+
+  /** The (band, bkey) buckets of `banded` with more than `cap` members,
+    * with their `n_members`. The list is usually metadata-sized (mega-
+    * buckets are few), and its aggregation shuffles one map-side-
+    * combined partial row per bucket per partition, not every banded
+    * row. Callers join it back without a broadcast hint: on a
+    * pathological corpus where every bucket overflows it is corpus-
+    * proportional, and AQE picks broadcast from the runtime size when
+    * it fits instead of an unconditional driver-side collect. */
+  private def overCap(banded: DataFrame, cap: Int): DataFrame =
+    banded.groupBy(col("band"), col("bkey"))
+      .agg(count(lit(1)).as("n_members"))
+      .where(col("n_members") > cap)
+
+  /** Band rows sharing a bucket, as aliases `a` and `b` with
+    * `a.doc_id < b.doc_id` — each unordered pair once per shared band. */
+  private def bandSelfJoin(banded: DataFrame): DataFrame = {
     val a = banded.as("a"); val b = banded.as("b")
     a.join(b,
-        col("a.band") === col("b.band") && col("a.bkey") === col("b.bkey") &&
-          col("a.doc_id") < col("b.doc_id"))
+      col("a.band") === col("b.band") && col("a.bkey") === col("b.bkey") &&
+        col("a.doc_id") < col("b.doc_id"))
+  }
+
+  /** Deduped (d1, d2) pairs sharing at least one band. With `maxBucket`
+    * set, rows of buckets over the cap are excluded from enumeration
+    * (the skew guard, see [[minhashLshCapped]]). `sig` is read once
+    * per plan branch, so callers persist it. */
+  private def lshCandidatePairs(sig: DataFrame, bandKeys: Column,
+      maxBucket: Option[Int] = None): DataFrame = {
+    val banded0 = bandRows(sig, bandKeys, col("doc_id"))
+    val banded = maxBucket match {
+      case Some(cap) => banded0.join(
+        overCap(banded0, cap).select(col("band"), col("bkey")),
+        Seq("band", "bkey"), "left_anti")
+      case None => banded0
+    }
+    bandSelfJoin(banded)
       .select(col("a.doc_id").as("d1"), col("b.doc_id").as("d2"))
       .distinct()
   }
+
+  /** (d1, d2) pairs with both signatures attached as `sig1`, `sig2`. */
+  private def withPairSigs(pairs: DataFrame, sig: DataFrame): DataFrame = {
+    val s1 = sig.select(col("doc_id").as("d1"), col("sig").as("sig1"))
+    val s2 = sig.select(col("doc_id").as("d2"), col("sig").as("sig2"))
+    pairs.join(s1, "d1").join(s2, "d2")
+  }
+
+  /** Number of positions where two signatures agree — the native
+    * codegen'd kernel, one fused loop per pair. */
+  private[ops] def matchCount(a: Column, b: Column): Column =
+    GraftBridge.column(graft.expr.ArrayMatchCount(
+      GraftBridge.expr(a), GraftBridge.expr(b)))
+
+  /** Estimated Jaccard similarity: the agreeing fraction of `k`
+    * signature components. */
+  private def agreement(a: Column, b: Column, k: Int = K): Column =
+    matchCount(a, b).cast("double") / lit(k.toDouble)
+
+  /** Candidate pairs deduped across bands first, then ONE signature
+    * comparison per unique pair (`estimate` over `sig1`, `sig2`, output
+    * as `est_jaccard`). The signatures feed four plan branches (two join
+    * sides, two lookup sides), so they are persisted once. DISK_ONLY,
+    * not localCheckpoint: at scale the table is a large fraction of the
+    * corpus, so it must not pin block-manager memory, and lineage stays
+    * intact so a lost executor recomputes its slice. */
+  private def lshPairs(sig0: DataFrame, bandKeys: Column, estimate: Column,
+      maxBucket: Option[Int] = None): DataFrame = {
+    val sig = sig0.persist(org.apache.spark.storage.StorageLevel.DISK_ONLY)
+    liveCaches.add(sig)
+    withPairSigs(lshCandidatePairs(sig, bandKeys, maxBucket), sig)
+      .select(col("d1"), col("d2"), estimate.as("est_jaccard"))
+  }
+
+  /** The index's group-key reduction: the minimum doc_id per `keys`
+    * group ([[HashGroup]] for the hash sub-table, [[BandGroup]] for
+    * the band sub-table). */
+  private def minDocPer(df: DataFrame, keys: Seq[String]): DataFrame =
+    df.groupBy(keys.map(col): _*).agg(min(col("doc_id")).as("doc_id"))
+
+  private val HashGroup = Seq("h")
+  private val BandGroup = Seq("band", "bkey", "sig")
+
+  /** The (hashes, bands) index rows of a [[sigOf]] frame. */
+  private def indexGroups(sig: DataFrame): (DataFrame, DataFrame) =
+    (minDocPer(sig, HashGroup),
+      minDocPer(bandRows(sig, md5BandKeys, col("doc_id"), col("sig")),
+        BandGroup))
+
+  /** `skey`: the md5 of the full signature — the cluster key of the
+    * linear keep-one treatments. */
+  private def withSigKey(sig: DataFrame): DataFrame =
+    sig.withColumn("skey", md5(concat_ws("|", col("sig"))))
 
   /** MinHash + LSH candidate pairs with estimated Jaccard (matching
     * component fraction). One linear pass for signatures, an equi-join on
     * (band, bandKey) for candidates.
     */
-  def minhashLsh(s: SparkSession, dir: String): DataFrame = {
-    graft.expr.ArrayMatchCount.register(s)
+  def minhashLsh(s: SparkSession, dir: String): DataFrame =
     // the signature is the operator's CPU-bound stage, and a one-file
     // corpus would run it as one task: spread it over every core
-    val sig = withToks(Jobs.spread(Tables.documents(s, dir)))
-      .select(col("doc_id"), minhashSig.as("sig"))
-    val bandKeys = expr(
-      s"""transform(sequence(0, ${BANDS - 1}),
-         |  b -> md5(concat_ws('|', slice(sig, b * $ROWS + 1, $ROWS))))""".stripMargin)
-    // agreement count via the native codegen'd kernel (one fused loop
-    // per pair; the zip_with/filter HOF evaluates interpreted)
-    val est = (call_function("array_match_count", col("sig1"), col("sig2"))
-      .cast("double") / lit(K.toDouble))
-    lshPairs(sig, bandKeys, est)
-  }
+    lshPairs(md5Sigs(Jobs.spread(Tables.documents(s, dir))), md5BandKeys,
+      agreement(col("sig1"), col("sig2")))
 
   def minhashLshOracle: String =
     s"""WITH sig AS (
@@ -304,17 +360,17 @@ object Dedup {
     *
     * The guard itself is shuffle-free for the banded rows: the
     * over-cap bucket list (= the audit report, metadata-sized by
-    * nature) comes from a map-side-combined aggregation and returns as
-    * a broadcast anti-join — see the formulation A/B in the body. */
+    * nature) comes from a map-side-combined aggregation ([[overCap]])
+    * and returns as an anti-join. Of three formulations measured at
+    * sf1 (10×, idle) — per-side window 34.2 s, DISK_ONLY-persisted
+    * window 15.9 s, anti-join 16.9 s — the anti-join ties the persisted
+    * window on wall clock and writes no 3×-corpus temp table to
+    * executor disk. */
   def minhashLshCapped(s: SparkSession, dir: String,
       maxBucket: Int = 16): DataFrame = {
     require(maxBucket >= 1, s"maxBucket must be >= 1, got $maxBucket")
-    graft.expr.ArrayMatchCount.register(s)
-    val sig = withToks(Tables.documents(s, dir))
-      .select(col("doc_id"), minhashSig.as("sig"))
-    val est = (call_function("array_match_count", col("sig1"), col("sig2"))
-      .cast("double") / lit(K.toDouble))
-    lshPairs(sig, bandKeysExpr, est, Some(maxBucket))
+    lshPairs(md5Sigs(Tables.documents(s, dir)), md5BandKeys,
+      agreement(col("sig1"), col("sig2")), Some(maxBucket))
   }
 
   def minhashLshCappedOracle: String = minhashLshCappedOracle(16)
@@ -347,18 +403,12 @@ object Dedup {
   def lshBucketOverflow(s: SparkSession, dir: String,
       maxBucket: Int = 16): DataFrame = {
     require(maxBucket >= 1, s"maxBucket must be >= 1, got $maxBucket")
-    withToks(Tables.documents(s, dir))
-      .select(col("doc_id"), minhashSig.as("sig"))
-      .select(col("doc_id"), posexplode(bandKeysExpr))
-      .withColumnRenamed("pos", "band").withColumnRenamed("col", "bkey")
-      .groupBy(col("band"), col("bkey"))
-      .agg(count(lit(1)).as("n_members"))
-      .where(col("n_members") > maxBucket)
+    overCap(bandRows(md5Sigs(Tables.documents(s, dir)), md5BandKeys,
+      col("doc_id")), maxBucket)
   }
 
-  /** The COMPOSED skew-guarded dedup (round 14, verdict #5): the
-    * routing [[minhashLshCapped]]'s scaladoc used to delegate to the
-    * caller is now the operator itself — ONE unified keep/drop report
+  /** The COMPOSED skew-guarded dedup: the routing that
+    * [[minhashLshCapped]] leaves to its caller, as one keep/drop report
     * where every document is handled by exactly one route:
     *
     *  - docs appearing in ANY over-cap LSH bucket (boilerplate-class:
@@ -381,9 +431,8 @@ object Dedup {
     * a pathological all-overflow corpus degrades to a shuffle join
     * instead of a driver OOM); cluster-route cost is one linear groupBy over the
     * mega-bucket membership; pair-route cost is bounded by
-    * cap²·buckets. Where uncapped enumeration was 385 s at sf1, the
-    * composed operator keeps the capped path's ~linear floor
-    * (BASELINE.md round-14 triple). */
+    * cap²·buckets, so the operator keeps the capped path's ~linear
+    * floor where uncapped enumeration took 385 s at sf1 (BASELINE.md). */
   def minhashDedupRouted(s: SparkSession, dir: String,
       maxBucket: Int = 16, minEst: Double = 0.5): DataFrame =
     minhashDedupRoutedOn(Tables.documents(s, dir), maxBucket, minEst)
@@ -395,19 +444,13 @@ object Dedup {
   def minhashDedupRoutedOn(docs: DataFrame,
       maxBucket: Int = 16, minEst: Double = 0.5): DataFrame = {
     require(maxBucket >= 1, s"maxBucket must be >= 1, got $maxBucket")
-    graft.expr.ArrayMatchCount.register(docs.sparkSession)
-    val sig0 = withToks(docs)
-      .select(col("doc_id"), minhashSig.as("sig"))
     // the signature table feeds the banded rows, both pair-join sides,
     // and both route reports — same persist rationale as lshPairs
-    val sig = sig0.persist(org.apache.spark.storage.StorageLevel.DISK_ONLY)
+    val sig = md5Sigs(docs)
+      .persist(org.apache.spark.storage.StorageLevel.DISK_ONLY)
     liveCaches.add(sig)
-    val banded = sig.select(col("doc_id"), col("sig"),
-        posexplode(bandKeysExpr))
-      .withColumnRenamed("pos", "band").withColumnRenamed("col", "bkey")
-    val over = banded.groupBy(col("band"), col("bkey"))
-      .agg(count(lit(1)).as("__bsz")).where(col("__bsz") > maxBucket)
-      .select(col("band"), col("bkey"))
+    val banded = bandRows(sig, md5BandKeys, col("doc_id"), col("sig"))
+    val over = overCap(banded, maxBucket).select(col("band"), col("bkey"))
     // mega-bucket membership (may be corpus-scale on boilerplate-heavy
     // data — never broadcast; the joins below hash on doc_id). `over`
     // itself carries no hint either: its size is corpus-proportional in
@@ -415,8 +458,7 @@ object Dedup {
     // broadcast-vs-shuffle from the aggregated runtime size.
     val clusterDocs = banded.join(over, Seq("band", "bkey"))
       .select(col("doc_id")).distinct()
-    val csig = sig.join(clusterDocs, Seq("doc_id"))
-      .withColumn("skey", md5(concat_ws("|", col("sig"))))
+    val csig = withSigKey(sig.join(clusterDocs, Seq("doc_id")))
     val ckeep = csig.groupBy(col("skey")).agg(min(col("doc_id")).as("__k"))
     val clusterReport = csig.join(ckeep, Seq("skey"))
       .select(col("doc_id"),
@@ -426,13 +468,8 @@ object Dedup {
     val pbanded = banded
       .join(over, Seq("band", "bkey"), "left_anti")
       .join(clusterDocs, Seq("doc_id"), "left_anti")
-    val a = pbanded.as("a"); val b = pbanded.as("b")
-    val est = (call_function("array_match_count",
-      col("a.sig"), col("b.sig")).cast("double") / lit(K.toDouble))
-    val dropped = a.join(b,
-        col("a.band") === col("b.band") && col("a.bkey") === col("b.bkey") &&
-          col("a.doc_id") < col("b.doc_id"))
-      .where(est >= minEst)
+    val dropped = bandSelfJoin(pbanded)
+      .where(agreement(col("a.sig"), col("b.sig")) >= minEst)
       .groupBy(col("b.doc_id").as("doc_id"))
       .agg(min(col("a.doc_id")).as("__k"))
     val pairReport = sig.join(clusterDocs, Seq("doc_id"), "left_anti")
@@ -520,9 +557,7 @@ object Dedup {
     * density; this is the right tool for *removing* them.
     */
   def minhashDedupKeep(s: SparkSession, dir: String): DataFrame =
-    withToks(Tables.documents(s, dir))
-      .select(col("doc_id"), minhashSig.as("sig"))
-      .withColumn("skey", md5(concat_ws("|", col("sig"))))
+    withSigKey(md5Sigs(Tables.documents(s, dir)))
       .groupBy(col("skey"))
       .agg(min(col("doc_id")).as("keeper"), count(lit(1)).as("n_members"))
 
@@ -537,12 +572,7 @@ object Dedup {
        |  FROM documents) t
        |GROUP BY 1""".stripMargin
 
-  // ---- Incremental dedup against a persisted corpus index (round 12) ----
-
-  /** LSH band-key array over a signature column named `sig`. */
-  private[ops] def bandKeysExpr = expr(
-    s"""transform(sequence(0, ${BANDS - 1}),
-       |  b -> md5(concat_ws('|', slice(sig, b * $ROWS + 1, $ROWS))))""".stripMargin)
+  // ---- Incremental dedup against a persisted corpus index ----------------
 
   /** Persist a dedup index for a corpus, in two sub-tables:
     *  - `hashes`: one row per DISTINCT content hash with the minimum
@@ -561,26 +591,16 @@ object Dedup {
     * the number of DISTINCT signatures, which duplication does not
     * grow. Text never enters the index — its size is O(distinct sigs).
     *
-    * Each sub-table is a [[graft.table.TxnLog]] snapshot table
-    * (round 14): a probe resolves the current manifest ONCE at plan
-    * time and reads an immutable set of data directories, so
-    * maintenance ([[compactDedupIndex]], [[foldStreamIndex]]) running
-    * concurrently publishes a NEW version without ever moving the files
-    * a running probe holds — the probe-during-OPTIMIZE hazard of the
-    * round-13 directory-rename scheme is gone structurally. Old
-    * versions stay readable until [[vacuumDedupIndex]] reclaims them;
-    * schedule vacuum with a retention covering the longest-running
-    * probe, exactly like any table-format VACUUM. */
+    * Each sub-table is a [[graft.table.TxnLog]] snapshot table: a
+    * probe resolves the current manifest ONCE at plan time and reads an
+    * immutable set of data directories, so maintenance
+    * ([[compactDedupIndex]], [[foldStreamIndex]]) running concurrently
+    * publishes a NEW version without ever moving the files a running
+    * probe holds. Old versions stay readable until [[vacuumDedupIndex]]
+    * reclaims them; schedule vacuum with a retention covering the
+    * longest-running probe, exactly like any table-format VACUUM. */
   def buildDedupIndex(docs: DataFrame, indexPath: String): Unit =
     writeIndexTables(sigOf(docs), indexPath, overwrite = true)
-
-  /** (doc_id, content hash, MinHash signature) for a document set —
-    * the derivation [[buildDedupIndex]], [[updateDedupIndex]] and the
-    * probe batch all share. */
-  private def sigOf(docs: DataFrame): DataFrame = docs
-    .select(col("doc_id"), md5(col("text")).as("h"),
-      array_distinct(split(col("text"), " ")).as("__toks"))
-    .select(col("doc_id"), col("h"), minhashSig.as("sig"))
 
   private def writeIndexTables(sig0: DataFrame, indexPath: String,
       overwrite: Boolean): Unit = {
@@ -593,12 +613,7 @@ object Dedup {
     // never-pin-block-memory rationale.
     val sig = sig0.persist(org.apache.spark.storage.StorageLevel.DISK_ONLY)
     try {
-      val hashes = sig.groupBy(col("h")).agg(min(col("doc_id")).as("doc_id"))
-      val bands = sig
-        .select(col("doc_id"), col("sig"), posexplode(bandKeysExpr))
-        .withColumnRenamed("pos", "band").withColumnRenamed("col", "bkey")
-        .groupBy(col("band"), col("bkey"), col("sig"))
-        .agg(min(col("doc_id")).as("doc_id"))
+      val (hashes, bands) = indexGroups(sig)
       if (overwrite) {
         TxnLog.overwrite(hashes, s"$indexPath/hashes")
         TxnLog.overwrite(bands, s"$indexPath/bands", Seq("band"))
@@ -637,8 +652,7 @@ object Dedup {
 
   /** Append a probed batch's ADMITTED (verdict `novel`) documents into
     * a persisted [[buildDedupIndex]] index — the write-back step of
-    * the daily loop, closing the round-12 gap of a full corpus
-    * re-index per day.
+    * the daily loop, so no day re-indexes the corpus.
     *
     * Cost follows the BATCH, never the index: no existence scan is
     * needed because a novel doc's keys are provably disjoint from the
@@ -676,21 +690,14 @@ object Dedup {
   private[graft] def writeStreamIndexBatch(admitted: DataFrame,
       streamPath: String, batchId: Long): Unit = {
     // the two writes each evaluate sigOf — deliberately NOT pinned: a
-    // per-batch localCheckpoint of the batch-scale signature rows was
-    // measured (r16 full sweep) at +0.9 s per micro-batch — the extra
-    // materialization job costs more than re-hashing a batch (the
-    // admitted frame above is already checkpointed, so the upstream is
-    // one cache read). The CORPUS-scale build path persists instead
-    // (writeIndexTables).
-    val sig = sigOf(admitted)
-    sig.groupBy(col("h")).agg(min(col("doc_id")).as("doc_id"))
-      .write.mode("overwrite")
+    // per-batch localCheckpoint of the batch-scale signature rows
+    // measured +0.9 s per micro-batch, more than re-hashing a batch
+    // whose upstream is already checkpointed. The CORPUS-scale build
+    // path persists instead (writeIndexTables).
+    val (hashes, bands) = indexGroups(sigOf(admitted))
+    hashes.write.mode("overwrite")
       .parquet(s"$streamPath/hashes/batch_id=$batchId")
-    sig.select(col("doc_id"), col("sig"), posexplode(bandKeysExpr))
-      .withColumnRenamed("pos", "band").withColumnRenamed("col", "bkey")
-      .groupBy(col("band"), col("bkey"), col("sig"))
-      .agg(min(col("doc_id")).as("doc_id"))
-      .write.mode("overwrite").partitionBy("band")
+    bands.write.mode("overwrite").partitionBy("band")
       .parquet(s"$streamPath/bands/batch_id=$batchId")
   }
 
@@ -777,7 +784,7 @@ object Dedup {
     * under the update invariant, so this is pure layout). Linear in
     * the INDEX (not the corpus), run at maintenance cadence.
     *
-    * SAFE under a concurrently running probe (round 14): the rewrite
+    * SAFE under a concurrently running probe: the rewrite
     * publishes a new TxnLog version; a probe pinned at the old version
     * keeps its files until [[vacuumDedupIndex]] drops them. A
     * concurrent [[updateDedupIndex]] is never lost: the publish
@@ -836,14 +843,10 @@ object Dedup {
     if (!hasLayers) return
     val (sh, sb) = streamIndexFrames(spark, streamPath, uptoBatch)
     rewriteIndexSub(spark, s"$indexPath/hashes", Nil)((df, _) =>
-      df.unionByName(sh)
-        .groupBy(col("h")).agg(min(col("doc_id")).as("doc_id")))
+      minDocPer(df.unionByName(sh), HashGroup))
     foldBarrier()
     rewriteIndexSub(spark, s"$indexPath/bands", Seq("band"))((df, _) =>
-      df.unionByName(sb)
-        .groupBy(col("band"), col("bkey"), col("sig"))
-        .agg(min(col("doc_id")).as("doc_id"))
-        .repartition(col("band")))
+      minDocPer(df.unionByName(sb), BandGroup).repartition(col("band")))
     // folded layers go last: a crash before this point re-folds the
     // same rows and the group-key dedup absorbs them. Non-layer names
     // (stray staging/temp dirs) are skipped, not thrown on — a
@@ -901,16 +904,13 @@ object Dedup {
   private[graft] def probeFrames(spark: SparkSession, batch: DataFrame,
       hashes: DataFrame, bands: DataFrame,
       minEst: Double): DataFrame = {
-    graft.expr.ArrayMatchCount.register(spark)
     // bsig feeds three plan branches; a DISK_ONLY persist was measured
     // and REJECTED (A/B at 10×: 21.2–24.4 s persisted vs 22.9 s
     // recomputed — inside run noise; the columnar cache build of the
     // text-derived signatures costs what the recompute costs, the
     // same outcome as the segment-dedup text-cache A/B)
-    val bsig = batch
-      .select(col("doc_id").as("b_id"), md5(col("text")).as("bh"),
-        array_distinct(split(col("text"), " ")).as("__toks"))
-      .select(col("b_id"), col("bh"), minhashSig.as("bsig"))
+    val bsig = sigOf(batch).select(col("doc_id").as("b_id"),
+      col("h").as("bh"), col("sig").as("bsig"))
     // exact: stream the hash table once, broadcast the batch's hashes
     // (hash rows are unique post-build, so the join needs no re-agg)
     val exact = hashes
@@ -918,16 +918,12 @@ object Dedup {
       .select(col("bh"), col("doc_id").as("exact_match"))
     // near: broadcast the batch's banded keys; one candidate row per
     // (batch doc, signature group, band) collision, deduped per pair
-    val bbandKeys = bsig
-      .withColumnRenamed("bsig", "sig")
-      .select(col("b_id"), col("sig").as("bsig"), posexplode(bandKeysExpr))
-      .withColumnRenamed("pos", "band").withColumnRenamed("col", "bkey")
-    val est = (call_function("array_match_count", col("bsig"), col("sig"))
-      .cast("double") / lit(K.toDouble))
+    val bbandKeys = bandRows(bsig.withColumnRenamed("bsig", "sig"),
+      md5BandKeys, col("b_id"), col("sig").as("bsig"))
     val best = bands
       .join(broadcast(bbandKeys), Seq("band", "bkey"))
       .groupBy(col("b_id"), col("doc_id"))
-      .agg(max(est).as("est"))
+      .agg(max(agreement(col("bsig"), col("sig"))).as("est"))
       .groupBy(col("b_id"))
       .agg(max(struct(col("est"), (-col("doc_id")).as("nid"))).as("m"))
       .select(col("b_id").as("n_id"), (-col("m.nid")).as("near_match"),
@@ -1178,24 +1174,9 @@ object Dedup {
     * hashing, no string churn), 32 components in 4 bands of 8. No SQL
     * oracle (hash family is Spark-specific); spec-tested instead.
     */
-  def minhashLshFast(s: SparkSession, dir: String): DataFrame = {
-    graft.expr.ArrayMatchCount.register(s)
-    graft.expr.MinHashSigs.register(s)
-    val k = 32; val bands = 4; val rows = k / bands
-    // fused one-pass signature (k running minima per document) — the
-    // HOF form `transform(sequence, i -> array_min(transform(...)))`
-    // materializes k interpreted lambda arrays per doc; the native
-    // expression is bit-identical (spec-pinned) and one loop
-    val sig = withToks(Tables.documents(s, dir))
-      .select(col("doc_id"),
-        call_function("minhash_sigs", col("__toks"), lit(k)).as("sig"))
-    val bandKeys = expr(
-      s"""transform(sequence(0, ${bands - 1}),
-         |  b -> xxhash64(slice(sig, b * $rows + 1, $rows)))""".stripMargin)
-    val est = (call_function("array_match_count", col("sig1"), col("sig2"))
-      .cast("double") / lit(k.toDouble))
-    lshPairs(sig, bandKeys, est)
-  }
+  def minhashLshFast(s: SparkSession, dir: String): DataFrame =
+    lshPairs(fastSigs(Tables.documents(s, dir)), fastBandKeys,
+      agreement(col("sig1"), col("sig2"), FastK))
 
   /** Pairs of documents with IDENTICAL distinct-token sets — the
     * provable-recall subset for any token-set hash family: identical
@@ -1233,26 +1214,16 @@ object Dedup {
     * candidates restricted to identical-token-set pairs = ALL such pairs
     * iff the pipeline is correct (see [[tokenSetPairs]]).
     *
-    * r16: enumerates CANDIDATES only ([[lshCandidatePairs]]) — this
-    * entry never observes the est column (no threshold; projected
-    * away), so [[minhashLshFast]]'s two signature joins that exist to
-    * compute it were dead work here. The gated semantics are
-    * unchanged: the recall property quantifies over the candidate
-    * pair set, which is identical (the est joins are 1:1 inner joins
-    * on both endpoints of an already-enumerated pair). Same oracle. */
+    * The recall property quantifies over the candidate pair SET, so
+    * this enumerates candidates only ([[lshCandidatePairs]]): the
+    * signature re-joins of [[minhashLshFast]] exist only to compute an
+    * estimate this entry never observes. */
   def minhashFastVerified(s: SparkSession, dir: String): DataFrame = {
-    graft.expr.MinHashSigs.register(s)
-    val k = 32; val bands = 4; val rows = k / bands
     // one task per core for the signatures, as in minhashLsh
-    val sig0 = withToks(Jobs.spread(Tables.documents(s, dir)))
-      .select(col("doc_id"),
-        call_function("minhash_sigs", col("__toks"), lit(k)).as("sig"))
-    val sig = sig0.persist(org.apache.spark.storage.StorageLevel.DISK_ONLY)
+    val sig = fastSigs(Jobs.spread(Tables.documents(s, dir)))
+      .persist(org.apache.spark.storage.StorageLevel.DISK_ONLY)
     liveCaches.add(sig)
-    val bandKeys = expr(
-      s"""transform(sequence(0, ${bands - 1}),
-         |  b -> xxhash64(slice(sig, b * $rows + 1, $rows)))""".stripMargin)
-    lshCandidatePairs(sig, bandKeys)
+    lshCandidatePairs(sig, fastBandKeys)
       .join(tokenSetPairs(s, dir), Seq("d1", "d2"))
       .select(col("d1"), col("d2"))
   }
@@ -1347,8 +1318,8 @@ object Dedup {
     // the signature frame feeds FOUR branches (both banded self-join
     // sides + the s1/s2 hamming lookups) and each recompute re-runs the
     // tokenize + 64-bit voting pass over the corpus — persist the
-    // narrow (doc_id, long) rows once (r17; MEMORY_AND_DISK, the
-    // doc-count-scale narrow-cache class, [[releaseCaches]] lifecycle)
+    // narrow (doc_id, long) rows once (MEMORY_AND_DISK: doc-count-scale
+    // narrow rows; [[releaseCaches]] lifecycle)
     val sig = withToks(Tables.documents(s, dir))
       .select(col("doc_id"),
         call_function("simhash64", col("__toks")).as("sig"))
@@ -1357,17 +1328,7 @@ object Dedup {
     registerCache(sig)
     val bandKeys = expr(
       "transform(sequence(0, 3), b -> shiftright(sig, b * 16) & 65535L)")
-    val banded = sig.select(col("doc_id"), posexplode(bandKeys))
-      .withColumnRenamed("pos", "band").withColumnRenamed("col", "bkey")
-    val a = banded.as("a"); val b = banded.as("b")
-    val pairs = a.join(b,
-        col("a.band") === col("b.band") && col("a.bkey") === col("b.bkey") &&
-          col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("d1"), col("b.doc_id").as("d2"))
-      .distinct()
-    val s1 = sig.select(col("doc_id").as("d1"), col("sig").as("sig1"))
-    val s2 = sig.select(col("doc_id").as("d2"), col("sig").as("sig2"))
-    pairs.join(s1, "d1").join(s2, "d2")
+    withPairSigs(lshCandidatePairs(sig, bandKeys), sig)
       .select(col("d1"), col("d2"),
         expr("bit_count(sig1 ^ sig2)").as("hamming"))
       .filter(col("hamming") <= 16)
@@ -1491,7 +1452,6 @@ object Dedup {
     * themselves). Downstream keep-one dedup is `WHERE doc_id = component`.
     */
   def ccDedup(s: SparkSession, dir: String): DataFrame = {
-    graft.expr.ArrayMatchCount.register(s)
     val docs = Tables.documents(s, dir)
     // exact-dedup first, fuzzy on uniques: docs with IDENTICAL full
     // signatures share every band key and every agreement count, so
@@ -1501,21 +1461,15 @@ object Dedup {
     // corpus this is the difference between joining reps and joining
     // everything. Representative = min doc_id of the signature group,
     // so the component min over reps IS the component min over docs.
-    val sigAll = withToks(docs)
-      .select(col("doc_id"), minhashSig.as("sig"))
-      .withColumn("skey", md5(concat_ws("|", col("sig"))))
+    val sigAll = withSigKey(md5Sigs(docs))
       .persist(org.apache.spark.storage.StorageLevel.DISK_ONLY)
     liveCaches.add(sigAll)
     val reps = sigAll.groupBy("skey").agg(min(col("doc_id")).as("rep"))
     val sig = sigAll.join(reps.select(col("rep").as("doc_id")), "doc_id")
       .select(col("doc_id"), col("sig"))
-    val bandKeys = expr(
-      s"""transform(sequence(0, ${BANDS - 1}),
-         |  b -> md5(concat_ws('|', slice(sig, b * $ROWS + 1, $ROWS))))""".stripMargin)
     // lshPairs names its estimate column est_jaccard; here the estimate
     // IS the raw agreement count, so the threshold is the integer 8
-    val edges = lshPairs(sig, bandKeys,
-        call_function("array_match_count", col("sig1"), col("sig2")))
+    val edges = lshPairs(sig, md5BandKeys, matchCount(col("sig1"), col("sig2")))
       .where(col("est_jaccard") >= 8)
       .select(col("d1"), col("d2"))
     val labels = connectedComponents(edges)

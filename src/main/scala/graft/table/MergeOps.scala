@@ -97,8 +97,12 @@ object MergeOps {
   /** Upsert with a precombine column (`redshift.copy(mode="upsert",
     * precombine_key=…)` / Timestream `version`): on key collision the row
     * with the greatest precombine value wins — including collisions
-    * within the source batch itself.
-    */
+    * within the source batch itself; on a tie the source row wins.
+    * Plans like [[upsert]]: the source is reduced to its winner per key,
+    * a winner that a target row with a greater precombine value beats
+    * is dropped, and the rest are upserted, so with partition columns
+    * only the partitions the surviving rows touch are rewritten.
+    * Returns [[upsert]]'s row count. */
   def versionedUpsert(
       spark: SparkSession,
       targetPath: String,
@@ -106,14 +110,19 @@ object MergeOps {
       keys: Seq[String],
       precombine: String,
       partitionCols: Seq[String] = Nil): Long = {
-    val target = spark.read.option("basePath", targetPath).parquet(targetPath)
-    val all = target.unionByName(source.select(target.columns.map(col): _*))
+    require(keys.nonEmpty, "merge requires key columns")
     val w = Window.partitionBy(keys.map(col): _*)
       .orderBy(col(precombine).desc)
-    val deduped = all
+    val winners = source
       .withColumn("__rn", row_number().over(w))
       .filter(col("__rn") === 1)
       .drop("__rn")
-    StagedCommit.overwrite(deduped, targetPath, partitionCols)
+    val target = spark.read.option("basePath", targetPath).parquet(targetPath)
+      .select((keys :+ precombine).map(col): _*)
+    val beaten = keys.map(k => col(s"s.$k") === col(s"t.$k"))
+      .reduce(_ && _) && col(s"t.$precombine") > col(s"s.$precombine")
+    upsert(spark, targetPath,
+      winners.as("s").join(target.as("t"), beaten, "left_anti"),
+      keys, partitionCols)
   }
 }

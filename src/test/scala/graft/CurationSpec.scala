@@ -279,12 +279,34 @@ class CurationSpec extends AnyFunSuite {
         (900003L, "solo"),
         (900004L, "p q r s t u v w x y p q r s t u v w x y"))
         .toDF("doc_id", "text"))
-    val a = Curation.gopherRepetitionOn(docs, prefixDerivation = false)
+    val base = Curation.repetitionTokens(docs)
+    def rows(counts: org.apache.spark.sql.DataFrame) = counts
+      .select(col("doc_id"), col("n"), col("g"), col("cnt"),
+        array_sort(col("ps")).as("ps"))
       .collect().map(_.toString).sorted.toSeq
-    val b = Curation.gopherRepetitionOn(docs, prefixDerivation = true)
-      .collect().map(_.toString).sorted.toSeq
-    assert(a == b)
+    val a = rows(referenceGramCounts(base))
+    val b = rows(Curation.gramCounts(base))
+    assert(a.nonEmpty && a == b)
+    // and the operator over that table keeps every doc
+    assert(Curation.gopherRepetitionOn(docs).count() == docs.count())
   }
+
+  /** The per-n explode [[Curation.gramCounts]]'s prefix derivation
+    * replaced, kept as its reference: every (n, window) pair for
+    * n in 2..10 exploded from the tokens, then counted per
+    * (doc_id, n, g) with its start positions. */
+  private def referenceGramCounts(base: org.apache.spark.sql.DataFrame) =
+    base.select(col("doc_id"),
+        explode(expr(
+          """flatten(transform(sequence(2, 10), n ->
+            |  case when size(toks) < n then
+            |    cast(array() as array<struct<n: int, i: int, g: string>>)
+            |  else transform(sequence(1, size(toks) - n + 1), i ->
+            |    named_struct('n', n, 'i', i,
+            |      'g', concat_ws(' ', slice(toks, i, n))))
+            |  end))""".stripMargin)).as("w"))
+      .groupBy(col("doc_id"), col("w.n").as("n"), col("w.g").as("g"))
+      .agg(count(lit(1)).as("cnt"), collect_list(col("w.i")).as("ps"))
 
   /** The interpreted chain the native Gopher kernel replaced, kept as
     * its reference: one column per [[graft.expr.GopherStatsImpl.Fields]]

@@ -466,4 +466,63 @@ class DeltaProtocolSpec extends AnyFunSuite {
       DeltaLogReader.snapshot(spark, dir)
     }
   }
+
+  /** The starting protocols of the upgrade tables: three legacy
+    * protocols (reader/writer 1/2, 1/4, 2/5) and a feature-range 3/7
+    * table that already declares columnMapping. */
+  private val upgradeFrom = Map(
+    "1/2" -> DeltaLogReader.Protocol(minReaderVersion = 1, minWriterVersion = 2),
+    "1/4" -> DeltaLogReader.Protocol(minReaderVersion = 1, minWriterVersion = 4),
+    "2/5" -> DeltaLogReader.Protocol(minReaderVersion = 2, minWriterVersion = 5),
+    "3/7" -> DeltaLogReader.Protocol(3, Set("columnMapping"), 7,
+      Set("appendOnly", "columnMapping", "invariants")))
+
+  test("reader+writer feature upgrades merge into one 3/7 protocol action") {
+    // (feature, starting protocol, the emitted protocol action): legacy
+    // versions enumerate their implied features, feature-range tables
+    // keep every feature they declare
+    val table = Seq(
+      ("deletionVectors", "1/2",
+        """{"protocol":{"minReaderVersion":3,"minWriterVersion":7,"readerFeatures":["deletionVectors"],"writerFeatures":["appendOnly","deletionVectors","invariants"]}}"""),
+      ("deletionVectors", "1/4",
+        """{"protocol":{"minReaderVersion":3,"minWriterVersion":7,"readerFeatures":["deletionVectors"],"writerFeatures":["appendOnly","changeDataFeed","checkConstraints","deletionVectors","generatedColumns","invariants"]}}"""),
+      ("deletionVectors", "2/5",
+        """{"protocol":{"minReaderVersion":3,"minWriterVersion":7,"readerFeatures":["columnMapping","deletionVectors"],"writerFeatures":["appendOnly","changeDataFeed","checkConstraints","columnMapping","deletionVectors","generatedColumns","invariants"]}}"""),
+      ("deletionVectors", "3/7",
+        """{"protocol":{"minReaderVersion":3,"minWriterVersion":7,"readerFeatures":["columnMapping","deletionVectors"],"writerFeatures":["appendOnly","columnMapping","deletionVectors","invariants"]}}"""),
+      ("v2Checkpoint", "1/2",
+        """{"protocol":{"minReaderVersion":3,"minWriterVersion":7,"readerFeatures":["v2Checkpoint"],"writerFeatures":["appendOnly","invariants","v2Checkpoint"]}}"""),
+      ("v2Checkpoint", "1/4",
+        """{"protocol":{"minReaderVersion":3,"minWriterVersion":7,"readerFeatures":["v2Checkpoint"],"writerFeatures":["appendOnly","changeDataFeed","checkConstraints","generatedColumns","invariants","v2Checkpoint"]}}"""),
+      ("v2Checkpoint", "2/5",
+        """{"protocol":{"minReaderVersion":3,"minWriterVersion":7,"readerFeatures":["columnMapping","v2Checkpoint"],"writerFeatures":["appendOnly","changeDataFeed","checkConstraints","columnMapping","generatedColumns","invariants","v2Checkpoint"]}}"""),
+      ("v2Checkpoint", "3/7",
+        """{"protocol":{"minReaderVersion":3,"minWriterVersion":7,"readerFeatures":["columnMapping","v2Checkpoint"],"writerFeatures":["appendOnly","columnMapping","invariants","v2Checkpoint"]}}"""),
+      ("timestampNtz", "1/2",
+        """{"protocol":{"minReaderVersion":3,"minWriterVersion":7,"readerFeatures":["timestampNtz"],"writerFeatures":["appendOnly","invariants","timestampNtz"]}}"""),
+      ("timestampNtz", "1/4",
+        """{"protocol":{"minReaderVersion":3,"minWriterVersion":7,"readerFeatures":["timestampNtz"],"writerFeatures":["appendOnly","changeDataFeed","checkConstraints","generatedColumns","invariants","timestampNtz"]}}"""),
+      ("timestampNtz", "2/5",
+        """{"protocol":{"minReaderVersion":3,"minWriterVersion":7,"readerFeatures":["columnMapping","timestampNtz"],"writerFeatures":["appendOnly","changeDataFeed","checkConstraints","columnMapping","generatedColumns","invariants","timestampNtz"]}}"""),
+      ("timestampNtz", "3/7",
+        """{"protocol":{"minReaderVersion":3,"minWriterVersion":7,"readerFeatures":["columnMapping","timestampNtz"],"writerFeatures":["appendOnly","columnMapping","invariants","timestampNtz"]}}"""))
+    table.foreach { case (feature, from, expected) =>
+      assert(graft.io.DeltaLogWriter.readerWriterFeatureUpgrade(
+        upgradeFrom(from), feature) == expected, s"$feature from $from")
+    }
+  }
+
+  test("changeDataFeed enablement upgrades legacy writers to version 4") {
+    val table = Seq(
+      "1/2" -> Seq(
+        """{"protocol":{"minReaderVersion":1,"minWriterVersion":4}}"""),
+      "1/4" -> Nil,
+      "2/5" -> Nil,
+      "3/7" -> Seq(
+        """{"protocol":{"minReaderVersion":3,"minWriterVersion":7,"readerFeatures":["columnMapping"],"writerFeatures":["appendOnly","changeDataFeed","columnMapping","invariants"]}}"""))
+    table.foreach { case (from, expected) =>
+      assert(graft.io.DeltaLogWriter.writerFeatureUpgrade(
+        upgradeFrom(from), "changeDataFeed", 4) == expected, from)
+    }
+  }
 }

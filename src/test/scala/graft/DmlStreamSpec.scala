@@ -163,6 +163,32 @@ class DmlStreamSpec extends AnyFunSuite {
     assert(got == Set((1L, 2L, "new"), (2L, 5L, "keep"), (3L, 2L, "y")))
   }
 
+  test("versionedUpsert rewrites only the partitions its winning rows touch") {
+    val spark0 = spark
+    import spark0.implicits._
+    val dir = tmp()
+    DatasetWriter.toParquet(
+      Seq((1L, 1L, "a", "p1"), (2L, 5L, "b", "p1"), (3L, 1L, "c", "p2"),
+        (4L, 1L, "d", "p3")).toDF("id", "version", "v", "p"),
+      dir, mode = DatasetWriter.Overwrite, partitionCols = Seq("p"))
+    def files(part: String): Set[String] =
+      new java.io.File(s"$dir/p=$part").listFiles().map(_.getName)
+        .filter(_.endsWith(".parquet")).toSet
+    val untouched = Seq("p2", "p3").map(p => p -> files(p)).toMap
+    // every source row lands in p1: id=1 is newer and replaces, id=2 is
+    // older than the target's version 5 and must not, id=5 is inserted
+    val source = Seq((1L, 2L, "new", "p1"), (2L, 3L, "stale", "p1"),
+      (5L, 1L, "e", "p1")).toDF("id", "version", "v", "p")
+    MergeOps.versionedUpsert(spark, dir, source, Seq("id"), "version",
+      partitionCols = Seq("p"))
+    untouched.foreach { case (p, names) => assert(files(p) == names, p) }
+    val got = spark.read.option("basePath", dir).parquet(dir)
+      .select("id", "version", "v", "p").as[(Long, Long, String, String)]
+      .collect().toSet
+    assert(got == Set((1L, 2L, "new", "p1"), (2L, 5L, "b", "p1"),
+      (3L, 1L, "c", "p2"), (4L, 1L, "d", "p3"), (5L, 1L, "e", "p1")))
+  }
+
   test("streaming tumbling agg equals the batch window aggregate") {
     val events = EventStream.readEvents(spark, s"$sf")
     val agg = EventStream.tumblingAgg(events)
