@@ -224,9 +224,7 @@ object DatasetReader {
       .mapPartitions { it =>
         val conf = confBc.value.value
         it.map { f =>
-          val in = org.apache.parquet.hadoop.util.HadoopInputFile
-            .fromPath(new Path(f), conf)
-          val rdr = org.apache.parquet.hadoop.ParquetFileReader.open(in)
+          val rdr = TableFiles.openFooter(new Path(f), conf)
           try (rdr.getFooter.getFileMetaData.getSchema.toString, f)
           finally rdr.close()
         }

@@ -138,6 +138,14 @@ object DeltaDeletionVectors {
     decoded
   }
 
+  /** A descriptor as a per-file vector a scan task loads itself
+    * ([[TableFiles.withoutDeleted]]). */
+  final case class Vector(tableRoot: String, d: Descriptor)
+      extends TableFiles.DeletionVector {
+    def positions(conf: Configuration): Array[Long] =
+      rowIndexes(conf, tableRoot, d)
+  }
+
   private def readSidecarSlice(conf: Configuration, tableRoot: Path,
       d: Descriptor): Array[Byte] = {
     val p = sidecarPath(tableRoot, d)

@@ -39,9 +39,11 @@ final class UnsupportedDeltaFeatureException(msg: String)
   * only when every `readerFeatures` entry is implemented here
   * (deletionVectors, columnMapping, timestampNtz, vacuumProtocolCheck) —
   * anything else raises [[UnsupportedDeltaFeatureException]] rather than
-  * returning silently wrong rows. Deletion vectors are applied as a
-  * row-position anti-join: `_metadata.row_index` against the decoded DV
-  * bitmaps ([[DeltaDeletionVectors]], decoded on executors).
+  * returning silently wrong rows. Deletion vectors are applied as the
+  * protocol applies them, a per-file filter on row index: each scan task
+  * decodes its file's bitmap ([[DeltaDeletionVectors]]) and drops the
+  * rows whose `_metadata.row_index` it holds
+  * ([[TableFiles.withoutDeleted]]).
   *
   * Scale: the log itself is metadata — the driver materializes only the
   * active file list, the same cost every Delta reader pays; the data read
@@ -389,8 +391,8 @@ object DeltaLogReader {
     * the snapshot already materialized), so the join is a map-side
     * lookup, and the scan itself stays a single distributed node that
     * AQE/pushdown treat normally. Deletion vectors (if any file carries
-    * one) become a `(file, row_index)` anti-join whose delete side is
-    * decoded bitmap-by-bitmap on executors; tables without DVs keep the
+    * one) become a filter on `(file, row_index)` that each scan task
+    * answers from its file's decoded bitmap; tables without DVs keep the
     * exact pre-DV plan. Column-mapped tables scan by physical name and
     * rename to logical names in the final projection.
     */
@@ -485,11 +487,8 @@ object DeltaLogReader {
     var df = spark.read.schema(scanSchema).parquet(qualified.map(_._1): _*)
       .withColumn("__file", TableFiles.fileName)
       .withColumn("__pos", col("_metadata.row_index"))
-    if (files.exists(_.deletionVector.isDefined)) {
-      val qualifiedRoot = fs.makeQualified(root).toString
-      df = df.join(deletedRows(spark, qualifiedRoot, qualified),
-        Seq("__file", "__pos"), "left_anti")
-    }
+    df = TableFiles.withoutDeleted(df, col("__file"), col("__pos"),
+      deletionVectors(fs, root, qualified))
     val manifestSchema = StructType(
       StructField("__file", StringType, nullable = false) +:
         (snap.partitionColumns.map(c =>
@@ -536,17 +535,11 @@ object DeltaLogReader {
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val qualified = TableFiles.locateAll(fs, root, files)(_.path)
     val hasParts = snap.partitionColumns.nonEmpty
-    val hasDvs = files.exists(_.deletionVector.isDefined)
     var df = spark.read.schema(dataSchema).parquet(qualified.map(_._1): _*)
-    if (hasParts || hasDvs)
+    if (hasParts)
       df = df.withColumn("__file", TableFiles.fileName)
-    if (hasDvs) {
-      val qualifiedRoot = fs.makeQualified(root).toString
-      val deleted = deletedRows(spark, qualifiedRoot, qualified)
-      df = df.withColumn("__pos", col("_metadata.row_index"))
-        .join(deleted, Seq("__file", "__pos"), "left_anti")
-        .drop("__pos")
-    }
+    df = TableFiles.withoutDeleted(df, TableFiles.fileName,
+      col("_metadata.row_index"), deletionVectors(fs, root, qualified))
     if (hasParts) {
       val manifestSchema = StructType(
         StructField("__file", StringType, nullable = false) +:
@@ -829,25 +822,14 @@ object DeltaLogReader {
     }.toMap
   }
 
-  /** `(__file, __pos)` rows deleted by the snapshot's deletion vectors,
-    * decoded on executors (one task per descriptor batch) so a large DV
-    * never materializes on the driver. */
-  private def deletedRows(spark: SparkSession, qualifiedRoot: String,
-      qualified: Seq[(String, AddFile)]): DataFrame = {
-    val entries = qualified.flatMap { case (uri, f) =>
-      f.deletionVector.map(dv => uri -> dv)
-    }
-    val conf = new SerializableConfiguration(
-      spark.sparkContext.hadoopConfiguration)
-    val rdd = spark.sparkContext
-      .parallelize(entries, math.max(1, math.min(entries.size, 32)))
-      .flatMap { case (uri, dv) =>
-        DeltaDeletionVectors.rowIndexes(conf.value, qualifiedRoot, dv)
-          .map(pos => Row(uri, pos))
-      }
-    spark.createDataFrame(rdd, StructType(Seq(
-      StructField("__file", StringType, nullable = false),
-      StructField("__pos", LongType, nullable = false))))
+  /** The deletion vectors of `qualified` files, keyed as
+    * [[TableFiles.fileName]] spells each file's rows. */
+  private def deletionVectors(fs: org.apache.hadoop.fs.FileSystem, root: Path,
+      qualified: Seq[(String, AddFile)]): Map[String, TableFiles.DeletionVector] = {
+    lazy val qualifiedRoot = fs.makeQualified(root).toString
+    qualified.flatMap { case (uri, f) =>
+      f.deletionVector.map(dv => uri -> DeltaDeletionVectors.Vector(qualifiedRoot, dv))
+    }.toMap
   }
 
   private def dvFromRow(a: Row): Option[DeltaDeletionVectors.Descriptor] =

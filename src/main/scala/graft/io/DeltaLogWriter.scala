@@ -609,9 +609,13 @@ object DeltaLogWriter {
 
   /** Upsert by key — partition-granular on partitioned tables: only
     * files in partitions where `src` rows land or matched keys live are
-    * rewritten ([[TableFiles.planMerge]]); every other file is kept. */
+    * rewritten ([[TableFiles.planMerge]]); every other file is kept.
+    * `beforeCommit` runs once the new files are staged, before the
+    * commit claims a version; when it throws, the staged files are
+    * deleted and its error propagates with the table unchanged. */
   def merge(spark: SparkSession, tablePath: String, src: DataFrame,
-      keys: Seq[String], matchNulls: Boolean = false): Committed = {
+      keys: Seq[String], matchNulls: Boolean = false,
+      beforeCommit: () => Unit = () => ()): Committed = {
     val latest = DeltaLogReader.latestVersion(spark, tablePath)
     if (latest < 0) return write(src, tablePath, mode = "error")
     val snap = DeltaLogReader.snapshot(spark, tablePath)
@@ -632,6 +636,7 @@ object DeltaLogWriter {
         writeDataFiles(merged, tablePath, pcols, physOf, fieldIds),
         mergeCdc(plan.touchedScan, srcAligned, keys, matchNulls, tablePath,
           pcols, physOf, fieldIds))
+    gate(spark, tablePath, adds, cdc, beforeCommit)
     commitLoop(spark, tablePath, snap.schema, pcols, adds,
       plan.touched.map(_.path), "MERGE", emitMeta = false,
       extraActions = cdc, priorConfig = Some(snap.configuration))
@@ -1114,17 +1119,20 @@ object DeltaLogWriter {
     val out =
       if (fieldIds.isEmpty) renamed else TableFiles.withFieldIds(renamed, fieldIds)
     def relOf(rel: String) = if (destPrefix.isEmpty) rel else s"$destPrefix/$rel"
-    val moved = TableFiles.writeStaged(out, root,
-      partCols.map(c => physOf.getOrElse(c, c)))(rel => new Path(root, relOf(rel)))
-    // cdc actions carry no stats field in the protocol — skip the
-    // footer sweep for `_change_data` writes
-    val stats =
+    val physParts = partCols.map(c => physOf.getOrElse(c, c))
+    def dest(rel: String) = new Path(root, relOf(rel))
+    // each write task folds the stats of the files it closes; cdc
+    // actions carry no stats field in the protocol, so `_change_data`
+    // writes fold nothing
+    val moved: Seq[TableFiles.Staged[Option[String]]] =
       if (destPrefix.isEmpty)
-        TableFiles.footers(df.sparkSession, moved.map(_.path))(statsJson)
-      else Map.empty[String, String]
+        TableFiles.writeStaged(out, root, physParts,
+          rdr => Option(statsJson(rdr)))(dest)
+      else TableFiles.writeStaged(out, root, physParts)(dest)
+        .map(_.copy(footer = None))
     moved.map { m =>
       AddEntry(relOf(m.rel), TableFiles.partitionValuesOf(m.rel), m.size,
-        System.currentTimeMillis(), stats = stats.get(m.path))
+        System.currentTimeMillis(), stats = m.footer)
     }
   }
 
@@ -1228,15 +1236,16 @@ object DeltaLogWriter {
     * deletion-vector path as [[deleteWhere]] (the Iceberg twin is
     * [[IcebergWriter.deleteMatched]]). The match is a semi-join, so
     * the key set scales past anything an IN-list predicate could
-    * carry. */
+    * carry. `beforeCommit` gates the commit as in [[merge]]. */
   def deleteMatched(spark: SparkSession, tablePath: String,
       keys: DataFrame, keyCols: Seq[String],
-      matchNulls: Boolean = false): Committed = {
+      matchNulls: Boolean = false,
+      beforeCommit: () => Unit = () => ()): Committed = {
     require(keyCols.nonEmpty, "deleteMatched needs key columns")
     val keySet = keys.select(keyCols.map(col): _*).distinct()
     deleteWhereImpl(spark, tablePath,
       df => df.join(keySet, TableFiles.keyCond(df, keySet, keyCols, matchNulls),
-        "left_semi"), None)
+        "left_semi"), None, beforeCommit)
   }
 
   /** `UPDATE … SET … WHERE` as ONE zero-rewrite commit: the matched
@@ -1261,8 +1270,8 @@ object DeltaLogWriter {
   private def deleteWhereImpl(spark: SparkSession,
       tablePath: String,
       matcher: DataFrame => DataFrame,
-      updateAssignments: Option[Seq[(String, org.apache.spark.sql.Column)]])
-      : Committed = {
+      updateAssignments: Option[Seq[(String, org.apache.spark.sql.Column)]],
+      beforeCommit: () => Unit = () => ()): Committed = {
     import org.apache.spark.sql.Row
     import org.apache.spark.sql.types.{StringType, StructField, StructType}
     val snap = DeltaLogReader.snapshot(spark, tablePath)
@@ -1406,6 +1415,7 @@ object DeltaLogWriter {
           tablePath, snap.partitionColumns, physOf,
           DeltaLogReader.mappingFieldIds(snap), destPrefix = "_change_data"))
       }
+    gate(spark, tablePath, adds ++ updatedAdds, cdc, beforeCommit)
     commitLoop(spark, tablePath, snap.schema, snap.partitionColumns,
       adds ++ updatedAdds,
       removes,
@@ -1462,12 +1472,27 @@ object DeltaLogWriter {
     b.result()
   }
 
+  /** Run `beforeCommit`; when it throws, sweep what this commit staged
+    * and rethrow, so the table neither moves nor keeps a staged file. */
+  private def gate(spark: SparkSession, tablePath: String,
+      adds: Seq[AddEntry], extraActions: Seq[String],
+      beforeCommit: () => Unit): Unit =
+    try beforeCommit()
+    catch { case e: Throwable =>
+      val root = new Path(tablePath)
+      sweepUncommitted(root.getFileSystem(spark.sparkContext.hadoopConfiguration),
+        root, adds, extraActions)
+      throw e
+    }
+
   /** Data files of a commit abandoned AFTER they were written (the
-    * SetTransaction skip) are referenced by no commit — delete them
-    * rather than leave orphans only a retention-expired vacuum would
-    * find. Best-effort: a failed delete costs storage, never
-    * correctness. Only `u`-storage DV sidecars are swept (the only
-    * kind this writer stages fresh alongside a pending commit). */
+    * SetTransaction skip, a failed [[gate]]) are referenced by no
+    * commit — delete them rather than leave orphans only a
+    * retention-expired vacuum would find. Best-effort: a failed delete
+    * costs storage, never correctness. An add that carries a deletion
+    * vector re-adds a live file, which stays; only its `u`-storage
+    * sidecar is swept (the only kind this writer stages fresh
+    * alongside a pending commit). */
   private def sweepUncommitted(fs: org.apache.hadoop.fs.FileSystem,
       root: Path, adds: Seq[AddEntry], extraActions: Seq[String]): Unit = {
     def del(p: Path): Unit =
@@ -1476,7 +1501,7 @@ object DeltaLogWriter {
       if (rel.contains("://") || rel.startsWith("/")) new Path(rel)
       else new Path(root, rel)
     adds.foreach { a =>
-      del(resolve(a.path))
+      if (a.deletionVector.isEmpty) del(resolve(a.path))
       a.deletionVector.filter(_.storageType == "u").foreach(d =>
         del(DeltaDeletionVectors.sidecarPath(fs.makeQualified(root), d)))
     }

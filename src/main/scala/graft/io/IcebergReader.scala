@@ -658,13 +658,8 @@ object IcebergReader {
     val confBc = spark.sparkContext.broadcast(
       new org.apache.spark.util.SerializableConfiguration(
         spark.sparkContext.hadoopConfiguration))
-    val descs = dvFiles.map(f => (f.path,
-      f.referencedDataFile.getOrElse(throw new UnsupportedIcebergFeatureException(
-        s"puffin delete file ${f.path} lacks referenced_data_file")),
-      f.contentOffset.getOrElse(throw new UnsupportedIcebergFeatureException(
-        s"puffin delete file ${f.path} lacks content_offset")),
-      f.contentSizeBytes.getOrElse(throw new UnsupportedIcebergFeatureException(
-        s"puffin delete file ${f.path} lacks content_size_in_bytes"))))
+    val descs = dvFiles.map(f =>
+      (f.path, refFileOf(f), contentOffsetOf(f), contentSizeOf(f)))
     spark.createDataset(descs)
       .repartition(math.min(descs.size, 32))
       .flatMap { case (puffin, refFile, off, len) =>
@@ -674,6 +669,18 @@ object IcebergReader {
       .toDF("__file", "__pos")
       .withColumn("__file", TableFiles.schemeless(col("__file")))
   }
+
+  private def refFileOf(f: DataFileEntry): String =
+    f.referencedDataFile.getOrElse(throw new UnsupportedIcebergFeatureException(
+      s"puffin delete file ${f.path} lacks referenced_data_file"))
+
+  private def contentOffsetOf(f: DataFileEntry): Long =
+    f.contentOffset.getOrElse(throw new UnsupportedIcebergFeatureException(
+      s"puffin delete file ${f.path} lacks content_offset"))
+
+  private def contentSizeOf(f: DataFileEntry): Long =
+    f.contentSizeBytes.getOrElse(throw new UnsupportedIcebergFeatureException(
+      s"puffin delete file ${f.path} lacks content_size_in_bytes"))
 
   /** The snapshot with the v3 ROW-LINEAGE metadata columns attached:
     * `_row_id` = the file's effective `first_row_id` + the row's
@@ -708,25 +715,23 @@ object IcebergReader {
   /** The POSITION-delete stage shared by [[applyDeletes]] (which adds
     * the equality stage and the final projection) and
     * [[readWithLineage]] (which keeps `__file`/`__pos` for row-id
-    * derivation): the data scan with position-delete parquet and v3
-    * puffin deletion vectors applied as one (file, pos) anti-join —
-    * DV blobs expand to positions ON EXECUTORS, the driver holds only
-    * blob descriptors. */
+    * derivation): the data scan with v3 puffin deletion vectors applied
+    * as a per-file filter ([[TableFiles.withoutDeleted]]: each scan task
+    * reads its file's blob, the driver holds only blob descriptors) and
+    * position-delete parquet as a (file, pos) anti-join. */
   private def applyDeletes0(spark: SparkSession,
       snap: Snapshot): DataFrame = {
     var data = dataScan(spark, snap, withMeta = true)
       .withColumn("__file", TableFiles.schemeless(col("__file")))
-    if (snap.deleteFiles.nonEmpty || snap.dvFiles.nonEmpty) {
-      val posDels =
-        if (snap.deleteFiles.isEmpty) None
-        else Some(spark.read.parquet(snap.deleteFiles.map(_.path): _*)
-          .select(TableFiles.schemeless(col("file_path")).as("__file"),
-            col("pos").cast(LongType).as("__pos")))
-      val dvDels =
-        if (snap.dvFiles.isEmpty) None
-        else Some(dvPositions(spark, snap.dvFiles))
-      val dels = (posDels.toSeq ++ dvDels.toSeq).reduce(_ unionByName _)
-      data = data.join(dels, Seq("__file", "__pos"), "left_anti")
+    data = TableFiles.withoutDeleted(data, col("__file"), col("__pos"),
+      snap.dvFiles.map(f => TableFiles.schemeless(refFileOf(f)) ->
+        (Puffin.Vector(f.path, contentOffsetOf(f), contentSizeOf(f)):
+          TableFiles.DeletionVector)).toMap)
+    if (snap.deleteFiles.nonEmpty) {
+      val posDels = spark.read.parquet(snap.deleteFiles.map(_.path): _*)
+        .select(TableFiles.schemeless(col("file_path")).as("__file"),
+          col("pos").cast(LongType).as("__pos"))
+      data = data.join(posDels, Seq("__file", "__pos"), "left_anti")
     }
     data
   }
@@ -939,10 +944,8 @@ object IcebergReader {
   /** Does this parquet file's footer declare field-ids? One driver-side
     * footer open — the probe that decides id- vs name-resolution. */
   private def fileHasFieldIds(spark: SparkSession, path: String): Boolean = {
-    val p = new Path(path)
-    val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-      p, spark.sparkContext.hadoopConfiguration)
-    val rdr = org.apache.parquet.hadoop.ParquetFileReader.open(in)
+    val rdr = TableFiles.openFooter(new Path(path),
+      spark.sparkContext.hadoopConfiguration)
     try rdr.getFileMetaData.getSchema.getFields.asScala.exists(_.getId != null)
     finally rdr.close()
   }

@@ -186,28 +186,51 @@ object IcebergWriter {
     * EXISTING manifest entries, only touched partitions are rewritten.
     * Snapshot-isolated: the commit validates that the snapshot the merge
     * resolved against is still current; if another writer advanced the
-    * table, the whole resolution re-runs against the new snapshot. */
+    * table, the whole resolution re-runs against the new snapshot.
+    * `beforeCommit` runs once the new files are staged, before the
+    * commit claims a version; when it throws, the staged files are
+    * deleted and its error propagates with the table unchanged. */
   def merge(spark: SparkSession, tablePath: String, src: DataFrame,
-      keys: Seq[String], matchNulls: Boolean = false): Committed =
-    resolving(mergeOnce(spark, tablePath, src, keys, matchNulls))
+      keys: Seq[String], matchNulls: Boolean = false,
+      beforeCommit: () => Unit = () => ()): Committed =
+    resolving(mergeOnce(spark, tablePath, src, keys, matchNulls, beforeCommit))
 
   private def mergeOnce(spark: SparkSession, tablePath: String,
-      src: DataFrame, keys: Seq[String], matchNulls: Boolean): Committed = {
-    if (!IcebergReader.isIcebergTable(spark, tablePath))
+      src: DataFrame, keys: Seq[String], matchNulls: Boolean,
+      beforeCommit: () => Unit): Committed = {
+    if (!IcebergReader.isIcebergTable(spark, tablePath)) {
+      beforeCommit()
       return write(src, tablePath, mode = "error")
+    }
     val snapOpt = IcebergReader.snapshotOpt(spark, tablePath)
-    if (snapOpt.isEmpty) // created-but-empty table: upsert = insert all
+    if (snapOpt.isEmpty) { // created-but-empty table: upsert = insert all
+      beforeCommit()
       return write(src, tablePath, mode = "append")
+    }
     val snap = snapOpt.get
     checkNoEqualityDeletes(snap, tablePath, "merge")
     val pfields = IcebergReader.partitionFields(spark, tablePath)
     val (plan, merged) = TableFiles.planMerge(target(spark, tablePath, snap, pfields),
       src.select(snap.schema.fieldNames.map(col).toSeq: _*), keys, matchNulls)
     val adds = writeDataFiles(merged, tablePath, pfields)
+    gate(spark, tablePath, adds, beforeCommit)
     commit(spark, tablePath, snap.schema, pfields, adds, plan.kept.map(asInfo),
       operation = "overwrite", carryCurrentManifests = false,
       expectedParent = Some(snap.snapshotId))
   }
+
+  /** Run `beforeCommit`; when it throws, delete the freshly written
+    * `adds` and rethrow, so the table neither moves nor keeps a staged
+    * file. */
+  private def gate(spark: SparkSession, tablePath: String,
+      adds: Seq[FileInfo], beforeCommit: () => Unit): Unit =
+    try beforeCommit()
+    catch { case e: Throwable =>
+      val fs = new Path(tablePath).getFileSystem(
+        spark.sparkContext.hadoopConfiguration)
+      adds.foreach(f => fs.delete(new Path(f.path), false))
+      throw e
+    }
 
   /** Rewrite paths (merge/delete-matched) drop the snapshot's delete
     * manifests, so they must materialize position deletes into the
@@ -284,14 +307,17 @@ object IcebergWriter {
     * (`athena/_write_iceberg.py:715-868`): remove rows whose key appears
     * in `keys` — partition-granular, same carry/rewrite split as
     * [[merge]]: untouched files become EXISTING manifest entries, only
-    * partitions holding matched keys are rewritten. */
+    * partitions holding matched keys are rewritten. `beforeCommit`
+    * gates the commit as in [[merge]]. */
   def deleteMatched(spark: SparkSession, tablePath: String, keys: DataFrame,
-      keyCols: Seq[String], matchNulls: Boolean = false): Committed =
-    resolving(deleteMatchedOnce(spark, tablePath, keys, keyCols, matchNulls))
+      keyCols: Seq[String], matchNulls: Boolean = false,
+      beforeCommit: () => Unit = () => ()): Committed =
+    resolving(deleteMatchedOnce(spark, tablePath, keys, keyCols, matchNulls,
+      beforeCommit))
 
   private def deleteMatchedOnce(spark: SparkSession, tablePath: String,
       keys: DataFrame, keyCols: Seq[String],
-      matchNulls: Boolean): Committed = {
+      matchNulls: Boolean, beforeCommit: () => Unit): Committed = {
     require(IcebergReader.isIcebergTable(spark, tablePath),
       s"no Iceberg table at $tablePath")
     val snapOpt = IcebergReader.snapshotOpt(spark, tablePath)
@@ -304,6 +330,7 @@ object IcebergWriter {
       target(spark, tablePath, snap, pfields),
       keys.select(keyCols.map(col): _*).distinct(), keyCols, matchNulls)
     val adds = writeDataFiles(remaining, tablePath, pfields)
+    gate(spark, tablePath, adds, beforeCommit)
     commit(spark, tablePath, snap.schema, pfields, adds, plan.kept.map(asInfo),
       operation = "delete", carryCurrentManifests = false,
       expectedParent = Some(snap.snapshotId))
@@ -414,12 +441,11 @@ object IcebergWriter {
     val spark = rows.sparkSession
     val root = new Path(tablePath)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val moved = TableFiles.writeStaged(rows, root, Nil)(_ =>
+    val moved = TableFiles.writeStaged(rows, root, Nil, _.getRecordCount)(_ =>
       new Path(new Path(root, "data"), s"$kind-${UUID.randomUUID()}.parquet"))
-    val counts = TableFiles.recordCounts(spark, moved.map(_.path))
-    val (nonEmpty, empty) = moved.partition(m => counts(m.path) > 0L)
+    val (nonEmpty, empty) = moved.partition(_.footer > 0L)
     empty.foreach(m => fs.delete(new Path(m.path), false))
-    nonEmpty.map(m => FileInfo(m.path, Map.empty, m.size, counts(m.path),
+    nonEmpty.map(m => FileInfo(m.path, Map.empty, m.size, m.footer,
       equalityIds = equalityIds))
   }
 
@@ -1531,8 +1557,8 @@ object IcebergWriter {
   /** Stage as parquet (partition values computed into hidden path
     * columns — the transform result for `day`/`bucket`/…, the column
     * itself for identity — so the real source columns stay IN the files,
-    * as Iceberg requires), move under `data/`, and gather per-file stats
-    * with distributed footer reads. */
+    * as Iceberg requires), move under `data/`, and take per-file stats
+    * from each write task's fold over the footers it wrote. */
   private def writeDataFiles(df: DataFrame, tablePath: String,
       partFields: Seq[PartitionField]): Seq[FileInfo] = {
     val spark = df.sparkSession
@@ -1549,11 +1575,10 @@ object IcebergWriter {
       Pt + f.name,
       IcebergTransforms.column(spark, f, df.schema(f.source).dataType)))
     def relOf(staged: String) = staged.split('/').map(_.stripPrefix(Pt)).mkString("/")
-    val moved = TableFiles.writeStaged(dup, root, partFields.map(Pt + _.name))(
-      rel => new Path(new Path(root, "data"), relOf(rel)))
-    val stats = TableFiles.footers(spark, moved.map(_.path))(dataFileStats)
+    val moved = TableFiles.writeStaged(dup, root, partFields.map(Pt + _.name),
+      dataFileStats)(rel => new Path(new Path(root, "data"), relOf(rel)))
     moved.map { m =>
-      val (cnt, lo, hi, nulls) = stats(m.path)
+      val (cnt, lo, hi, nulls) = m.footer
       FileInfo(m.path, TableFiles.partitionValuesOf(relOf(m.rel)), m.size, cnt,
         lo.flatMap { case (n, b) => ids.get(n).map(_ -> b) },
         hi.flatMap { case (n, b) => ids.get(n).map(_ -> b) },

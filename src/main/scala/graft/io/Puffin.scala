@@ -139,6 +139,14 @@ object Puffin {
     } finally in.close()
   }
 
+  /** A DV blob as a per-file vector a scan task loads itself
+    * ([[TableFiles.withoutDeleted]]). */
+  final case class Vector(path: String, offset: Long, length: Long)
+      extends TableFiles.DeletionVector {
+    def positions(conf: Configuration): Array[Long] =
+      readDv(conf, new Path(path), offset, length)
+  }
+
   /** Parse a puffin file's footer: the blob descriptors. Used by
     * maintenance (which DV blobs does this file hold?) and specs; data
     * reads locate blobs from manifest entries instead, per the v3 spec. */

@@ -4,16 +4,26 @@ import java.util.UUID
 import scala.collection.mutable
 import scala.jdk.CollectionConverters._
 import scala.reflect.ClassTag
+import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.mapreduce.{Job, TaskAttemptContext}
+import org.apache.parquet.HadoopReadOptions
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.parquet.schema.PrimitiveType
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.api.java.UDF2
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+import org.apache.spark.sql.execution.datasources.{OutputWriter,
+  OutputWriterFactory}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.functions.{broadcast, col, input_file_name, instr,
   regexp_replace, udf, when}
-import org.apache.spark.sql.types.{MetadataBuilder, StringType, StructType}
-import org.apache.spark.util.SerializableConfiguration
+import org.apache.spark.sql.types.{BooleanType, MetadataBuilder, StringType,
+  StructType}
+import org.apache.spark.util.{CollectionAccumulator, SerializableConfiguration}
 
 /** The table-file steps every writer shares: the staged partitioned
   * Parquet write, a file's path spellings, hive partition values, the
@@ -50,8 +60,10 @@ private[graft] object TableFiles {
 
   /** A part file moved into the table tree: its path relative to the
     * staging directory (hive partition segments included), its
-    * qualified plain path, and its size. */
-  final case class Staged(rel: String, path: String, size: Long)
+    * qualified plain path, its size, and what the write's footer fold
+    * gave for it. */
+  final case class Staged[+T](rel: String, path: String, size: Long,
+      footer: T)
 
   /** Write `df` as Parquet into a staging directory under `root`,
     * hive-partitioned by `partCols`, move every part file to
@@ -60,29 +72,60 @@ private[graft] object TableFiles {
     * table log, so moved files stay invisible until a commit names
     * them. */
   def writeStaged(df: DataFrame, root: Path, partCols: Seq[String])(
-      dest: String => Path): Seq[Staged] = {
-    val fs = root.getFileSystem(df.sparkSession.sparkContext.hadoopConfiguration)
+      dest: String => Path): Seq[Staged[Unit]] =
+    stage(df, root, partCols, None)(dest).map(_.copy(footer = ()))
+
+  /** [[writeStaged]] with `fold` applied to the footer of every file
+    * the write produced, by the write task that has just closed the
+    * file — no read-back job. A task's values reach the driver only
+    * when the task succeeds, and a moved file without its value fails
+    * the call. */
+  def writeStaged[T](df: DataFrame, root: Path, partCols: Seq[String],
+      fold: ParquetFileReader => T)(dest: String => Path): Seq[Staged[T]] =
+    stage(df, root, partCols, Some(fold))(dest)
+      .map(s => s.copy(footer = s.footer.asInstanceOf[T]))
+
+  private def stage(df: DataFrame, root: Path, partCols: Seq[String],
+      fold: Option[ParquetFileReader => Any])(
+      dest: String => Path): Seq[Staged[Any]] = {
+    val sc = df.sparkSession.sparkContext
+    val fs = root.getFileSystem(sc.hadoopConfiguration)
     val staging = new Path(root, s".table-staging-${UUID.randomUUID()}")
+    val id = UUID.randomUUID().toString
+    val acc = fold.map { f =>
+      val a = sc.collectionAccumulator[(String, Any)]("footer fold")
+      FoldingParquet.pending.put(id, (f, a))
+      a
+    }
     try {
-      val w = df.write.mode("overwrite")
-      (if (partCols.nonEmpty) w.partitionBy(partCols: _*) else w)
-        .parquet(staging.toString)
+      val w0 = df.write.mode("overwrite")
+      val w = if (partCols.nonEmpty) w0.partitionBy(partCols: _*) else w0
+      if (fold.isEmpty) w.parquet(staging.toString)
+      else w.format(classOf[FoldingParquet].getName)
+        .option(FoldingParquet.IdOption, id).save(staging.toString)
+      val folded = acc.fold(Map.empty[String, Any])(_.value.asScala.toMap)
       val stagingStr = fs.makeQualified(staging).toString
-      val out = Seq.newBuilder[Staged]
+      val out = Seq.newBuilder[Staged[Any]]
       val it = fs.listFiles(staging, true)
       while (it.hasNext) {
         val st = it.next()
         if (st.getPath.getName.endsWith(".parquet")) {
           val rel = st.getPath.toString.stripPrefix(stagingStr).stripPrefix("/")
+          val footer = if (fold.isEmpty) () else
+            folded.getOrElse(FoldingParquet.relOf(st.getPath),
+              throw new IllegalStateException(s"no footer folded for $rel"))
           val dst = dest(rel)
           fs.mkdirs(dst.getParent)
           if (!fs.rename(st.getPath, dst))
             throw new java.io.IOException(s"rename ${st.getPath} -> $dst failed")
-          out += Staged(rel, fs.makeQualified(dst).toString, st.getLen)
+          out += Staged(rel, fs.makeQualified(dst).toString, st.getLen, footer)
         }
       }
       out.result()
-    } finally fs.delete(staging, true)
+    } finally {
+      FoldingParquet.pending.remove(id)
+      fs.delete(staging, true)
+    }
   }
 
   /** Partition values parsed back from a hive-style relative path —
@@ -163,14 +206,19 @@ private[graft] object TableFiles {
     val confBc = sc.broadcast(new SerializableConfiguration(sc.hadoopConfiguration))
     val out = sc.parallelize(paths, math.min(paths.size, sc.defaultParallelism))
       .map { p =>
-        val rdr = ParquetFileReader.open(
-          HadoopInputFile.fromPath(new Path(p), confBc.value.value))
+        val rdr = openFooter(new Path(p), confBc.value.value)
         try (p, f(rdr)) finally rdr.close()
       }.collect().toMap
     paths.find(p => !out.contains(p)).foreach(p =>
       throw new IllegalStateException(s"no footer read back for $p"))
     out
   }
+
+  /** A Parquet reader over `p` that uses `conf` as it is: without read
+    * options, Parquet copies a fresh `Configuration` on every open. */
+  def openFooter(p: Path, conf: Configuration): ParquetFileReader =
+    ParquetFileReader.open(HadoopInputFile.fromPath(p, conf),
+      HadoopReadOptions.builder(conf).build())
 
   /** Per-file row counts from Parquet footers, keyed by the given plain
     * paths. */
@@ -358,6 +406,49 @@ private[graft] object TableFiles {
 
   // ---- deletion vectors --------------------------------------------------
 
+  /** Where one data file's deletion vector lives. `positions` loads the
+    * file's deleted row positions, ascending (executor-side). */
+  trait DeletionVector extends Serializable {
+    def positions(conf: Configuration): Array[Long]
+  }
+
+  /** `df` without the rows a deletion vector deletes. `file` gives a
+    * row's data file spelled as the keys of `dvs`, `pos` its row
+    * position (`_metadata.row_index`). The vector list is metadata-scale
+    * and broadcast; each scan task loads a file's vector once, when its
+    * first row arrives, and keeps the rows whose position the vector
+    * lacks — a per-file filter, the protocol's own application: no
+    * join, no shuffle, no position on the driver. `file` and `pos` must
+    * come from the scan below without an exchange in between. */
+  def withoutDeleted(df: DataFrame, file: Column, pos: Column,
+      dvs: Map[String, DeletionVector]): DataFrame =
+    if (dvs.isEmpty) df
+    else {
+      val sc = df.sparkSession.sparkContext
+      val deleted = udf(new DeletedRow(sc.broadcast(dvs),
+        sc.broadcast(new SerializableConfiguration(sc.hadoopConfiguration))),
+        BooleanType)
+      df.filter(!deleted(file, pos))
+    }
+
+  /** The per-row test of [[withoutDeleted]]. Each task deserializes its
+    * own instance, so the one-file cache needs no lock: a scan task
+    * reads its files one after another. */
+  private final class DeletedRow(
+      dvs: Broadcast[Map[String, DeletionVector]],
+      conf: Broadcast[SerializableConfiguration])
+      extends UDF2[String, Long, Boolean] {
+    @transient private var file: String = _
+    @transient private var deleted: Array[Long] = _
+    def call(f: String, pos: Long): Boolean = {
+      if (f != file) {
+        deleted = dvs.value.get(f).map(_.positions(conf.value.value)).orNull
+        file = f
+      }
+      deleted != null && java.util.Arrays.binarySearch(deleted, pos) >= 0
+    }
+  }
+
   /** The executor-side loop both deletion-vector deletes run: `rows`
     * are (file, row position) pairs sorted by file, then position. Each
     * file's positions, together with `prior(file)` (positions an
@@ -383,4 +474,59 @@ private[graft] object TableFiles {
       }
     }
   }
+}
+
+/** Spark's Parquet write with a fold over the footer of each file a
+  * write task closes — the producer half of [[TableFiles.writeStaged]]'s
+  * footer channel. The driver registers the fold and its accumulator
+  * under a write id ([[FoldingParquet.pending]]); `prepareWrite`, which
+  * runs on the driver, takes them into the writer factory that ships
+  * with the tasks. An accumulator merges only successful tasks' values,
+  * so a failed or retried attempt leaves nothing behind. Values are
+  * keyed by the file's path below the write's output directory. */
+private[io] class FoldingParquet extends ParquetFileFormat {
+  override def prepareWrite(spark: SparkSession, job: Job,
+      options: Map[String, String], dataSchema: StructType): OutputWriterFactory = {
+    val inner = super.prepareWrite(spark, job, options, dataSchema)
+    val (fold, acc) = FoldingParquet.pending.get(options(FoldingParquet.IdOption))
+    new FoldingParquet.Factory(inner, fold, acc)
+  }
+}
+
+private[io] object FoldingParquet {
+  val IdOption = "graft.footerFold"
+
+  /** Folds of the writes in flight on this driver, by write id. */
+  val pending = new java.util.concurrent.ConcurrentHashMap[String,
+    (ParquetFileReader => Any, CollectionAccumulator[(String, Any)])]()
+
+  final class Factory(inner: OutputWriterFactory, fold: ParquetFileReader => Any,
+      acc: CollectionAccumulator[(String, Any)]) extends OutputWriterFactory {
+    def getFileExtension(ctx: TaskAttemptContext): String =
+      inner.getFileExtension(ctx)
+    def newInstance(path: String, dataSchema: StructType,
+        ctx: TaskAttemptContext): OutputWriter = {
+      val w = inner.newInstance(path, dataSchema, ctx)
+      val conf = ctx.getConfiguration
+      new OutputWriter {
+        def write(row: InternalRow): Unit = w.write(row)
+        def path(): String = w.path()
+        def close(): Unit = {
+          w.close()
+          val p = new Path(w.path())
+          val rdr = TableFiles.openFooter(p, conf)
+          try acc.add(relOf(p) -> fold(rdr)) finally rdr.close()
+        }
+      }
+    }
+  }
+
+  /** A file's path below the output directory: its name under the
+    * trailing `k=v` partition directories (a task writes below its
+    * attempt directory; the commit moves the file to the same path
+    * below the output directory). */
+  def relOf(p: Path): String =
+    (Iterator.iterate(p.getParent)(_.getParent)
+      .takeWhile(d => d != null && d.getName.contains('='))
+      .map(_.getName).toList.reverse :+ p.getName).mkString("/")
 }

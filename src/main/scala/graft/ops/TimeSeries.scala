@@ -134,8 +134,14 @@ object TimeSeries {
       .withColumn("__day", date_format(col(timeCol), "yyyy-MM-dd"))
     versionCol match {
       case Some(v) if graft.io.DatasetReader.datasetExists(df.sparkSession, path) =>
+        // partition discovery reads `__day` back typed (a date): the
+        // source's day takes that type, so the upsert's partition tuples
+        // compare and the rewritten rows stay in their day directories
+        val dayType = df.sparkSession.read.parquet(path).schema("__day").dataType
         graft.table.MergeOps.versionedUpsert(df.sparkSession, path,
-          projected, keys = dimensionCols :+ timeCol, precombine = v)
+          projected.withColumn("__day", col("__day").cast(dayType)),
+          keys = dimensionCols :+ timeCol, precombine = v,
+          partitionCols = Seq("__day"))
       case _ =>
         graft.io.DatasetWriter.toParquet(projected, path,
           mode = graft.io.DatasetWriter.Append, partitionCols = Seq("__day"))

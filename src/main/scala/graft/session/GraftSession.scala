@@ -17,7 +17,9 @@ import org.apache.spark.sql.SparkSession
   *
   * The builder applies the engine defaults every operator in this library
   * assumes: AQE (with skew-join splitting), sensible local shuffle
-  * parallelism, UTC session time, Kryo-free defaults.
+  * parallelism, UTC session time, Kryo-free defaults, and a local file
+  * system that sets and reads permissions without forking processes
+  * ([[graft.io.NioLocalFileSystem]]).
   */
 object GraftSession {
 
@@ -40,6 +42,10 @@ object GraftSession {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.parquet.compression.codec", "snappy")
       .config("spark.ui.enabled", "false")
+      .config("spark.hadoop.fs.file.impl",
+        classOf[graft.io.NioLocalFileSystem].getName)
+      .config("spark.hadoop.fs.AbstractFileSystem.file.impl",
+        classOf[graft.io.NioLocalFs].getName)
       .withExtensions(new graft.plans.GraftExtensions)
   }
 

@@ -31,6 +31,23 @@ private[graft] object Jobs {
     else df
   }
 
+  /** `a` started on a second thread at once; [[Started.join]] waits
+    * for it and returns its value or rethrows its failure. */
+  def start[A](a: => A): Started[A] = {
+    val f = new java.util.concurrent.FutureTask[A](() => a)
+    val t = new Thread(f, "graft-concurrently")
+    t.setDaemon(true)
+    t.start()
+    new Started(f)
+  }
+
+  final class Started[A] private[Jobs] (
+      f: java.util.concurrent.FutureTask[A]) {
+    def join(): A =
+      try f.get()
+      catch { case e: java.util.concurrent.ExecutionException => throw e.getCause }
+  }
+
   /** Run `a` on the calling thread and `b` on a second thread at the
     * same time — two independent Spark jobs, so the smaller one fills
     * the larger one's task tail instead of the two running end to end.
@@ -38,14 +55,9 @@ private[graft] object Jobs {
     * no write outlives the call; then `a`'s failure, else `b`'s, is
     * rethrown. */
   def concurrently[A, B](a: => A, b: => B): (A, B) = {
-    val fb = new java.util.concurrent.FutureTask[B](() => b)
-    val t = new Thread(fb, "graft-concurrently")
-    t.setDaemon(true)
-    t.start()
+    val sb = start(b)
     val ra = try Right(a) catch { case e: Throwable => Left(e) }
-    val rb =
-      try Right(fb.get())
-      catch { case e: java.util.concurrent.ExecutionException => Left(e.getCause) }
+    val rb = try Right(sb.join()) catch { case e: Throwable => Left(e) }
     (ra.fold(throw _, identity), rb.fold(throw _, identity))
   }
 }

@@ -2,7 +2,8 @@ package graft.sql
 
 import java.sql.{Date, Timestamp}
 import scala.collection.concurrent.TrieMap
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
 /** The `athena.read_sql_query` lifecycle (§3.1 of the survey,
   * `athena/_read.py:951-1308`) minus the remote engine: parameter
@@ -177,6 +178,15 @@ object SqlEngine {
     }
   }
 
+  private val ResultSchema = StructType(Seq(
+    StructField("operation", StringType), StructField("table", StringType)))
+
+  /** The one-row `(operation, table)` frame a statement returns, built
+    * from a fixed schema. */
+  private def result(spark: SparkSession, operation: String,
+      table: String): DataFrame =
+    spark.createDataFrame(java.util.List.of(Row(operation, table)), ResultSchema)
+
   private val DmlHead = """(?is)^\s*(INSERT|UPDATE|DELETE|MERGE)\b""".r
   private val UnloadHead = """(?is)^\s*UNLOAD\s*\(""".r
   // only the Athena CTAS shape (WITH(props) AS query); a Spark-dialect
@@ -256,8 +266,7 @@ object SqlEngine {
         .getOrElse(if (fmt == "parquet") "snappy" else "none"),
       options = opts)
     noteDatasetWrite(spark) // files changed under cached query results
-    import spark.implicits._
-    Seq(("UNLOAD", path)).toDF("operation", "table")
+    result(spark, "UNLOAD", path)
   }
 
   /** The reference's generated Athena CTAS (`athena/_utils.py:860-873`):
@@ -308,8 +317,7 @@ object SqlEngine {
     TrinoCompat.ensureRegistered(spark)
     spark.sql(ddl.toString)
     noteDatasetWrite(spark) // files landed under cached query results
-    import spark.implicits._
-    Seq(("CTAS", name)).toDF("operation", "table")
+    result(spark, "CTAS", name)
   }
 
   private val MsckHead = """(?is)^\s*MSCK\s+REPAIR\s+TABLE\b""".r
@@ -505,8 +513,7 @@ object SqlEngine {
     ddl ++= s" LOCATION '$location'"
     props.foreach(p => ddl ++= s" TBLPROPERTIES $p")
     spark.sql(ddl.toString)
-    import spark.implicits._
-    Seq(("CREATE", name)).toDF("operation", "table")
+    result(spark, "CREATE", name)
   }
 
   /** `ALTER TABLE` front door. The two statements the reference
@@ -580,7 +587,7 @@ object SqlEngine {
         spark.sql(sql) // session-catalog DDL: Spark's own ALTER surface
     }
     noteDatasetWrite(spark)
-    Seq(("ALTER", key)).toDF("operation", "table")
+    result(spark, "ALTER", key)
   }
 
   /** ONE front door for reads AND table DML — the reference executes
@@ -631,9 +638,7 @@ object SqlEngine {
       // both mutate what reads see: repair discovers partitions, drop
       // removes the relation — stale cached results must not survive
       noteDatasetWrite(spark)
-      import spark.implicits._
-      Seq((sql.trim.split("\\s+")(0).toUpperCase, "")).toDF(
-        "operation", "table")
+      result(spark, sql.trim.split("\\s+")(0).toUpperCase, "")
     } else if (ViewRe.findPrefixMatchOf(sql).isDefined) {
       val rendered = substitute(sql, params, strict = true)
       val vm = ViewRe.findPrefixMatchOf(rendered).get
@@ -651,8 +656,7 @@ object SqlEngine {
       TrinoCompat.ensureRegistered(spark)
       spark.sql(s"CREATE OR REPLACE TEMPORARY VIEW $name AS " +
         TrinoCompat.rewrite(vm.group(3)))
-      import spark.implicits._
-      Seq(("VIEW", name)).toDF("operation", "table")
+      result(spark, "VIEW", name)
     } else if (AlterRe.findPrefixMatchOf(sql).isDefined) {
       val rendered = substitute(sql, params, strict = true)
       val am = AlterRe.findPrefixMatchOf(rendered).get
@@ -661,7 +665,6 @@ object SqlEngine {
     } else if (DmlHead.findFirstIn(sql).isEmpty)
       readSqlQuery(spark, sql, params)
     else {
-      import spark.implicits._
       val rendered = substitute(sql, params, strict = true)
       val resolve = tableResolver(spark, tables)
       def isFormatTable(p: String): Boolean =
@@ -687,8 +690,7 @@ object SqlEngine {
           TrinoCompat.ensureRegistered(spark)
           spark.sql(TableDml.dequoteExpr(TrinoCompat.rewrite(rendered)))
           noteDatasetWrite(spark)
-          Seq(("INSERT", TableDml.qnameKey(m.group(1))))
-            .toDF("operation", "table")
+          result(spark, "INSERT", TableDml.qnameKey(m.group(1)))
         case None =>
           val res = TableDml.execute(spark, rendered, resolve)
           noteDatasetWrite(spark)
@@ -700,24 +702,27 @@ object SqlEngine {
           // format-aware reader (single-part names; a qualified name
           // cannot be a temp view — refresh its cached relation
           // instead).
-          resolve(res.table).filter(isFormatTable).foreach { p =>
-            val current =
-              if (graft.io.IcebergReader.isIcebergTable(spark, p))
-                graft.io.IcebergReader.read(spark, p)
-              else graft.io.DeltaLogReader.read(spark, p)
-            // the readers may build their scan on a forked session
-            // (field-id reads flip a parquet conf on newSession()) —
-            // re-home the ANALYZED plan into the caller's session or
-            // the temp view would register invisibly on the fork
-            val rehomed = org.apache.spark.sql.GraftBridge.ofRows(spark,
-              org.apache.spark.sql.GraftBridge.analyzed(current))
-            if (!res.table.contains(".") &&
-                spark.catalog.tableExists(res.table))
-              rehomed.createOrReplaceTempView(res.table)
-            else if (spark.catalog.tableExists(res.table))
-              spark.catalog.refreshTable(res.table)
-          }
-          Seq((res.operation, res.table)).toDF("operation", "table")
+          // A name that is no catalog table (a `tables` entry) has
+          // nothing to shadow or refresh, so no reader is built for it.
+          if (spark.catalog.tableExists(res.table))
+            resolve(res.table).filter(isFormatTable).foreach { p =>
+              if (res.table.contains("."))
+                spark.catalog.refreshTable(res.table)
+              else {
+                val current =
+                  if (graft.io.IcebergReader.isIcebergTable(spark, p))
+                    graft.io.IcebergReader.read(spark, p)
+                  else graft.io.DeltaLogReader.read(spark, p)
+                // the readers may build their scan on a forked session
+                // (field-id reads flip a parquet conf on newSession())
+                // — re-home the ANALYZED plan into the caller's session
+                // or the temp view would register invisibly on the fork
+                org.apache.spark.sql.GraftBridge.ofRows(spark,
+                  org.apache.spark.sql.GraftBridge.analyzed(current))
+                  .createOrReplaceTempView(res.table)
+              }
+            }
+          result(spark, res.operation, res.table)
       }
     }
 

@@ -6,6 +6,7 @@ import org.apache.spark.sql.types.StructType
 
 import graft.io.{DeltaLogReader, DeltaLogWriter, IcebergReader, IcebergWriter,
   TableFiles}
+import graft.session.Jobs
 
 /** Athena's table-format DML statements — `MERGE INTO`, `UPDATE`,
   * `DELETE FROM`, `INSERT INTO` (the engine-v3 Iceberg DML surface the
@@ -262,14 +263,14 @@ object TableDml {
     def target: DataFrame =
       if (isIce) IcebergReader.read(spark, path)
       else DeltaLogReader.read(spark, path)
-    def doMerge(df: DataFrame): Unit =
-      if (isIce) IcebergWriter.merge(spark, path, df, keys, matchNulls)
-      else DeltaLogWriter.merge(spark, path, df, keys, matchNulls)
-    def doDeleteMatched(keyRows: DataFrame): Unit =
+    def doMerge(df: DataFrame, gate: () => Unit): Unit =
+      if (isIce) IcebergWriter.merge(spark, path, df, keys, matchNulls, gate)
+      else DeltaLogWriter.merge(spark, path, df, keys, matchNulls, gate)
+    def doDeleteMatched(keyRows: DataFrame, gate: () => Unit): Unit =
       if (isIce) IcebergWriter.deleteMatched(spark, path, keyRows, keys,
-        matchNulls)
+        matchNulls, gate)
       else DeltaLogWriter.deleteMatched(spark, path, keyRows, keys,
-        matchNulls)
+        matchNulls, gate)
     def doAppend(df: DataFrame): Unit =
       if (isIce) { IcebergWriter.write(df, path); () }
       else { DeltaLogWriter.write(df, path); () }
@@ -300,6 +301,17 @@ object TableDml {
       }
       require(!dupMatched,
         "MERGE: a target row matches more than one source row")
+    }
+    // The check runs on a second thread beside the write, which stages
+    // its files (or DV sidecars) meanwhile; the write's commit waits on
+    // it (`gate`), so a failed check commits nothing and the writer
+    // deletes what it staged. The check's error wins over the write's,
+    // as it would had the check run first.
+    def checkedWrite(write: (() => Unit) => Unit): Unit = {
+      val check = Jobs.start(checkMatchedCardinality())
+      try write(() => check.join())
+      catch { case e: Throwable => check.join(); throw e }
+      check.join()
     }
     // the reference's generated `"c" = source."c"` full-column
     // assignment is semantically UPDATE SET * — route both through the
@@ -332,16 +344,13 @@ object TableDml {
       case (None, None) =>
         throw new IllegalArgumentException("MERGE needs a WHEN clause")
       case (Some(DeleteMatched), None) =>
-        checkMatchedCardinality()
-        doDeleteMatched(src)
+        checkedWrite(doDeleteMatched(src, _))
       case (Some(UpdateStar), Some(InsertStar)) =>
-        checkMatchedCardinality()
-        doMerge(alignedByName(src, schema))
+        checkedWrite(doMerge(alignedByName(src, schema), _))
       case (Some(UpdateAssign(a)), Some(ic: InsertCols))
           if isFullReplace(a) && isPlainInsert(ic) =>
         // the exact statement `athena.merge_iceberg` generates
-        checkMatchedCardinality()
-        doMerge(alignedByName(src, schema))
+        checkedWrite(doMerge(alignedByName(src, schema), _))
       case (m, nm) =>
         // general path: build the replacement/insert rows explicitly,
         // then one upsert (or delete + append for the DELETE+INSERT mix)
@@ -365,11 +374,12 @@ object TableDml {
         }
         m match {
           case Some(DeleteMatched) =>
-            checkMatchedCardinality()
-            // inserts resolve against the PRE-delete snapshot
-            val pinned = insRows.map(_.localCheckpoint())
-            doDeleteMatched(src)
-            pinned.foreach(doAppend)
+            checkedWrite { gate =>
+              // inserts resolve against the PRE-delete snapshot
+              val pinned = insRows.map(_.localCheckpoint())
+              doDeleteMatched(src, gate)
+              pinned.foreach { p => gate(); doAppend(p) }
+            }
           case Some(ua) =>
             val assignments = ua match {
               case UpdateAssign(a) => a
@@ -390,7 +400,6 @@ object TableDml {
                 },
                 s"MERGE may not reassign key column $c")
             }
-            checkMatchedCardinality()
             val byCol = assignments
               .map { case (c, e) => c.toLowerCase -> e }.toMap
             val updRows = t.join(sdf, on, "inner")
@@ -399,7 +408,7 @@ object TableDml {
                   .map(e => expr(dequoteExpr(e)).cast(f.dataType))
                   .getOrElse(col(s"$tAlias.${f.name}")).as(f.name)
               }.toSeq: _*)
-            doMerge(insRows.fold(updRows)(updRows.unionByName(_)))
+            checkedWrite(doMerge(insRows.fold(updRows)(updRows.unionByName(_)), _))
           case None =>
             // insert-only MERGE (merge_condition="ignore"): append the
             // unmatched source rows, leave matched target rows alone

@@ -124,6 +124,51 @@ class ControlSpec extends AnyFunSuite {
     assert(got == Set(("dev1", 0.9, 2L), ("dev2", 0.7, 1L)))
   }
 
+  test("timeseries versioned write rewrites only the day it touches") {
+    val spark0 = spark
+    import spark0.implicits._
+    val path = tmp()
+    val t0 = java.sql.Timestamp.valueOf("2024-03-01 10:00:00")
+    val t1 = java.sql.Timestamp.valueOf("2024-03-02 11:00:00")
+    TimeSeries.write(Seq((t0, "dev1", 0.5, 1L), (t1, "dev2", 0.7, 1L))
+      .toDF("time", "device", "cpu", "version"), path, "time", Seq("device"),
+      Seq("cpu"), versionCol = Some("version"))
+    val fs = new org.apache.hadoop.fs.Path(path)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def files(): Map[String, Long] = {
+      val it = fs.listFiles(new org.apache.hadoop.fs.Path(path), true)
+      val out = Map.newBuilder[String, Long]
+      while (it.hasNext) {
+        val f = it.next()
+        if (f.getPath.getName.endsWith(".parquet"))
+          out += f.getPath.toString.stripPrefix(
+            fs.makeQualified(new org.apache.hadoop.fs.Path(path)).toString + "/") ->
+            f.getModificationTime
+      }
+      out.result()
+    }
+    val before = files()
+    assert(before.keySet.map(_.takeWhile(_ != '/')) ==
+      Set("__day=2024-03-01", "__day=2024-03-02"))
+    // a newer version of the 2024-03-01 key
+    TimeSeries.write(Seq((t0, "dev1", 0.9, 2L)).toDF("time", "device", "cpu", "version"),
+      path, "time", Seq("device"), Seq("cpu"), versionCol = Some("version"))
+    val after = files()
+    assert(after.keySet.forall(_.startsWith("__day=")), s"root-level files: $after")
+    assert(after.keySet.map(_.takeWhile(_ != '/')) ==
+      Set("__day=2024-03-01", "__day=2024-03-02"))
+    // the other day's file is untouched, the touched day's replaced
+    assert(after.filter(_._1.startsWith("__day=2024-03-02")) ==
+      before.filter(_._1.startsWith("__day=2024-03-02")))
+    assert(after.filter(_._1.startsWith("__day=2024-03-01")) !=
+      before.filter(_._1.startsWith("__day=2024-03-01")))
+    val got = spark.read.parquet(path)
+      .select("device", "cpu", "version", "__day").as[(String, Double, Long, java.sql.Date)]
+      .collect().toSet
+    assert(got == Set(("dev1", 0.9, 2L, java.sql.Date.valueOf("2024-03-01")),
+      ("dev2", 0.7, 1L, java.sql.Date.valueOf("2024-03-02"))))
+  }
+
   test("search indexDocuments upserts by id keys") {
     val spark0 = spark
     import spark0.implicits._

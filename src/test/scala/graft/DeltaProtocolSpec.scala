@@ -226,7 +226,7 @@ class DeltaProtocolSpec extends AnyFunSuite {
     assert(DeltaLogReader.read(spark, fixture(protocolAction(2))).count() == 1)
   }
 
-  test("DV read plan: ONE data scan, broadcast partition manifest, anti-join") {
+  test("DV read plan: ONE data scan, broadcast partition manifest, per-file DV filter") {
     val spark0 = spark
     import spark0.implicits._
     val dir = s"${tmp()}/tbl"
@@ -256,7 +256,11 @@ class DeltaProtocolSpec extends AnyFunSuite {
     assert(scans == 1, s"expected ONE parquet scan, got $scans:\n$plan")
     assert(plan.contains("BroadcastHashJoin"),
       "partition-value manifest must broadcast")
-    assert(plan.contains("LeftAnti"), "DV application is an anti-join")
+    // the DV applies as a filter each scan task answers from its file's
+    // bitmap: no anti-join, and no shuffle of the scan
+    assert(!plan.contains("LeftAnti"), s"DV applied as a join:\n$plan")
+    assert(!plan.contains("Exchange hashpartitioning"),
+      s"DV read shuffles:\n$plan")
   }
 
   test("TIMESTAMP_NTZ columns declare the timestampNtz feature") {
