@@ -226,7 +226,7 @@ class DeltaProtocolSpec extends AnyFunSuite {
     assert(DeltaLogReader.read(spark, fixture(protocolAction(2))).count() == 1)
   }
 
-  test("DV read plan: ONE data scan, broadcast partition manifest, per-file DV filter") {
+  test("DV read plan: ONE data scan, broadcast partition manifest, per-file filter") {
     val spark0 = spark
     import spark0.implicits._
     val dir = s"${tmp()}/tbl"
