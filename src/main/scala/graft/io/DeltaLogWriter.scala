@@ -1240,13 +1240,9 @@ object DeltaLogWriter {
   def deleteMatched(spark: SparkSession, tablePath: String,
       keys: DataFrame, keyCols: Seq[String],
       matchNulls: Boolean = false,
-      beforeCommit: () => Unit = () => ()): Committed = {
-    require(keyCols.nonEmpty, "deleteMatched needs key columns")
-    val keySet = keys.select(keyCols.map(col): _*).distinct()
+      beforeCommit: () => Unit = () => ()): Committed =
     deleteWhereImpl(spark, tablePath,
-      df => df.join(keySet, TableFiles.keyCond(df, keySet, keyCols, matchNulls),
-        "left_semi"), None, beforeCommit)
-  }
+      TableFiles.keyMatcher(keys, keyCols, matchNulls), None, beforeCommit)
 
   /** `UPDATE … SET … WHERE` as ONE zero-rewrite commit: the matched
     * LIVE rows re-land as new data files with the assignments applied,

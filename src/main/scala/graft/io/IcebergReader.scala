@@ -49,8 +49,9 @@ final class UnsupportedIcebergFeatureException(msg: String)
   * PUFFIN format are deletion vectors — one blob per referenced data
   * file, located by the manifest entry's `referenced_data_file` /
   * `content_offset` / `content_size_in_bytes` (field-ids 143/144/145),
-  * decoded on executors ([[Puffin.readDv]]) into the same position
-  * anti-join. Row lineage resolves each data file's effective
+  * decoded on executors ([[Puffin.readDv]]) and applied as a per-file
+  * filter on row index inside the scan ([[TableFiles.withoutDeleted]]).
+  * Row lineage resolves each data file's effective
   * `first_row_id` (142) — explicit, or inherited from the manifest
   * list's `first_row_id` (520) by the spec's record-count walk — and
   * [[readWithLineage]] exposes `_row_id` /
@@ -727,14 +728,21 @@ object IcebergReader {
       snap.dvFiles.map(f => TableFiles.schemeless(refFileOf(f)) ->
         (Puffin.Vector(f.path, contentOffsetOf(f), contentSizeOf(f)):
           TableFiles.DeletionVector)).toMap)
-    if (snap.deleteFiles.nonEmpty) {
-      val posDels = spark.read.parquet(snap.deleteFiles.map(_.path): _*)
-        .select(TableFiles.schemeless(col("file_path")).as("__file"),
-          col("pos").cast(LongType).as("__pos"))
-      data = data.join(posDels, Seq("__file", "__pos"), "left_anti")
-    }
+    if (snap.deleteFiles.nonEmpty)
+      data = data.join(positionDeletes(spark, snap.deleteFiles),
+        Seq("__file", "__pos"), "left_anti")
     data
   }
+
+  /** The (`__file`, `__pos`) rows of position-delete files, the file
+    * scheme-less. The spec fixes both columns, so the scan takes them by
+    * name from a declared schema and runs no schema-inference job. */
+  private[io] def positionDeletes(spark: SparkSession,
+      files: Seq[DataFileEntry]): DataFrame =
+    spark.read.schema("file_path STRING, pos LONG")
+      .parquet(files.map(_.path): _*)
+      .select(TableFiles.schemeless(col("file_path")).as("__file"),
+        col("pos").as("__pos"))
 
   /** Scan the snapshot's data files. When the files carry parquet
     * field-ids (the Iceberg spec requires native writers to embed them),

@@ -9,7 +9,7 @@ import com.fasterxml.jackson.databind.node.{ArrayNode, ObjectNode}
 import org.apache.avro.file.DataFileWriter
 import org.apache.avro.generic.{GenericData, GenericDatumWriter, GenericRecord}
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -212,32 +212,19 @@ object IcebergWriter {
     val pfields = IcebergReader.partitionFields(spark, tablePath)
     val (plan, merged) = TableFiles.planMerge(target(spark, tablePath, snap, pfields),
       src.select(snap.schema.fieldNames.map(col).toSeq: _*), keys, matchNulls)
-    val adds = writeDataFiles(merged, tablePath, pfields)
-    gate(spark, tablePath, adds, beforeCommit)
-    commit(spark, tablePath, snap.schema, pfields, adds, plan.kept.map(asInfo),
+    commit(spark, tablePath, snap.schema, pfields,
+      writeDataFiles(merged, tablePath, pfields), plan.kept.map(asInfo),
       operation = "overwrite", carryCurrentManifests = false,
-      expectedParent = Some(snap.snapshotId))
+      expectedParent = Some(snap.snapshotId), beforeCommit = beforeCommit)
   }
 
-  /** Run `beforeCommit`; when it throws, delete the freshly written
-    * `adds` and rethrow, so the table neither moves nor keeps a staged
-    * file. */
-  private def gate(spark: SparkSession, tablePath: String,
-      adds: Seq[FileInfo], beforeCommit: () => Unit): Unit =
-    try beforeCommit()
-    catch { case e: Throwable =>
-      val fs = new Path(tablePath).getFileSystem(
-        spark.sparkContext.hadoopConfiguration)
-      adds.foreach(f => fs.delete(new Path(f.path), false))
-      throw e
-    }
-
-  /** Rewrite paths (merge/delete-matched) drop the snapshot's delete
-    * manifests, so they must materialize position deletes into the
-    * rewritten files and refuse semantics they cannot materialize.
-    * Equality deletes need the sequence-number join the READER implements
-    * but a partition-granular rewrite cannot preserve — raise loudly
-    * rather than resurrect rows. */
+  /** Rewrite paths ([[merge]]) drop the snapshot's delete manifests, so
+    * they must materialize position deletes into the rewritten files and
+    * refuse semantics they cannot materialize. Equality deletes need the
+    * sequence-number join the READER implements but a partition-granular
+    * rewrite cannot preserve — raise loudly rather than resurrect rows.
+    * The row deletes refuse them too: an UPDATE's replacement rows come
+    * from a scan without them. */
   private def checkNoEqualityDeletes(snap: IcebergReader.Snapshot,
       tablePath: String, op: String): Unit =
     if (snap.equalityDeleteFiles.nonEmpty)
@@ -255,15 +242,15 @@ object IcebergWriter {
       snap: IcebergReader.Snapshot): Set[String] = {
     val fromParquet =
       if (snap.deleteFiles.isEmpty) Set.empty[String]
-      else spark.read.parquet(snap.deleteFiles.map(_.path): _*)
-        .select(TableFiles.schemeless(col("file_path")).as("f"))
-        .distinct().collect().map(_.getString(0)).toSet
+      else IcebergReader.positionDeletes(spark, snap.deleteFiles)
+        .select("__file").distinct().collect().map(_.getString(0)).toSet
     fromParquet ++
       snap.dvFiles.flatMap(_.referencedDataFile).map(p => TableFiles.schemeless(p))
   }
 
   /** Scan of `files` with the snapshot's position deletes applied (the
-    * reader's anti-join, restricted to the touched subset). */
+    * reader's deletion-vector filter and position-delete anti-join,
+    * restricted to the touched subset). */
   private def deleteAwareScan(spark: SparkSession,
       snap: IcebergReader.Snapshot,
       files: Seq[IcebergReader.DataFileEntry]): DataFrame = {
@@ -278,17 +265,19 @@ object IcebergWriter {
     scan.select(snap.schema.fieldNames.map(col).toSeq: _*)
   }
 
-  /** The snapshot as a rewrite target. A file's tuple is its manifest
+  /** The snapshot as a [[merge]] target. A file's tuple is its manifest
     * partition tuple, whose values this writer records in Spark's
     * cast-to-string rendering; the table-row side computes the same
     * tuple through the partition transforms. Two kinds of file always
-    * rewrite: one written under an OLDER partition spec, whose tuple
-    * the current spec cannot express (carrying it as EXISTING into
-    * this commit's current-spec manifest would mislabel its partition
-    * values), and one a live position delete targets (the rewrite
-    * commit drops the delete manifests, so carrying the file alone
-    * would resurrect its deleted rows — it rewrites with the deletes
-    * applied instead). */
+    * rewrite, touched partition or not: one written under an OLDER
+    * partition spec, whose tuple the current spec cannot express
+    * (carrying it as EXISTING into this commit's current-spec manifest
+    * would mislabel its partition values), and one a live position
+    * delete or deletion vector targets (the rewrite commit drops the
+    * delete manifests, so carrying the file alone would resurrect its
+    * deleted rows — it rewrites with the deletes applied instead). So a
+    * merge folds the row deletes of every file it carries forward, and
+    * its snapshot holds no position delete. */
   private def target(spark: SparkSession, tablePath: String,
       snap: IcebergReader.Snapshot, pfields: Seq[PartitionField])
       : TableFiles.Target[IcebergReader.DataFileEntry] = {
@@ -304,58 +293,35 @@ object IcebergWriter {
   }
 
   /** `athena.delete_from_iceberg_table`
-    * (`athena/_write_iceberg.py:715-868`): remove rows whose key appears
-    * in `keys` — partition-granular, same carry/rewrite split as
-    * [[merge]]: untouched files become EXISTING manifest entries, only
-    * partitions holding matched keys are rewritten. `beforeCommit`
-    * gates the commit as in [[merge]]. */
+    * (`athena/_write_iceberg.py:715-868`): remove the rows whose key
+    * tuple appears in `keys`, selected by the key semi-join the Delta
+    * writer's `deleteMatched` uses ([[TableFiles.keyMatcher]]; a null key
+    * matches only under `matchNulls`). The rows are marked deleted the
+    * way [[deleteWhere]] marks them — position-delete files or deletion
+    * vectors — so no data file is rewritten and a key that matches no
+    * row commits no snapshot. `beforeCommit` gates the commit as in
+    * [[merge]]. */
   def deleteMatched(spark: SparkSession, tablePath: String, keys: DataFrame,
       keyCols: Seq[String], matchNulls: Boolean = false,
       beforeCommit: () => Unit = () => ()): Committed =
-    resolving(deleteMatchedOnce(spark, tablePath, keys, keyCols, matchNulls,
-      beforeCommit))
+    resolving(deleteRowsOnce(spark, tablePath,
+      TableFiles.keyMatcher(keys, keyCols, matchNulls), None, beforeCommit))
 
-  private def deleteMatchedOnce(spark: SparkSession, tablePath: String,
-      keys: DataFrame, keyCols: Seq[String],
-      matchNulls: Boolean, beforeCommit: () => Unit): Committed = {
-    require(IcebergReader.isIcebergTable(spark, tablePath),
-      s"no Iceberg table at $tablePath")
-    val snapOpt = IcebergReader.snapshotOpt(spark, tablePath)
-    if (snapOpt.isEmpty) // nothing to delete from; no-op, no new snapshot
-      return Committed(-1L, 0L, 0)
-    val snap = snapOpt.get
-    checkNoEqualityDeletes(snap, tablePath, "delete_from_iceberg_table")
-    val pfields = IcebergReader.partitionFields(spark, tablePath)
-    val (plan, remaining) = TableFiles.planDeleteMatched(
-      target(spark, tablePath, snap, pfields),
-      keys.select(keyCols.map(col): _*).distinct(), keyCols, matchNulls)
-    val adds = writeDataFiles(remaining, tablePath, pfields)
-    gate(spark, tablePath, adds, beforeCommit)
-    commit(spark, tablePath, snap.schema, pfields, adds, plan.kept.map(asInfo),
-      operation = "delete", carryCurrentManifests = false,
-      expectedParent = Some(snap.snapshotId))
-  }
-
-  /** `DELETE FROM … WHERE` by writing v2 POSITION-DELETE files — zero
-    * data-file rewrite (iceberg spec §Position Delete Files; symmetry
-    * with the Delta deletion-vector delete). The 100 TB delete shape:
-    * only MATCHED (file, position) pairs shuffle (range-partitioned and
-    * sorted by file_path, pos as the spec requires), the delete parquet
-    * lands under `data/`, and one commit appends a content=1 delete
-    * manifest while CARRYING every current manifest — untouched data
-    * files and pages stay byte-identical. The commit upgrades the table
-    * to format-version 2 (sequence numbers) the first time. Re-flagging
-    * an already-deleted row is idempotent: the reader's (file, pos)
-    * anti-join dedups. Snapshot-isolated like [[merge]]: a concurrent
-    * rewrite invalidates matched positions, so the resolution re-runs. */
+  /** `DELETE FROM … WHERE` with zero data-file rewrite: the matched rows'
+    * positions are marked deleted (see [[deleteRowsOnce]]) and one
+    * commit adds the marks while CARRYING every current manifest —
+    * untouched data files and pages stay byte-identical. The first
+    * delete upgrades a v1 table to format-version 2 (sequence numbers).
+    * Snapshot-isolated like [[merge]]: a concurrent rewrite invalidates
+    * matched positions, so the resolution re-runs. */
   def deleteWhere(spark: SparkSession, tablePath: String,
-      predicate: org.apache.spark.sql.Column): Committed =
-    resolving(deleteWhereOnce(spark, tablePath, predicate))
+      predicate: Column): Committed =
+    resolving(deleteRowsOnce(spark, tablePath, _.filter(predicate), None))
 
   /** `UPDATE … SET … WHERE` as ONE zero-rewrite commit (Athena's
     * Iceberg UPDATE shape): the matched LIVE rows are re-written with
     * the assignments applied as new data files, and their old positions
-    * are flagged in the SAME commit — position-delete files on v1/v2,
+    * are marked in the SAME commit — position-delete files on v1/v2,
     * puffin deletion vectors on v3. Untouched files stay byte-identical;
     * cost follows the matched rows, never the table. Assignments are
     * (column → expression) pairs evaluated against the current row.
@@ -365,72 +331,95 @@ object IcebergWriter {
     * columns, which this writer does not emit yet; pipelines keying on
     * `_row_id` should treat an UPDATE as delete+insert. */
   def updateWhere(spark: SparkSession, tablePath: String,
-      predicate: org.apache.spark.sql.Column,
-      assignments: Seq[(String, org.apache.spark.sql.Column)]): Committed = {
+      predicate: Column, assignments: Seq[(String, Column)]): Committed = {
     require(assignments.nonEmpty, "UPDATE needs at least one assignment")
-    resolving(deleteWhereOnce(spark, tablePath, predicate, Some(assignments)))
+    resolving(deleteRowsOnce(spark, tablePath, _.filter(predicate),
+      Some(assignments)))
   }
 
-  /** The updated replacement rows of an UPDATE: the delete-applied
-    * matched scan with the assignments projected in. */
-  private def updatedRows(spark: SparkSession,
-      snap: IcebergReader.Snapshot,
-      predicate: org.apache.spark.sql.Column,
-      assignments: Seq[(String, org.apache.spark.sql.Column)]): DataFrame = {
+  /** The one Iceberg row delete, under [[deleteWhere]], [[updateWhere]],
+    * [[deleteMatched]] and [[setFormatVersion]]'s conversion. `matcher`
+    * picks rows of the snapshot's raw data scan, which carries each
+    * row's `__file` and `__pos`; their positions are marked deleted.
+    * A row an earlier delete already marked may match again: marking a
+    * position twice deletes it once. Only matched (file, position) pairs
+    * shuffle, hash-partitioned by file and sorted by position, so the
+    * cost follows the matches, never the table. Only the encoding
+    * follows the format version, as the spec requires: a v1/v2 table
+    * gets Parquet position-delete files, a v3 table (or one `toV3`
+    * upgrades in this commit) puffin deletion vectors that also carry
+    * every position deleted before ([[deletionVectors]]). An UPDATE's
+    * replacement rows — the live matched rows with `updateAssignments`
+    * applied — land as new data files in the same commit. A delete
+    * that matches no row commits no snapshot, nor does a v3 delete
+    * whose vectors gain no position. */
+  private def deleteRowsOnce(spark: SparkSession, tablePath: String,
+      matcher: DataFrame => DataFrame,
+      updateAssignments: Option[Seq[(String, Column)]],
+      beforeCommit: () => Unit = () => (),
+      toV3: Boolean = false): Committed = {
+    require(IcebergReader.isIcebergTable(spark, tablePath),
+      s"no Iceberg table at $tablePath")
+    val snap = IcebergReader.snapshotOpt(spark, tablePath) match {
+      case Some(s) => s
+      case None => return Committed(-1L, -1L, 0)
+    }
+    // the conversion only re-encodes positions; equality deletes carry
+    if (!toV3) checkNoEqualityDeletes(snap, tablePath,
+      if (updateAssignments.isDefined) "update" else "delete")
+    if (snap.files.isEmpty) return Committed(snap.snapshotId, -1L, 0)
+    val dv = toV3 || IcebergReader.formatVersion(spark, tablePath) >= 3
+    val snapshotId = math.abs(UUID.randomUUID().getMostSignificantBits)
+    // __file/__pos are attached inside the scan's branches (`_metadata`
+    // does not resolve through a name-mapped union)
+    val matched = matcher(IcebergReader.dataScan(spark, snap, withMeta = true))
+      .select(col("__file"), col("__pos").cast("long").as("__pos"))
+    val marks =
+      if (dv) deletionVectors(spark, tablePath, snap, matched, snapshotId)
+      else writeDeleteFiles(TableFiles.withFieldIds(
+          byFile(matched).select(col("__file").as("file_path"),
+            col("__pos").as("pos")),
+          // the spec's reserved field-ids for position-delete columns,
+          // embedded so field-id-resolving readers open these files
+          Map("file_path" -> 2147483546L, "pos" -> 2147483545L)),
+        tablePath, "delete")
+    // deletion vectors re-encode the prior positions too: nothing new
+    // is marked when their cardinality did not grow
+    if (marks.isEmpty || dv && snap.deleteFiles.isEmpty &&
+        marks.map(_.recordCount).sum == snap.dvFiles.map(_.recordCount).sum) {
+      val fs = new Path(tablePath).getFileSystem(
+        spark.sparkContext.hadoopConfiguration)
+      marks.map(_.path).distinct.foreach(p => fs.delete(new Path(p), false))
+      return Committed(snap.snapshotId, -1L, 0)
+    }
+    val pfields = IcebergReader.partitionFields(spark, tablePath)
+    val adds = updateAssignments.fold(Seq.empty[FileInfo])(asg =>
+      writeDataFiles(updatedRows(spark, snap, matcher, asg), tablePath, pfields))
+    commit(spark, tablePath, snap.schema, pfields, adds, kept = Nil,
+      operation = if (updateAssignments.isDefined) "overwrite" else "delete",
+      carryCurrentManifests = true, expectedParent = Some(snap.snapshotId),
+      deleteAdds = marks, snapshotIdOverride = Some(snapshotId),
+      minFormatVersion = if (dv) 3 else 1, dropPosDeleteManifests = dv,
+      beforeCommit = beforeCommit)
+  }
+
+  /** (file, position) pairs as both encodings consume them: each file's
+    * positions at one task, ascending. */
+  private def byFile(pairs: DataFrame): DataFrame =
+    pairs.repartition(col("__file")).sortWithinPartitions("__file", "__pos")
+
+  /** The replacement rows of an UPDATE: the delete-applied matched
+    * scan with the assignments projected in. */
+  private def updatedRows(spark: SparkSession, snap: IcebergReader.Snapshot,
+      matcher: DataFrame => DataFrame,
+      assignments: Seq[(String, Column)]): DataFrame = {
     val asg = assignments.toMap
     asg.keys.foreach(c => require(snap.schema.fieldNames.contains(c),
       s"UPDATE assignment targets unknown column $c"))
-    deleteAwareScan(spark, snap, snap.files)
-      .filter(predicate)
-      .select(snap.schema.fields.map { f =>
-        asg.get(f.name).map(_.cast(f.dataType).as(f.name))
-          .getOrElse(col(f.name))
-      }.toSeq: _*)
-  }
-
-  private def deleteWhereOnce(spark: SparkSession, tablePath: String,
-      predicate: org.apache.spark.sql.Column,
-      updateAssignments: Option[Seq[(String, org.apache.spark.sql.Column)]] =
-        None): Committed = {
-    require(IcebergReader.isIcebergTable(spark, tablePath),
-      s"no Iceberg table at $tablePath")
-    val snapOpt = IcebergReader.snapshotOpt(spark, tablePath)
-    if (snapOpt.isEmpty) return Committed(-1L, -1L, 0)
-    val snap = snapOpt.get
-    checkNoEqualityDeletes(snap, tablePath, "delete_where")
-    if (snap.files.isEmpty) return Committed(snap.snapshotId, -1L, 0)
-    // a v3 table deletes through DELETION VECTORS (position-delete FILES
-    // must not be added to v3 tables, per spec)
-    if (IcebergReader.formatVersion(spark, tablePath) >= 3)
-      return deleteWhereDvOnce(spark, tablePath, predicate, snap,
-        requireMatches = true, updateAssignments = updateAssignments)
-    val pfields = IcebergReader.partitionFields(spark, tablePath)
-    // __file/__pos are attached inside the scan's branches (`_metadata`
-    // does not resolve through a name-mapped union)
-    val matched = IcebergReader.dataScan(spark, snap, withMeta = true)
-      .filter(predicate)
-      .select(col("__file").as("file_path"), col("__pos").cast("long").as("pos"))
-    // the spec's reserved field-ids for position-delete columns,
-    // embedded so field-id-resolving readers open these files
-    val stamped = TableFiles.withFieldIds(matched,
-      Map("file_path" -> 2147483546L, "pos" -> 2147483545L))
-    val delFiles = writeDeleteFiles(
-      stamped.repartitionByRange(col("file_path"), col("pos"))
-        .sortWithinPartitions("file_path", "pos"),
-      tablePath, "delete")
-    if (delFiles.isEmpty) return Committed(snap.snapshotId, -1L, 0)
-    // UPDATE: the replacement rows land as new data files in the SAME
-    // commit that flags the old positions — one atomic snapshot
-    val adds = updateAssignments match {
-      case None => Nil
-      case Some(asg) => writeDataFiles(
-        updatedRows(spark, snap, predicate, asg), tablePath, pfields)
-    }
-    commit(spark, tablePath, snap.schema, pfields, adds = adds,
-      kept = Nil,
-      operation = if (updateAssignments.isDefined) "overwrite" else "delete",
-      carryCurrentManifests = true,
-      expectedParent = Some(snap.snapshotId), deleteAdds = delFiles)
+    val live = deleteAwareScan(spark, snap, snap.files)
+    matcher(live).select(snap.schema.fields.map { f =>
+      asg.get(f.name).map(_.cast(f.dataType).as(f.name)).getOrElse(col(f.name))
+    }.toSeq: _*)
   }
 
   /** Stage delete rows as Parquet and move each non-empty part file to
@@ -449,121 +438,65 @@ object IcebergWriter {
       equalityIds = equalityIds))
   }
 
-  /** v3 `DELETE FROM … WHERE` via DELETION VECTORS (iceberg spec
-    * "Deletion Vectors"): matched positions are UNIONED with every
+  /** The puffin deletion vectors of a v3 delete (iceberg spec "Deletion
+    * Vectors"): the `matched` positions are UNIONED with every
     * previously deleted position (prior DVs and any pre-upgrade
-    * position-delete parquet) and re-encoded as one puffin DV blob per
-    * touched data file — preserving the v3 invariant of AT MOST ONE DV
-    * per data file, with each new DV superseding the old. The commit
-    * appends one delete manifest of DV entries
+    * position-delete parquet) and re-encoded as one DV blob per touched
+    * data file — the v3 invariant of AT MOST ONE DV per data file, each
+    * new DV superseding the old, which is why the commit drops the
+    * carried positional delete manifests. Each task encodes its files'
+    * bitmaps and writes ONE puffin with one blob per file; the driver
+    * receives blob descriptors only, returned as the manifest entries
     * (`referenced_data_file`/`content_offset`/`content_size_in_bytes`,
-    * field-ids 143/144/145), carries data and equality-delete manifests,
-    * and DROPS replaced positional delete manifests.
-    *
-    * Scale shape: only (file, position) pairs shuffle (hash-partitioned
-    * by file); each task encodes its files' bitmaps and writes ONE
-    * puffin with one blob per file; the driver receives blob descriptors
-    * only. Delete cost is O(matched + previously deleted), never
-    * O(table). */
-  private def deleteWhereDvOnce(spark: SparkSession, tablePath: String,
-      predicate: org.apache.spark.sql.Column,
-      snap: IcebergReader.Snapshot,
-      requireMatches: Boolean,
-      updateAssignments: Option[Seq[(String, org.apache.spark.sql.Column)]] =
-        None): Committed = {
+    * field-ids 143/144/145) of the commit `snapshotId` names. */
+  private def deletionVectors(spark: SparkSession, tablePath: String,
+      snap: IcebergReader.Snapshot, matched: DataFrame,
+      snapshotId: Long): Seq[FileInfo] = {
     val root = new Path(tablePath)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val pfields = IcebergReader.partitionFields(spark, tablePath)
-    val matched = IcebergReader.dataScan(spark, snap, withMeta = true)
-      .filter(predicate)
-      .select(TableFiles.schemeless(col("__file")).as("f"),
-        col("__pos").cast("long").as("p"))
     val priorParquet =
       if (snap.deleteFiles.isEmpty) None
-      else Some(spark.read.parquet(snap.deleteFiles.map(_.path): _*)
-        .select(TableFiles.schemeless(col("file_path")).as("f"),
-          col("pos").cast("long").as("p")))
+      else Some(IcebergReader.positionDeletes(spark, snap.deleteFiles))
     val priorDvs =
       if (snap.dvFiles.isEmpty) None
-      else Some(IcebergReader.dvPositions(spark, snap.dvFiles)
-        .select(col("__file").as("f"), col("__pos").as("p")))
-    val all = (Seq(matched) ++ priorParquet ++ priorDvs)
-      .reduce(_ unionByName _)
-    // the predicted snapshot identity, stamped into the puffin blob
-    // metadata; a concurrent commit invalidates it and the claim loop's
-    // expectedParent check forces a full re-resolution
-    val snapshotId = math.abs(UUID.randomUUID().getMostSignificantBits)
-    val predictedSeq = {
-      val metaDir = new Path(root, "metadata")
-      logState(fs, metaDir)._2.flatMap(p =>
-        Option(p._2.get("last-sequence-number")).map(_.asLong))
-        .getOrElse(0L) + 1
-    }
+      else Some(IcebergReader.dvPositions(spark, snap.dvFiles))
+    val all = (matched.withColumn("__file", TableFiles.schemeless(col("__file"))) +:
+      (priorParquet ++ priorDvs).toSeq).reduce(_ unionByName _)
+    // the predicted sequence number, stamped into the puffin blob
+    // metadata with `snapshotId`; a concurrent commit invalidates both
+    // and the claim loop's expectedParent check forces a re-resolution
+    val predictedSeq = logState(fs, new Path(root, "metadata"))._2
+      .flatMap(p => Option(p._2.get("last-sequence-number")).map(_.asLong))
+      .getOrElse(0L) + 1
     val confBc = spark.sparkContext.broadcast(
       new org.apache.spark.util.SerializableConfiguration(
         spark.sparkContext.hadoopConfiguration))
     val dataDir = fs.makeQualified(new Path(root, "data")).toString
     fs.mkdirs(new Path(root, "data"))
     import spark.implicits._
-    val blobs = all
-      .repartition(col("f")).sortWithinPartitions(col("f"), col("p"))
-      .mapPartitions { it =>
-        val dvs = TableFiles.positionBitmaps(it)
-          .map { case (f, bytes, card) => Puffin.DvBlob(f, bytes, card) }.toSeq
-        if (dvs.isEmpty) Iterator.empty
-        else {
-          val p = new Path(dataDir, s"dv-${UUID.randomUUID()}.puffin")
-          val located = Puffin.writeDvFile(confBc.value.value, p,
-            dvs, snapshotId, predictedSeq)
-          val size = p.getFileSystem(confBc.value.value)
-            .getFileStatus(p).getLen
-          val cardOf = dvs.map(d => d.referencedDataFile -> d.cardinality).toMap
-          located.iterator.map { case (ref, off, len) =>
-            (ref, p.toString, off, len, cardOf(ref), size)
-          }
+    val blobs = byFile(all).mapPartitions { it =>
+      val dvs = TableFiles.positionBitmaps(it)
+        .map { case (f, bytes, card) => Puffin.DvBlob(f, bytes, card) }.toSeq
+      if (dvs.isEmpty) Iterator.empty
+      else {
+        val p = new Path(dataDir, s"dv-${UUID.randomUUID()}.puffin")
+        val located = Puffin.writeDvFile(confBc.value.value, p,
+          dvs, snapshotId, predictedSeq)
+        val size = p.getFileSystem(confBc.value.value).getFileStatus(p).getLen
+        val cardOf = dvs.map(d => d.referencedDataFile -> d.cardinality).toMap
+        located.iterator.map { case (ref, off, len) =>
+          (ref, p.toString, off, len, cardOf(ref), size)
         }
-      }.collect()
-    if (blobs.isEmpty)
-      return Committed(snap.snapshotId, -1L, 0)
-    if (requireMatches) {
-      // pure no-op only when nothing NEW matched and nothing converts:
-      // identical DV state re-encoded would churn a snapshot
-      val priorDeleted = snap.dvFiles.map(_.recordCount).sum +
-        snap.deleteFiles.map(_.recordCount).sum
-      val nowDeleted = blobs.map(_._5).sum
-      if (nowDeleted == priorDeleted && snap.deleteFiles.isEmpty) {
-        blobs.map(_._2).distinct.foreach(p => fs.delete(new Path(p), false))
-        return Committed(snap.snapshotId, -1L, 0)
       }
-    }
+    }.collect()
     val partOf: Map[String, Map[String, Option[String]]] =
       snap.files.map(f => TableFiles.schemeless(f.path) ->
         f.partition.map { case (k, v) => k -> Option(v).map(_.toString) })
         .toMap
-    val dvInfos = blobs.toSeq.map { case (ref, puffin, off, len, card, size) =>
+    blobs.toSeq.map { case (ref, puffin, off, len, card, size) =>
       FileInfo(puffin, partOf.getOrElse(ref, Map.empty), size, card,
         fileFormat = "PUFFIN", referencedDataFile = Some(ref),
         contentOffset = Some(off), contentSizeBytes = Some(len))
-    }
-    val adds = updateAssignments match {
-      case None => Nil
-      case Some(asg) => writeDataFiles(
-        updatedRows(spark, snap, predicate, asg), tablePath, pfields)
-    }
-    try commit(spark, tablePath, snap.schema, pfields, adds = adds,
-      kept = Nil,
-      operation = if (updateAssignments.isDefined) "overwrite" else "delete",
-      carryCurrentManifests = true,
-      expectedParent = Some(snap.snapshotId), deleteAdds = dvInfos,
-      snapshotIdOverride = Some(snapshotId), minFormatVersion = 3,
-      dropPosDeleteManifests = true)
-    catch {
-      case e: Throwable =>
-        // the commit never published: the staged puffins AND the
-        // UPDATE's freshly written replacement files are orphans
-        (blobs.map(_._2).distinct ++ adds.map(_.path)).foreach(p =>
-          try fs.delete(new Path(p), false) catch { case _: Exception => () })
-        throw e
     }
   }
 
@@ -652,11 +585,11 @@ object IcebergWriter {
     if (IcebergReader.formatVersion(spark, tablePath) >= 3) return
     IcebergReader.snapshotOpt(spark, tablePath)
       .filter(_.deleteFiles.nonEmpty) match {
-      case Some(snap) =>
+      case Some(_) =>
         // conversion commit: all pos-delete parquet positions re-encode
-        // as DVs; minFormatVersion=3 lifts the metadata in the same claim
-        deleteWhereDvOnce(spark, tablePath, lit(false), snap,
-          requireMatches = false)
+        // as DVs, and the same claim lifts the metadata to v3
+        deleteRowsOnce(spark, tablePath, _.filter(lit(false)), None,
+          toV3 = true)
         ()
       case None =>
         // metadata-only bump: format-version 3 + row-lineage bookkeeping
@@ -776,9 +709,9 @@ object IcebergWriter {
     * the rows added in this same commit survive). NOTHING is rewritten:
     * upsert cost is O(src), not O(touched partitions), which at 100 TB
     * is the difference between a streaming upsert and a table rewrite.
-    * Reads absorb the deletes until a compacting rewrite; the rewrite
-    * paths (merge/deleteMatched) detect live equality deletes and raise
-    * rather than resurrect. `src` must be key-unique (precombine
+    * Reads absorb the deletes until a compacting rewrite; [[merge]] and
+    * the row deletes detect live equality deletes and raise rather than
+    * resurrect. `src` must be key-unique (precombine
     * upstream, as [[graft.table.MergeOps]] does) — duplicate keys in
     * one batch would both survive. `src` is evaluated twice (data files,
     * then the key tuples for the delete file); a nondeterministic
@@ -1175,7 +1108,7 @@ object IcebergWriter {
     }
     commit(spark, tablePath, schema, pfields, adds, kept = Nil,
       operation = "append", carryCurrentManifests = true,
-      expectedParent = None)
+      expectedParent = None, ownsAdds = false)
   }
 
   /** [[addFiles]] generalized to PARTITIONED tables for callers that
@@ -1221,7 +1154,7 @@ object IcebergWriter {
     commit(spark, tablePath, schema, pfields, adds, kept = Nil,
       operation = if (mode == "overwrite") "overwrite" else "append",
       carryCurrentManifests = mode == "append",
-      expectedParent = None)
+      expectedParent = None, ownsAdds = false)
   }
 
   /** The spec's name-mapping JSON for the current schema: each field-id
@@ -1673,7 +1606,15 @@ object IcebergWriter {
     * `carryCurrentManifests` (append) instead re-reads the CURRENT
     * snapshot's manifest list inside the claim loop and includes those
     * manifests in the new list, so a retry after losing the claim
-    * carries the winner's files rather than resurrecting a stale view. */
+    * carries the winner's files rather than resurrecting a stale view.
+    *
+    * The commit owns the files its caller staged for it: `adds` (unless
+    * `ownsAdds` is off, for files registered in place), `deleteAdds`,
+    * and the manifests it writes. `beforeCommit` runs before the first
+    * claim; when it, the parent check or the claim loop throws before a
+    * claim of this commit was won, those files are deleted and the error
+    * propagates. Once a claim is won nothing is deleted: the files may
+    * already be published. */
   private def commit(spark: SparkSession, tablePath: String,
       schema: StructType, partFields: Seq[PartitionField],
       adds: Seq[FileInfo],
@@ -1684,7 +1625,9 @@ object IcebergWriter {
       branch: Option[String] = None,
       snapshotIdOverride: Option[Long] = None,
       minFormatVersion: Int = 1,
-      dropPosDeleteManifests: Boolean = false): Committed = {
+      dropPosDeleteManifests: Boolean = false,
+      beforeCommit: () => Unit = () => (),
+      ownsAdds: Boolean = true): Committed = {
     val root = new Path(tablePath)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val metaDir = new Path(root, "metadata")
@@ -1890,7 +1833,8 @@ object IcebergWriter {
 
     // the manifest list is (re)built in every attempt, so appends
     // observe the manifests of whoever won a race
-    claimLoop(fs, tablePath, "an Iceberg commit") { (claimedMax, parsed, attempt) =>
+    def attemptCommit(claimedMax: Long, parsed: Option[JsonNode],
+        attempt: Int): Attempt[Committed] = {
       expectedParent.foreach { p =>
         val cur = parsed.flatMap(m =>
           Option(m.get("current-snapshot-id")).map(_.asLong))
@@ -2008,6 +1952,22 @@ object IcebergWriter {
       Successor(node, Committed(snapshotId, claimedMax + 1, adds.length),
         staged = Seq(listPath), snapshotId = Some(snapshotId))
     }
+
+    // what was staged for this commit is deleted on a failure before
+    // one of its claims wins, and never after
+    var claimed = false
+    try {
+      beforeCommit()
+      claimLoop(fs, tablePath, "an Iceberg commit", () => claimed = true)(
+        attemptCommit)
+    } catch { case e: Throwable if !claimed =>
+      val staged = ((if (ownsAdds) adds else Nil) ++ deleteAdds)
+        .map(f => new Path(f.path)).distinct ++
+        dataManifestSlot.map(_._1) ++ deleteManifestSlot.map(_._1)
+      staged.foreach(p =>
+        try fs.delete(p, false) catch { case _: java.io.IOException => () })
+      throw e
+    }
   }
 
   /** What one attempt of [[claimLoop]] decided. */
@@ -2027,10 +1987,12 @@ object IcebergWriter {
   /** The optimistic-commit protocol under every Iceberg commit. Each
     * attempt reads the log, and `attempt` builds from the highest
     * claimed version, the newest parseable metadata and the attempt
-    * number; the loop claims `v{max+1}.metadata.json` create-exclusive
-    * and advances the version hint on a win. A lost claim deletes the
-    * attempt's staged files and retries, up to 20 attempts. */
-  private def claimLoop[A](fs: FileSystem, tablePath: String, what: String)(
+    * number; the loop claims `v{max+1}.metadata.json` create-exclusive,
+    * calls `onClaim` and advances the version hint on a win. A lost
+    * claim deletes the attempt's staged files and retries, up to 20
+    * attempts. */
+  private def claimLoop[A](fs: FileSystem, tablePath: String, what: String,
+      onClaim: () => Unit = () => ())(
       attempt: (Long, Option[JsonNode], Int) => Attempt[A]): A = {
     val metaDir = new Path(new Path(tablePath), "metadata")
     var attempts = 0
@@ -2042,6 +2004,7 @@ object IcebergWriter {
           val version = claimedMax + 1
           if (AtomicWrite.claim(fs, new Path(metaDir, s"v$version.metadata.json"),
               mapper.writerWithDefaultPrettyPrinter().writeValueAsBytes(node))) {
+            onClaim()
             writeHint(fs, metaDir, version)
             // A writer paused between claiming vN and writing the body
             // past tornGraceMs has its claim SKIPPED by competitors —

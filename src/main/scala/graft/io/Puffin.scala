@@ -35,8 +35,10 @@ import org.apache.hadoop.fs.Path
   *
   * Scale shape: DV puffin files are written ON EXECUTORS by the delete
   * job (one file per task, one blob per touched data file) and decoded
-  * ON EXECUTORS by the read's position anti-join — the driver only ever
-  * holds blob descriptors (path/offset/length), manifest-scale.
+  * ON EXECUTORS by the read's per-file row-index filter
+  * ([[TableFiles.withoutDeleted]]: each scan task loads its file's blob
+  * once) — the driver only ever holds blob descriptors
+  * (path/offset/length), manifest-scale.
   */
 object Puffin {
 

@@ -327,6 +327,19 @@ private[graft] object TableFiles {
     keys.map(k => if (matchNulls) l(k) <=> r(k) else l(k) === r(k))
       .reduce(_ && _)
 
+  /** The rows of a scan frame whose key tuple is in `keys`: a
+    * semi-join on [[keyCond]] against the key tuples. A semi-join keeps
+    * a row once however many tuples match it, so repeated keys need no
+    * distinct (and its shuffle). Both table writers' `deleteMatched`
+    * select the rows they delete with it (`MERGE … WHEN MATCHED THEN
+    * DELETE`, `DELETE … WHERE EXISTS`). */
+  def keyMatcher(keys: DataFrame, keyCols: Seq[String],
+      matchNulls: Boolean): DataFrame => DataFrame = {
+    require(keyCols.nonEmpty, "deleteMatched needs key columns")
+    val keySet = keys.select(keyCols.map(col): _*)
+    df => df.join(keySet, keyCond(df, keySet, keyCols, matchNulls), "left_semi")
+  }
+
   /** Distinct partition tuples of `rows`, each value computed by its
     * `parts` expression and rendered through Spark's cast to string. */
   private def partitionTuples(rows: DataFrame, parts: Seq[Column]): Set[Tuple] =

@@ -92,7 +92,8 @@ object TableRoundtrips {
     * delete a key slice via [[graft.io.DeltaLogWriter.deleteWhere]] —
     * which writes DV bitmap sidecars and rewrites ZERO data files — and
     * read the survivors back through the protocol reader (which applies
-    * DVs as a row-position anti-join). The oracle reconstructs the same
+    * each file's DV as a filter on row index inside the scan,
+    * [[graft.io.TableFiles.withoutDeleted]]). The oracle reconstructs the same
     * survivor set relationally, so a mis-decoded bitmap, an off-by-one
     * row index, or a dropped DV hash-mismatches. */
   def deltaDvDeleteRoundtrip(s: SparkSession, dir: String): DataFrame = {
@@ -317,8 +318,9 @@ object TableRoundtrips {
     * stacked DELETEs, the second superseding the first's DV per file
     * (positions unioned, at most one DV per data file), then an append
     * whose commit carries the DV manifest and assigns row-lineage ids.
-    * Zero data-file rewrite throughout; the read applies the DVs as a
-    * position anti-join decoded on executors. */
+    * Zero data-file rewrite throughout; the read applies each file's DV
+    * as a filter on row index inside the scan, decoded on executors
+    * ([[graft.io.TableFiles.withoutDeleted]]). */
   def icebergV3DvRoundtrip(s: SparkSession, dir: String): DataFrame = {
     val root = graft.session.Scratch.dir("graft-iceberg-dv")
     val tmp = root + "/t"

@@ -84,4 +84,85 @@ class IcebergCommitLoopSpec extends AnyFunSuite {
     assert(newest(dir).get("properties").get("k").asText == "v")
     assert(rows(dir) == Set((0L, "base"), (1L, "a")))
   }
+
+  /** Every file below `dir/sub`, Hadoop's hidden checksum files aside. */
+  private def filesUnder(dir: String, sub: String): Seq[File] = {
+    def walk(f: File): Seq[File] =
+      if (f.isDirectory) f.listFiles().toSeq.flatMap(walk)
+      else if (f.getName.startsWith(".")) Nil
+      else Seq(f)
+    walk(new File(s"$dir/$sub"))
+  }
+
+  private def localPath(uri: String): String =
+    new org.apache.hadoop.fs.Path(uri).toUri.getPath
+
+  private val seedRows = (1L to 20L).map(i => (i, s"r$i"))
+
+  private def mergeTwo(d: String, gate: () => Unit): Unit = {
+    io.IcebergWriter.merge(spark, d, df((2L, "B"), (50L, "new")),
+      Seq("id"), beforeCommit = gate); ()
+  }
+
+  private def deleteTwo(d: String, gate: () => Unit): Unit = {
+    io.IcebergWriter.deleteMatched(spark, d,
+      df((2L, ""), (3L, "")).select("id"), Seq("id"), beforeCommit = gate); ()
+  }
+
+  /** A statement retried after losing its snapshot to a concurrent
+    * append: the first attempt's `beforeCommit` lands the append, so
+    * its commit raises `ConcurrentCommit` and the statement re-resolves
+    * against the new snapshot. What the abandoned attempt staged (data,
+    * position-delete and puffin files, manifests) must be gone. */
+  private val retried: Seq[(String, Int, (String, () => Unit) => Unit,
+      Set[(Long, String)])] = {
+    val after = seedRows.toSet + ((100L, "c"))
+    val deleted = after - ((2L, "r2")) - ((3L, "r3"))
+    Seq(
+      ("merge", 1, mergeTwo _,
+        after - ((2L, "r2")) + ((2L, "B")) + ((50L, "new"))),
+      ("deleteMatched on a v2 table", 2, deleteTwo _, deleted),
+      ("deleteMatched on a v3 table", 3, deleteTwo _, deleted))
+  }
+
+  for ((name, fv, stmt, expected) <- retried)
+    test(s"$name retried after a concurrent append leaves no staged file") {
+      val dir = tmp()
+      val seed = df(seedRows: _*)
+      io.IcebergWriter.createEmpty(spark, dir, seed.schema, formatVersion = fv)
+      io.IcebergWriter.write(seed.repartition(2), dir)
+      var attempts = 0
+      stmt(dir, () => {
+        attempts += 1
+        if (attempts == 1) { io.IcebergWriter.write(df((100L, "c")), dir); () }
+      })
+      assert(attempts == 2, "the statement re-resolved once")
+      assert(rows(dir) == expected)
+      // a merge's replaced files stay with the snapshots before it until
+      // an expiry, so a file is live when any snapshot holds it
+      import scala.jdk.CollectionConverters._
+      val snapshots = newest(dir).get("snapshots").elements().asScala.toSeq
+      val live = snapshots.flatMap { s =>
+        val snap = io.IcebergReader.snapshot(spark, dir,
+          Some(s.get("snapshot-id").asLong))
+        snap.files ++ snap.deleteFiles ++ snap.dvFiles ++ snap.equalityDeleteFiles
+      }.map(f => localPath(f.path)).toSet
+      val stray = filesUnder(dir, "data").map(_.getPath).filterNot(live)
+      assert(stray.isEmpty, s"files under data/ no snapshot holds: $stray")
+      val listed = snapshots
+        .flatMap { s =>
+          val reader = new org.apache.avro.file.DataFileReader(
+            new File(localPath(s.get("manifest-list").asText)),
+            new org.apache.avro.generic.GenericDatumReader[
+              org.apache.avro.generic.GenericRecord]())
+          try reader.iterator().asScala
+            .map(r => localPath(r.get("manifest_path").toString)).toList
+          finally reader.close()
+        }.toSet
+      val manifests = filesUnder(dir, "metadata").map(_.getPath)
+        .filter(p => p.endsWith("-m0.avro") || p.endsWith("-m1.avro"))
+      assert(manifests.nonEmpty)
+      assert(manifests.filterNot(listed).isEmpty,
+        s"manifests no snapshot lists: ${manifests.filterNot(listed)}")
+    }
 }

@@ -44,6 +44,11 @@ class MergeCheckSpec extends AnyFunSuite {
     ("delta", (d: String) => { DeltaLogWriter.write(seed, d); () },
       (d: String) => DeltaLogReader.latestVersion(spark, d)),
     ("iceberg", (d: String) => { IcebergWriter.write(seed, d); () },
+      (d: String) => tree(d).keys.count(_.endsWith(".metadata.json")).toLong),
+    ("iceberg-v3", (d: String) => {
+        IcebergWriter.createEmpty(spark, d, seed.schema, formatVersion = 3)
+        IcebergWriter.write(seed, d); ()
+      },
       (d: String) => tree(d).keys.count(_.endsWith(".metadata.json")).toLong))
 
   private val upsert =
@@ -67,7 +72,8 @@ class MergeCheckSpec extends AnyFunSuite {
       import spark0.implicits._
       val dir = tmp() + "/t"
       mk(dir)
-      // a delete first, so the Delta table carries deletion vectors
+      // a delete first, so the table carries deletion vectors (Delta,
+      // Iceberg v3) or position-delete files (Iceberg v2)
       TableDml.execute(spark, "DELETE FROM t WHERE id = 40", Map("t" -> dir))
       Seq((3L, "X", 1.0), (3L, "Y", 2.0), (99L, "Z", 3.0))
         .toDF("id", "name", "amt").createOrReplaceTempView("mck_dup")

@@ -282,6 +282,48 @@ class SqlDmlSpec extends AnyFunSuite {
     assert(snap.files.exists(_.deletionVector.isDefined))
   }
 
+  for ((fv, nullSafe) <- Seq((1, false), (3, true)))
+    test(s"Iceberg v$fv: MERGE DELETE and correlated EXISTS mark positions" +
+        (if (nullSafe) " (null-safe key)" else "")) {
+      val spark0 = spark
+      import spark0.implicits._
+      val dir = tmp() + "/t"
+      val seed = ((1L to 20L).map(i => (Option(i), s"r$i")) :+
+        ((None: Option[Long]) -> "rnull")).toDF("id", "v")
+      if (fv == 3)
+        IcebergWriter.createEmpty(spark, dir, seed.schema, formatVersion = 3)
+      IcebergWriter.write(seed.repartition(2), dir)
+      def snap = IcebergReader.snapshotOpt(spark, dir).get
+      def dataFiles: Map[String, Long] = snap.files.map(f => f.path ->
+        new java.io.File(new org.apache.hadoop.fs.Path(f.path).toUri.getPath)
+          .lastModified).toMap
+      val before = dataFiles
+      val on = if (nullSafe) "t.id IS NOT DISTINCT FROM s.id" else "t.id = s.id"
+      Seq(Option(2L), Option(3L), None).toDF("id").createOrReplaceTempView("idel")
+      TableDml.execute(spark,
+        s"MERGE INTO t USING idel s ON $on WHEN MATCHED THEN DELETE",
+        Map("t" -> dir))
+      Seq(Option(5L), Option(99L)).toDF("id").createOrReplaceTempView("idel2")
+      TableDml.execute(spark,
+        s"DELETE FROM t WHERE EXISTS (SELECT 1 FROM idel2 s WHERE $on)",
+        Map("t" -> dir))
+      assert(dataFiles == before, "a data file was rewritten")
+      if (fv == 3) assert(snap.dvFiles.nonEmpty && snap.deleteFiles.isEmpty)
+      else assert(snap.deleteFiles.nonEmpty && snap.dvFiles.isEmpty)
+      val left = IcebergReader.read(spark, dir).select("id").collect()
+        .map(r => Option(r.get(0))).toSet
+      val gone = Set(2L, 3L, 5L)
+      assert(left == ((1L to 20L).filterNot(gone).map(Option(_)) ++
+        (if (nullSafe) Nil else Seq(None))).toSet)
+      // a delete that matches no row commits no snapshot
+      val last = snap.snapshotId
+      Seq(Option(99L)).toDF("id").createOrReplaceTempView("idel3")
+      TableDml.execute(spark,
+        s"DELETE FROM t WHERE EXISTS (SELECT 1 FROM idel3 s WHERE $on)",
+        Map("t" -> dir))
+      assert(snap.snapshotId == last)
+    }
+
   test("MERGE raises on a target row matched by multiple source rows") {
     val spark0 = spark
     import spark0.implicits._
