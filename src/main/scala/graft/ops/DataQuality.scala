@@ -65,7 +65,7 @@ object DataQuality {
         throw new IllegalArgumentException(s"unsupported comparator: $other")
     }
 
-    // ---- round-12 rule types (`data_quality/_create.py:27-37` renders
+    // ---- aggregate rule types (`data_quality/_create.py:27-37` renders
     // ---- arbitrary DQDL; Glue's grammar carries all of these) -------------
 
     /** `Mean "c" > x` — decimal(28,10)-summed mean (order-independent,
@@ -181,9 +181,9 @@ object DataQuality {
     * renders `Rules = [ RowCount > 100, Completeness "c" > 0.9, … ]`)
     * into compiled rules. Supported: RowCount, Completeness, Uniqueness,
     * IsComplete, ColumnValues min/max comparisons, `ColumnValues … in
-    * [...]` set rules, `ColumnValues … matches "regex"`, and (round 12,
-    * the rest of the rule types Glue's DQDL grammar carries that are
-    * single-pass aggregates) Mean, StandardDeviation, Sum,
+    * [...]` set rules, `ColumnValues … matches "regex"`, and the rest
+    * of the rule types Glue's DQDL grammar carries that are single-pass
+    * aggregates: Mean, StandardDeviation, Sum,
     * ColumnLength, DistinctValuesCount with the full comparator set.
     * Mean/Sum/StandardDeviation use exact-decimal sums for
     * order-independent metrics: their domain is |v| < 10^18
@@ -341,7 +341,7 @@ object DataQuality {
       |UNION ALL SELECT 'min_o_totalprice', min_o_totalprice,
       |  min_o_totalprice >= 0.0 FROM m""".stripMargin
 
-  /** Third oracled ruleset (round 12) — exercises the widened DQDL
+  /** Third oracled ruleset — exercises the aggregate DQDL
     * dialect (Mean / StandardDeviation / Sum / ColumnLength /
     * DistinctValuesCount), parsed from DQDL text, over `events`. All
     * metrics are exact-decimal formulations so the DuckDB twin is

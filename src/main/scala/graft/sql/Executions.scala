@@ -41,7 +41,7 @@ object Executions {
       })
   /** Submit a statement asynchronously; rows are materialized inside
     * the future so cancellation interrupts real work. Routes through
-    * [[SqlEngine.executeSql]] (r11): Athena's `start_query_execution`
+    * [[SqlEngine.executeSql]]: Athena's `start_query_execution`
     * accepts ANY statement — SELECT, table DML, CTAS/UNLOAD, DDL — and
     * that is exactly how the reference issues its generated MERGE /
     * MSCK / ALTER statements (`athena/_executions.py:34`,

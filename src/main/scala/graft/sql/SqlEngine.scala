@@ -205,14 +205,14 @@ object SqlEngine {
     else if (v.length >= 6 && v.regionMatches(true, 0, "ARRAY", 0, 5)) {
       val open = v.indexOf('[')
       require(open > 0 && v.endsWith("]"), s"malformed ARRAY property: $v")
-      Right(TrinoCompat.splitTop(v.substring(open + 1, v.length - 1))
+      Right(SqlLexer.splitTop(v.substring(open + 1, v.length - 1))
         .map(e => propValue(e).swap.getOrElse(
           throw new IllegalArgumentException(s"non-string ARRAY element: $e"))))
     } else Left(v)
   }
 
   private def parseProps(body: String): Map[String, Either[String, Seq[String]]] =
-    TrinoCompat.splitTop(body).map { p =>
+    SqlLexer.splitTop(body).map { p =>
       val i = p.indexOf('=')
       require(i > 0, s"malformed property '$p' (expected key = value)")
       p.take(i).trim.toLowerCase -> propValue(p.drop(i + 1))
@@ -246,7 +246,7 @@ object SqlEngine {
     * (`athena/_read.py:791`): query → files, no table. */
   private def executeUnload(spark: SparkSession, sql: String): DataFrame = {
     val open = sql.indexOf('(')
-    val close = TrinoCompat.balancedClose(sql, open)
+    val close = SqlLexer.balancedClose(sql, open)
     val query = sql.substring(open + 1, close)
     val TailRe =
       """(?is)\s*TO\s*'([^']*)'\s*WITH\s*\(""".r
@@ -255,7 +255,7 @@ object SqlEngine {
         s"UNLOAD expects … TO '<path>' WITH (props): ${sql.take(120)}"))
     val path = tail.group(1)
     val pOpen = close + 1 + tail.end - 1
-    val pClose = TrinoCompat.balancedClose(sql, pOpen)
+    val pClose = SqlLexer.balancedClose(sql, pOpen)
     val props = parseProps(sql.substring(pOpen + 1, pClose))
     val (fmt, opts) = sparkFormat(
       str(props, "format").getOrElse("PARQUET"), str(props, "field_delimiter"))
@@ -281,7 +281,7 @@ object SqlEngine {
       m: scala.util.matching.Regex.Match): DataFrame = {
     val name = TableDml.qnameKey(m.group(1))
     val pOpen = sql.indexOf('(', m.end - 1)
-    val pClose = TrinoCompat.balancedClose(sql, pOpen)
+    val pClose = SqlLexer.balancedClose(sql, pOpen)
     val props = parseProps(sql.substring(pOpen + 1, pClose))
     val AsRe = """(?is)\s*AS\s""".r
     val asM = AsRe.findPrefixMatchOf(sql.substring(pClose + 1)).getOrElse(
@@ -367,29 +367,6 @@ object SqlEngine {
       catch { case _: Exception => None }
     }
 
-  /** Split a DDL column list at top level — like
-    * [[TrinoCompat.splitTop]] but ALSO depth-tracking `<>` so commas
-    * inside `map<string,int>` / `struct<a:int,b:int>` types do not
-    * split the list. */
-  private def splitCols(s: String): Seq[String] = {
-    val out = Seq.newBuilder[String]
-    val cur = new StringBuilder
-    var depth = 0
-    var quote: Char = 0
-    s.foreach { c =>
-      if (quote != 0) { cur += c; if (c == quote) quote = 0 }
-      else c match {
-        case '\'' | '"' => quote = c; cur += c
-        case '(' | '[' | '<' => depth += 1; cur += c
-        case ')' | ']' | '>' => depth -= 1; cur += c
-        case ',' if depth == 0 => out += cur.toString; cur.clear()
-        case _ => cur += c
-      }
-    }
-    if (cur.nonEmpty) out += cur.toString
-    out.result().map(_.trim).filter(_.nonEmpty)
-  }
-
   /** The reference's generated Hive DDL (`athena/_utils.py:1076-1096`:
     * `CREATE EXTERNAL TABLE … [PARTITIONED BY (…)] ROW FORMAT SERDE …
     * STORED AS INPUTFORMAT … OUTPUTFORMAT … LOCATION … [TBLPROPERTIES
@@ -407,15 +384,16 @@ object SqlEngine {
     val ifNotExists = m.group(1) != null
     val name = sparkIdent(m.group(2))
     val open = sql.indexOf('(', m.end - 1)
-    val close = TrinoCompat.balancedClose(sql, open)
-    val dataCols = splitCols(sql.substring(open + 1, close))
+    val close = SqlLexer.balancedClose(sql, open)
+    // commas inside map<,>/struct<,> column types must not split the list
+    val dataCols = SqlLexer.splitTop(sql.substring(open + 1, close), angles = true)
     var rest = sql.substring(close + 1)
     val PartRe = """(?is)^\s*PARTITIONED\s+BY\s*\(""".r
     val partCols = PartRe.findPrefixMatchOf(rest) match {
       case Some(pm) =>
         val pOpen = pm.end - 1
-        val pClose = TrinoCompat.balancedClose(rest, pOpen)
-        val cols = splitCols(rest.substring(pOpen + 1, pClose))
+        val pClose = SqlLexer.balancedClose(rest, pOpen)
+        val cols = SqlLexer.splitTop(rest.substring(pOpen + 1, pClose), angles = true)
         rest = rest.substring(pClose + 1)
         cols
       case None => Nil
@@ -429,7 +407,7 @@ object SqlEngine {
     val TblPropsRe = """(?is)\bTBLPROPERTIES\s*\(""".r
     val props = TblPropsRe.findFirstMatchIn(rest).map { tm =>
       val tOpen = tm.end - 1
-      rest.substring(tOpen, TrinoCompat.balancedClose(rest, tOpen) + 1)
+      rest.substring(tOpen, SqlLexer.balancedClose(rest, tOpen) + 1)
     }
     val StoredAsWord = """(?is)\bSTORED\s+AS\s+(\w+)""".r
     val InputFmtRe = """(?is)\bINPUTFORMAT\s+'([^']*)'""".r
@@ -467,8 +445,8 @@ object SqlEngine {
       val SerdePropsRe = """(?is)\bWITH\s+SERDEPROPERTIES\s*\(""".r
       SerdePropsRe.findFirstMatchIn(rest).map { sm =>
         val sOpen = sm.end - 1
-        TrinoCompat.splitTop(
-          rest.substring(sOpen + 1, TrinoCompat.balancedClose(rest, sOpen)))
+        SqlLexer.splitTop(
+          rest.substring(sOpen + 1, SqlLexer.balancedClose(rest, sOpen)))
           .flatMap { p =>
             val kv = p.split("=", 2)
             if (kv.length == 2)
@@ -554,10 +532,8 @@ object SqlEngine {
     (formatPath, rest) match {
       case (Some(p), r) if AddColsRe.findPrefixMatchOf(r).isDefined =>
         val open = r.indexOf('(')
-        // splitCols, not splitTop: commas inside map<,>/struct<,>
-        // column types must not split the list
-        val cols = splitCols(
-          r.substring(open + 1, TrinoCompat.balancedClose(r, open)))
+        val cols = SqlLexer.splitTop(
+          r.substring(open + 1, SqlLexer.balancedClose(r, open)), angles = true)
         val fields = cols.map { c =>
           val parts = c.trim.split("\\s+", 2)
           require(parts.length == 2, s"ADD COLUMNS needs name type: $c")
@@ -684,11 +660,8 @@ object SqlEngine {
       }
       plainInsert match {
         case Some(m) =>
-          // the statement is Trino SQL like every front-door input:
-          // translate the dialect and dequote identifiers before
-          // Spark's parser sees it
-          TrinoCompat.ensureRegistered(spark)
-          spark.sql(TableDml.dequoteExpr(TrinoCompat.rewrite(rendered)))
+          // the statement is Trino SQL like every front-door input
+          spark.sql(TableDml.sparkText(spark, rendered))
           noteDatasetWrite(spark)
           result(spark, "INSERT", TableDml.qnameKey(m.group(1)))
         case None =>

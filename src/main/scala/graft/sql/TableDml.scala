@@ -37,6 +37,7 @@ import graft.session.Jobs
   * positionally to the LISTED columns and nulls the rest.
   */
 object TableDml {
+  import SqlLexer.{balancedClose, splitTop, splitTopWord, topWordIndices}
 
   private val Ident = """(?:"[^"]+"|\w+)"""
   private val QName = s"""$Ident(?:\\.$Ident)*"""
@@ -75,16 +76,20 @@ object TableDml {
     execute(spark, sql,
       (n: String) => tables.get(n).orElse(tables.get(n.toLowerCase)))
 
-  /** Resolver form (r11): table names resolve through a function — the
-    * SQL front door ([[SqlEngine.executeSql]]) passes a resolver backed
-    * by the SESSION CATALOG, so DML flows through the same entry point
-    * as reads, no explicit registry needed. */
+  /** Resolver form: table names resolve through a function — the SQL
+    * front door ([[SqlEngine.executeSql]]) passes a resolver backed by
+    * the SESSION CATALOG, so DML flows through the same entry point as
+    * reads, no explicit registry needed.
+    *
+    * Every expression and query inside a statement is Trino text and goes
+    * through [[sparkText]] before Catalyst parses it, so it means what it
+    * means in [[SqlEngine.readSqlQuery]]. */
   def execute(spark: SparkSession, sql: String,
       tables: String => Option[String]): Result = sql match {
     case InsertRe(t, colsOpt, body) =>
       val name = qnameKey(t)
       val path = pathOf(tables, name)
-      val src0 = spark.sql(dequoteExpr(
+      val src0 = spark.sql(sparkText(spark,
         if (body.trim.toUpperCase.startsWith("VALUES")) s"SELECT * FROM ($body)"
         else body))
       val colList = Option(colsOpt).map(splitTop(_).map(unq))
@@ -120,11 +125,10 @@ object TableDml {
             delta = DeltaLogWriter.deleteMatched(spark, path, src, keys,
               matchNulls))
         case Some(pred) =>
+          val cond = sqlExpr(spark, pred)
           route(spark, path,
-            ice = IcebergWriter.deleteWhere(spark, path,
-              expr(dequoteExpr(pred))),
-            delta = DeltaLogWriter.deleteWhere(spark, path,
-              expr(dequoteExpr(pred))))
+            ice = IcebergWriter.deleteWhere(spark, path, cond),
+            delta = DeltaLogWriter.deleteWhere(spark, path, cond))
       }
       Result("DELETE", name)
     case s if UpdateHeadRe.findPrefixMatchOf(s).isDefined =>
@@ -141,9 +145,9 @@ object TableDml {
             Some(rest.substring(idx + "WHERE".length).trim))
       }
       val assignments = parseAssignments(setList).map { case (c, e) =>
-        c -> expr(dequoteExpr(e))
+        c -> sqlExpr(spark, e)
       }
-      val pred = predOpt.map(p => expr(dequoteExpr(p))).getOrElse(lit(true))
+      val pred = predOpt.map(sqlExpr(spark, _)).getOrElse(lit(true))
       route(spark, path,
         ice = IcebergWriter.updateWhere(spark, path, pred, assignments),
         delta = DeltaLogWriter.updateWhere(spark, path, pred, assignments))
@@ -368,7 +372,7 @@ object TableDml {
             sdf.join(t, on, "left_anti")
               .select(schema.fields.map { f =>
                 byCol.get(f.name.toLowerCase)
-                  .map(v => expr(dequoteExpr(v)).cast(f.dataType))
+                  .map(v => sqlExpr(spark, v).cast(f.dataType))
                   .getOrElse(lit(null).cast(f.dataType)).as(f.name)
               }.toSeq: _*)
         }
@@ -405,7 +409,7 @@ object TableDml {
             val updRows = t.join(sdf, on, "inner")
               .select(schema.fields.map { f =>
                 byCol.get(f.name.toLowerCase)
-                  .map(e => expr(dequoteExpr(e)).cast(f.dataType))
+                  .map(e => sqlExpr(spark, e).cast(f.dataType))
                   .getOrElse(col(s"$tAlias.${f.name}")).as(f.name)
               }.toSeq: _*)
             checkedWrite(doMerge(insRows.fold(updRows)(updRows.unionByName(_)), _))
@@ -460,7 +464,7 @@ object TableDml {
   private def resolveSource(spark: SparkSession,
       spec: Either[String, String],
       tables: String => Option[String]): DataFrame = spec match {
-    case Left(query) => spark.sql(dequoteExpr(query))
+    case Left(query) => spark.sql(sparkText(spark, query))
     case Right(name0) =>
       val name = qnameKey(name0)
       tables(name) match {
@@ -525,14 +529,10 @@ object TableDml {
 
   private[sql] def parseAssignments(setList: String): Seq[(String, String)] = {
     val parsed = splitTop(setList).map { a =>
-      // first `=` OUTSIDE quoted identifiers splits lhs from rhs (a
-      // quoted identifier may legally contain '=')
-      var i = 0; var inQ = false
-      while (i < a.length && (inQ || a(i) != '=')) {
-        if (a(i) == '"') inQ = !inQ
-        i += 1
-      }
-      require(i > 0 && i < a.length, s"malformed assignment '$a'")
+      // the first top-level `=` splits lhs from rhs (a quoted
+      // identifier may legally contain '=')
+      val i = SqlLexer.topIndexOf(a, '=')
+      require(i > 0, s"malformed assignment '$a'")
       // a qualified lhs (t."c", "t"."c") assigns the column itself —
       // split quote-aware FIRST, then unquote: unq-then-split turns
       // '"t"."c"' into the broken name '"c'
@@ -557,6 +557,17 @@ object TableDml {
   }
 
   // ---- lexical helpers -----------------------------------------------------
+
+  /** Trino text → the Spark SQL text it means, in the order the query
+    * path uses: the shim functions registered, the dialect rewritten,
+    * `"identifiers"` backticked. */
+  private[sql] def sparkText(spark: SparkSession, trino: String): String = {
+    TrinoCompat.ensureRegistered(spark)
+    SqlLexer.dequoteExpr(TrinoCompat.rewrite(trino))
+  }
+
+  private def sqlExpr(spark: SparkSession, trino: String) =
+    expr(sparkText(spark, trino))
 
   private[sql] def unq(s: String): String = {
     val t = s.trim
@@ -595,107 +606,10 @@ object TableDml {
     parts.result()
   }
 
-  /** Translate Athena `"quoted"` identifiers to Spark backticks,
-    * leaving single-quoted string literals untouched. */
-  private[sql] def dequoteExpr(s: String): String = {
-    val out = new StringBuilder
-    var i = 0
-    var inStr = false
-    while (i < s.length) {
-      val c = s(i)
-      if (inStr) { out += c; if (c == '\'') inStr = false; i += 1 }
-      else c match {
-        case '\'' => inStr = true; out += c; i += 1
-        case '"' =>
-          val j = s.indexOf('"', i + 1)
-          require(j > i, s"unterminated quoted identifier in: $s")
-          out += '`'; out ++= s.substring(i + 1, j); out += '`'
-          i = j + 1
-        case _ => out += c; i += 1
-      }
-    }
-    out.toString
-  }
-
-  /** Index of the close paren balancing the open paren at `open`. */
-  private def balancedClose(s: String, open: Int): Int = {
-    var depth = 0
-    var i = open
-    var quote: Char = 0
-    while (i < s.length) {
-      val c = s(i)
-      if (quote != 0) { if (c == quote) quote = 0 }
-      else c match {
-        case '\'' | '"' => quote = c
-        case '(' => depth += 1
-        case ')' => depth -= 1; if (depth == 0) return i
-        case _ =>
-      }
-      i += 1
-    }
-    throw new IllegalArgumentException(s"unbalanced parens in: ${s.take(120)}")
-  }
-
   private def stripOuterParens(s0: String): String = {
     var s = s0.trim
     while (s.startsWith("(") && balancedClose(s, 0) == s.length - 1)
       s = s.substring(1, s.length - 1).trim
     s
-  }
-
-  /** Start indices of top-level (outside parens/quotes) occurrences of
-    * `word` as a whole word, case-insensitive. */
-  private[sql] def topWordIndices(s: String, word: String): Seq[Int] = {
-    val out = Seq.newBuilder[Int]
-    var i = 0
-    var depth = 0
-    var quote: Char = 0
-    def isWordChar(c: Char) = c.isLetterOrDigit || c == '_'
-    while (i < s.length) {
-      val c = s(i)
-      if (quote != 0) { if (c == quote) quote = 0; i += 1 }
-      else c match {
-        case '\'' | '"' => quote = c; i += 1
-        case '(' => depth += 1; i += 1
-        case ')' => depth -= 1; i += 1
-        case _ if depth == 0 &&
-            s.regionMatches(true, i, word, 0, word.length) &&
-            (i == 0 || !isWordChar(s(i - 1))) &&
-            (i + word.length >= s.length || !isWordChar(s(i + word.length))) =>
-          out += i; i += word.length
-        case _ => i += 1
-      }
-    }
-    out.result()
-  }
-
-  /** Split at top-level whole-word occurrences of `word`, dropping it. */
-  private[sql] def splitTopWord(s: String, word: String): Seq[String] = {
-    val idx = topWordIndices(s, word)
-    val starts = 0 +: idx.map(_ + word.length)
-    val ends = idx :+ s.length
-    starts.zip(ends).map { case (a, b) => s.substring(a, b).trim }
-      .filter(_.nonEmpty)
-  }
-
-  /** Split a comma list at the TOP level only (commas inside parens or
-    * quotes belong to function calls / literals). */
-  private[sql] def splitTop(s: String): Seq[String] = {
-    val out = Seq.newBuilder[String]
-    val cur = new StringBuilder
-    var depth = 0
-    var quote: Char = 0
-    s.foreach { c =>
-      if (quote != 0) { cur += c; if (c == quote) quote = 0 }
-      else c match {
-        case '\'' | '"' => quote = c; cur += c
-        case '(' => depth += 1; cur += c
-        case ')' => depth -= 1; cur += c
-        case ',' if depth == 0 => out += cur.toString; cur.clear()
-        case _ => cur += c
-      }
-    }
-    if (cur.nonEmpty) out += cur.toString
-    out.result().map(_.trim).filter(_.nonEmpty)
   }
 }

@@ -101,23 +101,21 @@ import org.apache.spark.unsafe.types.UTF8String
   * `st_geometryfromtext`/`st_linefromtext`/`st_polygon`, and the JSON
   * trio `graft_cast_json`/`json_parse`/`json_format`.
   *
-  * The round-11 divergence list is CLOSED (round 12): `json_extract`
-  * now returns Trino-exact JSON text (quotes kept on string scalars)
-  * and `json_extract_scalar` is NULL on containers — both via
-  * [[graft.expr.TrinoJsonExtract]] — and `md5`/`sha1` return VARBINARY
-  * through a rewrite rename to `graft_trino_md5`/`graft_trino_sha1`
-  * (shim-only: the bare names stay Spark builtins for native SQL, so
-  * the repo's own MinHash/oracle queries are untouched). `to_utf8`/
+  * Trino-exact where Spark's same-named builtin differs: `json_extract`
+  * returns JSON text (quotes kept on string scalars) and
+  * `json_extract_scalar` is NULL on containers (both via
+  * [[graft.expr.TrinoJsonExtract]]); `md5`/`sha1` return VARBINARY
+  * through the `graft_trino_` rename (see [[shadowedBuiltins]]: the
+  * bare names stay Spark builtins for native SQL); `to_utf8`/
   * `from_utf8` bridge varchar↔varbinary as in Trino.
   *
-  * ROUND-12 TIER 3 (probe-driven — a 119-statement replay of common
-  * Athena constructs; every addition below either failed or silently
-  * diverged before):
+  * Each name below either failed or silently diverged in a
+  * 119-statement replay of common Athena constructs, which now all run:
   *  - RAW STRING LITERALS: Trino strings have no backslash escapes;
-  *    Spark's parser processes them, so `'\d+'` silently reached the
-  *    engine as `'d+'` — every regexp call degraded. The rewrite now
-  *    doubles backslashes inside single-quoted literals so the decoded
-  *    value is byte-identical to Trino's (`rawStrings`).
+  *    Spark's parser processes them, so `'\d+'` would reach the engine
+  *    as `'d+'`. The rewrite doubles backslashes inside single-quoted
+  *    literals so the decoded value is byte-identical to Trino's
+  *    (`rawStrings`).
   *  - TYPED LITERALS: `BIGINT '1'`, `DOUBLE '1.5'`, `REAL`/`TINYINT`/
   *    `SMALLINT`/`INTEGER`/`BOOLEAN`/`VARBINARY`/`CHAR`/`JSON 'x'` →
   *    `CAST('x' AS t)` (Spark's parser only accepts a fixed typed-
@@ -127,7 +125,8 @@ import org.apache.spark.unsafe.types.UTF8String
   *    wrong slice when groups exist. `regexp_count` returns BIGINT.
   *  - `typeof` renders TRINO type names ([[graft.expr.TrinoTypeOf]]:
   *    integer/varchar/timestamp(3) with time zone/array(...)/row(...);
-  *    documented approximation: varchar is unparameterized).
+  *    string literals carry their length, `varchar(n)`; other strings
+  *    stay bare `varchar`, as Spark carries no length).
   *  - Trino-exact `kurtosis` (the SAMPLE excess estimator — Spark's
   *    builtin is the population form; 1,2,3,4 → −1.2 vs −1.36),
   *    `histogram` (map value→count, the map_agg collected-entries
@@ -141,29 +140,20 @@ import org.apache.spark.unsafe.types.UTF8String
   *    `with_timezone`, `year_of_week`/`yow`, `parse_datetime` (JDK
   *    formatter letters — the Joda common subset; exotic letters fail
   *    loudly), `current_timezone`.
-  *
-  * ROUND 13: `combinations`, `format_number` (Trino's K/M/B/T/Q unit
-  * rendering — auto-namespaced, Spark owns the bare name),
-  * `human_readable_seconds` — the three approximation-free names from
-  * the probe's absent list, all codegen'd Catalyst expressions
-  * ([[graft.expr.TrinoFnsImpl]]); and `typeof` now renders
-  * length-parameterized `varchar(n)` for string LITERALS (Trino types
-  * literals exactly; non-literal strings stay bare `varchar` — Spark
-  * carries no length).
-  *
-  * ROUND 13 (cont.): `word_stem` — a from-the-spec Snowball English
-  * (Porter2) implementation ([[graft.expr.Porter2]]), the exact
-  * algorithm Trino's default `EnglishStemmer` runs; non-English
-  * language codes fail loudly (implemented would mean approximate).
-  * `approx_most_frequent(b, x, cap)` — composed EXACTLY from the
-  * histogram aggregate: the true top-b values by count (ties broken by
-  * key order). Trino's Space-Saving sketch returns the same top set
-  * whenever its capacity suffices (its counts are exact until
-  * eviction); where the sketch would err, the exact answer is the
-  * defensible Spark-side semantics (a groupBy-count is linear and
-  * partial-aggregable at any scale — there is nothing to approximate).
-  *
-  * ROUND 14 — the absent list is CLOSED (119/119 probe statements):
+  *  - `combinations`, `format_number` (Trino's K/M/B/T/Q unit rendering
+  *    — auto-namespaced, Spark owns the bare name) and
+  *    `human_readable_seconds`, all codegen'd Catalyst expressions
+  *    ([[graft.expr.TrinoFnsImpl]]).
+  *  - `word_stem` — a from-the-spec Snowball English (Porter2)
+  *    implementation ([[graft.expr.Porter2]]), the exact algorithm
+  *    Trino's default `EnglishStemmer` runs; non-English language codes
+  *    fail loudly (implemented would mean approximate).
+  *  - `approx_most_frequent(b, x, cap)` — EXACT: the true top-b values
+  *    by count (ties broken by key order), one O(n log n)
+  *    sort+run-length pass per group. Trino's Space-Saving sketch
+  *    returns the same top set whenever its capacity suffices (its
+  *    counts are exact until eviction); where the sketch would err, the
+  *    exact answer is the defensible Spark-side semantics.
   *  - `numeric_histogram` with a documented divergence-class decision
   *    (the `approx_percentile` precedent): Trino's Ben-Haim/Tom-Tov
   *    bins depend on input order (Trino itself is non-deterministic
@@ -175,11 +165,9 @@ import org.apache.spark.unsafe.types.UTF8String
   *    (256-color-cube escapes, red→green interpolation, U+2588 fill,
   *    reset + space padding); the 4-arg form takes Trino-private
   *    COLOR values and stays loud.
-  *  - `approx_most_frequent` recomposed as a single O(n log n)
-  *    sort+run-length expression (was O(n·d) per-distinct recounts —
-  *    the round-13 ADVICE defect).
   */
 object TrinoCompat {
+  import SqlLexer._
 
   // once per session (weak keys: the marker dies with the session)
   private val registered =
@@ -250,7 +238,7 @@ object TrinoCompat {
       case other => throw new IllegalArgumentException(
         s"arbitrary expects 1 argument, got ${other.size}")
     }
-    // Trino-exact JSON path extraction (round 12): json_extract keeps
+    // Trino-exact JSON path extraction: json_extract keeps
     // the quotes on string scalars (it returns JSON text), and
     // json_extract_scalar returns NULL for containers — both cases
     // where Spark's get_json_object silently differs. See
@@ -435,8 +423,8 @@ object TrinoCompat {
     fn("st_linefromtext") { case Seq(t) => t }
     fn("st_polygon") { case Seq(t) => t }
 
-    // ---- round-11 second batch: the next tier of Trino names an ----------
-    // ---- Athena user types (trino.io docs for each; no UDFs) -------------
+    // ---- array predicates, map aggregates, time and number helpers -------
+    // ---- (trino.io docs for each; no UDFs) --------------------------------
 
     // array predicates — Trino names for Spark's exists/forall
     fn("any_match") { case Seq(a, f: LambdaFunction) => ArrayExists(a, f) }
@@ -590,8 +578,7 @@ object TrinoCompat {
         s"truncate: the decimal-place count must be an integer literal, got $e")
     }
 
-    // ---- round-12 tier 3 (probe-driven: every name below failed or
-    // silently diverged when replayed through the shim) -------------------
+    // ---- names whose Spark builtin, if any, diverges from Trino ----------
     // typeof: Trino type names, not Spark's (integer/varchar/
     // timestamp(3) with time zone/array(...)/row(...)); shadows the
     // Spark builtin of the same name
@@ -651,8 +638,6 @@ object TrinoCompat {
       case _ => throw new IllegalArgumentException(
         "format expects (format[, args...]), got 0 args")
     }
-    // round-13 additions (previously loud-absent): the three
-    // approximation-free stragglers from the 119-statement probe.
     // format_number collides with Spark's comma-grouping builtin and
     // is auto-namespaced like md5 (see shadowedBuiltins).
     fn("format_number") { case Seq(x) =>
@@ -693,9 +678,9 @@ object TrinoCompat {
     // distributed groupBy-count is linear, so there is nothing to
     // approximate Spark-side. `capacity` is validated and ignored.
     // Counting runs in the TrinoApproxMostFrequent expression — one
-    // sort + run-length pass, O(n log n) per group (the round-13
-    // composition recounted the array per distinct value, O(n·d) —
-    // the ADVICE defect, worst exactly when this function matters).
+    // sort + run-length pass, O(n log n) per group; recounting the array
+    // per distinct value would be O(n·d), worst exactly when this
+    // function matters.
     fn("approx_most_frequent") {
       case Seq(bLit @ Literal(_, _), x, capLit @ Literal(_, _)) =>
         val b = bLit.value match {
@@ -904,14 +889,14 @@ object TrinoCompat {
     * Spark release that claims one of these names flips it into this
     * set automatically). These are NEVER registered under the bare
     * name: [[doRegister]] registers them as `graft_trino_<name>` and
-    * [[rewrite]] renames dialect-text calls to match — generalizing
-    * the round-12 md5/sha1 pattern to the whole class. Running a
+    * [[rewrite]] renames dialect-text calls to match, for every name of
+    * the class, `md5`/`sha1` included. Running a
     * dialect query therefore cannot change what any native
     * `functions.*` / `spark.sql` call resolves to: the
     * registry-shadowing hazard is closed structurally, not
-    * per-call-site (previously `regexp_extract` in LogsInsights and
-    * 1-arg `bit_count` in simhash were silently flipped once any
-    * dialect query had run on the session). */
+    * per-call-site (`regexp_extract` in LogsInsights and 1-arg
+    * `bit_count` in simhash keep Spark's semantics after any dialect
+    * query has run on the session). */
   private[graft] lazy val shadowedBuiltins: Seq[String] =
     shimBuilders.map(_._1).filter(n =>
       org.apache.spark.sql.catalyst.analysis.FunctionRegistry.builtin
@@ -1003,56 +988,51 @@ object TrinoCompat {
     * of everything after it (e.g. a 1-based subscript passed through to
     * Spark's 0-based `[]`). Comments are whitespace to the parser, so
     * removing them up front is semantics-preserving. */
-  private[graft] def stripComments(sql: String): String = {
-    val out = new StringBuilder
-    var i = 0
-    var quote: Char = 0
-    while (i < sql.length) {
-      val c = sql(i)
-      if (quote != 0) { out += c; if (c == quote) quote = 0; i += 1 }
-      else if (c == '\'' || c == '"') { quote = c; out += c; i += 1 }
-      else if (c == '-' && i + 1 < sql.length && sql(i + 1) == '-') {
-        while (i < sql.length && sql(i) != '\n') i += 1 // newline kept
-      } else if (c == '/' && i + 1 < sql.length && sql(i + 1) == '*') {
+  private[graft] def stripComments(sql: String): String =
+    rewriteOutsideQuotes(sql) { (i, out) =>
+      if (sql.startsWith("--", i)) {
+        val nl = sql.indexOf('\n', i) // the newline is kept
+        if (nl < 0) sql.length else nl
+      } else if (sql.startsWith("/*", i)) {
         var depth = 1
-        i += 2
-        while (i < sql.length && depth > 0) {
-          if (sql(i) == '/' && i + 1 < sql.length && sql(i + 1) == '*') {
-            depth += 1; i += 2
-          } else if (sql(i) == '*' && i + 1 < sql.length && sql(i + 1) == '/') {
-            depth -= 1; i += 2
-          } else i += 1
+        var j = i + 2
+        while (j < sql.length && depth > 0) {
+          if (sql.startsWith("/*", j)) { depth += 1; j += 2 }
+          else if (sql.startsWith("*/", j)) { depth -= 1; j += 2 }
+          else j += 1
         }
         out += ' '
-      } else { out += c; i += 1 }
+        j
+      } else i
     }
-    out.toString
-  }
 
-  /** The full Trino→Spark text rewrite, applied before parsing. */
+  /** The full Trino→Spark text rewrite, applied before parsing. Each pass
+    * is one rule run by [[SqlLexer.rewriteOutsideQuotes]]. */
   def rewrite(sql0: String): String = {
     val sql = stripComments(sql0)
     // FIRST, on the original text: only user-authored literals are
     // raw-escaped; literals the later passes synthesize are authored
     // for Spark and carry no backslashes
     var s = rawStrings(sql)
-    s = decimalLiterals(s)
+    s = typedLiterals(s)
     s = dateFnUnits(s)
     s = rewriteUnnest(s)
     s = mapConstructors(s)
     s = castTargets(s)
     s = bracketsPass(s)
-    s = renameCall(s, "ROW", "struct")
-    s = renameCall(s, "TRY", "try")
-    // Every shim name colliding with a Spark builtin resolves through
-    // a graft-namespaced registration; the bare names stay Spark
-    // builtins in the session registry (see [[shadowedBuiltins]])
-    for (n <- shadowedBuiltins) s = renameCall(s, n, s"graft_trino_$n")
+    s = renameCalls(s)
     s = bareVarchar(s)
     s
   }
 
-  // ---- lexical machinery ---------------------------------------------------
+  /** `(open, close)` of the parenthesized arguments when the call `name(`
+    * starts at `i`. */
+  private def callAt(sql: String, i: Int, name: String): Option[(Int, Int)] =
+    if (!wordAt(sql, i, name)) None
+    else {
+      val open = nextIs(sql, i + name.length, '(')
+      if (open < 0) None else Some((open, balancedClose(sql, open)))
+    }
 
   /** Trino string literals are RAW — `''` is the only escape; a
     * backslash is an ordinary character. Spark's parser (default
@@ -1062,91 +1042,23 @@ object TrinoCompat {
     * each backslash inside single-quoted literals so the string VALUE
     * Spark decodes is byte-identical to what Trino would see.
     * Double-quoted segments are Trino identifiers and pass through
-    * untouched. (round 12) */
-  private def rawStrings(sql: String): String = {
-    if (sql.indexOf('\\') < 0) return sql
-    val out = new StringBuilder(sql.length + 8)
-    var i = 0
-    var inSingle = false
-    var inDouble = false
-    while (i < sql.length) {
-      val c = sql(i)
-      if (inSingle) {
-        if (c == '\\') out ++= "\\\\"
-        else {
-          out += c
-          if (c == '\'') inSingle = false // '' re-enters on the next char
-        }
-      } else if (inDouble) {
-        out += c
-        if (c == '"') inDouble = false
-      } else {
-        out += c
-        if (c == '\'') inSingle = true
-        else if (c == '"') inDouble = true
-      }
-      i += 1
-    }
-    out.toString
-  }
-
-  private def isWordChar(c: Char) = c.isLetterOrDigit || c == '_'
-
-  /** True when `s[i, i+w.length)` equals `w` (case-insensitive) as a
-    * whole word. */
-  private def wordAt(s: String, i: Int, w: String): Boolean =
-    s.regionMatches(true, i, w, 0, w.length) &&
-      (i == 0 || !isWordChar(s(i - 1))) &&
-      (i + w.length >= s.length || !isWordChar(s(i + w.length)))
-
-  private def skipWs(s: String, i0: Int): Int = {
-    var i = i0
-    while (i < s.length && s(i).isWhitespace) i += 1
-    i
-  }
-
-  /** Index of the close paren/bracket balancing the opener at `open`
-    * (quote-aware; both () and [] nest). */
-  private[sql] def balancedClose(s: String, open: Int): Int = {
-    var depth = 0
-    var i = open
-    var quote: Char = 0
-    while (i < s.length) {
-      val c = s(i)
-      if (quote != 0) { if (c == quote) quote = 0 }
-      else c match {
-        case '\'' | '"' => quote = c
-        case '(' | '[' => depth += 1
-        case ')' | ']' => depth -= 1; if (depth == 0) return i
-        case _ =>
-      }
-      i += 1
-    }
-    throw new IllegalArgumentException(
-      s"unbalanced parens/brackets in: ${s.take(120)}")
-  }
-
-  /** Split a comma list at the TOP level only. */
-  private[sql] def splitTop(s: String): Seq[String] = {
-    val out = Seq.newBuilder[String]
-    val cur = new StringBuilder
-    var depth = 0
-    var quote: Char = 0
-    s.foreach { c =>
-      if (quote != 0) { cur += c; if (c == quote) quote = 0 }
-      else c match {
-        case '\'' | '"' => quote = c; cur += c
-        case '(' | '[' => depth += 1; cur += c
-        case ')' | ']' => depth -= 1; cur += c
-        case ',' if depth == 0 => out += cur.toString; cur.clear()
-        case _ => cur += c
+    * untouched. */
+  private def rawStrings(sql: String): String =
+    if (sql.indexOf('\\') < 0) sql
+    else rewriteOutsideQuotes(sql) { (i, out) =>
+      if (sql(i) != '\'') i
+      else {
+        val e = quotedEnd(sql, i)
+        out ++= sql.substring(i, e).replace("\\", "\\\\")
+        e
       }
     }
-    if (cur.nonEmpty) out += cur.toString
-    out.result().map(_.trim).filter(_.nonEmpty)
-  }
 
   // ---- date_diff('day', a, b) / date_add('day', n, ts) --------------------
+
+  private val DateFns =
+    Seq("date_diff" -> "timestampdiff", "date_add" -> "timestampadd")
+  private val UnitArg = """^'(\w+)'$""".r
 
   /** Trino's string-unit `date_diff`/`date_add` → Spark's
     * `timestampdiff`/`timestampadd` with the unit unquoted. This must be
@@ -1155,115 +1067,32 @@ object TrinoCompat {
     * lookup, and that form rejects a quoted unit. Argument order
     * matches exactly (Trino `date_diff(unit, from, to)` = to - from;
     * Spark `timestampdiff(unit, start, end)` = end - start). 2-arg
-    * calls are untouched — Spark's builtin (end, start)-days semantics
-    * apply. */
-  private def dateFnUnits(sql: String): String = {
-    val out = new StringBuilder
-    var i = 0
-    var quote: Char = 0
-    val UnitArg = """^'(\w+)'$""".r
-    while (i < sql.length) {
-      val c = sql(i)
-      if (quote != 0) { out += c; if (c == quote) quote = 0; i += 1 }
-      else if (c == '\'' || c == '"') { quote = c; out += c; i += 1 }
-      else {
-        val name =
-          if (wordAt(sql, i, "date_diff")) Some(("date_diff", "timestampdiff"))
-          else if (wordAt(sql, i, "date_add")) Some(("date_add", "timestampadd"))
-          else None
-        name match {
-          case Some((from, to))
-              if skipWs(sql, i + from.length) < sql.length &&
-                sql(skipWs(sql, i + from.length)) == '(' =>
-            val open = skipWs(sql, i + from.length)
-            val close = balancedClose(sql, open)
-            val args = splitTop(sql.substring(open + 1, close))
-            args match {
-              case Seq(UnitArg(unit), rest @ _*) if rest.size == 2 =>
-                out ++= s"$to(${trinoUnit(unit).toLowerCase}, "
-                // args may nest further date_diff calls
-                out ++= rest.map(dateFnUnits).mkString(", ")
-                out += ')'
-                i = close + 1
-              case _ => // 2-arg builtin or computed unit: untouched
-                out ++= sql.substring(i, i + from.length)
-                i += from.length
-            }
-          case _ => out += c; i += 1
-        }
-      }
-    }
-    out.toString
-  }
-
-  // ---- DECIMAL 'x.yz' literals --------------------------------------------
-
-  /** `DECIMAL '12.03'` → `CAST('12.03' AS DECIMAL(4,2))` — precision and
-    * scale inferred from the literal text, Trino's typing rule. */
-  private def decimalLiterals(sql: String): String = {
-    val out = new StringBuilder
-    var i = 0
-    var quote: Char = 0
-    while (i < sql.length) {
-      val c = sql(i)
-      if (quote != 0) { out += c; if (c == quote) quote = 0; i += 1 }
-      else if (c == '\'' || c == '"') { quote = c; out += c; i += 1 }
-      else if (wordAt(sql, i, "DECIMAL")) {
-        val j = skipWs(sql, i + 7)
-        if (j < sql.length && sql(j) == '\'') {
-          val close = literalEnd(sql, j) - 1
-          require(close > j, s"unterminated DECIMAL literal in: ${sql.take(120)}")
-          val text = sql.substring(j + 1, close)
-          val digits = text.replaceAll("[^0-9]", "")
-          val scale = {
-            val dot = text.indexOf('.')
-            if (dot < 0) 0 else text.length - dot - 1
+    * calls and computed units are untouched — Spark's builtin
+    * (end, start)-days semantics apply. */
+  private def dateFnUnits(sql: String): String =
+    rewriteOutsideQuotes(sql) { (i, out) =>
+      DateFns.iterator.flatMap { case (from, to) =>
+        callAt(sql, i, from).flatMap { case (open, close) =>
+          splitTop(sql.substring(open + 1, close)) match {
+            case Seq(UnitArg(unit), rest @ _*) if rest.size == 2 =>
+              // args may nest further date_diff calls
+              out ++= s"$to(${trinoUnit(unit).toLowerCase}, " ++=
+                rest.map(dateFnUnits).mkString(", ") += ')'
+              Some(close + 1)
+            case _ => None
           }
-          val precision = math.max(digits.length, math.max(scale, 1))
-          out ++= s"CAST('$text' AS DECIMAL($precision,$scale))"
-          i = close + 1
-        } else { out ++= sql.substring(i, i + 7); i += 7 }
-      } else {
-        // other Trino typed literals Spark's parser rejects:
-        // TYPE 'text' → CAST('text' AS sparkType) (round 12)
-        val typed = TypedLiteralTypes.find(t => wordAt(sql, i, t._1))
-        typed match {
-          case Some((name, sparkType)) =>
-            val j = skipWs(sql, i + name.length)
-            if (j < sql.length && sql(j) == '\'') {
-              // honor the '' escape: the copied text keeps it verbatim
-              // (the emitted CAST literal uses the same escaping)
-              val close = literalEnd(sql, j) - 1
-              require(close > j,
-                s"unterminated $name literal in: ${sql.take(120)}")
-              out ++= s"CAST('${sql.substring(j + 1, close)}' AS $sparkType)"
-              i = close + 1
-            } else { out ++= sql.substring(i, i + name.length); i += name.length }
-          case None => out += c; i += 1
         }
-      }
+      }.nextOption().getOrElse(i)
     }
-    out.toString
-  }
 
-  /** Index just past the closing quote of the single-quoted literal
-    * opening at `open`, honoring the SQL `''` escape; -1 when
-    * unterminated. */
-  private def literalEnd(sql: String, open: Int): Int = {
-    var i = open + 1
-    while (i < sql.length) {
-      if (sql(i) == '\'') {
-        if (i + 1 < sql.length && sql(i + 1) == '\'') i += 2
-        else return i + 1
-      } else i += 1
-    }
-    -1
-  }
+  // ---- typed literals: DECIMAL '12.03', BIGINT '1', … ---------------------
 
-  /** Trino typed-literal names Spark's parser lacks, with the Spark
-    * cast target. (DECIMAL is handled above with computed precision;
-    * DATE/TIMESTAMP/TIME/INTERVAL/X parse natively.) */
+  /** Trino typed-literal names Spark's parser lacks, with the Spark cast
+    * target; DECIMAL's precision and scale come from the literal text,
+    * Trino's typing rule. (DATE/TIMESTAMP/TIME/INTERVAL/X parse
+    * natively.) */
   private val TypedLiteralTypes: Seq[(String, String)] = Seq(
+    "DECIMAL" -> "DECIMAL",
     "TINYINT" -> "TINYINT", "SMALLINT" -> "SMALLINT",
     "INTEGER" -> "INT", "BIGINT" -> "BIGINT",
     "REAL" -> "FLOAT", "DOUBLE" -> "DOUBLE",
@@ -1271,6 +1100,33 @@ object TrinoCompat {
     // VARCHAR here (before bareVarchar runs): `VARCHAR 'x'` would
     // otherwise be rewritten to `STRING 'x'`, which Spark rejects
     "VARCHAR" -> "STRING", "CHAR" -> "STRING", "JSON" -> "STRING")
+
+  /** `TYPE 'text'` → `CAST('text' AS sparkType)`, e.g. `DECIMAL '12.03'`
+    * → `CAST('12.03' AS DECIMAL(4,2))`. The literal text is copied
+    * verbatim, its `''` escapes included (the emitted CAST literal uses
+    * the same escaping). */
+  private def typedLiterals(sql: String): String =
+    rewriteOutsideQuotes(sql) { (i, out) =>
+      if (!sql(i).isLetter) i
+      else TypedLiteralTypes.find(t => wordAt(sql, i, t._1)) match {
+        case Some((name, sparkType)) if nextIs(sql, i + name.length, '\'') >= 0 =>
+          val j = nextIs(sql, i + name.length, '\'')
+          val close = literalEnd(sql, j) - 1
+          require(close > j, s"unterminated $name literal in: ${sql.take(120)}")
+          val text = sql.substring(j + 1, close)
+          val target =
+            if (name != "DECIMAL") sparkType
+            else {
+              val digits = text.replaceAll("[^0-9]", "")
+              val dot = text.indexOf('.')
+              val scale = if (dot < 0) 0 else text.length - dot - 1
+              s"DECIMAL(${math.max(digits.length, math.max(scale, 1))},$scale)"
+            }
+          out ++= s"CAST('$text' AS $target)"
+          close + 1
+        case _ => i
+      }
+    }
 
   // ---- ARRAY [..] constructors and [..] subscripts -------------------------
 
@@ -1280,44 +1136,34 @@ object TrinoCompat {
     * through would be silently off by one; element_at matches Trino on
     * both arrays and maps). */
   private def bracketsPass(sql: String): String = {
-    val out = new StringBuilder
     // what each currently-open bracket/paren was rewritten to
     val stack = scala.collection.mutable.Stack.empty[Char]
-    var i = 0
-    var quote: Char = 0
-    while (i < sql.length) {
-      val c = sql(i)
-      if (quote != 0) { out += c; if (c == quote) quote = 0; i += 1 }
-      else if (c == '\'' || c == '"') { quote = c; out += c; i += 1 }
-      else if (wordAt(sql, i, "ARRAY") &&
-          skipWs(sql, i + 5) < sql.length && sql(skipWs(sql, i + 5)) == '[') {
-        out ++= "array("
-        stack.push(')')
-        i = skipWs(sql, i + 5) + 1
-      } else if (c == '[') {
-        // subscript: wrap the base expression already emitted
-        val start = captureBaseStart(out)
-        if (start < out.length) {
-          out.insert(start, "element_at(")
-          out ++= ", "
+    rewriteOutsideQuotes(sql) { (i, out) =>
+      sql(i) match {
+        case _ if wordAt(sql, i, "ARRAY") && nextIs(sql, i + 5, '[') >= 0 =>
+          out ++= "array("
           stack.push(')')
-        } else {
-          // no base expression precedes — not a subscript; leave for
-          // the parser to reject
-          out += c
-          stack.push(']')
-        }
-        i += 1
-      } else if (c == ']') {
-        out += (if (stack.nonEmpty) stack.pop() else ']')
-        i += 1
-      } else if (c == '(') { stack.push(')'); out += c; i += 1 }
-      else if (c == ')') {
-        if (stack.nonEmpty) stack.pop()
-        out += c; i += 1
-      } else { out += c; i += 1 }
+          nextIs(sql, i + 5, '[') + 1
+        case '[' =>
+          // subscript: wrap the base expression already emitted
+          val start = captureBaseStart(out)
+          if (start < out.length) {
+            out.insert(start, "element_at(")
+            out ++= ", "
+            stack.push(')')
+          } else {
+            // no base expression precedes — not a subscript; leave for
+            // the parser to reject
+            out += '['
+            stack.push(']')
+          }
+          i + 1
+        case ']' => out += (if (stack.nonEmpty) stack.pop() else ']'); i + 1
+        case '(' => stack.push(')'); out += '('; i + 1
+        case ')' => if (stack.nonEmpty) stack.pop(); out += ')'; i + 1
+        case _ => i
+      }
     }
-    out.toString
   }
 
   /** Start index (in `out`) of the trailing base expression a subscript
@@ -1349,40 +1195,26 @@ object TrinoCompat {
 
   // ---- MAP(ARRAY [...], ARRAY [...]) ---------------------------------------
 
+  private def isArrayCtor(a: String): Boolean =
+    wordAt(a, 0, "ARRAY") && nextIs(a, 5, '[') >= 0
+
   /** Only the exact Trino-generated shapes: `MAP(ARRAY …, ARRAY …)` →
     * `map_from_arrays(…)` and `MAP()` → `map()`. Spark's own
     * `map(k1, v1, …)` calls are untouched (2-arg `map(k, v)` is a
     * legal single-entry Spark map — rewriting it would change
     * semantics). */
-  private def mapConstructors(sql: String): String = {
-    val out = new StringBuilder
-    var i = 0
-    var quote: Char = 0
-    while (i < sql.length) {
-      val c = sql(i)
-      if (quote != 0) { out += c; if (c == quote) quote = 0; i += 1 }
-      else if (c == '\'' || c == '"') { quote = c; out += c; i += 1 }
-      else if (wordAt(sql, i, "MAP") &&
-          skipWs(sql, i + 3) < sql.length && sql(skipWs(sql, i + 3)) == '(') {
-        val open = skipWs(sql, i + 3)
-        val close = balancedClose(sql, open)
-        val inner = sql.substring(open + 1, close)
-        val args = splitTop(inner)
-        val bothArrays = args.size == 2 && args.forall(a =>
-          a.length >= 5 && a.regionMatches(true, 0, "ARRAY", 0, 5) &&
-            skipWs(a, 5) < a.length && a(skipWs(a, 5)) == '[')
-        if (args.isEmpty) { out ++= "map()"; i = close + 1 }
-        else if (bothArrays) {
+  private def mapConstructors(sql: String): String =
+    rewriteOutsideQuotes(sql) { (i, out) =>
+      callAt(sql, i, "MAP").map { case (open, close) =>
+        val args = splitTop(sql.substring(open + 1, close))
+        if (args.isEmpty) { out ++= "map()"; close + 1 }
+        else if (args.size == 2 && args.forall(isArrayCtor)) {
           // recurse: the args may hold nested MAP(ARRAY…) constructors
-          out ++= "map_from_arrays("
-          out ++= args.map(mapConstructors).mkString(", ")
-          out += ')'
-          i = close + 1
-        } else { out ++= sql.substring(i, i + 3); i += 3 }
-      } else { out += c; i += 1 }
+          out ++= args.map(mapConstructors).mkString("map_from_arrays(", ", ", ")")
+          close + 1
+        } else i
+      }.getOrElse(i)
     }
-    out.toString
-  }
 
   // ---- CAST targets: ROW(..)/ARRAY(..)/MAP(..)/JSON type syntax ------------
 
@@ -1400,85 +1232,34 @@ object TrinoCompat {
     * both the expression and the emitted STRUCT<> field types. */
   private val VarcharN = """(?i)^VARCHAR\s*\(\s*(\d+)\s*\)$""".r
 
-  private def castTargets(sql: String): String = {
-    val out = new StringBuilder
-    var i = 0
-    var quote: Char = 0
-    while (i < sql.length) {
-      val c = sql(i)
-      if (quote != 0) { out += c; if (c == quote) quote = 0; i += 1 }
-      else if (c == '\'' || c == '"') { quote = c; out += c; i += 1 }
-      else {
-        val kw =
-          if (wordAt(sql, i, "TRY_CAST")) Some("TRY_CAST")
-          else if (wordAt(sql, i, "CAST")) Some("CAST")
-          else None
-        kw match {
-          case Some(k)
-              if skipWs(sql, i + k.length) < sql.length &&
-                sql(skipWs(sql, i + k.length)) == '(' =>
-            val open = skipWs(sql, i + k.length)
-            val close = balancedClose(sql, open)
-            splitAtTopAs(sql.substring(open + 1, close)) match {
-              case Some((expr, tpe)) =>
-                val e = castTargets(expr)
-                if (tpe.trim.equalsIgnoreCase("JSON"))
-                  out ++= (if (k == "TRY_CAST") s"try(graft_cast_json($e))"
-                           else s"graft_cast_json($e)")
-                else tpe.trim match {
-                  // Trino CAST to VARCHAR(n) TRUNCATES; Spark's varchar
-                  // cast keeps the full string — close the divergence
-                  // with an explicit substring (r12)
-                  case VarcharN(n) =>
-                    val inner = s"substring(CAST($e AS STRING), 1, $n)"
-                    out ++= (if (k == "TRY_CAST") s"try($inner)" else inner)
-                  case _ => out ++= s"$k($e AS ${trinoType(tpe)})"
-                }
-                i = close + 1
-              case None =>
-                out ++= sql.substring(i, i + k.length)
-                i += k.length
-            }
-          case _ => out += c; i += 1
+  private def castTargets(sql: String): String =
+    rewriteOutsideQuotes(sql) { (i, out) =>
+      val k = if (wordAt(sql, i, "TRY_CAST")) "TRY_CAST" else "CAST"
+      callAt(sql, i, k).flatMap { case (open, close) =>
+        // `expr AS type` splits at the last top-level AS
+        val inner = sql.substring(open + 1, close)
+        topWordIndices(inner, "AS").lastOption.map { as =>
+          val e = castTargets(inner.substring(0, as))
+          val tpe = inner.substring(as + 2).trim
+          def tried(x: String) = if (k == "TRY_CAST") s"try($x)" else x
+          out ++= (tpe match {
+            case t if t.equalsIgnoreCase("JSON") => tried(s"graft_cast_json($e)")
+            // Trino CAST to VARCHAR(n) TRUNCATES; Spark's varchar cast
+            // keeps the full string, so the substring is explicit
+            case VarcharN(n) => tried(s"substring(CAST($e AS STRING), 1, $n)")
+            case _ => s"$k($e AS ${trinoType(tpe)})"
+          })
+          close + 1
         }
-      }
+      }.getOrElse(i)
     }
-    out.toString
-  }
-
-  /** Split `expr AS type` at the last TOP-level `AS`. */
-  private def splitAtTopAs(s: String): Option[(String, String)] = {
-    var last = -1
-    var depth = 0
-    var quote: Char = 0
-    var i = 0
-    while (i < s.length) {
-      val c = s(i)
-      if (quote != 0) { if (c == quote) quote = 0 }
-      else c match {
-        case '\'' | '"' => quote = c
-        case '(' | '[' => depth += 1
-        case ')' | ']' => depth -= 1
-        case _ =>
-          if (depth == 0 && wordAt(s, i, "AS")) last = i
-      }
-      i += 1
-    }
-    if (last < 0) None
-    else Some((s.substring(0, last), s.substring(last + 2)))
-  }
 
   /** Trino type text → Spark type text (recursive). Unrecognized type
     * names pass through untouched for Spark's parser to judge. */
   private[sql] def trinoType(t0: String): String = {
     val t = t0.trim
-    def headParen(w: String): Option[(Int, Int)] = {
-      if (!wordAt(t, 0, w)) return None
-      val j = skipWs(t, w.length)
-      if (j < t.length && t(j) == '(' && balancedClose(t, j) == t.length - 1)
-        Some((j, t.length - 1))
-      else None
-    }
+    def headParen(w: String): Option[(Int, Int)] =
+      callAt(t, 0, w).filter(_._2 == t.length - 1)
     headParen("ROW").map { case (open, close) =>
       val fields = splitTop(t.substring(open + 1, close)).map { f =>
         // name is a bare identifier or a double-quoted one (which may
@@ -1506,49 +1287,51 @@ object TrinoCompat {
       if (t.equalsIgnoreCase("VARBINARY")) "BINARY" else t)
   }
 
-  // ---- TRY( → try( ---------------------------------------------------------
+  // ---- call renames: ROW( → struct(, TRY( → try(, shadowed builtins --------
 
-  private def renameCall(sql: String, from: String, to: String): String = {
-    val out = new StringBuilder
-    var i = 0
-    var quote: Char = 0
-    while (i < sql.length) {
-      val c = sql(i)
-      if (quote != 0) { out += c; if (c == quote) quote = 0; i += 1 }
-      else if (c == '\'' || c == '"') { quote = c; out += c; i += 1 }
-      else if (wordAt(sql, i, from) &&
-          skipWs(sql, i + from.length) < sql.length &&
-          sql(skipWs(sql, i + from.length)) == '(') {
-        out ++= to
-        i += from.length
-      } else { out += c; i += 1 }
-    }
-    out.toString
+  /** Lower-case call name → the name the rewrite emits: Trino's `ROW(`
+    * constructor → `struct(`, `TRY(` → the registered `try`, and every
+    * shim name colliding with a Spark builtin → its graft-namespaced
+    * registration; the bare names stay Spark builtins in the session
+    * registry (see [[shadowedBuiltins]]). */
+  private lazy val callRenames: Map[String, String] = {
+    def ns(n: String) = if (shadowedSet(n)) s"graft_trino_$n" else n
+    shadowedBuiltins.map(n => n -> ns(n)).toMap +
+      ("row" -> ns("struct")) + ("try" -> ns("try"))
   }
+
+  private def renameCalls(sql: String): String =
+    rewriteOutsideQuotes(sql) { (i, out) =>
+      if (!isWordChar(sql(i)) || i > 0 && isWordChar(sql(i - 1))) i
+      else {
+        var e = i
+        while (e < sql.length && isWordChar(sql(e))) e += 1
+        callRenames.get(sql.substring(i, e).toLowerCase(java.util.Locale.ROOT))
+          .filter(_ => nextIs(sql, e, '(') >= 0) match {
+          case Some(to) => out ++= to; e
+          case None => i
+        }
+      }
+    }
 
   // ---- bare VARCHAR → STRING ----------------------------------------------
 
   /** `CAST(x AS VARCHAR)` (no length) is Trino's string type; Spark
     * requires a length on VARCHAR, so the bare word maps to STRING.
     * `VARCHAR(n)` is left untouched. */
-  private def bareVarchar(sql: String): String = {
-    val out = new StringBuilder
-    var i = 0
-    var quote: Char = 0
-    while (i < sql.length) {
-      val c = sql(i)
-      if (quote != 0) { out += c; if (c == quote) quote = 0; i += 1 }
-      else if (c == '\'' || c == '"') { quote = c; out += c; i += 1 }
-      else if (wordAt(sql, i, "VARCHAR") &&
-          (skipWs(sql, i + 7) >= sql.length || sql(skipWs(sql, i + 7)) != '(')) {
+  private def bareVarchar(sql: String): String =
+    rewriteOutsideQuotes(sql) { (i, out) =>
+      if (wordAt(sql, i, "VARCHAR") && nextIs(sql, i + 7, '(') < 0) {
         out ++= "STRING"
-        i += 7
-      } else { out += c; i += 1 }
+        i + 7
+      } else i
     }
-    out.toString
-  }
 
   // ---- UNNEST --------------------------------------------------------------
+
+  private val UnnestHead = """(?is)(CROSS\s+JOIN|,)\s*UNNEST\s*\(""".r.pattern
+  private val OrdRe = """(?is)\s*WITH\s+ORDINALITY""".r
+  private val AliasRe = """(?is)\s*(?:AS\s+)?(\w+)\s*\(([^()]*)\)""".r
 
   /** `CROSS JOIN UNNEST(e1[, e2…]) [WITH ORDINALITY] AS t (c1[, c2…])`
     * (or the comma-join form) → a Spark LATERAL VIEW:
@@ -1565,37 +1348,34 @@ object TrinoCompat {
     * An UNNEST this rewrite does not recognize (no column alias list,
     * LEFT JOIN form) is left in place for Spark's parser to reject
     * loudly — never a silent partial translation. */
-  private def rewriteUnnest(sql: String): String = {
-    val UnnestHead =
-      """(?is)(CROSS\s+JOIN|,)\s*UNNEST\s*\(""".r
-    // first match NOT inside a string literal (an in-literal match is
-    // data; genuine UNNEST clauses after it must still translate)
-    val m = UnnestHead.findAllMatchIn(sql).find { mm =>
-      var q: Char = 0
-      sql.take(mm.start).foreach { c =>
-        if (q != 0) { if (c == q) q = 0 }
-        else if (c == '\'' || c == '"') q = c
+  private def rewriteUnnest(sql: String): String =
+    rewriteOutsideQuotes(sql) { (i, out) =>
+      val c = sql(i)
+      val m = UnnestHead.matcher(sql).region(i, sql.length)
+      if (!(c == ',' || c == 'C' || c == 'c') || !m.lookingAt()) i
+      else {
+        val (lateral, end) = unnestLateral(sql, m.start, m.end - 1)
+        out ++= lateral
+        end
       }
-      q == 0
-    } match {
-      case None => return sql
-      case Some(mm) => mm
     }
-    val open = sql.indexOf('(', m.end - 1)
+
+  /** The LATERAL VIEW for the UNNEST clause starting at `start` whose
+    * argument list opens at `open`, and the index just past the clause. */
+  private def unnestLateral(sql: String, start: Int,
+      open: Int): (String, Int) = {
     val close = balancedClose(sql, open)
     val args = splitTop(sql.substring(open + 1, close))
     require(args.nonEmpty, "UNNEST needs at least one argument")
     var rest = close + 1
-    val OrdRe = """(?is)\s*WITH\s+ORDINALITY""".r
     val ordinality = OrdRe.findPrefixMatchOf(sql.substring(rest)) match {
       case Some(om) => rest += om.end; true
       case None => false
     }
-    val AliasRe = """(?is)\s*(?:AS\s+)?(\w+)\s*\(([^()]*)\)""".r
     val am = AliasRe.findPrefixMatchOf(sql.substring(rest)).getOrElse(
       throw new IllegalArgumentException(
         "UNNEST requires an alias with a column list: " +
-          s"… UNNEST(…) AS t (c1, …): ${sql.substring(m.start).take(120)}"))
+          s"… UNNEST(…) AS t (c1, …): ${sql.substring(start).take(120)}"))
     val alias = am.group(1)
     val cols = am.group(2).split(",").map(_.trim).filter(_.nonEmpty).toSeq
     rest += am.end
@@ -1628,7 +1408,6 @@ object TrinoCompat {
           s"arrays_zip(${args.map(nz).mkString(", ")}, sequence(1, greatest($len, 1)))"
         s" LATERAL VIEW inline(slice($zipped, 1, $len)) $alias AS ${cols.mkString(", ")}"
       }
-    // recurse for further UNNESTs in the remainder
-    sql.substring(0, m.start) + lateral + rewriteUnnest(sql.substring(rest))
+    (lateral, rest)
   }
 }

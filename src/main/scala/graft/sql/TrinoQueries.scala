@@ -50,7 +50,7 @@ object TrinoQueries {
         |WHERE d.doc_id < 50 AND u.ord <= 5""".stripMargin)
   }
 
-  /** The round-11 widened surface in one statement: `CAST(MAP(ARRAY…,
+  /** Trino cast and constructor syntax in one statement: `CAST(MAP(ARRAY…,
     * ARRAY…) AS JSON)` (the exact `test_athena.py:1135-1152` shapes),
     * a ROW-typed cast with Trino field names + field access
     * (`test_athena.py:1226`), and ISO `day_of_week`. All map-side
@@ -75,7 +75,7 @@ object TrinoQueries {
       |FROM orders
       |WHERE o_orderkey % 50 = 0""".stripMargin
 
-  /** The round-11 SECOND-tier functions in one statement, each with a
+  /** Trino-only scalar functions in one statement, each with a
     * genuine DuckDB-dialect twin on the oracle side: `split_part`,
     * `strrpos`, double-preserving `truncate`, the scalar bitwise trio,
     * `any_match` over the token array, `to_iso8601` on a date column
@@ -119,9 +119,9 @@ object TrinoQueries {
       |FROM documents
       |WHERE doc_id % 3 = 0""".stripMargin
 
-  /** The round-12 THIRD-tier functions in one statement — every name
-    * here either failed to resolve or silently diverged before the
-    * tier-3 batch (raw string literals carrying a real `\w` regex,
+  /** Functions whose Spark namesake diverges from Trino, in one
+    * statement — every name here must resolve to the Trino semantics,
+    * not Spark's (raw string literals carrying a real `\w` regex,
     * group-0 `regexp_extract`, bigint `regexp_count`, `starts_with`,
     * ISO `year_of_week`, decimal `truncate(x, n)`, `hamming_distance`,
     * lowercase signed `to_base`, `json_array_get` with a negative
@@ -175,7 +175,7 @@ object TrinoQueries {
       |FROM documents
       |WHERE doc_id % 3 = 1""".stripMargin
 
-  /** Tier-3 aggregates: Trino-exact `kurtosis` (the SAMPLE excess
+  /** Trino-exact aggregates: `kurtosis` (the SAMPLE excess
     * estimator DuckDB also implements — Spark's population builtin
     * would mismatch every group), `histogram` probed by key,
     * `bitwise_or_agg`. l_quantity is integer-valued, so all four

@@ -2,6 +2,8 @@ package graft.types
 
 import org.apache.spark.sql.types._
 
+import graft.sql.SqlLexer
+
 /** Total conversion functions between Spark `DataType`s and Athena/Hive
   * DDL type strings — the Spark-native re-expression of the reference's
   * type system (`_data_types.py:22-69` arrow→athena, `312-361`
@@ -44,7 +46,8 @@ object AthenaTypes {
   }
 
   /** Athena DDL string → Spark type (recursive-descent over the nesting
-    * grammar, mirroring `_data_types.py:287-361`). */
+    * grammar, mirroring `_data_types.py:287-361`; fields split at depth
+    * zero like `_split_fields`). */
   def fromAthena(s: String): DataType = {
     val t = s.trim
     t.toLowerCase match {
@@ -70,11 +73,11 @@ object AthenaTypes {
       case l if l.startsWith("array<") =>
         ArrayType(fromAthena(inner(t)))
       case l if l.startsWith("map<") =>
-        val parts = splitTop(inner(t))
+        val parts = SqlLexer.splitTop(inner(t), angles = true)
         require(parts.length == 2, s"malformed map type: $t")
         MapType(fromAthena(parts(0)), fromAthena(parts(1)))
       case l if l.startsWith("struct<") =>
-        StructType(splitTop(inner(t)).map { f =>
+        StructType(SqlLexer.splitTop(inner(t), angles = true).map { f =>
           val idx = f.indexOf(':')
           require(idx > 0, s"malformed struct field: $f")
           StructField(f.substring(0, idx).trim,
@@ -92,22 +95,6 @@ object AthenaTypes {
   /** Body between the outermost `<` and `>`. */
   private def inner(t: String): String =
     t.substring(t.indexOf('<') + 1, t.lastIndexOf('>'))
-
-  /** Split on commas at nesting depth zero (`_split_fields`,
-    * `_data_types.py:287-310`). */
-  private[types] def splitTop(s: String): Array[String] = {
-    val out = Array.newBuilder[String]
-    var depth = 0
-    val cur = new StringBuilder
-    s.foreach {
-      case c @ ('<' | '(') => depth += 1; cur.append(c)
-      case c @ ('>' | ')') => depth -= 1; cur.append(c)
-      case ',' if depth == 0 => out += cur.result(); cur.clear()
-      case c => cur.append(c)
-    }
-    if (cur.nonEmpty) out += cur.result()
-    out.result().map(_.trim)
-  }
 
   /** Schema → (dataColumnTypes, partitionColumnTypes) DDL maps — the
     * `athena_types_from_pandas_partitioned` split

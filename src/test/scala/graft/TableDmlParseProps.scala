@@ -61,12 +61,12 @@ object TableDmlParseProps extends Properties("TableDml") {
         ident.map(i => s"f($i, 1)"),
         ident.map(i => s"'$i, lit'"),
         ident.map(i => s"g(h($i), ',')"))))) { parts =>
-      TableDml.splitTop(parts.mkString(" , ")) == parts
+      SqlLexer.splitTop(parts.mkString(" , ")) == parts
     }
 
   property("dequoteExpr: quoted idents become backticks, strings survive") =
     forAll(ident, ident, ident) { (a, b, lit) =>
-      TableDml.dequoteExpr(s"""$a."$b" = '$lit "not an ident"'""") ==
+      SqlLexer.dequoteExpr(s"""$a."$b" = '$lit "not an ident"'""") ==
         s"""$a.`$b` = '$lit "not an ident"'"""
     }
 
@@ -80,13 +80,13 @@ object TableDmlParseProps extends Properties("TableDml") {
     forAll(ident, Gen.listOfN(4, Gen.oneOf(true, false))) { (w, flips) =>
       val kw = "WHEN"
       val s = s"(a $kw b) '$kw' x ${mixCase(kw.toLowerCase, flips)} y"
-      val idx = TableDml.topWordIndices(s, kw)
+      val idx = SqlLexer.topWordIndices(s, kw)
       idx.size == 1 && s.regionMatches(true, idx.head, kw, 0, kw.length)
     }
 
   property("topWordIndices: never matches inside a longer word") =
     forAll(ident) { w =>
       val s = s"${w}WHEN WHEN${w} WHEN"
-      TableDml.topWordIndices(s, "WHEN") == Seq(s.length - 4)
+      SqlLexer.topWordIndices(s, "WHEN") == Seq(s.length - 4)
     }
 }

@@ -3,7 +3,7 @@
 <out>/<name> parquet written by graft.Verify, run the matching oracle SQL
 from <out>/oracle_sql.json in DuckDB over the raw testdata tables, and
 compare (columns sorted by name, rows sorted, values hashed)."""
-import sys, json, glob, hashlib
+import sys, json, glob, hashlib, atexit, shutil, tempfile
 import duckdb
 import pandas as pd
 
@@ -13,7 +13,20 @@ out = sys.argv[2] if len(sys.argv) > 2 else "/tmp/vout"
 json_out = sys.argv[3] if len(sys.argv) > 3 else None
 results = {}
 
-con = duckdb.connect()
+def mem_total_bytes() -> int:
+    with open("/proc/meminfo") as f:
+        for line in f:
+            if line.startswith("MemTotal:"):
+                return int(line.split()[1]) * 1024
+    raise RuntimeError("MemTotal missing from /proc/meminfo")
+
+# a bounded DuckDB spills large joins to disk instead of being OOM-killed
+# (or failing with Out of Memory) on a machine shared with the engine
+spill_dir = tempfile.mkdtemp(prefix="duckdb-check-", dir="/tmp")
+atexit.register(shutil.rmtree, spill_dir, True)
+con = duckdb.connect(config={
+    "memory_limit": f"{mem_total_bytes() * 6 // 10 // 2**20}MB",
+    "temp_directory": spill_dir})
 for t in ["region","nation","customer","supplier","part","orders",
           "lineitem","events","documents","embeddings"]:
     con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')")
