@@ -6,7 +6,7 @@ import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import org.apache.avro.file.DataFileStream
 import org.apache.avro.generic.{GenericDatumReader, GenericRecord}
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, GraftBridge, Row, SparkSession}
 import org.apache.spark.sql.functions.{broadcast, col, lit}
 import org.apache.spark.sql.types._
 
@@ -831,13 +831,17 @@ object IcebergReader {
         .withColumn("__pos", col("_metadata.row_index"))
     def nameScan(ps: Seq[String]): DataFrame =
       metaCols(spark.read.schema(snap.schema).parquet(ps: _*))
+    // the field-id read conf is set on a forked session, whose relation
+    // keeps it; the analyzed plan is re-homed into the caller's session
+    // so later analysis sees the caller's functions, views and conf
     def idScan(ps: Seq[String]): DataFrame = {
       val prev = org.apache.spark.sql.classic.SparkSession.getActiveSession
       val ses = spark.newSession()
       ses.conf.set("spark.sql.parquet.fieldId.read.enabled", "true")
-      try metaCols(ses.read.schema(TableFiles.withFieldIds(snap.schema,
-        idOf.map { case (n, id) => n -> id.toLong }))
-        .parquet(ps: _*))
+      try GraftBridge.ofRows(spark, GraftBridge.analyzed(
+        metaCols(ses.read.schema(TableFiles.withFieldIds(snap.schema,
+          idOf.map { case (n, id) => n -> id.toLong }))
+          .parquet(ps: _*))))
       finally prev.foreach(
         org.apache.spark.sql.classic.SparkSession.setActiveSession)
     }

@@ -686,13 +686,7 @@ object SqlEngine {
                   if (graft.io.IcebergReader.isIcebergTable(spark, p))
                     graft.io.IcebergReader.read(spark, p)
                   else graft.io.DeltaLogReader.read(spark, p)
-                // the readers may build their scan on a forked session
-                // (field-id reads flip a parquet conf on newSession())
-                // — re-home the ANALYZED plan into the caller's session
-                // or the temp view would register invisibly on the fork
-                org.apache.spark.sql.GraftBridge.ofRows(spark,
-                  org.apache.spark.sql.GraftBridge.analyzed(current))
-                  .createOrReplaceTempView(res.table)
+                current.createOrReplaceTempView(res.table)
               }
             }
           result(spark, res.operation, res.table)

@@ -1348,17 +1348,19 @@ object TrinoCompat {
     * An UNNEST this rewrite does not recognize (no column alias list,
     * LEFT JOIN form) is left in place for Spark's parser to reject
     * loudly — never a silent partial translation. */
-  private def rewriteUnnest(sql: String): String =
+  private def rewriteUnnest(sql: String): String = {
+    val m = UnnestHead.matcher(sql)
     rewriteOutsideQuotes(sql) { (i, out) =>
       val c = sql(i)
-      val m = UnnestHead.matcher(sql).region(i, sql.length)
-      if (!(c == ',' || c == 'C' || c == 'c') || !m.lookingAt()) i
+      if (!(c == ',' || c == 'C' || c == 'c') ||
+          !m.region(i, sql.length).lookingAt()) i
       else {
         val (lateral, end) = unnestLateral(sql, m.start, m.end - 1)
         out ++= lateral
         end
       }
     }
+  }
 
   /** The LATERAL VIEW for the UNNEST clause starting at `start` whose
     * argument list opens at `open`, and the index just past the clause. */

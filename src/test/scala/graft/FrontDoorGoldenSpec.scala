@@ -1,10 +1,9 @@
 package graft
 
-import scala.jdk.CollectionConverters._
 import com.fasterxml.jackson.databind.ObjectMapper
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.sql.TrinoCompat
+import graft.sql.{SqlLexer, TrinoCompat}
 import graft.types.AthenaTypes
 
 /** Byte-for-byte regression record of the SQL front door's text layer.
@@ -34,26 +33,6 @@ class FrontDoorGoldenSpec extends AnyFunSuite {
   private def outcome(f: => String): String =
     try f catch { case e: Exception => "!" + e.getClass.getName }
 
-  /** The DDL column-list splitter, looked up by name: the lexer's
-    * `<>`-nesting `splitTop` where it exists, else the engine's own
-    * `splitCols`, so one golden file checks either layout. */
-  private lazy val ddlSplit: String => Seq[String] = {
-    def method(cls: String, name: String) =
-      Class.forName(cls).getDeclaredMethods.find(m =>
-        m.getName.endsWith(name) && m.getReturnType == classOf[Seq[_]])
-    val lexer = scala.util.Try(Class.forName("graft.sql.SqlLexer$")).toOption
-    val (target, m, args) = lexer match {
-      case Some(c) =>
-        (c, method(c.getName, "splitTop").get, (s: String) => Array[AnyRef](s, java.lang.Boolean.TRUE))
-      case None =>
-        val c = Class.forName("graft.sql.SqlEngine$")
-        (c, method(c.getName, "splitCols").get, (s: String) => Array[AnyRef](s))
-    }
-    m.setAccessible(true)
-    val module = target.getField("MODULE$").get(null)
-    s => m.invoke(module, args(s): _*).asInstanceOf[Seq[String]]
-  }
-
   private def check(kind: String)(actual: String => String): Unit = {
     val cases = golden.filter(_.kind == kind)
     assert(cases.nonEmpty, s"no recorded $kind cases")
@@ -72,7 +51,8 @@ class FrontDoorGoldenSpec extends AnyFunSuite {
   }
 
   test("DDL column lists split exactly as recorded") {
-    check("splitCols")(s => ddlSplit(s).mkString("\u0000"))
+    check("splitCols")(s =>
+      SqlLexer.splitTop(s, angles = true).mkString("\u0000"))
   }
 
   test("AthenaTypes.fromAthena returns every recorded type") {

@@ -79,6 +79,35 @@ class SqlFrontDoorDmlSpec extends AnyFunSuite {
       assert(got == Map(1L -> "one", 2L -> "22", 3L -> "33"))
     }
 
+    test(s"$fmt: UPDATE SET and DELETE WHERE call shims that shadow Spark builtins") {
+      val dir = tmp() + "/t"
+      write(table(named, Row(1L, "abc"), Row(2L, "xax"), Row(3L, "d")), dir)
+      // Trino's 2-argument regexp_replace removes every match; Spark's
+      // builtin needs a replacement argument
+      TableDml.execute(spark,
+        "UPDATE t SET name = regexp_replace(name, 'a') WHERE id < 3",
+        Map("t" -> dir))
+      TableDml.execute(spark,
+        "DELETE FROM t WHERE contains(name, 'x')", Map("t" -> dir))
+      val got = read(dir).collect().map(r => r.getLong(0) -> r.getString(1)).toMap
+      assert(got == Map(1L -> "bc", 3L -> "d"))
+    }
+
+    test(s"$fmt: MERGE UPDATE SET and INSERT VALUES call a shim that shadows a builtin") {
+      val dir = tmp() + "/t"
+      write(table(named, Row(1L, "one"), Row(2L, "two")), dir)
+      table(StructType(Seq(StructField("id", LongType))), Row(2L), Row(3L))
+        .createOrReplaceTempView("front_shadow")
+      TableDml.execute(spark,
+        """MERGE INTO t USING front_shadow s ON t.id = s.id
+          |WHEN MATCHED THEN UPDATE SET name = regexp_replace(name, 'o')
+          |WHEN NOT MATCHED THEN INSERT (id, name)
+          |  VALUES (s.id, regexp_replace('zoo', 'o'))""".stripMargin,
+        Map("t" -> dir))
+      val got = read(dir).collect().map(r => r.getLong(0) -> r.getString(1)).toMap
+      assert(got == Map(1L -> "one", 2L -> "tw", 3L -> "z"))
+    }
+
     test(s"$fmt: UPDATE SET an ARRAY[...] value with a comma inside the brackets") {
       val dir = tmp() + "/t"
       write(table(tagged, Row(1L, Seq("a")), Row(2L, Seq("b"))), dir)
